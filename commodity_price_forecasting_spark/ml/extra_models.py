@@ -245,6 +245,12 @@ class NumpyRegressorModel(Model):
 
         return df.withColumn("prediction", _predict(*self._feature_cols))
 
+    def predict(self, features) -> float:
+        """One-row score of an ML ``Vector`` laid out in ``feature_cols``
+        order — the MLlib ``Model.predict`` surface that driver-side
+        serving (``ml.serving.predict_signal``) calls."""
+        return float(self._model.predict(features.toArray().reshape(1, -1))[0])
+
 
 class NumpyRegressorAdapter(Estimator):
     """PySpark ``Estimator`` wrapping a numpy regressor so it slots

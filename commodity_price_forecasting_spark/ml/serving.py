@@ -5,15 +5,23 @@ Spark-native API — no UI, same contract.
 Flow parity with ``main()``:
 - defaults: latest value of each feature (app.py:242 ``iloc[-1]``)
 - X_input: defaults + user overrides (sidebar state)
-- ensemble prediction on the one-row frame (app.py:115-148)
+- ensemble prediction (app.py:115-148): one dense vector scored on the
+  driver by every fitted model's ``predict`` — the same JVM model and
+  code path ``transform`` uses, with no Spark job per request
 - signal rules: threshold/confidence CASE logic (app.py:159-189,
-  279-296) as column expressions — Catalyst-visible
+  279-296) as column expressions — Catalyst-visible, folded by the
+  optimizer into the one-row local relation, so ``collect()`` launches
+  no job either
 - results row: timestamped, CSV-able (app.py:629-645)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import math
+
+import pyarrow as pa
+from pyspark.ml.linalg import Vectors
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -24,14 +32,37 @@ from commodity_price_forecasting_spark.ml.ensemble import EnsembleResult
 
 def default_inputs(df: DataFrame, feature_cols: list[str], time_col: str = "date_id") -> dict:
     """Latest observed value per feature — the app's slider defaults
-    (app.py:242): one ordered-window last() pass, K scalars to the
-    driver."""
+    (app.py:242): the first row of ``orderBy(desc(time_col))``, K
+    scalars to the driver."""
     row = (
         df.orderBy(F.desc(time_col))
         .select(*feature_cols)
         .first()
     )
     return {c: float(row[c]) for c in feature_cols}
+
+
+def _feature_vector(ens: EnsembleResult, feature_cols: list[str], inputs: dict):
+    """The request as one dense vector in the fitted assembler's column
+    order (``run_ensemble`` fits every pipeline behind one assembler),
+    so the caller's ``feature_cols`` order does not matter. Rejects what
+    ``VectorAssembler(handleInvalid="error")`` rejected on the old
+    one-row-frame path — a missing or NaN feature — which
+    ``Model.predict`` would otherwise score as NaN."""
+    cols = next(iter(ens.fitted.values())).stages[0].getInputCols()
+    if sorted(feature_cols) != sorted(cols):
+        raise ValueError(
+            "feature_cols must be the fitted features: missing "
+            f"{sorted(set(cols) - set(feature_cols))}, unknown {sorted(set(feature_cols) - set(cols))}"
+        )
+    missing = [c for c in cols if c not in inputs]
+    if missing:
+        raise ValueError(f"missing input for feature(s): {missing}")
+    values = [float(inputs[c]) for c in cols]
+    nan = [c for c, v in zip(cols, values) if math.isnan(v)]
+    if nan:
+        raise ValueError(f"NaN input for feature(s): {nan}")
+    return Vectors.dense(values)
 
 
 def predict_signal(
@@ -45,14 +76,14 @@ def predict_signal(
 ) -> DataFrame:
     """One-row prediction + trade signal for a spread target.
 
-    Scores the input through every fitted pipeline, combines with the
+    Scores the input through every fitted model, combines with the
     ensemble weights, and applies the deployed signal rules. Returns a
-    one-row DataFrame (the app's results table, app.py:629-645)."""
-    x = spark.createDataFrame([Row(**{c: float(inputs[c]) for c in feature_cols})])
-    preds = {}
-    for name, model in ens.fitted.items():
-        scored = model.transform(x)
-        preds[name] = float(scored.select("prediction").first()[0])
+    one-row DataFrame (the app's results table, app.py:629-645) over a
+    local relation: neither this call nor its ``collect()`` runs a
+    Spark job. Raises ``ValueError`` for a missing or NaN feature
+    input, or ``feature_cols`` that are not the fitted features."""
+    vec = _feature_vector(ens, feature_cols, inputs)
+    preds = {name: float(model.stages[-1].predict(vec)) for name, model in ens.fitted.items()}
     pred = sum(ens.weights[n] * p for n, p in preds.items())
 
     legs = target.split(SEPARATOR)
@@ -71,9 +102,11 @@ def predict_signal(
             *[T.StructField(f"pred_{n}", T.DoubleType(), False) for n in preds],
         ]
     )
+    row = (target, leg_a, leg_b, float(pred), float(ens.avg_r2), *preds.values())
+    # An Arrow table becomes a LocalRelation; a list of tuples would be
+    # a Python-pickled RDD that every scan runs through Python workers.
     out = spark.createDataFrame(
-        [(target, leg_a, leg_b, float(pred), float(ens.avg_r2), *preds.values())],
-        schema,
+        pa.Table.from_pydict({f.name: [v] for f, v in zip(schema.fields, row)}), schema
     )
     sig = trade_signal(
         F.col("prediction"), F.col("avg_r2"), threshold=threshold, min_confidence=min_confidence

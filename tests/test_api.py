@@ -6,6 +6,7 @@ own serving artifact when present, else a synthetic equivalent.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -95,11 +96,14 @@ def test_deployed_defaults_parity(spark, artifact):
     (threshold 0.6, min-confidence 0.6 — app.py:218-228) over
     df_transformed.csv and check the full signal struct for 3
     hand-picked input rows against independently computed expectations:
-    numpy closed forms for the linear/ridge legs, the fitted RF's own
-    score for the RF leg, and a plain-Python replica of the
-    app.py:159-189 rule chain for signal/confidence/strength."""
+    numpy closed forms for the linear/ridge legs, a numpy walk of the
+    fitted forest's extracted trees for the RF leg, and a plain-Python
+    replica of the app.py:159-189 rule chain for
+    signal/confidence/strength."""
     import numpy as np
     import pandas as pd
+
+    from commodity_price_forecasting_spark.ml.treeshap import extract_trees
 
     df, features, targets = api.load_data(spark, artifact)
     target = targets[0]
@@ -129,6 +133,18 @@ def test_deployed_defaults_parity(spark, artifact):
         assert ens.weights[n] == pytest.approx(weights[n], abs=1e-6)
     avg_r2 = sum(r2_np.values()) / 3.0
 
+    trees = extract_trees(ens.fitted["random_forest"].stages[-1])
+
+    def rf_pred(x):
+        """Spark's RF regression: the unweighted mean of leaf values."""
+        leaves = []
+        for t in trees:
+            i = 0
+            while t["feature"][i] >= 0:
+                i = t["left"][i] if x[t["feature"][i]] <= t["threshold"][i] else t["right"][i]
+            leaves.append(t["value"][i])
+        return float(np.mean(leaves))
+
     # hand-picked inputs: the rows holding the max, min, and median
     # observed spread — large-positive / large-negative / small preds.
     picks = [
@@ -145,11 +161,13 @@ def test_deployed_defaults_parity(spark, artifact):
         exp_ridge = _sklearn_ridge_pred(X, y, x)
         assert row["pred_linear"] == pytest.approx(exp_lin, rel=1e-5, abs=1e-6)
         assert row["pred_ridge"] == pytest.approx(exp_ridge, rel=1e-5, abs=1e-6)
+        exp_rf = rf_pred(x)
+        assert row["pred_random_forest"] == pytest.approx(exp_rf, rel=1e-9, abs=1e-12)
 
         exp_pred = (
             weights["linear"] * exp_lin
             + weights["ridge"] * exp_ridge
-            + weights["random_forest"] * row["pred_random_forest"]
+            + weights["random_forest"] * exp_rf
         )
         assert row["prediction"] == pytest.approx(exp_pred, rel=1e-6, abs=1e-9)
         assert row["avg_r2"] == pytest.approx(avg_r2, abs=1e-6)
@@ -158,3 +176,35 @@ def test_deployed_defaults_parity(spark, artifact):
         assert row["signal"] == sig
         assert row["confidence"] == conf
         assert row["strength"] == pytest.approx(strength, abs=1e-9)
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs run by ``fn()``: tagged with a fresh job group and
+    counted in the status store once the listener bus has drained.
+    (The store keeps only the last ``spark.ui.retainedJobs`` jobs, so a
+    before/after size difference reads 0 late in a long session.)"""
+    sc = spark.sparkContext
+    group = f"job-guard-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "serving job guard")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_trade_suggestion_runs_no_spark_job(spark, artifact):
+    """Serving a request with explicit inputs, ``collect()`` included,
+    launches no Spark job; deriving the defaults from ``df`` costs the
+    one job of ``default_inputs``."""
+    df, features, targets = api.load_data(spark, artifact)
+    ens = api.run_ensemble(df, features, targets[0])
+    x = api.default_inputs(df, features)
+
+    def serve(**kw):
+        return api.trade_suggestion(spark, ens, features, targets[0], **kw).collect()
+
+    assert _jobs_launched(spark, lambda: serve(inputs=x)) == 0
+    assert _jobs_launched(spark, lambda: serve(df=df)) == 1

@@ -128,6 +128,59 @@ def test_serving_signal(spark, e1, ens):
         assert row["signal"] == "WAIT"
 
 
+def test_serving_matches_batch_transform(spark, e1, ens):
+    """Driver-side ``predict`` must score every model exactly as batch
+    ``transform`` does on the same row — including a mostly-zero row,
+    which the assembler packs as a sparse vector — and the caller's
+    ``feature_cols`` order must not change the result."""
+    import random
+
+    import pandas as pd
+    from pyspark.ml.linalg import SparseVector
+
+    target = e1.target_cols[0]
+    cols = e1.feature_cols
+    rows = [r.asDict() for r in e1.merged.select(*cols).limit(3).collect()]
+    rows.append({c: rows[0][c] if c == cols[0] else 0.0 for c in cols})
+    pdf = pd.DataFrame(rows)[cols]
+    pdf.insert(0, "_i", range(len(rows)))
+    batch_in = spark.createDataFrame(pdf)
+    assembled = ens.fitted["linear"].stages[0].transform(batch_in).orderBy("_i").collect()
+    assert isinstance(assembled[-1]["features"], SparseVector)
+    batch = {
+        name: [r["prediction"] for r in m.transform(batch_in).orderBy("_i").collect()]
+        for name, m in ens.fitted.items()
+    }
+
+    shuffled = list(cols)
+    random.Random(3).shuffle(shuffled)
+    assert shuffled != cols
+    for i, x in enumerate(rows):
+        row = predict_signal(spark, ens, cols, target, x).first().asDict()
+        for name in ens.fitted:
+            assert row[f"pred_{name}"] == pytest.approx(batch[name][i], rel=1e-9, abs=1e-12)
+        again = predict_signal(spark, ens, shuffled, target, x).first().asDict()
+        row.pop("generated_at"), again.pop("generated_at")
+        assert again == row
+
+
+def test_serving_rejects_bad_inputs(spark, e1, ens):
+    """A missing or NaN feature, or ``feature_cols`` that are not the
+    fitted features, raise ``ValueError`` instead of scoring."""
+    import re
+
+    target = e1.target_cols[0]
+    cols = e1.feature_cols
+    good = e1.merged.select(*cols).first().asDict()
+    missing = {c: v for c, v in good.items() if c != cols[1]}
+    with pytest.raises(ValueError, match=re.escape(cols[1])):
+        predict_signal(spark, ens, cols, target, missing)
+    with pytest.raises(ValueError, match="NaN.*" + re.escape(cols[0])):
+        predict_signal(spark, ens, cols, target, {**good, cols[0]: float("nan")})
+    with pytest.raises(ValueError, match="feature_cols"):
+        predict_signal(spark, ens, cols[:-1], target, good)
+
+
 def test_linear_and_ridge_match_closed_form(spark):
     """MLlib OLS must equal the numpy normal-equation solution, and
     the n-scaled ridge must equal sklearn's Ridge(alpha=1) objective
@@ -412,6 +465,12 @@ def test_numpy_adapter_slots_into_run_ensemble(spark):
     assert res.model_metrics["svr"]["r2"] > res.model_metrics["linear"]["r2"]
     assert set(res.weights) == {"linear", "svr"}
     assert abs(sum(res.weights.values()) - 1.0) < 1e-9
+
+    # driver-side serving scores the adapter like its batch transform
+    one = pdf.iloc[:1]
+    row = predict_signal(spark, res, ["f0", "f1"], "label", one.iloc[0].to_dict()).first()
+    want = res.fitted["svr"].transform(spark.createDataFrame(one)).first()["prediction"]
+    assert row["pred_svr"] == pytest.approx(want, rel=1e-9)
 
 
 def test_kpss_dataframe_form_equals_numpy_form(spark):
