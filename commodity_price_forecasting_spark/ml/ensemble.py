@@ -10,9 +10,10 @@ predict the weighted average. Also provides the unweighted top-3 mean
 correct variant) — parity defaults to in-sample.
 
 Spark design: each estimator is an MLlib Pipeline
-(VectorAssembler → model); predictions join back on a row id and the
-ensemble is a column expression Σ wᵢ·predᵢ — the data never leaves
-the cluster; only K weights come to the driver.
+(VectorAssembler → model); the fitted pipelines' ``transform``s are
+chained over one frame, each adding its ``pred_<name>`` column, and
+the ensemble is a column expression Σ wᵢ·predᵢ — the data never
+leaves the cluster; only K weights come to the driver.
 """
 
 from __future__ import annotations
@@ -80,7 +81,7 @@ def default_models(
 @dataclass
 class EnsembleResult:
     predictions: DataFrame            # _row_id, label, pred_<name>..., pred_ensemble, pred_mean
-    model_metrics: dict[str, dict]    # per-model {r2, mae, rmse, dir_acc}
+    model_metrics: dict[str, dict]    # per-model {n, mae, rmse, r2, dir_acc, smape}
     weights: dict[str, float]
     ensemble_metrics: dict = field(default_factory=dict)
     mean_metrics: dict = field(default_factory=dict)

@@ -223,57 +223,61 @@ from pyspark.ml import Estimator, Model  # noqa: E402
 class NumpyRegressorModel(Model):
     """Fitted counterpart of :class:`NumpyRegressorAdapter` — scoring
     is distributed: the fitted weights ship inside an Arrow-batched
-    pandas UDF closure (vectorized, no row-at-a-time Python)."""
+    pandas UDF closure (vectorized, no row-at-a-time Python). Batch
+    and driver-side scoring both read the assembled ``features``
+    vector, so both see the assembler's feature order."""
 
-    def __init__(self, model=None, feature_cols: list[str] | None = None) -> None:
+    def __init__(self, model=None) -> None:
         super().__init__()
         self._model = model
-        self._feature_cols = feature_cols or []
-        # the MLlib PipelineModel surface run_ensemble inspects
-        self.stages = [self]
 
     def _transform(self, df):
         import pandas as pd
+        from pyspark.ml.functions import vector_to_array
         from pyspark.sql.functions import pandas_udf
 
         model = self._model
 
         @pandas_udf("double")
-        def _predict(*cols):
-            X = np.column_stack([c.to_numpy(dtype=np.float64) for c in cols])
-            return pd.Series(model.predict(X))
+        def _predict(x):
+            return pd.Series(model.predict(_as_matrix(x)))
 
-        return df.withColumn("prediction", _predict(*self._feature_cols))
+        return df.withColumn("prediction", _predict(vector_to_array("features")))
 
     def predict(self, features) -> float:
-        """One-row score of an ML ``Vector`` laid out in ``feature_cols``
-        order — the MLlib ``Model.predict`` surface that driver-side
-        serving (``ml.serving.predict_signal``) calls."""
+        """One-row score of an assembled ML ``Vector`` — the MLlib
+        ``Model.predict`` surface that driver-side serving
+        (``ml.serving.predict_signal``) calls."""
         return float(self._model.predict(features.toArray().reshape(1, -1))[0])
+
+
+def _as_matrix(arrays) -> np.ndarray:
+    """Stack a column of equal-length arrays into a float64 matrix."""
+    return np.stack(arrays.to_numpy()).astype(np.float64)
 
 
 class NumpyRegressorAdapter(Estimator):
     """PySpark ``Estimator`` wrapping a numpy regressor so it slots
-    into an MLlib ``Pipeline`` inside ``run_ensemble``: ``fit``
-    collects the (small, serving-scale) supervised frame to the
-    driver and fits the numpy estimator — mirroring MLlib's own
-    driver-side normal-equation solve — and returns a
+    into an MLlib ``Pipeline`` after the ``VectorAssembler`` inside
+    ``run_ensemble``: ``fit`` collects the assembled ``features``
+    vector and the label (a small, serving-scale frame) to the driver
+    and fits the numpy estimator — mirroring MLlib's own driver-side
+    normal-equation solve — and returns a
     :class:`NumpyRegressorModel` whose ``transform`` scores
     distributed. Kernel SVR is O(n²) memory by nature; the 100 TB
     path is per-group ``fit_predict_by_group`` above, never a global
     collect."""
 
-    def __init__(self, make_model=None, feature_cols: list[str] | None = None,
-                 label_col: str = "label"):
+    def __init__(self, make_model=None, label_col: str = "label"):
         super().__init__()
         self._make_model = make_model
-        self._feature_cols = feature_cols or []
         self._label_col = label_col
 
     def _fit(self, df) -> NumpyRegressorModel:
-        pdf = df.select(*self._feature_cols, self._label_col).toPandas()
-        X = pdf[self._feature_cols].to_numpy(dtype=np.float64)
+        from pyspark.ml.functions import vector_to_array
+
+        pdf = df.select(
+            vector_to_array("features").alias("x"), self._label_col
+        ).toPandas()
         y = pdf[self._label_col].to_numpy(dtype=np.float64)
-        return NumpyRegressorModel(
-            self._make_model().fit(X, y), self._feature_cols
-        )
+        return NumpyRegressorModel(self._make_model().fit(_as_matrix(pdf["x"]), y))

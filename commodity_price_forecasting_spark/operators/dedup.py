@@ -372,238 +372,107 @@ def simhash32(tokens: DataFrame, id_col: str = "doc_id", token_col: str = "token
     )
 
 
-#: edge-count cutover below which components are finished with exact
-#: union-find on the driver (≈30 MB collected at the default) instead
-#: of paying ~5 driver-coordinated join rounds — the same adaptive
-#: small-side reasoning as a broadcast join. Above it, the distributed
-#: min-label/pointer-halving loop runs.
+#: edge-count cutover: at or below it, components are finished with
+#: exact union-find on the driver (≈30 MB collected at the default)
+#: instead of paying ~5 driver-coordinated join rounds — the same
+#: adaptive small-side reasoning as a broadcast join. Above it, the
+#: distributed large-star/small-star loop runs.
 SMALL_GRAPH_EDGES = 1_000_000
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    """Eager lineage cut for an iterative loop: a RELIABLE
+    ``checkpoint()`` whenever the session has a checkpoint dir
+    configured (survives executor loss on a real cluster), else
+    ``localCheckpoint`` (executor-local — the single-JVM fallback)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 20,
-    reliable_checkpoint: bool | None = None,
+    max_iter: int = 25,
     stats: dict | None = None,
-    small_graph_threshold: int = SMALL_GRAPH_EDGES,
-    strategy: str = "auto",
 ) -> DataFrame:
-    """Connected components over an undirected edge list via min-label
-    propagation WITH pointer halving: every node's label converges to
-    the smallest node id in its component. ``(node, component)``.
+    """Connected components over an undirected edge list:
+    ``(node, component)`` with every component labelled by its
+    smallest node id.
 
     The dedup-pipeline closer: LSH candidate pairs above a similarity
     threshold form edges; components are the duplicate CLUSTERS from
     which one canonical document survives.
 
-    Scale design:
-    - Each iteration does one neighbor-min (join + partial-agg) and one
-      label-of-label shortcut (self-join) — both hash-partitioned on
-      the join key, no global sort.
-    - Pointer halving makes convergence O(log diameter), not
-      O(diameter): a 1000-node chain converges in ~11 iterations, so
-      ``max_iter=20`` covers components of diameter ~10^6.
-    - Lineage is cut per iteration so the plan stays O(1) deep. With
-      ``reliable_checkpoint`` (default: auto — on whenever the session
-      has ``spark.sparkContext.setCheckpointDir`` configured) the cut
-      is a RELIABLE ``checkpoint()`` to the checkpoint dir, surviving
-      executor loss on a real cluster; ``localCheckpoint`` (executor-
-      local, lost on executor death) is only the single-JVM fallback.
-    - Convergence is read from a ``chg`` flag computed inside the
-      iteration's own aggregate and checked with ``isEmpty()`` on the
-      already-materialized checkpoint — no extra join, no full
-      recount of unchanged labels.
-    - Pass a dict as ``stats`` to receive ``{"iterations": k}`` —
-      the O(log diameter) claim is asserted against deep synthetic
-      components in tests/test_distributed.py.
-    - ``strategy``: ``"auto"`` (default) takes the driver union-find
-      fast path below ``small_graph_threshold`` and the large-star/
-      small-star variant above it (measured 1.5x faster than halving
-      on a 2M-edge/50k-diameter graph — SCALE.md r4); ``"halving"``
-      and ``"star"`` force the respective distributed loop.
+    One rule, read from the measured size of the symmetric
+    deduplicated edge list: at or below ``SMALL_GRAPH_EDGES`` edges
+    the list is collected once (one Arrow ``toPandas`` job) and
+    finished with exact union-find on the driver; above it
+    ``connected_components_star`` runs distributed (up to
+    ``max_iter`` rounds). Both compute the same exact labelling. Pass
+    a dict as ``stats`` to receive ``{"iterations": k}`` (plus
+    ``"fast_path": True`` on the driver path).
     """
-    if strategy not in ("auto", "halving", "star"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    sc = edges.sparkSession.sparkContext
-    if reliable_checkpoint is None:
-        reliable_checkpoint = sc.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    if strategy == "star":
-        return connected_components_star(
-            edges, src, dst,
-            max_iter=max(max_iter, 25),
-            reliable_checkpoint=reliable_checkpoint,
-            stats=stats,
-        )
-
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
     ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    spark = edges.sparkSession
-    if strategy == "auto":
-        # Route-decision materialization is a PERSIST, not a reliable
-        # checkpoint (r15 guide §1 measurement: the old
-        # checkpoint+count+toLocalIterator sequence cost ~2.5 s of
-        # dedup_delta's 7 s — a disk write/re-read plus one job per
-        # partition — for a frame both auto branches throw away: the
-        # star loop re-derives its own oriented edge list from
-        # ``edges`` and cuts lineage itself, and the driver fast path
-        # needs the rows exactly once). Checkpoint-grade lineage
-        # cutting is only required across ITERATIONS, which "auto"
-        # never reaches without delegating.
-        sym = sym.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = sym.count()
-        # Above the cutover, "auto" routes to large-star/small-star —
-        # the measured winner at >1M edges (SCALE.md r4: 305s vs 460s
-        # halving on a 2M-edge/50k-diameter graph); the halving loop
-        # below stays reachable via strategy="halving" and remains the
-        # recorded runner-up.
-        if n_edges > small_graph_threshold:
-            try:
-                return connected_components_star(
-                    edges, src, dst,
-                    max_iter=max(max_iter, 25),
-                    reliable_checkpoint=reliable_checkpoint,
-                    stats=stats,
-                )
-            finally:
-                sym.unpersist()
-        # Small-graph fast path: the SYMMETRIC DEDUPLICATED edge list
-        # is a tiny projection of the corpus (candidate pairs, not
-        # documents). When it fits comfortably on the driver, exact
-        # union-find with path compression beats any number of
-        # distributed rounds — the iterative loop's per-round cost is
-        # driver-coordinated job scheduling, which no partitioning can
-        # amortize on a small frontier. The cutover is explicit and
-        # the result is identical (both compute exact components
-        # labelled by the min node id). The edges land on the driver
-        # via ONE Arrow toPandas job off the persisted frame — the old
-        # toLocalIterator ran a separate job per partition.
-        if stats is not None:
-            stats["iterations"] = 0
-            stats["fast_path"] = True
-        node_type = sym.schema[0].dataType
-        pdf = sym.toPandas()
-        sym.unpersist()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        # .tolist() converts numpy scalars to plain Python values so
-        # the labels round-trip through createDataFrame unchanged
-        for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-            if u not in parent:
-                parent[u] = u
-            if v not in parent:
-                parent[v] = v
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # union by min so the final relabel pass is trivial
-                if rv < ru:
-                    ru, rv = rv, ru
-                parent[rv] = ru
-        out_rows = [(n, find(n)) for n in parent]
-        out_schema = T.StructType(
-            [
-                T.StructField("node", node_type, False),
-                T.StructField("component", node_type, False),
-            ]
-        )
-        return spark.createDataFrame(out_rows, out_schema)
-
-    # strategy == "halving": the iterative loop consumes ``sym`` every
-    # round, so here the lineage cut (reliable on a cluster) is the
-    # right materialization.
-    sym = _cut(sym.distinct())
+    # Route-decision materialization is a PERSIST, not a checkpoint
+    # (r15 guide §1 measurement: checkpoint+count+toLocalIterator cost
+    # ~2.5 s of dedup_delta's 7 s): the star loop re-derives its own
+    # oriented edge list from ``edges`` and cuts lineage itself, and
+    # the driver path needs the rows exactly once.
+    sym = sym.distinct().persist(StorageLevel.MEMORY_AND_DISK)
     n_edges = sym.count()
-    # Size the iteration's parallelism from the MATERIALIZED edge
-    # count (free — sym is checkpointed): a few-thousand-row label
-    # table must not pay 32-task scheduling twice per iteration, while
-    # a billion-edge list keeps the session's full parallelism. Only
-    # ever shrinks below the session setting, never grows past it;
-    # restored after the loop. parallelismFirst=false lets AQE
-    # actually coalesce the tiny shuffles to the advisory size
-    # instead of preserving idle-core parallelism.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_pf = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"
-    )
-    target = max(1, min(int(prev_sp), n_edges // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-    )
-    try:
-        labels = _run_label_propagation(sym, _cut, max_iter, stats)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", prev_pf
+    if n_edges > SMALL_GRAPH_EDGES:
+        # measured winner at >1M edges (SCALE.md r4)
+        sym.unpersist()
+        return connected_components_star(
+            edges, src, dst, max_iter=max_iter, stats=stats
         )
-    return labels.select("node", F.col("label").alias("component"))
-
-
-def _run_label_propagation(sym, _cut, max_iter: int, stats: dict | None):
-    """The min-label + pointer-halving loop of connected_components
-    (split out so the parallelism conf scoping stays readable)."""
-    # Initialize at the 1-hop fixpoint directly: label = min(self,
-    # neighbors). While labels ≡ nodes the neighbor-min needs NO join —
-    # one aggregate replaces what would otherwise be the first
-    # iteration's join + halving round.
-    labels = _cut(
-        sym.groupBy(F.col("u").alias("node"))
-        .agg(F.min("v").alias("_mv"))
-        .select("node", F.least("node", "_mv").alias("label"))
-    )
-    n_iter = 0
-    for _ in range(max_iter):
-        n_iter += 1
-        # 1-hop: min label over direct neighbors.
-        nb_min = (
-            sym.join(labels, sym["v"] == labels["node"], "inner")
-            .groupBy(F.col("u").alias("node2"))
-            .agg(F.min("label").alias("nb_label"))
-        )
-        hop = labels.join(nb_min, labels["node"] == F.col("node2"), "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))
-            ).alias("label"),
-            F.col("label").alias("old_label"),
-        )
-        # Pointer halving: label <- label(label). Every label is a node
-        # id present in ``hop`` (invariant from initialization), so the
-        # inner self-join is total.
-        l2 = hop.select(
-            F.col("node").alias("ptr_node"), F.col("label").alias("ptr_label")
-        )
-        new_labels = _cut(
-            hop.join(l2, hop["label"] == l2["ptr_node"], "inner").select(
-                "node",
-                F.least("label", "ptr_label").alias("label"),
-                (F.least("label", "ptr_label") < F.col("old_label")).alias("chg"),
-            )
-        )
-        converged = new_labels.filter("chg").isEmpty()
-        labels = new_labels.drop("chg")
-        if converged:
-            break
+    # Small-graph path: the symmetric edge list is a tiny projection
+    # of the corpus (candidate pairs, not documents). When it fits on
+    # the driver, union-find with path compression beats any number
+    # of distributed rounds — their per-round cost is driver-
+    # coordinated job scheduling, which no partitioning can amortize
+    # on a small frontier.
     if stats is not None:
-        stats["iterations"] = n_iter
-    return labels
+        stats["iterations"] = 0
+        stats["fast_path"] = True
+    node_type = sym.schema[0].dataType
+    pdf = sym.toPandas()
+    sym.unpersist()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    # .tolist() converts numpy scalars to plain Python values so
+    # the labels round-trip through createDataFrame unchanged
+    for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
+        if u not in parent:
+            parent[u] = u
+        if v not in parent:
+            parent[v] = v
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            # union by min so the final relabel pass is trivial
+            if rv < ru:
+                ru, rv = rv, ru
+            parent[rv] = ru
+    out_rows = [(n, find(n)) for n in parent]
+    out_schema = T.StructType(
+        [
+            T.StructField("node", node_type, False),
+            T.StructField("component", node_type, False),
+        ]
+    )
+    return edges.sparkSession.createDataFrame(out_rows, out_schema)
 
 
 def connected_components_star(
@@ -611,7 +480,6 @@ def connected_components_star(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    reliable_checkpoint: bool | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
@@ -625,25 +493,11 @@ def connected_components_star(
     small-star re-points every node's SMALLER-or-equal neighbors at
     the minimum (one agg + one join on the child>parent orientation).
     Both phases are hash-partitioned on the join key — no global sort,
-    no driver state. Converges in O(log n) rounds to height-1 stars.
-
-    vs the pointer-halving loop: comparable asymptotics; this variant
-    shrinks the EDGE SET itself each round (edges collapse onto star
-    centers) where halving keeps a constant |V| label table but needs
-    2 joins + an agg per iteration. Benchmarked head-to-head at sf0.1
-    in SCALE.md (r4, VERDICT ask #5); the loser is retained here for
-    the record, the winner runs in ``connected_components``.
+    no driver state. Converges in O(log n) rounds to height-1 stars;
+    the edge set itself shrinks each round as edges collapse onto
+    star centers. Lineage is cut every round (``_cut``), so the plan
+    stays O(1) deep.
     """
-    spark = edges.sparkSession
-    sc = spark.sparkContext
-    if reliable_checkpoint is None:
-        reliable_checkpoint = sc.getCheckpointDir() is not None
-
-    def _cut(df: DataFrame) -> DataFrame:
-        if reliable_checkpoint:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     all_nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))

@@ -2150,8 +2150,8 @@ def _semdedup_seeds(
 #: not remove it). 2^20 doubles ≈ 8 MiB of plan — at d=64 that is
 #: k=16,384 = a ⌈√n⌉-sized seed set for n ≈ 2.7·10^8 vectors, far
 #: past the fold lane's measured practical range (Θ(n^1.5) scalar
-#: folds). Refusal mirrors MAX_DRIVER_SEEDS: fail with the fix named
-#: rather than stall mid-plan-build.  (r7 VERDICT ask #7)
+#: folds). Fail with the fix named rather than stall mid-plan-build.
+#: (r7 VERDICT ask #7)
 MAX_FOLD_SEED_LITERALS = 1 << 20
 
 
@@ -2264,11 +2264,10 @@ def assign_cells_blas(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
             # normalize BEFORE the matmul — the one fp order every
-            # lane shares (driver tree, cogroup, numpy twins), so
-            # cross-routing equality is bit-exact rather than
-            # last-ulp-banded (r7 review finding: normalize-after
-            # diverged from the tree lanes within ~1e-15 of 6-dp
-            # midpoints)
+            # lane shares (flat, cogroup, numpy twins), so cross-lane
+            # equality is bit-exact rather than last-ulp-banded (r7
+            # review finding: normalize-after diverged within ~1e-15
+            # of 6-dp midpoints)
             C = _round6((M / np.linalg.norm(M, axis=1, keepdims=True)) @ Sn.T)
             idx = np.argmax(C, axis=1)
             yield pd.DataFrame(
@@ -2282,12 +2281,6 @@ def assign_cells_blas(
 
     return vectors.select(id_col, vec_col).mapInPandas(run, schema=schema)
 
-
-#: largest seed count the hierarchical lane will hold driver-side
-#: (k·d doubles collected + k×√k tree matmul + closure shipping);
-#: ~2M seeds · 64 dims ≈ 1 GiB of float64 — a deliberate refusal
-#: point well before driver OOM (see semantic_dedup_hier_drops)
-MAX_DRIVER_SEEDS = 1 << 21
 
 #: largest coarse-id set ``seed_routing_frame`` encodes as an isin
 #: plan literal before switching to a broadcast join (r7 ADVICE:
@@ -2325,198 +2318,48 @@ def _empty_drops(vectors: DataFrame, id_col: str) -> DataFrame:
     return vectors.sparkSession.createDataFrame([], schema)
 
 
-def hier_seed_tree(
-    seeds: list[tuple[int, list[float]]], k1: int
-) -> tuple[list[tuple[int, list[float]]], dict[int, list[tuple[int, list[float]]]]]:
-    """Split a flat seed list into a 2-level tree: the ``k1`` seeds
-    with the smallest ``md5(id)`` (= the FIRST k1 entries of
-    ``_semdedup_seeds``'s md5-ordered output) become COARSE centers,
-    and every seed is attached to the coarse center with the highest
-    6-dp-rounded cosine (ties to the smallest coarse id) — a
-    driver-side k×k1 numpy job (seeds are broadcast-sized by
-    construction; at k=n/C this sub-assignment is itself the
-    one-level problem at 1/C scale, so for extreme k run it as a
-    distributed ``assign_cells_blas`` pass instead).
-    Returns ``(coarse, children)`` with every coarse id owning at
-    least itself (cosine 1 to itself)."""
-    import numpy as np
-
-    coarse = seeds[:k1]
-    cs = sorted(coarse)
-    coarse_ids = {s for s, _ in cs}
-    c_ids = np.array([s for s, _ in cs], dtype=np.int64)
-    C = np.array([v for _, v in cs], dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    S = np.array([v for _, v in sorted(seeds)], dtype=np.float64)
-    s_ids = [s for s, _ in sorted(seeds)]
-    sims = _round6((S / np.linalg.norm(S, axis=1, keepdims=True)) @ Cn.T)
-    owner = c_ids[np.argmax(sims, axis=1)]
-    children: dict[int, list[tuple[int, list[float]]]] = {}
-    by_id = dict(sorted(seeds))
-    for sid, o in zip(s_ids, owner):
-        # a coarse center ALWAYS owns itself — without this override, a
-        # coarse seed whose 6-dp cosine to ANOTHER coarse center rounds
-        # to 1.0 (near-duplicate seeds — exactly what a dedup corpus
-        # contains) would attach there via the smallest-id tie rule,
-        # leaving its own cell childless while data vectors can still
-        # route to it at level 1 → KeyError in assign_cells_hier
-        # (r7 self-review finding #1)
-        children.setdefault(
-            sid if sid in coarse_ids else int(o), []
-        ).append((sid, by_id[sid]))
-    return cs, children
-
-
-def assign_cells_hier(
-    vectors: DataFrame,
-    seeds: list[tuple[int, list[float]]],
-    k1: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """TWO-LEVEL seed-cosine cell assignment (the IVF shape): per
-    Arrow batch, one sgemm against the k1 coarse centers picks each
-    row's coarse cell, then one sgemm per coarse group present in the
-    batch picks the final cell among that center's children — total
-    Θ(n·(k1 + k/k1)·d) flops instead of the flat Θ(n·k·d), i.e.
-    Θ(n·√k·d) at k1=⌈√k⌉. With k ∝ n (constant cell size C, pair
-    stage Θ(n·C)) that is Θ(n^1.5·d/√C): the EXPONENT matches the
-    flat-√n lane, but the constant shrinks by √C and every flop is
-    sgemm — honest framing, r7. Truly sub-n^1.5 routing needs a
-    deeper tree (L levels: Θ(n·L·k^{1/L}·d); L=log k → Θ(n·d·log n))
-    — straightforward to stack on this 2-level primitive, at one
-    more routing approximation per level.
-
-    Same per-level determinism contract as ``assign_cells_blas``
-    (6-dp HALF_UP cosines, argmax ties to the smallest seed id).
-    NOTE the semantics differ from flat assignment BY DESIGN: the
-    final cell is the best child OF THE WINNING COARSE CENTER, which
-    for a boundary vector may not be its globally-best seed — the
-    recall/cost trade every IVF makes. ``_cent`` is the cosine to
-    the FINAL cell's seed. Returns ``(_vid, _emb, cell, _cent)``."""
-    import numpy as np
-
-    coarse, children = hier_seed_tree(seeds, k1)
-    c_ids = np.array([s for s, _ in coarse], dtype=np.int64)
-    C = np.array([v for _, v in coarse], dtype=np.float64)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    sub_ids = {
-        o: np.array([s for s, _ in sorted(ch)], dtype=np.int64)
-        for o, ch in children.items()
-    }
-    sub_mats = {}
-    for o, ch in children.items():
-        S = np.array([v for _, v in sorted(ch)], dtype=np.float64)
-        sub_mats[o] = S / np.linalg.norm(S, axis=1, keepdims=True)
-    elem = vectors.schema[vec_col].dataType.simpleString()
-    schema = f"_vid long, _emb {elem}, cell long, _cent double"
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            coarse_pick = c_ids[np.argmax(_round6(Mn @ Cn.T), axis=1)]
-            cell = np.empty(len(Mn), dtype=np.int64)
-            cent = np.empty(len(Mn), dtype=np.float64)
-            for o in np.unique(coarse_pick):
-                m = coarse_pick == o
-                sims = _round6(Mn[m] @ sub_mats[int(o)].T)
-                idx = np.argmax(sims, axis=1)
-                cell[m] = sub_ids[int(o)][idx]
-                cent[m] = sims[np.arange(len(idx)), idx]
-            yield pd.DataFrame(
-                {
-                    "_vid": pdf[id_col].values,
-                    "_emb": pdf[vec_col].values,
-                    "cell": cell,
-                    "_cent": cent,
-                }
-            )
-
-    return vectors.select(id_col, vec_col).mapInPandas(run, schema=schema)
-
-
 def semantic_dedup_hier_drops(
     vectors: DataFrame,
     cell_size: int = 32,
     threshold: float = 0.3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    routing: str = "driver",
 ) -> DataFrame:
-    """SemDeDup with k ∝ n — the constant-cell-size lane the r7
-    SCALE.md analysis calls for: k = max(16, ⌈n/cell_size⌉) seeds
-    keep the EXPECTED cell size constant, so the intra-cell pair
-    stage is Θ(n·cell_size) = Θ(n) — the stage that dominates the
-    flat lanes' wall-clock goes linear. The two-level assignment
-    (``assign_cells_hier``, k1 = ⌈√k⌉) costs Θ(n·√k·d) =
-    Θ(n^1.5·d/√C) sgemm flops — same exponent as the flat-√n lane
-    with a √C-smaller constant (see ``assign_cells_hier`` for the
-    honest accounting and the deeper-tree path to sub-n^1.5). This
-    is the shape Abbas et al. 2023 run at production scale (their
-    k-means IS a hierarchical quantizer on GPU).
+    """SemDeDup with k ∝ n — the constant-cell-size lane: k =
+    max(16, ⌈n/cell_size⌉) seeds keep the EXPECTED cell size
+    constant, so the intra-cell pair stage is Θ(n·cell_size) = Θ(n).
+    Assignment is two-level (the IVF shape, k1 = ⌈√k⌉ coarse
+    centers): Θ(n·√k·d) = Θ(n^1.5·d/√C) sgemm flops — the flat-√n
+    lane's exponent with a √C-smaller constant. A deeper tree (L
+    levels: Θ(n·L·k^{1/L}·d)) is the path below n^1.5.
 
-    Trade, stated plainly: hierarchical routing is the IVF
-    approximation — a boundary vector can land in the best child of
-    the wrong coarse cell, so the drop set is NOT identical to the
-    flat lanes' (the flat k=⌈√n⌉ lanes and the pinned-k oracle
-    remain the exactness anchors; tests pin this lane against a
-    whole-corpus numpy twin of the SAME two-level rule instead).
-    Drop semantics within a cell are shared code
-    (``_drops_from_assigned``).
+    Only the k1 coarse centers are collected (√(n/C) rows —
+    broadcast-sized at any n); the k seeds are routed to them as a
+    distributed ``assign_cells_blas`` pass (``seed_routing_frame``)
+    and level 2 runs under ``cogroup().applyInPandas`` on the coarse
+    id (``assign_cells_hier_cogroup``): no driver-held seed tree,
+    rows shuffled = n + k.
 
-    **Driver-memory contract (r7 self-review finding #3) and the two
-    routings.** ``routing="driver"`` (default) collects the k·d seed
-    doubles, builds the tree on the driver and ships it in the
-    mapInPandas closure — at d=64, C=32 that is ~n·32 bytes of
-    driver/task state: fine to ~10⁸ vectors on a 24 GiB driver, NOT
-    fine at 10¹⁰, so it refuses past ``MAX_DRIVER_SEEDS`` instead of
-    OOM-ing mid-job. ``routing="cogroup"`` is the scale path: only
-    the k1 = ⌈√k⌉ COARSE centers are ever collected (√(n/C) rows —
-    broadcast-sized by construction at any n), seed routing runs as
-    a distributed ``assign_cells_blas`` pass over the k-row seed
-    frame (``seed_routing_frame``), and level-2 is a
-    ``cogroup().applyInPandas`` on the coarse id
-    (``assign_cells_hier_cogroup``) — no driver-held tree, rows
-    shuffled = n + k, exact equality with the driver routing pinned
-    in tests."""
+    Trade: a boundary vector can land in the best child of the wrong
+    coarse cell, so the drop set is NOT the flat lanes' (those and
+    the pinned-k oracle remain the exactness anchors; tests pin this
+    lane against a whole-corpus numpy twin of the same two-level
+    rule). Drop semantics within a cell are shared code
+    (``_drops_from_assigned``)."""
     import math
 
-    if routing not in ("driver", "cogroup"):
-        raise ValueError(f"routing must be driver|cogroup: {routing}")
     n = vectors.count()
     if n == 0:
         return _empty_drops(vectors, id_col)
     k = max(16, math.ceil(n / cell_size))
     k1 = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-    if routing == "cogroup":
-        coarse = sorted(_semdedup_seeds(vectors, k1, vec_col, id_col))
-        sr = seed_routing_frame(vectors, k, coarse, vec_col, id_col)
-        return _drops_from_assigned(
-            assign_cells_hier_cogroup(vectors, coarse, sr, vec_col, id_col),
-            threshold,
-            id_col,
-            dim=len(coarse[0][1]),
-        )
-    if k > MAX_DRIVER_SEEDS:
-        raise ValueError(
-            f"semantic_dedup_hier_drops: k={k} seeds exceed the "
-            f"driver-side tree bound ({MAX_DRIVER_SEEDS}); pass "
-            "routing='cogroup' (distributed seed routing) or raise "
-            "cell_size"
-        )
-    seeds = _semdedup_seeds(vectors, k, vec_col, id_col)
+    coarse = sorted(_semdedup_seeds(vectors, k1, vec_col, id_col))
+    sr = seed_routing_frame(vectors, k, coarse, vec_col, id_col)
     return _drops_from_assigned(
-        assign_cells_hier(vectors, seeds, k1, vec_col, id_col),
+        assign_cells_hier_cogroup(vectors, coarse, sr, vec_col, id_col),
         threshold,
         id_col,
-        dim=len(seeds[0][1]),
+        dim=len(coarse[0][1]),
     )
 
 
@@ -2527,8 +2370,7 @@ def assign_cells_hier_cogroup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """DISTRIBUTED two-level assignment — the ``MAX_DRIVER_SEEDS``
-    mitigation the driver-tree lane documents: level 1 routes every
+    """DISTRIBUTED two-level assignment: level 1 routes every
     vector to one of the k1 COARSE centers (``assign_cells_blas``
     over the k1-row python list — k1 = ⌈√k⌉ IS broadcast-sized by
     construction, ~√(n/C) rows), and level 2 runs as a
@@ -2542,9 +2384,11 @@ def assign_cells_hier_cogroup(
 
     ``seed_routing`` schema: ``(coarse, _sid, _svec)`` — every seed
     with its owning coarse center (coarse centers own themselves,
-    same override as ``hier_seed_tree``). Same determinism contract
-    as the driver lane; exact equality is pinned in
-    tests/test_retrieval.py. Returns ``(_vid, _emb, cell, _cent)``."""
+    see ``seed_routing_frame``). Same per-level determinism contract
+    as ``assign_cells_blas`` (6-dp HALF_UP cosines, argmax ties to
+    the smallest seed id); the final cell is the best child OF THE
+    WINNING COARSE CENTER and ``_cent`` is the cosine to that cell's
+    seed. Returns ``(_vid, _emb, cell, _cent)``."""
     import numpy as np
 
     lvl1 = assign_cells_blas(vectors, coarse, vec_col, id_col).select(
@@ -2603,7 +2447,11 @@ def seed_routing_frame(
     — the same derivation rule as every other lane, never
     collected), route each to its best coarse center with the same
     BLAS assignment the data path uses, and apply the
-    coarse-owns-itself override as a column expression. The k1
+    coarse-owns-itself override as a column expression (without it, a
+    coarse seed whose 6-dp cosine to ANOTHER coarse center rounds to
+    1.0 — near-duplicate seeds, exactly what a dedup corpus holds —
+    would attach there by the smallest-id tie rule and leave its own
+    cell childless). The k1
     coarse ids ride along as an ``isin`` literal while k1 is small;
     past ``_MAX_ISIN_COARSE_IDS`` the override switches to a
     broadcast LEFT JOIN against a tiny coarse-id frame — an isin
@@ -2742,69 +2590,44 @@ def semantic_dedup(
     threshold: float = 0.3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    lane: str = "auto",
     cell_size: int = 32,
 ) -> DataFrame:
-    """The single SemDeDup front door (r7 VERDICT ask #5): one count
-    job picks the measured-fastest lane, ``lane=`` forces one.
-
-    Decision table (measured, SCALE.md r7 — see
-    ``SEMDEDUP_CROSSOVER_N`` for the raw numbers):
+    """The single SemDeDup front door: one count job picks the
+    measured-fastest lane (see ``SEMDEDUP_CROSSOVER_N``):
 
     ==========  =====================  ================================
-    corpus      lane="auto" picks      why
+    corpus      lane                   why
     ==========  =====================  ================================
-    n ≤ 4,000   ``blas``  (flat k=√n)  measured faster at every SF in
-                                       this range AND exact vs the
-                                       fold/SQL anchors
-    n > 4,000   ``hier``  (k=n/32,     6.4× faster one decade up, gap
-                cogroup routing)       widening as √n; linear pairs,
-                                       no driver bound
+    n ≤ 4,000   flat BLAS (k=√n)       measured faster in this range
+                                       AND exact vs the fold/SQL anchors
+    n > 4,000   hier (k=n/cell_size)   6.4× faster one decade up, gap
+                                       widening as √n; linear pairs
     ==========  =====================  ================================
 
-    Exactness trade, stated plainly: the hier lane's two-level
-    routing is the IVF approximation — its drop set differs from the
-    flat lanes' (~10% at sf1, SCALE.md). Callers who need the
-    bit-reproducible SQL-oracle drop set at ANY size force
-    ``lane="blas"`` (or ``"fold"``) and accept Θ(n^1.5).
-
-    ``lane``: ``"auto" | "blas" | "hier" | "fold"``. The registry
-    keeps all three named lanes registered individually for oracles
-    and curvature tracking."""
+    The hier lane's drop set differs from the flat lanes' (~10% at
+    sf1, SCALE.md). Callers who need the bit-reproducible SQL-oracle
+    drop set at any size call ``semantic_dedup_drops`` directly and
+    accept Θ(n^1.5)."""
     import math
 
-    if lane not in ("auto", "blas", "hier", "fold"):
-        raise ValueError(f"lane must be auto|blas|hier|fold: {lane}")
-    if lane == "auto":
-        n = vectors.count()
-        lane = "blas" if n <= SEMDEDUP_CROSSOVER_N else "hier"
-        if lane == "blas":
-            # reuse the count: k=⌈√n⌉ per the flat lanes' auto rule,
-            # skipping _semdedup_seeds' second count job
-            return semantic_dedup_drops(
-                vectors,
-                k=max(16, math.isqrt(max(n, 1))),
-                threshold=threshold,
-                vec_col=vec_col,
-                id_col=id_col,
-                assign="blas",
-            )
-    if lane == "hier":
+    n = vectors.count()
+    if n > SEMDEDUP_CROSSOVER_N:
         return semantic_dedup_hier_drops(
             vectors,
             cell_size=cell_size,
             threshold=threshold,
             vec_col=vec_col,
             id_col=id_col,
-            routing="cogroup",
         )
+    # reuse the count: k=⌈√n⌉ per the flat lanes' auto rule, skipping
+    # _semdedup_seeds' second count job
     return semantic_dedup_drops(
         vectors,
-        k=None,
+        k=max(16, math.isqrt(max(n, 1))),
         threshold=threshold,
         vec_col=vec_col,
         id_col=id_col,
-        assign=lane,
+        assign="blas",
     )
 
 

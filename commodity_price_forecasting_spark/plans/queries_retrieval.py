@@ -269,40 +269,25 @@ def semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The constant-cell-size SemDeDup lane (r7): k = ⌈n/32⌉ cells
     keep the EXPECTED cell size constant — the pair stage, which
     dominates the flat lanes' wall-clock, goes Θ(n) — and the
-    assignment routes through a TWO-LEVEL seed tree
-    (``operators/similarity.assign_cells_hier``: one sgemm against
-    ⌈√k⌉ coarse centers, then one against the winner's children —
-    Θ(n·√k·d) flops, a √C-smaller constant at the flat lane's
-    exponent; the operator docstring has the honest accounting and
-    the deeper-tree path below n^1.5). This implements the
-    hierarchical shape the flat lanes' measured Θ(n^1.5) curvature
-    points at (SCALE.md r7; Abbas et al. 2023 get it from GPU
-    k-means).
+    assignment is two-level: ⌈√k⌉ coarse centers, then the winner's
+    children, routed distributed under ``cogroup().applyInPandas``
+    (``operators/similarity.semantic_dedup_hier_drops`` has the cost
+    accounting). This is the hierarchical shape the flat lanes'
+    measured Θ(n^1.5) curvature points at (SCALE.md r7; Abbas et al.
+    2023 get it from GPU k-means).
 
-    Semantics trade, stated in the operator docstring: two-level
-    routing is the IVF approximation — a boundary vector may land in
-    the best child of the wrong coarse cell, so this lane's drop set
-    is NOT byte-identical to the flat lanes'. Exactness anchors stay
-    ``sim_semantic_dedup`` (pinned k, full SQL oracle) and the
-    fold/BLAS pair; THIS lane is pinned in pytest against a
-    whole-corpus numpy twin of the same two-level rule
+    Two-level routing is the IVF approximation — a boundary vector
+    may land in the best child of the wrong coarse cell, so this
+    lane's drop set is NOT byte-identical to the flat lanes'.
+    Exactness anchors stay ``sim_semantic_dedup`` (pinned k, full SQL
+    oracle) and the fold/BLAS pair; THIS lane is pinned in pytest
+    against a whole-corpus numpy twin of the same two-level rule
     (tests/test_retrieval.py). Rows-only on the driver (k and the
-    tree depend on n).
-
-    Routing: ``cogroup`` — the DISTRIBUTED seed routing
-    (``assign_cells_hier_cogroup``: no driver-held tree, level-2 as
-    one matmul per coarse cell under ``cogroup().applyInPandas``).
-    Chosen over the driver-tree routing on BOTH axes: no
-    ``MAX_DRIVER_SEEDS`` bound, and measured 1.6×/5.1× faster at
-    sf0.1/sf1.0 (the driver tree re-slices ~k coarse groups inside
-    every Arrow batch and ships the full k·d closure per task —
-    SCALE.md r7). Exact equality between routings is pinned in
-    tests/test_retrieval.py."""
+    coarse set depend on n)."""
     return semantic_dedup_hier_drops(
         load_table(spark, sf_dir, "embeddings"),
         cell_size=32,
         threshold=0.3,
-        routing="cogroup",
     )
 
 

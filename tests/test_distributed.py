@@ -33,49 +33,12 @@ def test_prefix_sum_no_single_partition_exchange(spark):
     assert "SinglePartition" not in plan, plan
 
 
-def test_connected_components_chain_converges_logarithmically(spark):
-    """Large-component stress: a 100,000-node CHAIN is the worst case
-    for label propagation (diameter = N). Pointer halving must close
-    it in O(log N) iterations — ~17 for 1e5 (log2(1e5) ≈ 16.6) —
-    where plain propagation would need 100,000. Asserts BOTH the
-    result (one component, labelled by the minimum node id) and the
-    iteration bound, so a convergence regression fails fast instead
-    of silently burning 6x the shuffles."""
-    import math
-
-    from commodity_price_forecasting_spark.operators.dedup import (
-        connected_components,
-    )
-
-    n = 100_000
-    edges = spark.range(n - 1).select(
-        F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b")
-    )
-    stats = {}
-    # strategy="halving" + threshold=0 forces the DISTRIBUTED halving
-    # loop — this test exists to prove that path's O(log d) bound, not
-    # the driver fast path (and not the star default)
-    out = connected_components(
-        edges, max_iter=25, stats=stats, small_graph_threshold=0,
-        strategy="halving",
-    )
-    agg = out.agg(
-        F.countDistinct("component").alias("nc"),
-        F.count("*").alias("n_nodes"),
-        F.max("component").alias("max_label"),
-    ).first()
-    assert agg["nc"] == 1
-    assert agg["n_nodes"] == n
-    assert agg["max_label"] == 0
-    assert stats["iterations"] <= math.ceil(math.log2(n)) + 3, stats
-
-
 def test_connected_components_star_and_forest(spark):
     """A star (diameter 2) must converge in O(1) iterations whatever
     its fan-out, and a forest of disjoint components must keep them
-    separate with per-component min labels."""
+    separate with per-component min labels (the distributed loop)."""
     from commodity_price_forecasting_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     # 10k-leaf star centred on node 0
@@ -83,7 +46,7 @@ def test_connected_components_star_and_forest(spark):
         F.lit(0).alias("doc_a"), F.col("id").alias("doc_b")
     )
     stats = {}
-    out = connected_components(star, stats=stats, small_graph_threshold=0)
+    out = connected_components_star(star, stats=stats)
     assert out.select("component").distinct().count() == 1
     assert stats["iterations"] <= 2, stats
 
@@ -94,7 +57,7 @@ def test_connected_components_star_and_forest(spark):
         .union(tri.selectExpr("base + 1", "base + 2"))
         .union(tri.selectExpr("base", "base + 2"))
     )
-    comp = connected_components(edges, small_graph_threshold=0)
+    comp = connected_components_star(edges)
     rows = comp.groupBy("component").count().collect()
     assert len(rows) == 500
     assert all(r["count"] == 3 for r in rows)
@@ -108,6 +71,7 @@ def test_connected_components_fast_path_equals_distributed(spark):
     isolated pairs."""
     from commodity_price_forecasting_spark.operators.dedup import (
         connected_components,
+        connected_components_star,
     )
 
     chain = spark.range(999).selectExpr("id AS doc_a", "id + 1 AS doc_b")
@@ -118,34 +82,27 @@ def test_connected_components_fast_path_equals_distributed(spark):
         "5000 + id * 2 AS doc_a", "5001 + id * 2 AS doc_b"
     )
     edges = chain.union(star).union(pairs)
-    stats_fast, stats_star, stats_halv = {}, {}, {}
+    stats_fast, stats_star = {}, {}
     fast = connected_components(edges, stats=stats_fast)
-    # auto above the threshold routes to large-star/small-star; the
-    # halving loop stays reachable via strategy — all three must agree
-    starp = connected_components(edges, stats=stats_star, small_graph_threshold=0)
-    halv = connected_components(
-        edges, stats=stats_halv, small_graph_threshold=0, strategy="halving"
-    )
+    starp = connected_components_star(edges, stats=stats_star)
     assert stats_fast.get("fast_path") is True
     assert "fast_path" not in stats_star
-    assert "fast_path" not in stats_halv
     got_fast = sorted(tuple(r) for r in fast.collect())
     got_star = sorted(tuple(r) for r in starp.collect())
-    got_halv = sorted(tuple(r) for r in halv.collect())
-    assert got_fast == got_star == got_halv
+    assert got_fast == got_star
     assert len(got_fast) == 1000 + 101 + 20
 
 
 def test_session_default_checkpoint_dir_and_reliable_cc(spark, tmp_path):
     """r8 VERDICT ask #7: the session factory must configure a
-    checkpoint dir OUT OF THE BOX, so connected_components' auto rule
-    (reliable df.checkpoint() whenever a dir is configured) takes the
-    cluster-safe path by default instead of silently falling back to
-    single-JVM localCheckpoint."""
+    checkpoint dir OUT OF THE BOX, so the components loop's lineage
+    cut (reliable df.checkpoint() whenever a dir is configured) takes
+    the cluster-safe path by default instead of silently falling back
+    to single-JVM localCheckpoint."""
     import os
 
     from commodity_price_forecasting_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     sc = spark.sparkContext
@@ -168,9 +125,9 @@ def test_session_default_checkpoint_dir_and_reliable_cc(spark, tmp_path):
     # the reliable path was taken.
     before = _ckpt_files()
     edges = spark.range(50).selectExpr("id AS doc_a", "id + 1 AS doc_b")
-    out = connected_components(edges, small_graph_threshold=0, strategy="star")
+    out = connected_components_star(edges)
     assert out.select("component").distinct().count() == 1
     assert _ckpt_files() - before, (
-        "connected_components ran without writing reliable checkpoints "
+        "connected_components_star ran without writing reliable checkpoints "
         "to the session checkpoint dir"
     )

@@ -340,9 +340,9 @@ def test_connected_components_degenerate_inputs(spark):
 
 
 def test_connected_components_long_chain(spark):
-    """Diameter >> 2: a 200-node path must fully converge within the
-    default max_iter=20 — only possible with pointer halving
-    (O(log diameter)); plain 1-hop propagation would need ~200."""
+    """Diameter >> 2: a 200-node path must come out as ONE component
+    labelled by its minimum node — plain 1-hop label propagation would
+    need ~200 rounds to get there."""
     from commodity_price_forecasting_spark.operators.dedup import (
         connected_components,
     )
@@ -355,6 +355,25 @@ def test_connected_components_long_chain(spark):
     assert {r["component"] for r in out} == {0}
 
 
+def _union_find_components(edges):
+    """Pure-Python reference: ``{node: min node id of its component}``
+    for every node that appears in an edge (self-loops included)."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
 def test_connected_components_random_graph_vs_union_find(spark):
     import random
 
@@ -365,25 +384,7 @@ def test_connected_components_random_graph_vs_union_find(spark):
     rng = random.Random(7)
     edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(180)]
     edges = [(a, b) for a, b in edges if a != b]
-
-    parent = list(range(300))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    # oracle: min node id per component, only for nodes with an edge
-    touched = {a for e in edges for a in e}
-    comp_min = {}
-    for n in sorted(touched):
-        comp_min.setdefault(find(n), n)
-    want = {n: comp_min[find(n)] for n in touched}
+    want = _union_find_components(edges)
 
     out = {
         r["node"]: r["component"]
@@ -433,13 +434,12 @@ def test_doc_chunking_every_chunk_covers_tokens(spark):
 
 
 def test_connected_components_star_matches_halving(spark):
-    """The large-star/small-star variant must produce EXACTLY the same
-    (node, component) labelling as the pointer-halving loop on random
+    """The large-star/small-star loop must produce EXACTLY the
+    (node, component) labelling of a pure-Python union-find on random
     graphs, chains, self-loops, and empty input."""
     import random
 
     from commodity_price_forecasting_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -463,12 +463,7 @@ def test_connected_components_star_matches_halving(spark):
     rng = random.Random(13)
     edges = [(rng.randrange(250), rng.randrange(250)) for _ in range(160)]
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    want = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            df, "doc_a", "doc_b", small_graph_threshold=0, strategy="halving"
-        ).collect()
-    }
+    want = _union_find_components(edges)
     got = {
         r["node"]: r["component"]
         for r in connected_components_star(df, "doc_a", "doc_b").collect()

@@ -440,7 +440,9 @@ def test_svr_and_mlp_beat_linear_on_nonlinear_target(spark):
 
 def test_numpy_adapter_slots_into_run_ensemble(spark):
     """The duck-typed adapter must run inside run_ensemble next to
-    MLlib models, score distributed, and land a sane in-sample R²."""
+    MLlib models, score distributed, and land a sane in-sample R²;
+    batch and driver-side scoring both follow the assembler's feature
+    order, whatever order the caller lists the features in."""
     import pandas as pd
 
     from commodity_price_forecasting_spark.ml.extra_models import (
@@ -457,20 +459,28 @@ def test_numpy_adapter_slots_into_run_ensemble(spark):
 
     from pyspark.ml.regression import LinearRegression
 
-    models = {
-        "linear": LinearRegression(featuresCol="features", labelCol="label"),
-        "svr": NumpyRegressorAdapter(NumpySVR, ["f0", "f1"]),
-    }
-    res = run_ensemble(df, ["f0", "f1"], "label", models=models)
+    def models():
+        return {
+            "linear": LinearRegression(featuresCol="features", labelCol="label"),
+            "svr": NumpyRegressorAdapter(NumpySVR),
+        }
+
+    res = run_ensemble(df, ["f0", "f1"], "label", models=models())
     assert res.model_metrics["svr"]["r2"] > res.model_metrics["linear"]["r2"]
     assert set(res.weights) == {"linear", "svr"}
     assert abs(sum(res.weights.values()) - 1.0) < 1e-9
 
     # driver-side serving scores the adapter like its batch transform
+    # and like a numpy fit on the assembler's column order — also when
+    # the features are listed in the other order
     one = pdf.iloc[:1]
-    row = predict_signal(spark, res, ["f0", "f1"], "label", one.iloc[0].to_dict()).first()
-    want = res.fitted["svr"].transform(spark.createDataFrame(one)).first()["prediction"]
-    assert row["pred_svr"] == pytest.approx(want, rel=1e-9)
+    swapped = run_ensemble(df, ["f1", "f0"], "label", models=models())
+    for fit, order, cols in ((res, ["f0", "f1"], [0, 1]), (swapped, ["f1", "f0"], [1, 0])):
+        row = predict_signal(spark, fit, order, "label", one.iloc[0].to_dict()).first()
+        want = fit.fitted["svr"].transform(spark.createDataFrame(one)).first()["prediction"]
+        direct = NumpySVR().fit(X[:, cols], y).predict(X[:1, cols])[0]
+        assert row["pred_svr"] == pytest.approx(want, rel=1e-9), order
+        assert row["pred_svr"] == pytest.approx(direct, rel=1e-9), order
 
 
 def test_kpss_dataframe_form_equals_numpy_form(spark):

@@ -612,34 +612,6 @@ def test_resize_and_stats_survive_null_and_tiny_payloads(spark):
     assert audio_window_energy(adf, codec="wav").collect() == []
 
 
-def test_hier_refuses_oversized_driver_seed_tree(spark):
-    """r7 self-review finding #3: past MAX_DRIVER_SEEDS the lane must
-    refuse with a clear message instead of OOM-ing the driver."""
-    import pytest as _pytest
-
-    from commodity_price_forecasting_spark.operators.multimodal import (  # noqa: F401
-        ppm_wrap,
-    )
-    from commodity_price_forecasting_spark.operators.similarity import (
-        semantic_dedup_hier_drops,
-    )
-    from commodity_price_forecasting_spark.sources.readers import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    with _pytest.raises(ValueError, match="driver-side tree bound"):
-        # cell_size tiny enough that k = ceil(n / cell_size) can't
-        # exceed the bound on a 500-row fixture — so shrink the bound
-        # via monkeypatched constant instead of a giant corpus
-        import commodity_price_forecasting_spark.operators.similarity as sim
-
-        old = sim.MAX_DRIVER_SEEDS
-        sim.MAX_DRIVER_SEEDS = 4
-        try:
-            semantic_dedup_hier_drops(emb, cell_size=2)
-        finally:
-            sim.MAX_DRIVER_SEEDS = old
-
-
 # --- real PNG codec (stdlib zlib + numpy unfilter) -------------------------
 
 

@@ -367,7 +367,8 @@ def test_er_expansion_join_splits_under_aqe_skew(spark):
 
 def _hier_numpy_twin(seeds, vecs, k1, threshold=0.3):
     """Whole-corpus numpy twin of the two-level SemDeDup rule
-    (hier_seed_tree + assign_cells_hier + the shared drop stage):
+    (seed_routing_frame + assign_cells_hier_cogroup + the shared drop
+    stage):
     coarse = first k1 md5-ordered seeds; every seed attaches to its
     best coarse center; every vector routes coarse → child; within a
     final cell, a vector is dropped iff a partner with in-order
@@ -390,7 +391,7 @@ def _hier_numpy_twin(seeds, vecs, k1, threshold=0.3):
     by_id = dict(sorted(seeds))
     coarse_ids = {s for s, _ in coarse}
     for sid, o in zip(s_ids, owner):
-        # coarse centers own themselves (mirrors hier_seed_tree)
+        # coarse centers own themselves (mirrors seed_routing_frame)
         children.setdefault(sid if sid in coarse_ids else int(o), []).append(sid)
 
     assign = {}
@@ -471,123 +472,48 @@ def test_semantic_dedup_hier_matches_numpy_twin(spark):
         assert abs(g[1] - cent) < 5e-7, vid  # 6-dp-rounded on both sides
 
 
-def test_hier_tree_invariants(spark):
-    """Every coarse center owns itself; every vector's final cell is
-    a child of its coarse pick; the tree partitions the seed set."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        _semdedup_seeds,
-        hier_seed_tree,
-    )
-    from commodity_price_forecasting_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    seeds = _semdedup_seeds(emb, 25, "embedding", "vec_id")
-    coarse, children = hier_seed_tree(seeds, 5)
-    c_ids = {s for s, _ in coarse}
-    assert len(c_ids) == 5
-    for o in c_ids:
-        assert o in {s for s, _ in children.get(o, [])}, "coarse owns itself"
-    all_children = [s for ch in children.values() for s, _ in ch]
-    assert sorted(all_children) == sorted(s for s, _ in seeds)
-    assert set(children) <= c_ids
-
-
-def test_hier_assignment_plan_is_single_mapinpandas(spark):
-    """Like the BLAS lane: the two-level assignment must be ONE
-    Arrow-batched MapInPandas over the scan with no shuffle of its
-    own — the lane's only shuffle stays the pair stage."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        _semdedup_seeds,
-        assign_cells_hier,
-    )
-    from commodity_price_forecasting_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    seeds = _semdedup_seeds(emb, 25, "embedding", "vec_id")
-    plan = (
-        assign_cells_hier(emb, seeds, 5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_hier_near_duplicate_coarse_seeds_stay_routable(spark):
     """r7 self-review finding #1: two coarse seeds whose mutual
     cosine rounds to 1.0 at 6 dp (near-duplicate seeds — the very
     input a dedup corpus contains) must BOTH keep their own cell:
     without the coarse-owns-itself override, the larger-id center
     becomes childless while data vectors can still route to it at
-    level 1, and assignment dies with a KeyError."""
+    level 1, and the cogroup silently drops them."""
     import math
 
-    import numpy as np
-
     from commodity_price_forecasting_spark.operators.similarity import (
-        assign_cells_hier,
-        hier_seed_tree,
+        assign_cells_hier_cogroup,
+        seed_routing_frame,
     )
 
     # seeds 1 and 2 are ~0.9999996-cosine near-duplicates (rounds to
-    # 1.0); seeds 3 and 4 point elsewhere so k1=2 picks 1,2 as coarse
+    # 1.0); seeds 3 and 4 point elsewhere
     def unit(theta):
         return [math.cos(theta), math.sin(theta)]
 
+    schema = "vec_id long, embedding array<double>"
     seeds = [
         (1, unit(0.0)),
         (2, unit(0.0009)),
         (3, unit(1.2)),
         (4, unit(2.1)),
     ]
-    coarse, children = hier_seed_tree(seeds, 2)
-    assert {s for s, _ in coarse} == {1, 2}
-    for o in (1, 2):
-        assert o in {s for s, _ in children[o]}, "coarse must own itself"
+    coarse = seeds[:2]
+    # k = every row of the seed frame, so the routed seed set is 1..4
+    sr = seed_routing_frame(spark.createDataFrame(seeds, schema), 4, coarse)
+    owner = {r["_sid"]: r["coarse"] for r in sr.collect()}
+    assert sorted(owner) == [1, 2, 3, 4]
+    assert owner[1] == 1 and owner[2] == 2, "coarse must own itself"
     # a vector strictly closer to seed 2 than seed 1 after rounding
     rows = [(10, unit(0.002)), (11, unit(1.19)), (12, unit(2.09))]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    df = spark.createDataFrame(rows, schema)
     got = {
         r["_vid"]: r["cell"]
-        for r in assign_cells_hier(df, seeds, 2).collect()
+        for r in assign_cells_hier_cogroup(df, coarse, sr).collect()
     }
-    assert got[10] == 2  # routes to the near-duplicate center, no crash
+    assert set(got) == {10, 11, 12}  # no vector dropped
+    assert got[10] == 2  # routes to the near-duplicate center
     assert got[11] == 3 and got[12] == 4
-
-
-def test_hier_cogroup_routing_equals_driver_routing(spark):
-    """r7: the distributed (cogroup) seed routing must produce the
-    EXACT drop set of the driver-tree routing — same coarse pick,
-    same owns-itself override, same round6 argmax, pinned
-    value-for-value so the MAX_DRIVER_SEEDS mitigation is a free
-    swap, not a semantics change."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        semantic_dedup_hier_drops,
-    )
-    from commodity_price_forecasting_spark.sources.readers import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    key = lambda r: (
-        r["vec_id"],
-        r["cell"],
-        round(r["cent_cos"], 6),
-        r["n_dominators"],
-        r["first_keeper"],
-    )
-    drv = sorted(
-        map(key, semantic_dedup_hier_drops(emb, cell_size=32).collect())
-    )
-    cg = sorted(
-        map(
-            key,
-            semantic_dedup_hier_drops(
-                emb, cell_size=32, routing="cogroup"
-            ).collect(),
-        )
-    )
-    assert drv == cg and len(drv) > 0
 
 
 def test_hier_cogroup_assignment_plan_shape(spark):
@@ -672,8 +598,7 @@ def test_semantic_dedup_empty_corpus_returns_empty_drops(spark):
     for out in (
         semantic_dedup_drops(empty, k=None),
         semantic_dedup_drops(empty, k=None, assign="blas"),
-        semantic_dedup_hier_drops(empty, routing="driver"),
-        semantic_dedup_hier_drops(empty, routing="cogroup"),
+        semantic_dedup_hier_drops(empty),
         semantic_dedup(empty),
     ):
         assert out.columns == [
@@ -708,8 +633,8 @@ def test_assign_lanes_refuse_empty_seed_list(spark):
 def test_fold_lane_refuses_past_plan_literal_bound(spark):
     """r7 VERDICT ask #7: the fold lane embeds a k×d array literal in
     the plan; past MAX_FOLD_SEED_LITERALS floats it must refuse with
-    the blas lane named, mirroring MAX_DRIVER_SEEDS, instead of
-    stalling in driver-side plan build."""
+    the blas lane named instead of stalling in driver-side plan
+    build."""
     import pytest
 
     from commodity_price_forecasting_spark.operators import similarity as S
@@ -725,22 +650,17 @@ def test_fold_lane_refuses_past_plan_literal_bound(spark):
         S.assign_cells_fold(df, seeds)
 
 
-def test_semantic_dedup_front_door_dispatch(spark):
+def test_semantic_dedup_front_door_dispatch(spark, monkeypatch):
     """r7 VERDICT ask #5: ONE semantic_dedup front door with measured
-    lane dispatch — below SEMDEDUP_CROSSOVER_N vectors lane="auto"
-    must produce exactly the flat-BLAS lane's drop set; lane= forces
-    a specific lane (hier differs by design on boundary vectors)."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        SEMDEDUP_CROSSOVER_N,
-        semantic_dedup,
-        semantic_dedup_drops,
-        semantic_dedup_hier_drops,
-    )
+    lane dispatch — at or below SEMDEDUP_CROSSOVER_N vectors it must
+    produce exactly the flat-BLAS lane's drop set, above it exactly
+    the hier lane's (hier differs by design on boundary vectors)."""
+    from commodity_price_forecasting_spark.operators import similarity as S
     from commodity_price_forecasting_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n = emb.count()
-    assert n <= SEMDEDUP_CROSSOVER_N  # fixture sits below the crossover
+    assert n <= S.SEMDEDUP_CROSSOVER_N  # fixture sits below the crossover
 
     def key(df):
         return sorted(
@@ -748,23 +668,19 @@ def test_semantic_dedup_front_door_dispatch(spark):
             for r in df.collect()
         )
 
-    auto = key(semantic_dedup(emb))
-    blas = key(semantic_dedup_drops(emb, k=None, assign="blas"))
+    auto = key(S.semantic_dedup(emb))
+    blas = key(S.semantic_dedup_drops(emb, k=None, assign="blas"))
     assert auto == blas and len(auto) > 0
 
-    forced_hier = key(semantic_dedup(emb, lane="hier"))
-    direct_hier = key(
-        semantic_dedup_hier_drops(emb, cell_size=32, routing="cogroup")
+    fold = key(S.semantic_dedup_drops(emb, k=None, assign="fold"))
+    assert fold == blas  # fold and blas agree on this corpus
+
+    # move the crossover below the fixture: the front door must hand
+    # the same corpus to the hier lane
+    monkeypatch.setattr(S, "SEMDEDUP_CROSSOVER_N", n - 1)
+    assert key(S.semantic_dedup(emb)) == key(
+        S.semantic_dedup_hier_drops(emb, cell_size=32)
     )
-    assert forced_hier == direct_hier
-
-    forced_fold = key(semantic_dedup(emb, lane="fold"))
-    assert forced_fold == blas  # fold and blas agree on this corpus
-
-    import pytest
-
-    with pytest.raises(ValueError, match="lane must be"):
-        semantic_dedup(emb, lane="nope")
 
 
 def test_seed_routing_frame_broadcast_join_form_matches_isin(spark, monkeypatch):

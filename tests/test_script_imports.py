@@ -1,0 +1,55 @@
+"""Import check for the scripts that live outside the package
+(``tools/*.py``, ``perfbench/*.py``): every name they import from
+``commodity_price_forecasting_spark`` must still exist. The scripts
+are parsed with ``ast`` and never executed — several do real work at
+import time."""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import os
+
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "commodity_price_forecasting_spark"
+
+
+def _scripts() -> list[str]:
+    out = []
+    for d in ("tools", "perfbench"):
+        out += sorted(
+            os.path.join(d, f)
+            for f in os.listdir(os.path.join(ROOT, d))
+            if f.endswith(".py")
+        )
+    return out
+
+
+def _package_imports(path: str) -> list[tuple[str, str | None]]:
+    """``(module, name)`` for every package import in ``path``; name is
+    None for a plain ``import module``."""
+    with open(os.path.join(ROOT, path)) as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE):
+            found += [(node.module, a.name) for a in node.names]
+        elif isinstance(node, ast.Import):
+            found += [(a.name, None) for a in node.names if a.name.startswith(PACKAGE)]
+    return found
+
+
+@pytest.mark.parametrize("path", _scripts())
+def test_script_package_imports_resolve(path):
+    missing = []
+    for module, name in _package_imports(path):
+        mod = importlib.import_module(module)
+        if name is None or hasattr(mod, name):
+            continue
+        try:  # ``from package import submodule``
+            importlib.import_module(f"{module}.{name}")
+        except ModuleNotFoundError:
+            missing.append(f"{module}.{name}")
+    assert not missing, f"{path} imports names that do not exist: {missing}"

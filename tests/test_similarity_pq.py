@@ -765,7 +765,8 @@ def test_semantic_dedup_drop_quality_on_planted_duplicates(spark):
       survive (measured 1.0 on both lanes at this size; the hier
       lane's floor carries routing-approximation slack)."""
     from commodity_price_forecasting_spark.operators.similarity import (
-        semantic_dedup,
+        semantic_dedup_drops,
+        semantic_dedup_hier_drops,
     )
 
     rng = np.random.default_rng(13)
@@ -785,8 +786,12 @@ def test_semantic_dedup_drop_quality_on_planted_duplicates(spark):
     np.fill_diagonal(C, -1)
     has_nbr = (np.round(C, 6) >= 0.3).any(axis=1)
 
-    for lane, recall_floor in (("blas", 1.0), ("hier", 0.95)):
-        drops = {r2["vec_id"] for r2 in semantic_dedup(df, lane=lane).collect()}
+    lanes = {
+        "blas": (semantic_dedup_drops(df, k=None, assign="blas"), 1.0),
+        "hier": (semantic_dedup_hier_drops(df), 0.95),
+    }
+    for lane, (out, recall_floor) in lanes.items():
+        drops = {r2["vec_id"] for r2 in out.collect()}
         assert [int(i) for i in drops if not has_nbr[i]] == []
         both_kept = sum(
             1

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 from commodity_price_forecasting_spark.operators.similarity import (
     assign_cells_blas,
+    assign_cells_hier_cogroup,
+    seed_routing_frame,
     _semdedup_seeds,
 )
 from commodity_price_forecasting_spark.session import get_spark
@@ -38,14 +40,12 @@ def main() -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         n = emb.count()
         if cell_size:
-            from commodity_price_forecasting_spark.operators.similarity import (
-                assign_cells_hier,
-            )
-
             k = max(16, math.ceil(n / cell_size))
             k1 = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-            seeds = _semdedup_seeds(emb, k, "embedding", "vec_id")
-            assigned = assign_cells_hier(emb, seeds, k1)
+            coarse = sorted(_semdedup_seeds(emb, k1, "embedding", "vec_id"))
+            assigned = assign_cells_hier_cogroup(
+                emb, coarse, seed_routing_frame(emb, k, coarse)
+            )
         else:
             k = max(16, math.isqrt(n))
             seeds = _semdedup_seeds(emb, k, "embedding", "vec_id")
