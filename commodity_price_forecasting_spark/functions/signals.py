@@ -28,7 +28,7 @@ def weight_floor(r2: Column, floor: float = 0.001) -> Column:
     return F.greatest(r2, F.lit(floor))
 
 
-def signal_strength(pred: Column, threshold: float) -> Column:
+def signal_strength(pred: Column, threshold: float | Column) -> Column:
     """``min(|pred| / threshold, 1)`` (reference: app.py:159-189)."""
     return F.least(F.abs(pred) / F.lit(threshold), F.lit(1.0))
 
@@ -36,14 +36,16 @@ def signal_strength(pred: Column, threshold: float) -> Column:
 def trade_signal(
     pred: Column,
     r2: Column,
-    threshold: float = 0.6,
-    min_confidence: float = 0.6,
+    threshold: float | Column = 0.6,
+    min_confidence: float | Column = 0.6,
 ) -> Column:
     """The deployed signal rule (reference: app.py:159-189,
     app.py:279-296): WAIT when |pred| below threshold or confidence
     below minimum; BUY_A_SELL_B on positive spread prediction;
     SELL_A_BUY_B on negative. Returns a struct
-    ``(signal, confidence, strength)``."""
+    ``(signal, confidence, strength)``. ``threshold`` and
+    ``min_confidence`` are literals or columns, so one expression can
+    serve rows that carry their own rule parameters."""
     signal = (
         F.when((F.abs(pred) < threshold) | (r2 < min_confidence), F.lit("WAIT"))
         .when(pred > 0, F.lit("BUY_A_SELL_B"))

@@ -43,26 +43,41 @@ def smape(label: Column, pred: Column) -> Column:
     return F.avg(2 * F.abs(pred - label) / (F.abs(pred) + F.abs(label)))
 
 
-def regression_metrics(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
+METRICS = ("n", "mae", "rmse", "r2", "dir_acc", "smape")
+
+
+def regression_metrics(df: DataFrame, label_col: str, pred_col: str | list[str]) -> DataFrame:
     """All reference metrics in one aggregate pass; R² computed from
-    sufficient statistics (no window needed)."""
-    y, p = F.col(label_col), F.col(pred_col)
-    agg = df.agg(
+    sufficient statistics (no window needed). One prediction column
+    gives the columns ``METRICS``; a list of them gives
+    ``<pred_col>_<metric>`` for each, still in one pass."""
+    many = not isinstance(pred_col, str)
+    preds = list(pred_col) if many else [pred_col]
+    y = F.col(label_col)
+    aggs = [
         F.count(F.lit(1)).alias("n"),
-        mae(y, p).alias("mae"),
-        rmse(y, p).alias("rmse"),
-        F.sum(F.pow(y - p, 2)).alias("_ss_res"),
         F.sum(F.pow(y, 2)).alias("_ss_y"),
         F.sum(y).alias("_sum_y"),
-        directional_accuracy(y, p).alias("dir_acc"),
-        smape(y, p).alias("smape"),
-    )
+    ]
+    for i, c in enumerate(preds):
+        p = F.col(c)
+        aggs += [
+            mae(y, p).alias(f"_mae{i}"),
+            rmse(y, p).alias(f"_rmse{i}"),
+            F.sum(F.pow(y - p, 2)).alias(f"_ss_res{i}"),
+            directional_accuracy(y, p).alias(f"_dir_acc{i}"),
+            smape(y, p).alias(f"_smape{i}"),
+        ]
     ss_tot = F.col("_ss_y") - F.pow(F.col("_sum_y"), 2) / F.col("n")
-    return agg.select(
-        "n",
-        "mae",
-        "rmse",
-        (1 - F.col("_ss_res") / ss_tot).alias("r2"),
-        "dir_acc",
-        "smape",
-    )
+    out = []
+    for i, c in enumerate(preds):
+        cols = {
+            "n": F.col("n"),
+            "mae": F.col(f"_mae{i}"),
+            "rmse": F.col(f"_rmse{i}"),
+            "r2": 1 - F.col(f"_ss_res{i}") / ss_tot,
+            "dir_acc": F.col(f"_dir_acc{i}"),
+            "smape": F.col(f"_smape{i}"),
+        }
+        out += [cols[k].alias(f"{c}_{k}" if many else k) for k in METRICS]
+    return df.agg(*aggs).select(*out)

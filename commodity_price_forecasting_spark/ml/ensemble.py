@@ -13,7 +13,11 @@ Spark design: each estimator is an MLlib Pipeline
 (VectorAssembler → model); the fitted pipelines' ``transform``s are
 chained over one frame, each adding its ``pred_<name>`` column, and
 the ensemble is a column expression Σ wᵢ·predᵢ — the data never
-leaves the cluster; only K weights come to the driver.
+leaves the cluster; only K weights come to the driver. Metrics take
+two aggregate passes: every model and the unweighted mean in one, the
+weighted ensemble (whose weights need the first) in the other. The
+deployed forest fits with MLlib's node-id cache (``cacheNodeIds``),
+which speeds up deep trees and leaves the trees unchanged.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ from pyspark.ml.regression import (
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from commodity_price_forecasting_spark.functions.stats import regression_metrics
+from commodity_price_forecasting_spark.functions.stats import METRICS, regression_metrics
 
 WEIGHT_FLOOR = 0.001  # app.py:137
 
@@ -66,7 +70,10 @@ def default_models(
         # max_features=1.0 (all), bootstrap — MLlib's defaults
         # (maxDepth=5, onethird features) underfit badly vs the
         # reference; maxDepth=20 covers any node count the reference's
-        # frames can produce (2^20 ≫ rows).
+        # frames can produce (2^20 ≫ rows). cacheNodeIds keeps each
+        # row's node per tree between levels instead of re-walking the
+        # trees from the root (MLlib's speed-up for deep trees); the
+        # fitted forest is the same.
         "random_forest": RandomForestRegressor(
             featuresCol="features",
             labelCol="label",
@@ -74,6 +81,7 @@ def default_models(
             seed=42,
             maxDepth=20,
             featureSubsetStrategy="all",
+            cacheNodeIds=True,
         ),
     }
 
@@ -87,6 +95,11 @@ class EnsembleResult:
     mean_metrics: dict = field(default_factory=dict)
     feature_importances: dict[str, list] = field(default_factory=dict)
     fitted: dict[str, object] = field(default_factory=dict)  # name -> PipelineModel
+    # ml.serving's response plan for ``fitted``, built on the first
+    # request and reused for every later one; it lives as long as the
+    # fitted models it scores with (two racing first requests each
+    # build one, and either is valid)
+    _response_plan: object = field(default=None, init=False, repr=False, compare=False)
 
     @property
     def avg_r2(self) -> float:
@@ -95,9 +108,11 @@ class EnsembleResult:
         return sum(vals) / len(vals)
 
 
-def _metrics(df: DataFrame, pred_col: str) -> dict:
-    row = regression_metrics(df, "label", pred_col).first()
-    return {k: row[k] for k in ("n", "mae", "rmse", "r2", "dir_acc", "smape")}
+def _metrics(df: DataFrame, pred_cols: list[str]) -> dict[str, dict]:
+    """``pred_col -> {n, mae, rmse, r2, dir_acc, smape}`` for every
+    column in ``pred_cols``, from one aggregate pass."""
+    row = regression_metrics(df, "label", pred_cols).first()
+    return {c: {k: row[f"{c}_{k}"] for k in METRICS} for c in pred_cols}
 
 
 def run_ensemble(
@@ -135,7 +150,6 @@ def run_ensemble(
     )
 
     preds = eval_base.select("_row_id", "label", *feature_cols)
-    model_metrics: dict[str, dict] = {}
     importances: dict[str, list] = {}
     fitted = {}
     for name, est in models.items():
@@ -144,7 +158,6 @@ def run_ensemble(
         fitted[name] = m
         scored = m.transform(preds)
         preds = scored.drop("features").withColumnRenamed("prediction", f"pred_{name}")
-        model_metrics[name] = _metrics(preds, f"pred_{name}")
         last = m.stages[-1]
         if hasattr(last, "featureImportances"):
             importances[name] = [
@@ -154,20 +167,28 @@ def run_ensemble(
                 )
             ]
 
+    # Two metric passes: every model and the unweighted mean in one,
+    # then the weighted ensemble, whose weights need the first.
+    mean_expr = sum(F.col(f"pred_{n}") for n in models) / F.lit(float(len(models)))
+    preds = preds.withColumn("pred_mean", mean_expr)
+    first = _metrics(preds, [f"pred_{n}" for n in models] + ["pred_mean"])
+    model_metrics = {n: first[f"pred_{n}"] for n in models}
+
     # R²-weighted ensemble (app.py:137-142): floor, normalize, dot.
     raw = {n: max(model_metrics[n]["r2"], WEIGHT_FLOOR) for n in models}
     total = sum(raw.values())
     weights = {n: w / total for n, w in raw.items()}
     w_expr = sum(F.col(f"pred_{n}") * F.lit(w) for n, w in weights.items())
-    mean_expr = sum(F.col(f"pred_{n}") for n in models) / F.lit(float(len(models)))
-    preds = preds.withColumn("pred_ensemble", w_expr).withColumn("pred_mean", mean_expr)
+    preds = preds.withColumn("pred_ensemble", w_expr)
 
     return EnsembleResult(
-        predictions=preds.drop(*feature_cols),
+        predictions=preds.select(
+            "_row_id", "label", *[f"pred_{n}" for n in models], "pred_ensemble", "pred_mean"
+        ),
         model_metrics=model_metrics,
         weights=weights,
-        ensemble_metrics=_metrics(preds, "pred_ensemble"),
-        mean_metrics=_metrics(preds, "pred_mean"),
+        ensemble_metrics=_metrics(preds, ["pred_ensemble"])["pred_ensemble"],
+        mean_metrics=first["pred_mean"],
         feature_importances=importances,
         fitted=fitted,
     )

@@ -208,3 +208,84 @@ def test_trade_suggestion_runs_no_spark_job(spark, artifact):
 
     assert _jobs_launched(spark, lambda: serve(inputs=x)) == 0
     assert _jobs_launched(spark, lambda: serve(df=df)) == 1
+
+
+def test_response_plan_reused_across_requests(spark, artifact):
+    """One ensemble serves requests with different rule parameters
+    from the plan it builds on its first request: every row follows
+    the reference rule at its own threshold and min-confidence, the
+    schema stays exact, and another ensemble with another model set
+    gets its own plan and ``pred_<model>`` columns."""
+    import pandas as pd
+    from pyspark.ml.regression import LinearRegression
+    from pyspark.sql import types as T
+
+    from commodity_price_forecasting_spark.ml.ensemble import run_ensemble
+    from commodity_price_forecasting_spark.ml.extra_models import (
+        NumpyRegressorAdapter,
+        NumpySVR,
+    )
+
+    df, features, targets = api.load_data(spark, artifact)
+    target = targets[0]
+    ens = api.run_ensemble(df, features, target)
+    x = api.default_inputs(df, features)
+
+    def schema(models):
+        return T.StructType(
+            [
+                T.StructField("target", T.StringType(), False),
+                T.StructField("leg_a", T.StringType(), False),
+                T.StructField("leg_b", T.StringType(), True),
+                T.StructField("prediction", T.DoubleType(), False),
+                T.StructField("avg_r2", T.DoubleType(), False),
+                *[T.StructField(f"pred_{n}", T.DoubleType(), False) for n in models],
+                T.StructField("signal", T.StringType(), False),
+                T.StructField("confidence", T.StringType(), False),
+                T.StructField("strength", T.DoubleType(), True),
+                T.StructField("generated_at", T.TimestampType(), False),
+            ]
+        )
+
+    pred = api.trade_suggestion(spark, ens, features, target, inputs=x).first()["prediction"]
+    plan = ens._response_plan
+    assert plan is not None
+    # below, at and above |prediction|; min-confidence below and above avg_r2
+    rules = [
+        (abs(pred) * 0.5, 0.0),
+        (abs(pred), -1.0),
+        (abs(pred) * 2.0, 0.0),
+        (abs(pred) * 0.5, ens.avg_r2 + 0.01),
+        (1e-12, ens.avg_r2),
+    ]
+    seen = set()
+    for thr, min_conf in rules:
+        out = api.trade_suggestion(
+            spark, ens, features, target, inputs=x, threshold=thr, min_confidence=min_conf
+        )
+        assert out.schema == schema(ens.fitted)
+        row = out.first()
+        assert ens._response_plan is plan
+        assert row["prediction"] == pred
+        sig, conf, strength = _reference_signal(row["prediction"], row["avg_r2"], thr, min_conf)
+        assert (row["signal"], row["confidence"]) == (sig, conf), (thr, min_conf)
+        assert row["strength"] == pytest.approx(strength, abs=1e-9)
+        seen.add(row["signal"])
+    assert "WAIT" in seen and len(seen) == 2
+
+    other = run_ensemble(
+        df.na.drop(subset=[target]),
+        features,
+        target,
+        models={
+            "linear": LinearRegression(featuresCol="features", labelCol="label"),
+            "svr": NumpyRegressorAdapter(NumpySVR),
+        },
+    )
+    out = api.trade_suggestion(spark, other, features, target, inputs=x, threshold=0.1)
+    assert out.schema == schema(other.fitted)
+    want = other.fitted["svr"].transform(spark.createDataFrame(pd.DataFrame([x]))).first()
+    assert out.first()["pred_svr"] == pytest.approx(want["prediction"], rel=1e-9)
+    assert other._response_plan is not plan
+    assert ens._response_plan is plan
+    assert api.trade_suggestion(spark, ens, features, target, inputs=x).schema == schema(ens.fitted)

@@ -59,6 +59,46 @@ def test_metrics_match_numpy(ens):
     assert math.isclose(got["dir_acc"], dir_acc, rel_tol=1e-9)
 
 
+def test_metric_passes_equal_single_column_metrics(ens):
+    """run_ensemble's two multi-column metric passes give every model,
+    the mean and the weighted ensemble exactly the metrics of a
+    single-column ``regression_metrics`` over the same predictions."""
+    from commodity_price_forecasting_spark.functions.stats import METRICS, regression_metrics
+
+    got = {f"pred_{n}": m for n, m in ens.model_metrics.items()}
+    got["pred_mean"], got["pred_ensemble"] = ens.mean_metrics, ens.ensemble_metrics
+    for col, metrics in got.items():
+        row = regression_metrics(ens.predictions, "label", col).first()
+        assert list(row.asDict()) == list(METRICS)  # single-column names
+        assert metrics == row.asDict(), col
+
+
+def test_rf_node_id_cache_fits_the_same_forest(e1):
+    """``cacheNodeIds`` on the deployed forest only speeds the fit up:
+    with and without it the trees are identical."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import VectorAssembler
+
+    from commodity_price_forecasting_spark.ml.ensemble import default_models
+    from commodity_price_forecasting_spark.ml.treeshap import extract_trees
+
+    target = e1.target_cols[0]
+    df = e1.merged.select(*e1.feature_cols, e1.merged[target].alias("label"))
+    assembler = VectorAssembler(inputCols=e1.feature_cols, outputCol="features")
+    rf = default_models()["random_forest"]
+    assert rf.getCacheNodeIds()
+    trees = {
+        cache: extract_trees(Pipeline(stages=[assembler, rf.copy({rf.cacheNodeIds: cache})]).fit(df).stages[-1])
+        for cache in (True, False)
+    }
+    assert len(trees[True]) == len(trees[False]) == 100
+    assert max(len(t["feature"]) for t in trees[True]) > 3
+    for a, b in zip(trees[True], trees[False]):
+        assert a.keys() == b.keys()
+        for k in a:
+            np.testing.assert_array_equal(a[k], b[k])
+
+
 def test_ensemble_is_weighted_average(ens):
     pdf = ens.predictions.toPandas()
     manual = sum(ens.weights[n] * pdf[f"pred_{n}"] for n in ens.weights)
@@ -165,8 +205,10 @@ def test_serving_matches_batch_transform(spark, e1, ens):
 
 
 def test_serving_rejects_bad_inputs(spark, e1, ens):
-    """A missing or NaN feature, or ``feature_cols`` that are not the
-    fitted features, raise ``ValueError`` instead of scoring."""
+    """A missing or NaN feature, ``feature_cols`` that are not the
+    fitted features, a threshold that is not finite and > 0, or a
+    min_confidence that is not finite raise ``ValueError`` instead of
+    scoring."""
     import re
 
     target = e1.target_cols[0]
@@ -179,6 +221,12 @@ def test_serving_rejects_bad_inputs(spark, e1, ens):
         predict_signal(spark, ens, cols, target, {**good, cols[0]: float("nan")})
     with pytest.raises(ValueError, match="feature_cols"):
         predict_signal(spark, ens, cols[:-1], target, good)
+    for bad in (0.0, -1.0, float("nan"), float("inf"), -float("inf")):
+        with pytest.raises(ValueError, match="threshold"):
+            predict_signal(spark, ens, cols, target, good, threshold=bad)
+    for bad in (float("nan"), float("inf"), -float("inf")):
+        with pytest.raises(ValueError, match="min_confidence"):
+            predict_signal(spark, ens, cols, target, good, min_confidence=bad)
 
 
 def test_linear_and_ridge_match_closed_form(spark):

@@ -172,17 +172,21 @@ SINGLE_ROW_BROADCAST_OK = {
 }
 
 
-def test_no_cartesian_products_anywhere(spark):
-    for name in load_all():
-        if name in SKIP_BUILD:
-            continue
-        plan = _plan(spark, name)
+@pytest.fixture(scope="module")
+def swept_plans(spark) -> dict[str, str]:
+    """``name -> executedPlan`` for every registered query outside
+    SKIP_BUILD, built once for the whole-registry sweeps below."""
+    return {name: _plan(spark, name) for name in load_all() if name not in SKIP_BUILD}
+
+
+def test_no_cartesian_products_anywhere(swept_plans):
+    for name, plan in swept_plans.items():
         assert "CartesianProduct" not in plan, name
         if name not in SINGLE_ROW_BROADCAST_OK:
             assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_declared_jvm_queries_have_no_python_nodes(spark):
+def test_declared_jvm_queries_have_no_python_nodes(swept_plans):
     """The 'UDFs are the slow path' rule, enforced: every query not in
     PYTHON_OK must be whole-plan JVM (no BatchEvalPython /
     ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas)."""
@@ -193,10 +197,9 @@ def test_declared_jvm_queries_have_no_python_nodes(spark):
         "FlatMapGroupsInPandas",
     )
     offenders = []
-    for name in load_all():
-        if name in SKIP_BUILD or name in PYTHON_OK:
+    for name, plan in swept_plans.items():
+        if name in PYTHON_OK:
             continue
-        plan = _plan(spark, name)
         if any(m in plan for m in python_markers):
             offenders.append(name)
     assert offenders == []

@@ -1,8 +1,10 @@
 """Import check for the scripts that live outside the package
 (``tools/*.py``, ``perfbench/*.py``): every name they import from
-``commodity_price_forecasting_spark`` must still exist. The scripts
-are parsed with ``ast`` and never executed — several do real work at
-import time."""
+``commodity_price_forecasting_spark`` must still exist, and so must
+every package attribute the benchmark's tracer patches
+(``tr.wrap(module, "attr", ...)`` in ``perfbench/workloads.py``). The
+scripts are parsed with ``ast`` and never executed — several do real
+work at import time."""
 
 from __future__ import annotations
 
@@ -53,3 +55,45 @@ def test_script_package_imports_resolve(path):
         except ModuleNotFoundError:
             missing.append(f"{module}.{name}")
     assert not missing, f"{path} imports names that do not exist: {missing}"
+
+
+def _wrap_targets(path: str) -> list[tuple[str, str]]:
+    """``(module, attr)`` for every ``<x>.wrap(<module alias>, "<attr>", ...)``
+    call in ``path`` whose alias names a package import."""
+    with open(os.path.join(ROOT, path)) as fh:
+        tree = ast.parse(fh.read(), filename=path)
+    aliases = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE):
+            aliases.update({a.asname or a.name: f"{node.module}.{a.name}" for a in node.names})
+        elif isinstance(node, ast.Import):
+            aliases.update({a.asname or a.name: a.name for a in node.names if a.name.startswith(PACKAGE)})
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "wrap"
+            and len(node.args) >= 2
+            and isinstance(node.args[0], ast.Name)
+            and isinstance(node.args[1], ast.Constant)
+        ):
+            module = aliases.get(node.args[0].id)
+            assert module, f"{path}:{node.lineno} wraps {node.args[0].id!r}, not a package import"
+            found.append((module, node.args[1].value))
+    return found
+
+
+WRAP_TARGETS = _wrap_targets(os.path.join("perfbench", "workloads.py"))
+
+
+def test_wrap_targets_found():
+    assert len(WRAP_TARGETS) >= 10
+
+
+@pytest.mark.parametrize(
+    "module,attr", WRAP_TARGETS, ids=[f"{m.rsplit('.', 1)[-1]}.{a}" for m, a in WRAP_TARGETS]
+)
+def test_perfbench_wrap_target_exists(module, attr):
+    mod = importlib.import_module(module)
+    assert hasattr(mod, attr), f"perfbench wraps {module}.{attr}, which does not exist"

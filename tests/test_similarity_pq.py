@@ -297,7 +297,14 @@ def test_ann_recall_floors_and_monotonicity(spark):
     )
     from tools.ann_recall import recall_table
 
-    rows = recall_table(spark, SF_DIR, k=10, n_queries=8)
+    # only the lanes pinned below; the full table is the tool's job
+    rows = recall_table(
+        spark,
+        SF_DIR,
+        k=10,
+        n_queries=8,
+        lanes=["brute$", "ivf$", "ivf_kmeans$", "pq_adc$", "ivf_pq$"],
+    )
     by = {(r["lane"], r["n_probe"]): r["recall_at_k"] for r in rows}
     assert by[("brute", None)] == 1.0
     # measured r9 at sf0.001 (8 queries): ivf 0.1875/0.325/0.4875,

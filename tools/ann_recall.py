@@ -40,6 +40,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 
 import numpy as np
@@ -84,9 +85,10 @@ def recall_table(
     """Compute the recall@k table; returns a list of result dicts
     (one per lane × n_probe setting). Importable so pytest can pin
     the measured floors. ``lanes`` (prefix match, e.g.
-    ``["ivf_pq_trained"]``) restricts to a subset so one new cell
-    doesn't cost a full-table rerun; shared index builds are skipped
-    when no requested lane needs them."""
+    ``["ivf_pq_trained"]``; a trailing ``$`` matches that one lane,
+    e.g. ``["ivf$"]``) restricts to a subset so one new cell doesn't
+    cost a full-table rerun; shared index builds are skipped when no
+    requested lane needs them."""
     from commodity_price_forecasting_spark.operators.similarity import (
         ivf_pq_index,
         ivf_pq_probe,
@@ -104,7 +106,7 @@ def recall_table(
     qids = [int(ids[(i * n) // n_queries]) for i in range(min(n_queries, n))]
 
     def want(lane: str) -> bool:
-        return lanes is None or any(lane.startswith(p) for p in lanes)
+        return lanes is None or any(re.match(p, lane) for p in lanes)
 
     # --- shared index builds (once, full corpus; only if a requested
     # lane consumes them) -------------------------------------------------
@@ -528,7 +530,8 @@ def main() -> None:
     ap.add_argument(
         "--lanes",
         default=None,
-        help="comma-separated lane-name prefixes to run (default all)",
+        help="comma-separated lane-name prefixes to run, a trailing $ "
+        "for one exact lane (default all)",
     )
     args = ap.parse_args()
 
