@@ -23,11 +23,6 @@ def confidence_level(r2: Column) -> Column:
     )
 
 
-def weight_floor(r2: Column, floor: float = 0.001) -> Column:
-    """Ensemble weight floor ``max(r2, 0.001)`` (reference: app.py:137)."""
-    return F.greatest(r2, F.lit(floor))
-
-
 def signal_strength(pred: Column, threshold: float | Column) -> Column:
     """``min(|pred| / threshold, 1)`` (reference: app.py:159-189)."""
     return F.least(F.abs(pred) / F.lit(threshold), F.lit(1.0))

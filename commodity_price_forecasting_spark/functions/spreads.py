@@ -32,50 +32,3 @@ def parse_pairs(df_pairs: DataFrame, pair_col: str = "pair") -> DataFrame:
     mapping table (reference: MC:57130 (cell 35) split-parse)."""
     parsed = parse_pair_expr(F.col(pair_col))
     return df_pairs.withColumn("leg_a", parsed["leg_a"]).withColumn("leg_b", parsed["leg_b"])
-
-
-def explode_legs(df_pairs: DataFrame, pair_col: str = "pair") -> DataFrame:
-    """All distinct instruments referenced by any pair expression —
-    the reference's set-union leg accumulation (MC:57130 (cell 35))."""
-    return (
-        df_pairs.select(F.explode(F.split(F.col(pair_col), SEPARATOR)).alias("leg"))
-        .select(F.trim("leg").alias("leg"))
-        .distinct()
-    )
-
-
-def spread_long(
-    series: DataFrame,
-    mapping: DataFrame,
-    key_col: str = "instrument",
-    time_col: str = "date_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Spread construction in long layout: for each mapping row
-    ``(target, lag, leg_a, leg_b)``, spread(t) = value(leg_a, t) −
-    value(leg_b, t); single-instrument targets pass leg_a through.
-
-    Spark plan: mapping is a small dimension → **broadcast** both
-    joins; the big series table is scanned once per leg but never
-    shuffled on the time key (the join key includes the broadcast
-    side). Reference semantics: J5 / README.md:30.
-    """
-    m = F.broadcast(mapping)
-    a = series.select(
-        F.col(key_col).alias("_ka"), F.col(time_col).alias(time_col), F.col(value_col).alias("_va")
-    )
-    b = series.select(
-        F.col(key_col).alias("_kb"), F.col(time_col).alias("_tb"), F.col(value_col).alias("_vb")
-    )
-    joined = (
-        m.join(a, m["leg_a"] == a["_ka"], "inner")
-        .join(
-            b,
-            (m["leg_b"] == b["_kb"]) & (F.col(time_col) == F.col("_tb")),
-            "left",
-        )
-    )
-    spread = F.when(m["leg_b"].isNull(), F.col("_va")).otherwise(F.col("_va") - F.col("_vb"))
-    return joined.select(
-        "target", "lag", "pair", time_col, spread.alias("spread")
-    )

@@ -1,7 +1,7 @@
 """Metric expressions (SURVEY.md §2.9 M7–M8) as plain aggregates.
 
 MAE/RMSE/R² exist in MLlib's RegressionEvaluator; directional
-accuracy, MAPE and SMAPE (reference: README.md:44-46) do not — they
+accuracy and SMAPE (reference: README.md:44-46) do not — they
 are one-line aggregate expressions here, computable over any
 ``(label, prediction)`` DataFrame in a single map-side-combinable
 pass.
@@ -33,10 +33,6 @@ def r2(label: Column, pred: Column) -> Column:
 def directional_accuracy(label: Column, pred: Column) -> Column:
     """share of rows where sign(pred) == sign(label)."""
     return F.avg((F.signum(pred) == F.signum(label)).cast("double"))
-
-
-def mape(label: Column, pred: Column) -> Column:
-    return F.avg(F.abs((label - pred) / label))
 
 
 def smape(label: Column, pred: Column) -> Column:

@@ -93,16 +93,6 @@ def sparse_columns(df: DataFrame, value_cols: Sequence[str], threshold: float = 
     return [c for c in value_cols if (fracs[c] or 0.0) > threshold]
 
 
-def drop_sparse_columns(df: DataFrame, value_cols: Sequence[str], threshold: float = 0.5) -> DataFrame:
-    return df.drop(*sparse_columns(df, value_cols, threshold))
-
-
-def dedup_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact row dedup — ``drop_duplicates`` (reference: MC:59373
-    (cell 64) dedup before the mapping join)."""
-    return df.dropDuplicates(list(subset)) if subset else df.distinct()
-
-
 def upsert_latest(
     base: DataFrame,
     updates: DataFrame,

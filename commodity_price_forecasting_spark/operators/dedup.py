@@ -171,78 +171,6 @@ def lsh_star_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
-#: largest ESTIMATED within-bucket pair count (Σ_buckets C(|b|,2),
-#: the all-pairs join's output volume before the cross-band distinct)
-#: the near-dup front door will hand to ``lsh_candidate_pairs``.
-#: Pinned by the r8 30× sweep (SCALE.md "star candidate generation"):
-#: at 2.02M bucket-pairs (sf1) all-pairs was still the FASTER lane
-#: (6.1 s vs 11.8 s star — star's extra groupBy dominates while
-#: buckets are small); at 8.76M (sf3) all-pairs was 3.4× SLOWER
-#: (60.5 s vs 18.0 s) with 2.4× the shuffle. 4M is the geometric
-#: midpoint of the measured bracket — the exactness-maximal lane
-#: keeps every corpus at-or-below the largest measured SF where it
-#: won, and occupancy-quadratic growth beyond routes to star.
-NEAR_DUP_ALLPAIRS_MAX_PAIRS = 4_000_000
-
-
-def near_dup_candidates(
-    bands: DataFrame, candidates: str = "auto"
-) -> DataFrame:
-    """The single near-dup candidate front door (r8 VERDICT ask #4,
-    mirroring ``semantic_dedup``'s measured dispatch): ONE cheap
-    aggregate over the band table estimates both lanes' costs, then
-    the measured-fastest lane runs. ``candidates=`` forces one.
-
-    Decision table (measured, SCALE.md r8 30× sweep — see
-    ``NEAR_DUP_ALLPAIRS_MAX_PAIRS`` for the raw numbers):
-
-    ==================  ========================  ====================
-    Σ C(|bucket|,2)     candidates="auto" picks   why
-    ==================  ========================  ====================
-    ≤ 4M bucket-pairs   ``all`` (all-pairs)       faster at every
-                                                  measured SF in this
-                                                  range AND recall-
-                                                  exact (every pair
-                                                  sharing a bucket)
-    > 4M bucket-pairs   ``star`` (representative  candidates bounded
-                        per bucket)               by n·bands; 3.4×
-                                                  faster at 30× where
-                                                  all-pairs bends
-                                                  occupancy-quadratic
-    ==================  ========================  ====================
-
-    The probe is Σ C(|b|,2) over (band, sig) buckets — the all-pairs
-    self-join's OUTPUT volume before the cross-band distinct, i.e.
-    exactly the quantity that went superlinear in the sweep. One
-    groupBy + one 1-row aggregate; its (band, sig) exchange is the
-    same key both lanes shuffle on next.
-
-    Recall trade, stated plainly (same wording as ``lsh_star_pairs``):
-    star edges are a SUBSET of all-pairs edges, so downstream
-    components can split clusters the all-pairs rule would join —
-    forcing ``candidates="all"`` buys exact bucket recall at the
-    measured quadratic cost; below the threshold the dispatch IS the
-    all-pairs result (equality-pinned in tests/test_edge_cases.py).
-    """
-    if candidates not in ("auto", "all", "star"):
-        raise ValueError(f"candidates must be auto|all|star: {candidates}")
-    if candidates == "auto":
-        est = (
-            bands.groupBy("band", "sig")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(
-                F.coalesce(
-                    F.sum(F.col("c") * (F.col("c") - 1) / 2), F.lit(0.0)
-                ).alias("pairs")
-            )
-            .first()["pairs"]
-        )
-        candidates = "all" if est <= NEAR_DUP_ALLPAIRS_MAX_PAIRS else "star"
-    if candidates == "all":
-        return lsh_candidate_pairs(bands)
-    return lsh_star_pairs(bands)
-
-
 def estimated_jaccard(
     wide: DataFrame, candidates: DataFrame, num_hashes: int = 12
 ) -> DataFrame:

@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _require_cols(fn: str, cols: Sequence[str]) -> None:
+    if not cols:
+        raise ValueError(f"{fn}: cols must name at least one column")
+
+
 def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Per-column null count + fraction as a long table
     ``(column, n_null, null_frac)`` — the reference's
@@ -55,6 +60,7 @@ def describe_long(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     because at scale they use ``approx_percentile`` (t-digest) rather
     than an exact sort.
     """
+    _require_cols("describe_long", cols)
     pieces = []
     for c in cols:
         pieces.append(
@@ -72,14 +78,26 @@ def describe_long(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 def quantile_summary(df: DataFrame, cols: Sequence[str], probs=(0.25, 0.5, 0.75)) -> DataFrame:
     """Approximate quartiles per column (t-digest sketch, one pass —
-    the scale-correct version of pandas ``describe``'s quartiles)."""
+    the scale-correct version of pandas ``describe``'s quartiles).
+    Each ``p`` in ``probs`` names one column ``p{int(p * 100)}``."""
+    _require_cols("quantile_summary", cols)
+    probs = list(probs)
+    if not probs or any(not 0.0 <= p <= 1.0 for p in probs):
+        raise ValueError(
+            f"quantile_summary: probs must be non-empty and in [0, 1]: {probs}"
+        )
+    names = [f"p{int(p * 100)}" for p in probs]
+    if len(set(names)) < len(names):
+        raise ValueError(
+            f"quantile_summary: probs {probs} give duplicate column names {names}"
+        )
     pieces = []
     for c in cols:
-        qs = F.percentile_approx(c, list(probs), 10000)
+        qs = F.percentile_approx(c, probs, 10000)
         pieces.append(
             df.agg(
                 F.lit(c).alias("col_name"),
-                *[qs.getItem(i).alias(f"p{int(p * 100)}") for i, p in enumerate(probs)],
+                *[qs.getItem(i).alias(name) for i, name in enumerate(names)],
             )
         )
     return reduce(DataFrame.unionAll, pieces)
@@ -122,6 +140,10 @@ def histogram_fixed(
     groupBy-count (map-side combinable). Bounds are parameters, not a
     data-dependent min/max pass, so the plan is one stage.
     """
+    if not lo < hi:
+        raise ValueError(f"histogram_fixed: lo must be < hi: lo={lo}, hi={hi}")
+    if not isinstance(nbins, int) or nbins < 1:
+        raise ValueError(f"histogram_fixed: nbins must be a positive int: {nbins!r}")
     w = (hi - lo) / nbins
     bucket = F.least(
         F.floor((F.col(col) - F.lit(lo)) / F.lit(w)), F.lit(nbins - 1)

@@ -298,37 +298,6 @@ def ivf_assign(
     return assigned, centers
 
 
-def ivf_topk(
-    assigned: DataFrame,
-    centers: list[list[float]],
-    query: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Top-k cosine neighbours of ``query`` probing only the
-    ``n_probe`` nearest IVF cells — the scan prunes to
-    ~n_probe/k of the corpus (cell pruning pushes into the
-    partition filter when the corpus is written bucketed by cell)."""
-    import math
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    probe = sorted(range(len(centers)), key=lambda c: -cos(centers[c], query))[:n_probe]
-    sim = _cosine_to_query(vec_col, [float(x) for x in query])
-    return (
-        assigned.filter(F.col("cell").isin(probe))
-        .select(id_col, "cell", F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def ivf_seed_assign(
     vectors: DataFrame,
     k: int = 16,
@@ -460,9 +429,9 @@ def ivf_seed_topk(
     """Top-k cosine neighbours of ``query`` probing only the
     ``n_probe`` cells whose seed is nearest the query (6dp-rounded
     cosine, ties to smallest seed id) — scans ~n_probe/k of the
-    corpus; with the corpus written partitioned by cell
-    (``ivf_index_write``) the ``isin`` IS a static partition-pruned
-    read. ``exclude_id`` drops the self-match before the top-k (the
+    corpus. ``seeds`` may also be the trained centers of
+    ``ivf_assign``, passed as ``list(enumerate(centers))``.
+    ``exclude_id`` drops the self-match before the top-k (the
     shared-index probe convention; the registered query instead
     excludes the query from the corpus before assignment)."""
     import math
@@ -488,101 +457,6 @@ def ivf_seed_topk(
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
     )
-
-
-def ivf_index_write(
-    vectors: DataFrame,
-    path: str,
-    k: int | str = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign: str = "fold",
-) -> None:
-    """Persist the FULL-PRECISION IVF index: the assigned corpus
-    ``partitionBy("cell")`` plus the seed routing table — the
-    exact-scoring sibling of ``ivf_pq_index_write``. The r9 recall
-    table makes the trade explicit: IVF probes score candidates with
-    exact cosines, so recall is the best of any probe lane (0.46–0.575
-    at n_probe=4, flat across corpus growth) but each probe reads
-    full vector bytes (256+/row) where IVF-PQ reads 8 — pick THIS
-    layout when recall dominates and the vectors fit the scan budget,
-    the PQ one when memory/bandwidth dominates.
-
-    ``k="auto"`` sizes the cell count to max(16, ⌈√n⌉) from one count
-    job — the measured recall rule (see ``ivf_pq_index``); the
-    integer default stays 16 so existing layouts rebuild
-    byte-identically."""
-    if k == "auto":
-        import math
-
-        k = max(16, math.isqrt(max(vectors.count(), 1)))
-    assigned, seeds = ivf_seed_assign(
-        vectors, k=k, vec_col=vec_col, id_col=id_col, assign=assign
-    )
-    # project to (id, vec, cell) BEFORE writing: ivf_index_append
-    # writes exactly these columns (r10 ADVICE), so an unprojected
-    # initial write would leave MIXED schemas in the corpus dir after
-    # an append — Spark's footer sampling then nondeterministically
-    # surfaces or drops the extra columns (caught as an
-    # isolation-pass/suite-fail flake in r11)
-    assigned.select(id_col, vec_col, "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(os.path.join(path, "corpus"))
-    vectors.sparkSession.createDataFrame(
-        [(int(s), [float(x) for x in v]) for s, v in seeds],
-        "cell long, svec array<double>",
-    ).write.mode("overwrite").parquet(os.path.join(path, "seeds"))
-
-
-def ivf_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> int:
-    """Incremental maintenance for the FULL-PRECISION IVF layout —
-    the exact-scoring sibling of ``ivf_pq_index_append``: route the
-    new vectors through the EXISTING seed routing table (one map-side
-    pass over broadcast seed literals, same 6dp-cosine/smallest-id
-    rule) and ``mode("append")`` them into the cell partitions. No
-    codebook exists in this layout, so an append is EXACTLY a rebuild
-    restricted to the delta — probes over the appended index score
-    with exact cosines like always, and the only staleness channel is
-    the seed set itself (cells grow unbalanced as the corpus drifts;
-    rebalance by rebuilding when cell-occupancy skew warrants it).
-    Caller contract and return as ``ivf_pq_index_append``."""
-    seed_rows = spark.read.parquet(os.path.join(path, "seeds")).collect()
-    seeds = sorted((int(r["cell"]), list(r["svec"])) for r in seed_rows)
-    dim = len(seeds[0][1])
-    delta = new_vectors.select(id_col, vec_col)
-    sz = delta.agg(
-        F.min(F.size(vec_col)).alias("_lo"),
-        F.max(F.size(vec_col)).alias("_hi"),
-        F.count(F.lit(1)).alias("_n"),
-    ).first()
-    if sz["_n"] == 0:
-        return 0
-    if sz["_lo"] != dim or sz["_hi"] != dim:
-        raise ValueError(
-            f"ivf_index_append: delta vectors have dims in "
-            f"[{sz['_lo']}, {sz['_hi']}] but the index was built at dim "
-            f"{dim} — zip_with would null-pad and mis-assign cells silently"
-        )
-    assigned = assign_to_seeds(delta, seeds, vec_col=vec_col)
-    assigned.write.mode("append").partitionBy("cell").parquet(
-        os.path.join(path, "corpus")
-    )
-    return int(sz["_n"])
-
-
-def ivf_index_load(spark, path: str) -> dict:
-    """Reload an ``ivf_index_write`` layout: the cell-partitioned
-    corpus frame + the KB seed routing table (sorted by seed id)."""
-    assigned = spark.read.parquet(os.path.join(path, "corpus"))
-    seed_rows = spark.read.parquet(os.path.join(path, "seeds")).collect()
-    seeds = sorted((int(r["cell"]), list(r["svec"])) for r in seed_rows)
-    return {"assigned": assigned, "seeds": seeds}
 
 
 # --- product quantization (Jégou et al. 2011, public) --------------------
@@ -792,7 +666,7 @@ def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     L2 ranking — the metric PQ codes estimate — EQUALS cosine ranking,
     the metric refine, the oracle, and every retrieval caller actually
     use. Unnormalized, the two orders diverge on norm spread, which
-    the r12 refine-on-OPQ measurement identified as a big slice of the
+    the r12 refine measurement identified as a big slice of the
     0.85→0.99 low-rank ceiling gap."""
     nrm = _norm(F.col(vec_col))
     return df.withColumn(
@@ -802,205 +676,6 @@ def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
             F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm),
         ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double"))),
     )
-
-
-def opq_rotation(
-    residuals: DataFrame,
-    m_sub: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """Closed-form OPQ rotation (Ge et al. 2013 §4, the parametric
-    variant — public): rotate the residual space into its PCA basis
-    and allocate eigen-directions to the ``m_sub`` PQ subspaces
-    balancing the PRODUCT of eigenvalues per subspace (Ge's
-    "eigenvalue allocation"). PQ assumes subspaces are independent
-    and equally informative; raw residual coordinates are neither, so
-    quantizing them wastes codebook entries on correlated directions.
-    The rotation is orthogonal — L2 distances are EXACTLY preserved
-    (‖R(a−b)‖ = ‖a−b‖), so ADC remains an estimator of the same
-    metric; only the quantization error shrinks. Motivated by the r11
-    refine measurement: refine beats every trained lane but reaches
-    the exact ceiling nowhere — the headroom is quantization loss,
-    which is exactly what OPQ attacks (r11 VERDICT ask #5).
-
-    Scale shape: the distributed piece is the d×d residual covariance
-    (``covariance_mapred`` — partial outer products per Arrow batch,
-    shuffle carries partitions·d²/2 sufficient-statistic rows,
-    independent of n); the eigendecomposition is a driver-side numpy
-    ``eigh`` on d²·8 bytes — NOT a distributed problem. Eigenvector
-    signs are normalized (largest-|x| component positive) so the
-    rotation is reproducible run-to-run. Returns R as d row-lists
-    (``rotated = R @ v``); persist it with the index
-    (``ivf_pq_index_write`` stores it under ``<path>/rotation``)."""
-    import numpy as np
-
-    rows = covariance_mapred(residuals, vec_col=vec_col, id_col=id_col).collect()
-    d = max(int(r["j"]) for r in rows) + 1
-    if d % m_sub:
-        raise ValueError(f"opq_rotation: dim {d} not divisible by m_sub {m_sub}")
-    C = np.zeros((d, d))
-    for r in rows:
-        C[int(r["i"]), int(r["j"])] = float(r["cov"])
-        C[int(r["j"]), int(r["i"])] = float(r["cov"])
-    w, V = np.linalg.eigh(C)
-    order = np.argsort(w)[::-1]
-    w, V = w[order], V[:, order]
-    # sign convention: flip each eigenvector so its largest-|x|
-    # component is positive (eigh's signs are arbitrary)
-    flips = np.sign(V[np.abs(V).argmax(axis=0), np.arange(d)])
-    flips[flips == 0] = 1.0
-    V = V * flips
-    # eigenvalue allocation: descending λ, each direction goes to the
-    # subspace with the smallest current log-variance-product that
-    # still has room — balances information across subspaces
-    d_sub = d // m_sub
-    buckets: list[list[int]] = [[] for _ in range(m_sub)]
-    logs = [0.0] * m_sub
-    for idx in range(d):
-        open_b = [b for b in range(m_sub) if len(buckets[b]) < d_sub]
-        b = min(open_b, key=lambda bb: (logs[bb], bb))
-        buckets[b].append(idx)
-        logs[b] += float(np.log(max(float(w[idx]), 1e-12)))
-    perm = [i for bucket in buckets for i in bucket]
-    R = V[:, perm].T
-    return [[float(x) for x in row] for row in R]
-
-
-def opq_rotation_iterative(
-    residuals: DataFrame,
-    m_sub: int,
-    n_centroids: int = 16,
-    iters: int = 10,
-    sample: int = 20000,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[float]]:
-    """Non-parametric OPQ (Ge et al. 2013 §3 — public): alternate
-    (a) train per-subspace codebooks in the current rotated space and
-    (b) re-solve the rotation as the orthogonal Procrustes problem
-    against the PQ reconstruction (R = V·Uᵀ from the SVD of Xᵀ·X̂).
-    The closed-form variant (``opq_rotation``) only decorrelates and
-    balances VARIANCE; the alternation additionally adapts R to the
-    actual quantizer, which is the standard follow-up where the
-    closed-form shows no lift (measured per geometry in SCALE.md r13
-    — a measured "no lift" is a legitimate outcome).
-
-    Scale shape, stated plainly: rotation TRAINING is a model fit, not
-    a data pass — it runs driver-side in numpy on a deterministic
-    md5-ordered sample of ≤``sample`` residuals (the paper itself
-    trains on samples), with seeded kmeans++ inits and Lloyd
-    iterations per subspace. Everything that touches the full corpus
-    (applying R, encoding, probing) stays the distributed machinery
-    unchanged. Initialization is the closed-form rotation, so the
-    alternation can only refine it. Returns R as d row-lists — a
-    drop-in for everything ``opq_rotation`` feeds."""
-    import numpy as np
-
-    R0 = opq_rotation(residuals, m_sub, vec_col=vec_col, id_col=id_col)
-    rows = (
-        residuals.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(sample)
-        .collect()
-    )
-    X = np.array([r[vec_col] for r in rows], dtype=np.float64)
-    d = X.shape[1]
-    d_sub = d // m_sub
-    R = np.asarray(R0, dtype=np.float64)
-    rng = np.random.default_rng(seed)
-
-    def _d2(pts: np.ndarray, centers: np.ndarray) -> np.ndarray:
-        # ‖p−c‖² = ‖p‖² + ‖c‖² − 2p·c  (one sgemm instead of an
-        # n×k×d broadcast temp)
-        return (
-            (pts * pts).sum(1)[:, None]
-            + (centers * centers).sum(1)[None, :]
-            - 2.0 * (pts @ centers.T)
-        )
-
-    def _kmeans(pts: np.ndarray, k: int) -> np.ndarray:
-        k = min(k, len(pts))
-        # kmeans++ init (seeded, running-min d2 — O(n·k·d)) + Lloyd
-        centers = [pts[rng.integers(len(pts))]]
-        d2 = ((pts - centers[0]) ** 2).sum(1)
-        for _ in range(1, k):
-            tot = d2.sum()
-            if tot <= 0:
-                nxt = pts[rng.integers(len(pts))]
-            else:
-                nxt = pts[rng.choice(len(pts), p=d2 / tot)]
-            centers.append(nxt)
-            d2 = np.minimum(d2, ((pts - nxt) ** 2).sum(1))
-        C = np.array(centers)
-        for _ in range(20):
-            assign = _d2(pts, C).argmin(1)
-            new = np.vstack(
-                [
-                    pts[assign == c].mean(0) if (assign == c).any() else C[c]
-                    for c in range(len(C))
-                ]
-            )
-            if np.allclose(new, C):
-                break
-            C = new
-        return C
-
-    for _ in range(iters):
-        Xr = X @ R.T
-        Xhat = np.empty_like(Xr)
-        for m in range(m_sub):
-            sl = slice(m * d_sub, (m + 1) * d_sub)
-            centers = _kmeans(Xr[:, sl], n_centroids)
-            codes = _d2(Xr[:, sl], centers).argmin(1)
-            Xhat[:, sl] = centers[codes]
-        # orthogonal Procrustes: max tr(R·XᵀX̂) ⇒ R = V·Uᵀ
-        U, _s, Vt = np.linalg.svd(X.T @ Xhat)
-        R = Vt.T @ U.T
-    return [[float(x) for x in row] for row in R]
-
-
-def rotate_vectors(
-    df: DataFrame,
-    rotation: list[list[float]],
-    vec_col: str = "embedding",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """Apply an orthogonal rotation to a vector column: one BLAS
-    ``M @ Rᵀ`` per Arrow batch (``mapInPandas`` — the
-    ``assign_cells_blas`` pattern: a d×d matmul per batch beats a
-    d²-literal codegen expression, which at d=64 is a 4k-literal plan
-    compile per call). Returns ``keep`` columns + ``vec_col`` rotated
-    (``array<double>``). Row-order within partitions is preserved."""
-    import numpy as np
-    import pandas as pd  # noqa: F401 — mapInPandas contract
-
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    Rm = np.asarray(rotation, dtype=np.float64)
-    src = df.select(*keep, vec_col)
-    fields = [
-        StructField(f.name, ArrayType(DoubleType()))
-        if f.name == vec_col
-        else f
-        for f in src.schema.fields
-    ]
-    names = [f.name for f in fields]
-    schema = StructType(fields)
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            out = pdf.copy()
-            out[vec_col] = list(M @ Rm.T)
-            yield out[names]
-
-    return src.mapInPandas(run, schema=schema)
 
 
 def ivf_pq_index(
@@ -1013,7 +688,6 @@ def ivf_pq_index(
     vec_col: str = "embedding",
     codebook: str = "seed",
     coarse: str = "seed",
-    rotation: str = "none",
     normalize: bool = False,
 ) -> dict:
     """Materialize the IVF-PQ index (the BUILD half of
@@ -1056,16 +730,9 @@ def ivf_pq_index(
     index IDENTITY: persisted by ``ivf_pq_index_write``, applied to
     deltas by ``ivf_pq_index_append`` and to queries by both probes.
     The raw-L2 registered lane is ``sim_ivfpq_adc_topk``; the cosine
-    lane is ``sim_ivfpq_cosine_topk``.
-
-    MEASURED composition rule (SCALE.md r13): do NOT stack a rotation
-    on a normalized index — on the low-rank geometry closed-form OPQ
-    collapses normalized ADC recall 0.73 → 0.225 (normalization bends
-    the globally linear structure onto the sphere; a global eigenbasis
-    then splits locally-correlated coordinates). The cosine deployment
-    shape is ``normalize=True, rotation="none"`` + refine (reaches the
-    IVF-exact ceiling, 0.99@4 low-rank); the L2 shape remains
-    ``rotation="opq"`` on raw vectors (0.93@4)."""
+    lane is ``sim_ivfpq_cosine_topk``. The measured cosine deployment
+    shape is ``normalize=True`` + refine (reaches the IVF-exact
+    ceiling, 0.99@4 low-rank; SCALE.md r13)."""
     spark = vectors.sparkSession
     if normalize:
         vectors = l2_normalize(vectors, vec_col=vec_col)
@@ -1143,30 +810,6 @@ def ivf_pq_index(
     res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
     dim = len(seeds[0][1])
     d_sub = dim // m_sub
-    rot = None
-    if rotation in ("opq", "opq_np"):
-        # train the OPQ rotation on the residuals, then rotate them —
-        # the codebook (either branch below) and the codes are built in
-        # the ROTATED space; probes rotate the query residual with the
-        # same R (driver-side numpy — n_probe tiny vectors).
-        # "opq_np" = the non-parametric alternation (r12 ask #7),
-        # initialized from the closed-form solution.
-        if rotation == "opq":
-            rot = opq_rotation(res_named, m_sub, vec_col=vec_col, id_col=id_col)
-        else:
-            rot = opq_rotation_iterative(
-                res_named, m_sub, n_centroids=n_centroids,
-                vec_col=vec_col, id_col=id_col,
-            )
-        # cached: the codebook branch and pq_distances each pass over
-        # the rotated frame — uncached, every pass re-runs the rotate
-        # matmul AND the assignment upstream of it
-        res_named = rotate_vectors(
-            res_named, rot, vec_col=vec_col, keep=(id_col,)
-        ).cache()
-        res_rot = res_named
-    elif rotation != "none":
-        raise ValueError(f"rotation must be none|opq|opq_np: {rotation}")
     if codebook == "kmeans":
         # trained residual codebook (pq_codebook_kmeans): the recall
         # path — see the r9 recall table for why the deterministic
@@ -1198,10 +841,8 @@ def ivf_pq_index(
         "cb": cb,
         "seeds": seeds,
         "res": res,
-        "res_rot": res_rot if rot is not None else None,
         "m_sub": m_sub,
         "dim": dim,
-        "rotation": rot,
         "normalized": bool(normalize),
     }
 
@@ -1229,7 +870,7 @@ def ivf_pq_index_write(index: dict, path: str, id_col: str = "vec_id") -> None:
     sibling ``<path>__building`` directory and renamed into place —
     never written artifact-by-artifact into an EXISTING layout, where
     a crash mid-rewrite would leave new coded/cb next to the OLD
-    seeds/rotation/idxmeta: a complete-LOOKING mixed layout (the old
+    seeds/idxmeta: a complete-LOOKING mixed layout (the old
     seeds/_SUCCESS still satisfies the completeness sentinel) that
     ``ivf_pq_index_load`` would accept and probe with the wrong
     identity. With the tmp+rename, a crash anywhere leaves either the
@@ -1248,16 +889,8 @@ def ivf_pq_index_write(index: dict, path: str, id_col: str = "vec_id") -> None:
         os.path.join(tmp, "coded")
     )
     index["cb"].write.mode("overwrite").parquet(os.path.join(tmp, "cb"))
-    if index.get("rotation") is not None:
-        # the OPQ rotation is part of the index IDENTITY: codes are
-        # meaningless without the R that produced them, so it persists
-        # in the layout (d rows, KB-sized) and loads with it
-        spark.createDataFrame(
-            [(i, [float(x) for x in row]) for i, row in enumerate(index["rotation"])],
-            "i int, rrow array<double>",
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "rotation"))
     if index.get("normalized"):
-        # same identity argument as the rotation: codes over normalized
+        # the flag is part of the index IDENTITY: codes over normalized
         # residuals are meaningless for raw queries, so the flag
         # persists in the layout (one boolean row; absence = False, the
         # pre-r13 layout)
@@ -1294,30 +927,19 @@ def ivf_pq_index_load(spark, path: str) -> dict:
     on disk) routes ``ivf_pq_probe`` down the partition-pruned path;
     ``m_sub`` comes from the codebook's subspace count and ``dim``
     from the seed vectors — both KB-sized reads."""
+    if os.path.isdir(os.path.join(path, "rotation")):
+        # layouts written while an OPQ rotation option existed kept R
+        # here; their codes live in a rotated space no probe applies
+        raise ValueError(
+            f"ivf_pq_index_load: {path}/rotation exists — the index was "
+            "built with a residual rotation this version does not apply; "
+            "rebuild the index"
+        )
     coded = spark.read.parquet(os.path.join(path, "coded"))
     cb = spark.read.parquet(os.path.join(path, "cb"))
     seed_rows = spark.read.parquet(os.path.join(path, "seeds")).collect()
     seeds = sorted((int(r["cell"]), list(r["svec"])) for r in seed_rows)
     m_sub = cb.agg(F.max("m").alias("_m")).first()["_m"] + 1
-    rot = None
-    if os.path.isdir(os.path.join(path, "rotation")):
-        # the rotation is the index's IDENTITY: codes are meaningless
-        # under a partial R. A directory without Spark's job-commit
-        # sentinel is a crashed index write — refuse to load rather
-        # than probe in a half-written rotation space (the r13 sweep
-        # of isdir-gated parquet reads used as source of truth).
-        if not os.path.exists(os.path.join(path, "rotation", "_SUCCESS")):
-            raise ValueError(
-                f"ivf_pq_index_load: {path}/rotation exists without "
-                "_SUCCESS — the index write crashed mid-rotation; "
-                "rebuild the index (codes may be encoded under a "
-                "rotation this directory does not fully hold)"
-            )
-        rot_rows = spark.read.parquet(os.path.join(path, "rotation")).collect()
-        rot = [
-            [float(x) for x in r["rrow"]]
-            for r in sorted(rot_rows, key=lambda r: int(r["i"]))
-        ]
     normalized = False
     if os.path.isdir(os.path.join(path, "idxmeta")):
         if not os.path.exists(os.path.join(path, "idxmeta", "_SUCCESS")):
@@ -1337,7 +959,6 @@ def ivf_pq_index_load(spark, path: str) -> dict:
         "seeds": seeds,
         "m_sub": int(m_sub),
         "dim": len(seeds[0][1]),
-        "rotation": rot,
         "normalized": normalized,
     }
 
@@ -1381,7 +1002,7 @@ def ivf_pq_index_append(
     delta = new_vectors.select(id_col, vec_col)
     if index.get("normalized"):
         # normalized index: deltas enter the same unit-sphere space the
-        # codes live in (frozen-quantizer contract, like the rotation)
+        # codes live in (frozen-quantizer contract)
         delta = l2_normalize(delta, vec_col=vec_col)
     sz = delta.agg(
         F.min(F.size(vec_col)).alias("_lo"),
@@ -1410,14 +1031,6 @@ def ivf_pq_index_append(
         _residual_cols(vec_col, "_svec", dim=dim).alias("_res"),
     )
     res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
-    if index.get("rotation") is not None:
-        # OPQ index: delta residuals rotate with the PERSISTED R (the
-        # frozen-quantizer contract — appended codes must be identical
-        # to a from-scratch encode under the same R; pinned in
-        # tests/test_similarity_pq.py)
-        res_named = rotate_vectors(
-            res_named, index["rotation"], vec_col=vec_col, keep=(id_col,)
-        )
     codes = pq_encode(
         pq_distances(
             res_named,
@@ -1484,17 +1097,6 @@ def ivf_pq_probe(
     qres_rows = [
         (int(c), [qi - vi for qi, vi in zip(q, v)]) for c, v in probe
     ]
-    if index.get("rotation") is not None:
-        # OPQ: the codes live in the rotated residual space, so the
-        # query residual rotates with the same R — n_probe tiny
-        # vectors, a driver-side matmul (routing stays on RAW q vs
-        # seeds: rotation applies within residual space only)
-        import numpy as np
-
-        Rm = np.asarray(index["rotation"], dtype=np.float64)
-        qres_rows = [
-            (c, [float(x) for x in Rm @ np.asarray(r)]) for c, r in qres_rows
-        ]
     qres_df = spark.createDataFrame(
         qres_rows, f"qcell long, {vec_col} array<double>"
     )
@@ -1610,13 +1212,6 @@ def ivf_pq_probe_batch(
         "qcell",
         _residual_cols("_qv", "_svec", dim=dim).alias("_qr"),
     )
-    if index.get("rotation") is not None:
-        # OPQ: rotate the QUERY-side residual frame (n_q·n_probe rows
-        # — query-sized, never corpus-sized) with one Arrow-batched
-        # matmul; the corpus codes were encoded in the same space
-        qres = rotate_vectors(
-            qres, index["rotation"], vec_col="_qr", keep=("_qid", "qcell")
-        )
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m_sub - 1)),
         lambda m: F.slice(F.col("_qr"), m * d_sub + 1, d_sub),
@@ -1747,7 +1342,6 @@ def ivf_pq_refine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     exclude_id: int | None = None,
-    full_index_path: str | None = None,
 ) -> DataFrame:
     """ADC probe → exact re-rank (the FAISS ``refine`` stage, Jégou
     et al. 2011 §V): take the top-``refine`` ADC candidates from
@@ -1761,23 +1355,13 @@ def ivf_pq_refine_topk(
     cost.
 
     Scale shape: the probe half stays the partition-pruned 8-byte
-    scan; the refine half touches exactly C full-precision rows —
-    joined with the C-row candidate set BROADCAST, so the corpus
-    frame is scanned once with the join filter pushed to it. Pass
-    ``full_index_path`` (an ``ivf_index_write`` layout whose seeds
-    match the PQ index's — verified, not assumed) to make that fetch
-    a cell-pruned scan of ~n_probe/k_coarse of the corpus instead of
-    a full pass: the probed cell ids become a literal ``isin`` on the
-    hive partition column (``PartitionFilters``), the 100 TB shape.
+    scan; the refine half touches exactly C full-precision rows of
+    ``full_vectors`` — joined with the C-row candidate set BROADCAST,
+    so the corpus frame is scanned once with the join filter pushed
+    to it.
 
     Returns ``(vec_id, cosine)`` — the exact metric, unlike the ADC
     distance the unrefined probe returns."""
-    import math
-
-    frame = index.get("coded")
-    if frame is None:
-        frame = index["codes"]
-    spark = frame.sparkSession
     adc = ivf_pq_probe(
         index,
         q,
@@ -1787,324 +1371,12 @@ def ivf_pq_refine_topk(
         vec_col=vec_col,
         exclude_id=exclude_id,
     )
-    src = full_vectors
-    if full_index_path is not None:
-        seed_rows = spark.read.parquet(
-            os.path.join(full_index_path, "seeds")
-        ).collect()
-        full_seeds = sorted(
-            (int(r["cell"]), [float(x) for x in r["svec"]]) for r in seed_rows
-        )
-        pq_seeds = sorted(
-            (int(s), [float(x) for x in v]) for s, v in index["seeds"]
-        )
-        if full_seeds != pq_seeds:
-            raise ValueError(
-                "ivf_pq_refine_topk: full_index_path seeds differ from the "
-                "PQ index's — cell pruning would silently drop true "
-                "candidates (rebuild one of the two layouts)"
-            )
-
-        def cos(a, b):
-            dot = sum(x * y for x, y in zip(a, b))
-            na = math.sqrt(sum(x * x for x in a))
-            nb = math.sqrt(sum(x * x for x in b))
-            return dot / (na * nb) if na and nb else 0.0
-
-        probed = [
-            s
-            for s, _ in sorted(
-                index["seeds"], key=lambda s: (-_half_up6(cos(s[1], q)), s[0])
-            )[:n_probe]
-        ]
-        src = (
-            spark.read.parquet(os.path.join(full_index_path, "corpus"))
-            .filter(F.col("cell").isin([int(c) for c in probed]))
-            .select(id_col, vec_col)
-        )
     sim = _cosine_to_query(vec_col, [float(x) for x in q])
     return (
-        src.join(F.broadcast(adc.select(id_col)), id_col)
+        full_vectors.join(F.broadcast(adc.select(id_col)), id_col)
         .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
-    )
-
-
-def cosine_topk_query(
-    emb: DataFrame,
-    q: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors of an EXTERNAL query vector (one
-    not in the corpus — the real retrieval shape): the query ships as
-    a literal array inside the plan, the corpus is scanned once, the
-    top-k is a TakeOrderedAndProject. Same output contract as
-    ``cosine_topk`` minus the self-exclusion (nothing to exclude)."""
-    sim = _cosine_to_query(vec_col, [float(x) for x in q])
-    return (
-        emb.select(
-            F.col(id_col).alias("vec_id"), F.round(sim, 6).alias("cosine")
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-
-
-def ann_topk(
-    vectors: DataFrame,
-    query_id: int | None = None,
-    k: int = 10,
-    lane: str = "auto",
-    index: dict | str | None = None,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q: list[float] | None = None,
-    refine: int | None = None,
-    refine_index_path: str | None = None,
-    normalize: bool = False,
-    k_coarse: int | str = 16,
-) -> DataFrame:
-    """The single ANN front door — the third measured-dispatch entry
-    point, completing the pattern of ``semantic_dedup`` (r8) and
-    ``near_dup_candidates`` (r9): one call, the decision variable
-    measured rather than guessed, ``lane=`` to force.
-
-    Unlike those two, the decision variable here is NOT corpus size.
-    For a ONE-OFF query every lane must touch all n vectors anyway
-    (IVF assignment and PQ encoding are each a full corpus pass), so
-    brute-force — one map-side scan + TakeOrderedAndProject, exact by
-    construction — is measured fastest at every tested SF
-    (SCALE.md r9: brute 0.48/0.73 s vs 3.8/13.1 s for the warm
-    single-plan IVF-PQ at sf0.1/sf1 — an 8–18× gap that widens with
-    n). What changes the answer is a PREBUILT INDEX: the
-    probe-only plan scans m_sub int codes for n_probe/k_coarse of the
-    corpus (a partition-pruned read under the
-    ``ivf_pq_index_write`` layout) instead of full-precision vectors
-    for all of it — measured ~0.82–0.86 s warm and FLAT across a
-    decade of corpus growth (12–24× cheaper than its build), and the
-    byte ratio (8 code bytes vs 256+ vector bytes per row, ×
-    n_probe/k_coarse of the rows) is what grows to the 100 TB win.
-
-    Decision table (``lane="auto"``):
-
-    ==================  ============  =================================
-    state               picks         returns
-    ==================  ============  =================================
-    ``index`` is None   ``brute``     exact ``(vec_id, cosine)``
-    full-precision IVF  ``ivf``       ``(vec_id, cell, cosine)`` —
-    index given                       exact scoring inside probed
-                                      cells; best probe recall
-    PQ index given      ``ivf_pq``    approx ``(vec_id, cell,
-                                      adc_dist)`` — 8 bytes/row;
-                                      recall-vs-cost dial in
-                                      SCALE.md r9's tables
-    ==================  ============  =================================
-
-    ``index``: an ``ivf_pq_index``/``ivf_index_load`` dict or a path
-    written by ``ivf_pq_index_write``/``ivf_index_write`` (the layout
-    is sniffed — both get their partition-pruned scan). A
-    full-precision IVF index routes to the EXACT-scoring probe (best
-    recall, full vector bytes); a PQ index routes to the ADC probe
-    (8 bytes/row, approximate) — the recall-vs-bytes trade is the r9
-    recall table. ``lane``: ``auto | brute | ivf | ivf_pq`` (forcing
-    an index lane with no index builds one in-plan — the registered
-    ``sim_ivf_topk`` / ``sim_ivfpq_adc_topk`` shapes, which exclude
-    the query from the corpus before seeding). Schemas differ by lane
-    by design: the score IS lane-native (exact cosine vs ADC
-    distance); callers needing one metric pick a lane explicitly.
-
-    The query is either ``query_id`` (a corpus member — self-excluded
-    from results, the recall-protocol shape) or ``q=`` (an EXTERNAL
-    vector — the real retrieval shape; nothing to exclude). Exactly
-    one must be given. For many external queries at once, use
-    ``ivf_pq_probe_batch`` — one plan, no driver loop.
-
-    ``refine=C`` (PQ lane only): exact re-rank of the top-C ADC
-    candidates against full-precision vectors — returns
-    ``(vec_id, cosine)`` instead of ``(vec_id, cell, adc_dist)``;
-    see ``ivf_pq_refine_topk``. ``refine_index_path`` points the
-    refine fetch at a persisted ``ivf_index_write`` layout for the
-    cell-pruned read.
-
-    ``normalize=True`` (PQ build-in-plan only, r13): build the
-    in-plan index over L2-normalized vectors so ADC ranks by cosine
-    (the measured cosine deployment shape — SCALE.md r13; compose
-    with ``refine=`` for the ceiling-reaching lane). A PREBUILT index
-    carries its own flag (index identity) — passing ``normalize``
-    with one is a contradiction and raises; brute/ivf lanes already
-    score exact cosine, so the flag is meaningless there and raises
-    too."""
-    if lane not in ("auto", "brute", "ivf", "ivf_pq"):
-        raise ValueError(f"lane must be auto|brute|ivf|ivf_pq: {lane}")
-    if normalize and index is not None:
-        raise ValueError(
-            "ann_topk: normalize= is fixed at index build time (index "
-            "identity) — a prebuilt index already carries its flag"
-        )
-    if (query_id is None) == (q is None):
-        raise ValueError(
-            "ann_topk: pass exactly one of query_id (corpus member, "
-            "self-excluded) or q (external query vector)"
-        )
-    if isinstance(index, str):
-        if os.path.isdir(os.path.join(index, "corpus")):
-            index = ivf_index_load(vectors.sparkSession, index)
-        else:
-            index = ivf_pq_index_load(vectors.sparkSession, index)
-    if lane == "auto":
-        if index is None:
-            # refine= and normalize= both imply the PQ pipeline even
-            # without a prebuilt index (build-in-plan + probe):
-            # normalize only changes what PQ codes ESTIMATE, so
-            # resolving it to brute would immediately raise the
-            # normalize-needs-ivf_pq error below — the documented
-            # cosine deployment shape must be reachable through the
-            # front door (r13 ADVICE #3)
-            lane = "brute" if refine is None and not normalize else "ivf_pq"
-        elif index.get("assigned") is not None:
-            lane = "ivf"
-        else:
-            lane = "ivf_pq"
-    # validate lane/index-kind compatibility BEFORE any Spark job
-    # (r9 ADVICE: the corpus-scanning query-vector fetch used to run
-    # first, so a wrong-index-kind ValueError cost a full scan)
-    if lane == "ivf" and index is not None and index.get("assigned") is None:
-        raise ValueError(
-            "ann_topk: lane='ivf' needs an ivf_index_write/_load "
-            "index (got a PQ index — use lane='ivf_pq')"
-        )
-    if lane == "ivf_pq" and index is not None and index.get("assigned") is not None:
-        raise ValueError(
-            "ann_topk: lane='ivf_pq' needs an ivf_pq_index index (got a "
-            "full-precision IVF index — use lane='ivf')"
-        )
-    if refine is not None and lane != "ivf_pq":
-        raise ValueError(
-            "ann_topk: refine= re-ranks ADC candidates and only applies to "
-            f"the ivf_pq lane (got lane={lane!r} — brute and ivf already "
-            "score exactly)"
-        )
-    if normalize and lane != "ivf_pq":
-        raise ValueError(
-            "ann_topk: normalize= changes what PQ codes estimate and only "
-            f"applies to the ivf_pq build-in-plan path (got lane={lane!r} "
-            "— brute and ivf already score exact cosine)"
-        )
-    if lane == "brute":
-        if q is not None:
-            return cosine_topk_query(
-                vectors, q, k=k, id_col=id_col, vec_col=vec_col
-            )
-        return cosine_topk(vectors, query_id, k=k, id_col=id_col, vec_col=vec_col)
-    if q is None:
-        q_row = (
-            vectors.filter(F.col(id_col) == query_id).select(vec_col).first()
-        )
-        if q_row is None:
-            raise ValueError(f"ann_topk: query {id_col}={query_id} not found")
-        qvec = [float(x) for x in q_row[0]]
-    else:
-        qvec = [float(x) for x in q]
-    if lane == "ivf" and index is None:
-        # the registered sim_ivf_topk convention: a corpus-member query
-        # is excluded BEFORE seeding; an external query has nothing to
-        # exclude
-        corpus = (
-            vectors.filter(F.col(id_col) != query_id)
-            if query_id is not None
-            else vectors
-        )
-        assigned, seeds = ivf_seed_assign(
-            corpus, vec_col=vec_col, id_col=id_col
-        )
-        return ivf_seed_topk(
-            assigned,
-            seeds,
-            qvec,
-            k=k,
-            n_probe=n_probe,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
-    if lane == "ivf_pq" and index is None:
-        if refine is not None:
-            # in-plan build + refined probe: a corpus-member query is
-            # excluded from the corpus before seeding (sim_ivf_topk
-            # convention), matching ivf_pq_adc_topk's shape
-            corpus = (
-                vectors.filter(F.col(id_col) != query_id)
-                if query_id is not None
-                else vectors
-            )
-            built = ivf_pq_index(
-                corpus, id_col=id_col, vec_col=vec_col,
-                normalize=normalize, k_coarse=k_coarse,
-            )
-            return ivf_pq_refine_topk(
-                built,
-                corpus,
-                qvec,
-                k=k,
-                refine=refine,
-                n_probe=n_probe,
-                id_col=id_col,
-                vec_col=vec_col,
-                full_index_path=refine_index_path,
-            )
-        if query_id is not None:
-            return ivf_pq_adc_topk(
-                vectors,
-                query_id=query_id,
-                k=k,
-                n_probe=n_probe,
-                id_col=id_col,
-                vec_col=vec_col,
-                normalize=normalize,
-                k_coarse=k_coarse,
-            )
-        built = ivf_pq_index(
-            vectors, id_col=id_col, vec_col=vec_col, normalize=normalize,
-            k_coarse=k_coarse,
-        )
-        return ivf_pq_probe(
-            built, qvec, k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col
-        )
-    if lane == "ivf":
-        return ivf_seed_topk(
-            index["assigned"],
-            index["seeds"],
-            qvec,
-            k=k,
-            n_probe=n_probe,
-            vec_col=vec_col,
-            id_col=id_col,
-            exclude_id=query_id,
-        )
-    if refine is not None:
-        return ivf_pq_refine_topk(
-            index,
-            vectors,
-            qvec,
-            k=k,
-            refine=refine,
-            n_probe=n_probe,
-            id_col=id_col,
-            vec_col=vec_col,
-            exclude_id=query_id,
-            full_index_path=refine_index_path,
-        )
-    return ivf_pq_probe(
-        index,
-        qvec,
-        k=k,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-        exclude_id=query_id,
     )
 
 

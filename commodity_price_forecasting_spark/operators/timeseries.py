@@ -1,20 +1,16 @@
 """Time-series operators (SURVEY.md §2.5 W2–W6, §2.2 P7–P8).
 
-The reference's core temporal ops: per-target lead shift with
-heterogeneous lags (``df[t].shift(-lag)`` per mapping row, reference:
-MC:59845 (cell 67)), lag features and rolling stats (README.md:31,
-slides), monotonicity checks (MC:57552 (cell 58)), tail slices
-(app.py:481-491) and last-value lookups (app.py:242).
+The reference's temporal ops beyond the E1 spine: lag features and
+rolling stats (README.md:31, slides), monotonicity checks (MC:57552
+(cell 58)), as-of alignment and EW volatility. The per-target
+heterogeneous lead shift (``df[t].shift(-lag)`` per mapping row,
+MC:59845 (cell 67)) is implemented once, in
+``plans/e1_pipeline.future_spreads``, as a self-join on
+``(pair, day + lag)``.
 
 Spark-first design notes:
 
-- A *constant* lead/lag is ``F.lead/F.lag`` over a per-key window.
-- A *per-row varying* lag (each target has its own horizon) cannot use
-  ``lead(col, k)`` (k must be constant). The scalable formulation is
-  an equi-join of the series against itself on
-  ``(key, time + lag)`` — Catalyst plans it as a shuffled hash/merge
-  join on the key+time pair, which distributes, instead of 424
-  separately-compiled window passes.
+- A *constant* lag is ``F.lag`` over a per-key window.
 - Rolling stats are frame-bounded windows: ``rowsBetween(-k, 0)``.
 """
 
@@ -24,56 +20,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def lead_constant(
-    df: DataFrame,
-    value_col: str,
-    lead_by: int,
-    order_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-    out_col: str = "lead_value",
-) -> DataFrame:
-    """``lead(value, k)`` per key — the reference's ``shift(-k)``."""
-    w = Window.orderBy(*order_cols)
-    if partition_cols:
-        w = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    return df.withColumn(out_col, F.lead(value_col, lead_by).over(w))
-
-
-def lead_heterogeneous_by_join(
-    series: DataFrame,
-    key_col: str,
-    time_col: str,
-    value_col: str,
-    lag_col: str,
-    out_col: str = "future_value",
-) -> DataFrame:
-    """Per-row heterogeneous lead: for each row, the value of the same
-    key at ``time + lag`` where ``lag`` varies by row.
-
-    Equivalent to the reference's per-target ``shift(-lag)`` loop
-    (MC:59845 (cell 67)) but expressed as ONE distributed self-join on
-    ``(key, time+lag) = (key, time)`` — inner join drops horizon-less
-    rows exactly like the reference's post-shift ``dropna()``.
-
-    ``time_col`` may be an integer period or a DateType; for dates the
-    caller should pre-compute ``F.date_add(time, lag)``. Here we assume
-    integer-addable time (use :func:`lead_heterogeneous_by_join_date`
-    for DateType).
-    """
-    left = series.withColumn("_target_time", F.col(time_col) + F.col(lag_col))
-    right = series.select(
-        F.col(key_col).alias("_rk"),
-        F.col(time_col).alias("_rt"),
-        F.col(value_col).alias(out_col),
-    )
-    joined = left.join(
-        right,
-        (left[key_col] == right["_rk"]) & (left["_target_time"] == right["_rt"]),
-        "inner",
-    )
-    return joined.drop("_rk", "_rt", "_target_time")
 
 
 def rolling_stats(
@@ -134,23 +80,6 @@ def is_monotonic_increasing(
     flagged = df.withColumn("_step_ok", step_ok.cast("int"))
     agg = [F.min("_step_ok").cast("boolean").alias("monotonic"), F.count("*").alias("n_rows")]
     return flagged.groupBy(*group).agg(*agg) if group else flagged.agg(*agg)
-
-
-def tail_slice(
-    df: DataFrame,
-    time_col: str,
-    n: int,
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Last-``n``-periods filter (reference: app.py:481-491 history
-    charts). Expressed as ``max(time) - time`` against a scalar —
-    Catalyst computes the max in a first stage then pushes the filter,
-    avoiding a global sort."""
-    if partition_cols:
-        w = Window.partitionBy(*partition_cols).orderBy(F.col(time_col).desc())
-        return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= n).drop("_rn")
-    mx = df.agg(F.max(time_col)).first()[0]
-    return df.filter(F.col(time_col) >= F.lit(mx) - (n - 1))
 
 
 def asof_join(

@@ -500,10 +500,10 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-iteration kmeans init — engine-reproducible, so the whole
     assign→probe→in-cell-exact-search path has an ANSI-SQL oracle),
     probe the 2 cells nearest the query, exact cosine inside the
-    probed cells only. The MLlib-KMeans quantizer variant
-    (operators/similarity.ivf_assign) remains the refined-centroid
-    path; its recall vs exact brute force is asserted in
-    tests/test_similarity_ivf.py."""
+    probed cells only. The MLlib-KMeans quantizer
+    (operators/similarity.ivf_assign) is the trained-centroid
+    alternative; probed through the same ``ivf_seed_topk``, its recall
+    vs exact brute force is asserted in tests/test_similarity_ivf.py."""
     from commodity_price_forecasting_spark.operators.similarity import (
         ivf_seed_assign,
         ivf_seed_topk,
@@ -4256,7 +4256,7 @@ assert _IVFPQ_NORM_REFINE_ORACLE != _IVFPQ_REFINE_ORACLE  # replaces took
 
 def _shared_ivfpq_norm_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once path of the persisted NORMALIZED shared-corpus
-    IVF-PQ index (``normalize=True``, no rotation — the measured
+    IVF-PQ index (``normalize=True`` — the measured
     cosine deployment shape, SCALE.md r13). Same memo/fingerprint
     discipline as ``_shared_ivfpq_index_path``; seeds/ is written last
     by ``ivf_pq_index_write`` so its _SUCCESS marks a complete layout

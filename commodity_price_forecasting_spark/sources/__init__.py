@@ -1,6 +1,5 @@
 from commodity_price_forecasting_spark.sources.readers import (  # noqa: F401
     TABLES,
     load_table,
-    load_tables,
     register_views,
 )

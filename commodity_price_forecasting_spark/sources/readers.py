@@ -1,12 +1,11 @@
-"""Source readers for the engine's fixture tables and CSV inputs.
+"""Source readers for the engine's fixture tables.
 
 Scans mirror the reference's sources (SURVEY.md §2.1, S1–S4:
 ``pd.read_csv`` of train/labels/pairs/serving tables) re-expressed as
-Spark reads. Parquet is the primary format for the driver fixtures
-(TESTDATA.md); CSV readers keep fidelity with the reference (header
-row + schema). All reads are lazy scans — Catalyst pushes filters
-and prunes columns down to the parquet footer level, which is the
-100 TB-scale win the eager reference cannot have.
+Spark reads of the parquet fixture tables (TESTDATA.md). All reads
+are lazy scans — Catalyst pushes filters and prunes columns down to
+the parquet footer level, which is the 100 TB-scale win the eager
+reference cannot have.
 """
 
 from __future__ import annotations
@@ -14,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 #: Fixture tables generated by the driver (TESTDATA.md).
 TABLES = (
@@ -70,41 +68,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for Spark SQL."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# --- Reference-shaped CSV sources (SURVEY.md §2.1 S1–S3) ----------------
-
-def read_market_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """CSV scan with header, matching the reference's ``pd.read_csv``
-    of ``train.csv`` / ``train_labels.csv`` (reference:
-    notebooks/Marilyn_Cleaning.ipynb:81 (cell 3), :24768 (cell 18)).
-
-    Pass an explicit ``schema`` in production; ``inferSchema`` (an
-    extra full pass over the data) only for ad-hoc fidelity.
-    """
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
-
-
-def target_pairs_schema() -> T.StructType:
-    """Schema of the reference's ``target_pairs.csv`` mapping table
-    (reference: Data/target_pairs.csv:1-5; SURVEY.md §1.1)."""
-    return T.StructType(
-        [
-            T.StructField("target", T.StringType(), False),
-            T.StructField("lag", T.IntegerType(), False),
-            T.StructField("pair", T.StringType(), False),
-        ]
-    )

@@ -772,12 +772,10 @@ def test_pii_checksum_gate_luhn_and_iban(spark):
 
 
 def test_near_dup_candidates_dispatch_and_equality(spark):
-    """r9 front door: below the bucket-pair threshold auto IS the
-    all-pairs result exactly; above it (forced via a tiny threshold
-    by monkeypatching the module constant) it IS the star result;
-    bad lane names are refused with the options listed."""
-    import pytest as _pytest
-
+    """The two LSH candidate lanes on one band table: the all-pairs
+    lane finds candidates on a corpus of near-copies, and the star
+    lane's pairs are a subset of them (star keeps only the edges to
+    each bucket's representative)."""
     from commodity_price_forecasting_spark.operators import dedup as D
 
     docs = spark.createDataFrame(
@@ -787,27 +785,46 @@ def test_near_dup_candidates_dispatch_and_equality(spark):
     sh = D.char_shingles(docs, distinct=False)
     bands = D.band_signatures(D.minhash_wide(sh))
 
-    auto = sorted(tuple(r) for r in D.near_dup_candidates(bands).collect())
     allp = sorted(tuple(r) for r in D.lsh_candidate_pairs(bands).collect())
     star = sorted(tuple(r) for r in D.lsh_star_pairs(bands).collect())
-    assert auto == allp and allp  # small corpus -> all-pairs lane
+    assert allp
     assert set(star) <= set(allp)
 
-    orig = D.NEAR_DUP_ALLPAIRS_MAX_PAIRS
-    try:
-        D.NEAR_DUP_ALLPAIRS_MAX_PAIRS = 0
-        forced = sorted(
-            tuple(r) for r in D.near_dup_candidates(bands).collect()
-        )
-        assert forced == star
-    finally:
-        D.NEAR_DUP_ALLPAIRS_MAX_PAIRS = orig
 
-    assert sorted(
-        tuple(r) for r in D.near_dup_candidates(bands, candidates="star").collect()
-    ) == star
-    with _pytest.raises(ValueError, match="auto|all|star"):
-        D.near_dup_candidates(bands, candidates="bogus")
+def test_profiling_rejects_bad_arguments_before_any_job(spark):
+    """Degenerate profiling arguments raise a ValueError naming the
+    argument when the frame is built — not a DIVIDE_BY_ZERO at
+    collect(), a silently empty histogram, a bucket of -3, a bare
+    ZeroDivisionError, reduce() of an empty list, or two output
+    columns both named p12."""
+    import pytest as _pytest
+
+    from commodity_price_forecasting_spark.operators.profiling import (
+        describe_long,
+        histogram_fixed,
+        quantile_summary,
+    )
+
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "x double")
+    for lo, hi in ((1.0, 1.0), (5.0, 1.0)):
+        with _pytest.raises(ValueError, match="lo must be < hi"):
+            histogram_fixed(df, "x", lo, hi)
+    for nbins in (0, -2):
+        with _pytest.raises(ValueError, match="nbins"):
+            histogram_fixed(df, "x", 0.0, 10.0, nbins)
+    for fn in (describe_long, quantile_summary):
+        with _pytest.raises(ValueError, match="cols"):
+            fn(df, [])
+    with _pytest.raises(ValueError, match="duplicate column names"):
+        quantile_summary(df, ["x"], probs=(0.125, 0.12))
+    for probs in ((-0.1,), (0.5, 1.5), ()):
+        with _pytest.raises(ValueError, match="probs"):
+            quantile_summary(df, ["x"], probs=probs)
+
+    # valid arguments are unchanged: 3 equal-width buckets, quartiles
+    hist = {r["bucket"]: r["n"] for r in histogram_fixed(df, "x", 0.0, 9.0, 3).collect()}
+    assert hist == {0: 3, 1: 3, 2: 4}
+    assert quantile_summary(df, ["x"]).columns == ["col_name", "p25", "p50", "p75"]
 
 
 def test_substring_remove_collapses_duplicated_mass(spark):

@@ -97,3 +97,85 @@ def test_wrap_targets_found():
 def test_perfbench_wrap_target_exists(module, attr):
     mod = importlib.import_module(module)
     assert hasattr(mod, attr), f"perfbench wraps {module}.{attr}, which does not exist"
+
+
+#: Where a package definition counts as used: the package itself and
+#: every caller that lives outside it.
+REFERENCE_ROOTS = (
+    PACKAGE,
+    "tests",
+    "tools",
+    "perfbench",
+    "bench.py",
+    "parity_report.py",
+    "__spark_entry__.py",
+)
+
+
+def _py_files(rel: str) -> list[str]:
+    path = os.path.join(ROOT, rel)
+    if path.endswith(".py"):
+        return [path]
+    return sorted(
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".py")
+    )
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path) as fh:
+        return ast.parse(fh.read(), filename=path)
+
+
+def _is_registered(node: ast.AST) -> bool:
+    """``@register(...)`` queries are reached through the registry."""
+    for dec in node.decorator_list:
+        fn = dec.func if isinstance(dec, ast.Call) else dec
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        if name == "register":
+            return True
+    return False
+
+
+def unreferenced_defs() -> list[str]:
+    """``module.name`` of every top-level package function or class
+    that nothing references: no ``Name``, no ``Attribute``, no
+    ``from ... import`` alias (a re-export in a package ``__init__.py``
+    does not count) and no string constant equal to the name, in any
+    file under ``REFERENCE_ROOTS``. Parsed with ``ast``; nothing is
+    executed."""
+    defs = {}
+    for path in _py_files(PACKAGE):
+        module = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+        for node in _parse(path).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not _is_registered(node):
+                defs.setdefault(node.name, []).append(module)
+    used = set()
+    for rel in REFERENCE_ROOTS:
+        for path in _py_files(rel):
+            reexport = os.path.basename(path) == "__init__.py"
+            for node in ast.walk(_parse(path)):
+                if isinstance(node, ast.Name):
+                    used.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    used.add(node.attr)
+                elif isinstance(node, ast.ImportFrom) and not reexport:
+                    used.update(a.name for a in node.names)
+                elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if node.value.isidentifier():
+                        used.add(node.value)
+    return sorted(
+        f"{module}.{name}"
+        for name, modules in defs.items()
+        if name not in used
+        for module in modules
+    )
+
+
+def test_every_package_def_is_referenced():
+    dead = unreferenced_defs()
+    assert not dead, f"package definitions nothing references: {dead}"

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from commodity_price_forecasting_spark.operators.similarity import (
     cosine_topk,
     ivf_assign,
-    ivf_topk,
+    ivf_seed_topk,
 )
 from commodity_price_forecasting_spark.sources.readers import load_table
 
@@ -25,18 +25,19 @@ def test_ivf_recall_vs_bruteforce(spark):
     assigned, centers = ivf_assign(corpus, k=8)
     assert assigned.count() == corpus.count()
     assert len(centers) == 8
+    seeds = list(enumerate(centers))
 
     # probing ALL cells must equal exact brute force
     full = {
         r["vec_id"]
-        for r in ivf_topk(assigned, centers, qvec, k=10, n_probe=8).collect()
+        for r in ivf_seed_topk(assigned, seeds, qvec, k=10, n_probe=8).collect()
     }
     assert full == exact
 
     # probing 3/8 cells: meaningful recall with ~60% of the scan pruned
     pruned = {
         r["vec_id"]
-        for r in ivf_topk(assigned, centers, qvec, k=10, n_probe=3).collect()
+        for r in ivf_seed_topk(assigned, seeds, qvec, k=10, n_probe=3).collect()
     }
     assert len(pruned & exact) >= 5
 

@@ -5,10 +5,14 @@ entry (codebook = corpus ⇒ per-subspace quantization error = 0), and
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from commodity_price_forecasting_spark.operators.similarity import (
+    ivf_pq_index,
     pq_adc_topk,
     pq_distances,
     pq_encode,
@@ -16,6 +20,29 @@ from commodity_price_forecasting_spark.operators.similarity import (
 from commodity_price_forecasting_spark.sources.readers import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def _shared(idx: dict):
+    # read-only view: a test that tried to swap a frame into the shared
+    # index would fail here instead of leaking into the next test
+    yield MappingProxyType(idx)
+    idx["res"].unpersist()
+
+
+@pytest.fixture(scope="module")
+def shared_index(spark):
+    """``ivf_pq_index`` over the whole sf0.001 corpus, built once for
+    every test that only probes or writes it."""
+    yield from _shared(ivf_pq_index(load_table(spark, SF_DIR, "embeddings")))
+
+
+@pytest.fixture(scope="module")
+def shared_index_loo(spark):
+    """The same index with query 0 left out (``exclude_id=0``) — the
+    index ``ivf_pq_adc_topk(query_id=0)`` builds in-plan."""
+    yield from _shared(
+        ivf_pq_index(load_table(spark, SF_DIR, "embeddings"), exclude_id=0)
+    )
 
 
 def _exact_l2_topk(emb_rows, query_id: int, k: int) -> list[int]:
@@ -192,7 +219,7 @@ def test_ivfpq_threads_custom_id_col_and_guards_missing_query(spark):
     assert [r["doc_id"] for r in got_pq] == [r["vec_id"] for r in base_pq]
 
 
-def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path):
+def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path, shared_index_loo):
     """r8 VERDICT ask #2: the split form — materialize the index once
     (codes/cells/cb to parquet, the deployment shape), then run the
     probe-only plan — must return EXACTLY the single-plan
@@ -201,7 +228,6 @@ def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path):
     computation."""
     from commodity_price_forecasting_spark.operators.similarity import (
         ivf_pq_adc_topk,
-        ivf_pq_index,
         ivf_pq_probe,
     )
 
@@ -212,10 +238,9 @@ def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path):
         float(x)
         for x in emb.filter("vec_id = 0").select("embedding").first()[0]
     ]
-    idx = ivf_pq_index(emb, exclude_id=0)
+    idx = shared_index_loo
     for part in ("codes", "cells", "cb"):
         idx[part].write.mode("overwrite").parquet(str(tmp_path / part))
-    idx["res"].unpersist()
     reloaded = dict(
         idx,
         codes=spark.read.parquet(str(tmp_path / "codes")),
@@ -226,7 +251,7 @@ def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path):
     assert [tuple(r) for r in got] == [tuple(r) for r in base]
 
 
-def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path):
+def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path, shared_index_loo):
     """r9: the cell-partitioned persisted layout
     (ivf_pq_index_write/_load). Three claims, each checked:
     (1) the loaded-index probe returns EXACTLY the single-plan
@@ -240,7 +265,6 @@ def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path):
 
     from commodity_price_forecasting_spark.operators.similarity import (
         ivf_pq_adc_topk,
-        ivf_pq_index,
         ivf_pq_index_load,
         ivf_pq_index_write,
         ivf_pq_probe,
@@ -252,9 +276,8 @@ def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path):
         float(x)
         for x in emb.filter("vec_id = 0").select("embedding").first()[0]
     ]
-    idx = ivf_pq_index(emb, exclude_id=0)
+    idx = shared_index_loo
     ivf_pq_index_write(idx, str(tmp_path))
-    idx["res"].unpersist()
 
     # (3) one parquet directory per coarse cell that has members
     cell_dirs = [
@@ -367,60 +390,19 @@ def test_trained_codebook_shape_and_determinism(spark):
         ivf_pq_index(emb, codebook="bogus")
 
 
-def test_ann_topk_front_door_dispatch(spark, tmp_path):
-    """r9: the ANN front door. auto with no index == brute (exact
-    cosine rows); auto with a persisted index == the single-plan
-    ivf_pq_adc_topk rows (leave-one-out index); forced ivf_pq with no
-    index also == the single-plan form; bad lane and missing query
-    raise named errors."""
-    import pytest as _pytest
-
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        cosine_topk,
-        ivf_pq_adc_topk,
-        ivf_pq_index,
-        ivf_pq_index_write,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-
-    brute = cosine_topk(emb, 0, k=10).collect()
-    got = ann_topk(emb, 0, k=10).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in brute]
-
-    single = ivf_pq_adc_topk(emb, query_id=0, k=10).collect()
-    forced = ann_topk(emb, 0, k=10, lane="ivf_pq").collect()
-    assert [tuple(r) for r in forced] == [tuple(r) for r in single]
-
-    idx = ivf_pq_index(emb, exclude_id=0)
-    ivf_pq_index_write(idx, str(tmp_path))
-    idx["res"].unpersist()
-    via_path = ann_topk(emb, 0, k=10, index=str(tmp_path)).collect()
-    assert [
-        (r["vec_id"], int(r["cell"]), r["adc_dist"]) for r in via_path
-    ] == [(r["vec_id"], int(r["cell"]), r["adc_dist"]) for r in single]
-
-    with _pytest.raises(ValueError, match="lane"):
-        ann_topk(emb, 0, lane="bogus")
-    with _pytest.raises(ValueError, match="not found"):
-        ann_topk(emb, 10**9, index=str(tmp_path))
-
-
-def test_ivfpq_batch_probe_equals_per_query(spark):
+def test_ivfpq_batch_probe_equals_per_query(spark, shared_index):
     """r9: the batch probe (one plan, N queries) must return, for
     every query id, EXACTLY the rows of the driver-routed single
     probe over the SAME shared index — same cells probed (column
     sort_array routing == driver HALF_UP sort), same LUT sums, same
     top-k order."""
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
         ivf_pq_probe,
         ivf_pq_probe_batch,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    idx = ivf_pq_index(emb)  # shared full-corpus index, no exclusion
+    idx = shared_index  # shared full-corpus index, no exclusion
     qids = [0, 7, 111, 333]
     queries = emb.filter(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -444,24 +426,22 @@ def test_ivfpq_batch_probe_equals_per_query(spark):
         assert by_q[qi] == [
             (r["vec_id"], int(r["cell"]), r["adc_dist"]) for r in single
         ], f"query {qi} diverged"
-    idx["res"].unpersist()
 
 
-def test_ivfpq_batch_probe_loaded_index_prunes_and_matches(spark, tmp_path):
+def test_ivfpq_batch_probe_loaded_index_prunes_and_matches(spark, tmp_path, shared_index):
     """r10 (r9 ADVICE): the batch probe over a PERSISTED index must
     (1) return exactly the in-memory batch result per query, and
     (2) filter the cell-partitioned scan to the union of probed cells
     (PartitionFilters in the scan node) instead of reading the whole
     index — the pruning the layout exists for."""
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
         ivf_pq_index_load,
         ivf_pq_index_write,
         ivf_pq_probe_batch,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    idx = ivf_pq_index(emb)
+    idx = shared_index
     ivf_pq_index_write(idx, str(tmp_path))
     loaded = ivf_pq_index_load(spark, str(tmp_path))
     qids = [0, 7, 111]
@@ -480,64 +460,6 @@ def test_ivfpq_batch_probe_loaded_index_prunes_and_matches(spark, tmp_path):
     ) == sorted(
         ((r["query_id"], r["vec_id"], int(r["cell"]), r["adc_dist"]) for r in mem)
     )
-    idx["res"].unpersist()
-
-
-def test_ann_topk_ivf_lane_and_index(spark, tmp_path):
-    """r9: the full-precision IVF half of the front door. A persisted
-    ivf_index_write layout must (1) auto-route to the exact-scoring
-    probe, (2) prune partitions (PartitionFilters on the corpus
-    scan), (3) match a driver-composed ivf_seed_topk over the same
-    shared assignment with self-exclusion; lane='ivf' with no index
-    must equal the registered sim_ivf_topk composition
-    (leave-one-out); handing the wrong index kind raises."""
-    import re
-
-    import pytest as _pytest
-
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        ivf_index_load,
-        ivf_index_write,
-        ivf_pq_index,
-        ivf_seed_assign,
-        ivf_seed_topk,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = [
-        float(x)
-        for x in emb.filter("vec_id = 0").select("embedding").first()[0]
-    ]
-
-    # in-plan lane == registered sim_ivf_topk composition
-    assigned, seeds = ivf_seed_assign(emb.filter(F.col("vec_id") != 0), k=16)
-    want = ivf_seed_topk(assigned, seeds, q, k=10, n_probe=2).collect()
-    got = ann_topk(emb, 0, k=10, lane="ivf").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    # persisted shared index: auto-routes to ivf, prunes, matches
-    ivf_index_write(emb, str(tmp_path), k=16)
-    loaded = ivf_index_load(spark, str(tmp_path))
-    want2 = ivf_seed_topk(
-        loaded["assigned"], loaded["seeds"], q, k=10, n_probe=2, exclude_id=0
-    ).collect()
-    probe_df = ann_topk(emb, 0, k=10, index=str(tmp_path))
-    plan = probe_df._jdf.queryExecution().executedPlan().toString()
-    assert re.search(r"PartitionFilters: \[.*cell.*\]", plan), plan
-    got2 = probe_df.collect()
-    assert [
-        (r["vec_id"], int(r["cell"]), r["cosine"]) for r in got2
-    ] == [(r["vec_id"], int(r["cell"]), r["cosine"]) for r in want2]
-    assert got2[0].__fields__ == ["vec_id", "cell", "cosine"]
-
-    # wrong index kind is a named error both ways
-    with _pytest.raises(ValueError, match="lane='ivf_pq'"):
-        ann_topk(emb, 0, index=str(tmp_path), lane="ivf_pq").collect()
-    pq_idx = ivf_pq_index(emb)
-    with _pytest.raises(ValueError, match="lane='ivf'"):
-        ann_topk(emb, 0, index=pq_idx, lane="ivf").collect()
-    pq_idx["res"].unpersist()
 
 
 def test_clustered_geometry_recall_floors(spark, tmp_path):
@@ -595,44 +517,6 @@ def test_clustered_geometry_recall_floors(spark, tmp_path):
     # in-cell ADC with 256-entry trained codebooks keeps real signal
     # on structured data (vs ~0.1 on the isotropic fixture)
     assert by[("ivf_pq_trained256", 2)] >= 0.35
-
-
-def test_ann_topk_external_query_vector(spark, tmp_path):
-    """r9: the q= form (external query vector, the real retrieval
-    shape). Brute with q == the literal-scored exact ranking with no
-    self-exclusion (a corpus member passed as q must surface ITSELF
-    at cosine 1.0); index lanes accept q and skip exclusion; passing
-    both or neither of query_id/q raises."""
-    import pytest as _pytest
-
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        ivf_pq_index,
-        ivf_pq_index_write,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    v0 = [
-        float(x)
-        for x in emb.filter("vec_id = 0").select("embedding").first()[0]
-    ]
-
-    got = ann_topk(emb, q=v0, k=5).collect()
-    assert got[0]["vec_id"] == 0 and got[0]["cosine"] == 1.0
-    # the rest of the ranking == the self-excluding form's top-4
-    excl = ann_topk(emb, 0, k=4).collect()
-    assert [tuple(r) for r in got[1:]] == [tuple(r) for r in excl]
-
-    idx = ivf_pq_index(emb)
-    ivf_pq_index_write(idx, str(tmp_path))
-    idx["res"].unpersist()
-    via_idx = ann_topk(emb, q=v0, k=5, index=str(tmp_path)).collect()
-    assert via_idx[0]["vec_id"] == 0 and via_idx[0]["adc_dist"] == 0.0
-
-    with _pytest.raises(ValueError, match="exactly one"):
-        ann_topk(emb, 0, q=v0)
-    with _pytest.raises(ValueError, match="exactly one"):
-        ann_topk(emb)
 
 
 def test_lowrank_geometry_pq_recall_floors(spark, tmp_path):
@@ -808,72 +692,19 @@ def test_semantic_dedup_drop_quality_on_planted_duplicates(spark):
         assert 1 - both_kept / n_dup >= recall_floor, (lane, both_kept)
 
 
-def test_ivf_index_append_equals_monolithic_assignment(spark, tmp_path):
-    """Full-precision sibling of the PQ append: appended rows must
-    carry EXACTLY the cells a monolithic assignment under the same
-    seeds would give, and the probe over the appended index must
-    return them when they are true neighbors."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        assign_to_seeds,
-        ivf_index_append,
-        ivf_index_load,
-        ivf_index_write,
-        ivf_seed_assign,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    old = emb.filter(F.col("vec_id") < 400)
-    new = emb.filter(F.col("vec_id") >= 400)
-    ivf_index_write(old, str(tmp_path))
-    n = ivf_index_append(spark, str(tmp_path), new)
-    assert n == new.count()
-    loaded = ivf_index_load(spark, str(tmp_path))
-    _, seeds = ivf_seed_assign(old)
-    ref = assign_to_seeds(emb, seeds)
-    got = sorted(
-        (r["vec_id"], int(r["cell"]))
-        for r in loaded["assigned"].select("vec_id", "cell").collect()
-    )
-    want = sorted(
-        (r["vec_id"], int(r["cell"]))
-        for r in ref.select("vec_id", "cell").collect()
-    )
-    assert got == want
-    # the appended rows are probe-reachable through the front door
-    res = ann_topk(emb, query_id=450, k=10, index=str(tmp_path)).collect()
-    assert len(res) == 10 and all(r["vec_id"] != 450 for r in res)
-
-    # r10 ADVICE guards: extra delta columns must not widen the
-    # persisted schema (append selects only id+vec)
-    corpus_cols = loaded["assigned"].columns
-    assert sorted(corpus_cols) == sorted(["vec_id", "embedding", "cell"])
-    # wrong-dim delta raises a NAMED error before any write
-    import pytest as _pytest
-
-    bad = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
-    with _pytest.raises(ValueError, match=r"dims in \[16, 16\]"):
-        ivf_index_append(spark, str(tmp_path), bad)
-    # empty delta is a no-op returning 0
-    assert ivf_index_append(spark, str(tmp_path), emb.limit(0)) == 0
-
-
-def test_ivfpq_index_append_rejects_dim_mismatch(spark, tmp_path):
+def test_ivfpq_index_append_rejects_dim_mismatch(spark, tmp_path, shared_index):
     """A delta at the wrong dimensionality must raise a NAMED error
     before any write — subvector slices would shift and mis-encode
     silently otherwise."""
     import pytest as _pytest
 
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
         ivf_pq_index_append,
         ivf_pq_index_write,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    idx = ivf_pq_index(emb)
-    ivf_pq_index_write(idx, str(tmp_path))
-    idx["res"].unpersist()
+    ivf_pq_index_write(shared_index, str(tmp_path))
     bad = emb.select("vec_id", F.slice("embedding", 1, 32).alias("embedding"))
     with _pytest.raises(ValueError, match=r"dims in \[32, 32\][\s\S]*dim 64"):
         ivf_pq_index_append(spark, str(tmp_path), bad)
@@ -889,9 +720,7 @@ def test_refine_rerank_hits_ivf_exact_ceiling_and_lifts_recall(spark):
     documented to approach), and (b) at moderate C, reach recall@10
     (vs global brute force) at least as high as the unrefined probe."""
     from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
         cosine_topk,
-        ivf_pq_index,
         ivf_pq_probe,
         ivf_pq_refine_topk,
         ivf_seed_assign,
@@ -929,239 +758,7 @@ def test_refine_rerank_hits_ivf_exact_ceiling_and_lifts_recall(spark):
         ).collect()
     }
     assert len(refined & exact) >= len(plain & exact)
-
-    # front door: ann_topk(refine=) routes here and returns cosines
-    via_door = {
-        r["vec_id"]
-        for r in ann_topk(emb, query_id=qid, k=10, refine=100).collect()
-    }
-    assert via_door == refined
     idx["res"].unpersist()
-
-    # refine on a non-PQ lane is a named error
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="only applies to"):
-        ann_topk(emb, query_id=qid, k=10, lane="brute", refine=50)
-
-
-def test_refine_cell_pruned_fetch_matches_frame_fetch(spark, tmp_path):
-    """Refine fetching from a persisted ivf_index_write layout (cell-
-    pruned scan) must return exactly what the corpus-frame fetch
-    returns — and refuse a layout whose seeds differ from the PQ
-    index's (pruning with foreign cells would drop true candidates)."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_index_write,
-        ivf_pq_index,
-        ivf_pq_refine_topk,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    qid = 3
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == qid).first()["embedding"]
-    ]
-    corpus = emb.filter(F.col("vec_id") != qid)
-
-    idx = ivf_pq_index(corpus)
-    ivf_index_write(corpus, str(tmp_path / "full"))
-
-    a = ivf_pq_refine_topk(idx, corpus, qvec, k=10, refine=80, n_probe=2)
-    b = ivf_pq_refine_topk(
-        idx,
-        corpus,
-        qvec,
-        k=10,
-        refine=80,
-        n_probe=2,
-        full_index_path=str(tmp_path / "full"),
-    )
-    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
-
-    # a layout built over a DIFFERENT corpus has different seeds
-    ivf_index_write(
-        emb.filter(F.col("vec_id") > 100), str(tmp_path / "other")
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="seeds differ"):
-        ivf_pq_refine_topk(
-            idx,
-            corpus,
-            qvec,
-            k=10,
-            refine=80,
-            full_index_path=str(tmp_path / "other"),
-        ).collect()
-    idx["res"].unpersist()
-
-
-def test_opq_rotation_orthogonal_and_rotate_vectors_matmul(spark):
-    """OPQ rotation (r11 VERDICT ask #5): R must be orthogonal (L2
-    preserved exactly — the property that makes rotated ADC estimate
-    the SAME metric), rotate_vectors must equal the numpy matmul, and
-    training must be deterministic run-to-run (6-dp covariance +
-    sign-normalized eigenvectors)."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        opq_rotation,
-        rotate_vectors,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    R = opq_rotation(emb, m_sub=8)
-    Rm = np.asarray(R)
-    d = Rm.shape[0]
-    assert Rm.shape == (d, d) and d % 8 == 0
-    assert np.allclose(Rm @ Rm.T, np.eye(d), atol=1e-8)
-
-    sample = emb.filter(F.col("vec_id") < 5)
-    got = {
-        r["vec_id"]: np.asarray(r["embedding"])
-        for r in rotate_vectors(sample, R, keep=("vec_id",)).collect()
-    }
-    for r in sample.collect():
-        want = Rm @ np.asarray(r["embedding"], dtype=np.float64)
-        assert np.allclose(got[r["vec_id"]], want, atol=1e-9)
-    # L2 between two rotated vectors == L2 between the originals
-    a, b = (np.asarray(r["embedding"], dtype=np.float64)
-            for r in sample.limit(2).collect())
-    assert abs(
-        np.linalg.norm(Rm @ a - Rm @ b) - np.linalg.norm(a - b)
-    ) < 1e-9
-
-    assert R == opq_rotation(emb, m_sub=8)
-
-
-def test_opq_index_roundtrip_append_and_probe_equality(spark, tmp_path):
-    """The OPQ index's rotation is part of its identity: it must
-    survive write→load bit-exactly, probes over the loaded index must
-    equal probes over the in-memory one, and the APPEND path must
-    encode the delta under the persisted R so appended codes equal a
-    from-scratch encode of the union (the frozen-quantizer contract,
-    now including R)."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        assign_to_seeds,
-        ivf_pq_index,
-        ivf_pq_index_append,
-        ivf_pq_index_load,
-        ivf_pq_index_write,
-        ivf_pq_probe,
-        rotate_vectors,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    old = emb.filter(F.col("vec_id") < 400)
-    new = emb.filter(F.col("vec_id") >= 400)
-    n_new = new.count()
-    idx = ivf_pq_index(old, rotation="opq")
-    assert idx["rotation"] is not None
-    ivf_pq_index_write(idx, str(tmp_path))
-    loaded = ivf_pq_index_load(spark, str(tmp_path))
-    assert loaded["rotation"] == idx["rotation"]  # doubles roundtrip exactly
-
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
-    probe_df = ivf_pq_probe(loaded, q, k=10, n_probe=2, exclude_id=7)
-    # rotation must not cost the pruned scan: the rotate happens on
-    # the QUERY-side LUT, the coded scan keeps its PartitionFilters
-    import re as _re
-
-    plan = probe_df._jdf.queryExecution().executedPlan().toString()
-    assert _re.search(r"PartitionFilters: \[.*cell.*\]", plan), plan
-    got_p = probe_df.collect()
-    want_p = ivf_pq_probe(idx, q, k=10, n_probe=2, exclude_id=7).collect()
-    assert [(r["vec_id"], r["adc_dist"]) for r in got_p] == [
-        (r["vec_id"], r["adc_dist"]) for r in want_p
-    ]
-
-    assert ivf_pq_index_append(spark, str(tmp_path), new) == n_new
-    # monolithic reference: union encoded under old's seeds/cb AND R
-    seed_df = spark.createDataFrame(
-        [(int(s), [float(x) for x in v]) for s, v in idx["seeds"]],
-        "_sid long, _svec array<double>",
-    )
-    assigned = assign_to_seeds(emb, idx["seeds"])
-    res = assigned.join(
-        F.broadcast(seed_df), F.col("cell") == F.col("_sid")
-    ).select(
-        "vec_id",
-        "cell",
-        F.zip_with(
-            F.col("embedding"), F.col("_svec"), lambda a, b: a.cast("double") - b
-        ).alias("embedding"),
-    )
-    res_rot = rotate_vectors(
-        res, idx["rotation"], vec_col="embedding", keep=("vec_id", "cell")
-    )
-    ref_codes = pq_encode(
-        pq_distances(
-            res_rot.select("vec_id", "embedding"), m_sub=8, codebook=idx["cb"]
-        )
-    )
-    ref = ref_codes.join(res_rot.select("vec_id", "cell"), "vec_id")
-    reloaded = ivf_pq_index_load(spark, str(tmp_path))
-    got = sorted(
-        (r["vec_id"], r["m"], r["code"], int(r["cell"]))
-        for r in reloaded["coded"].collect()
-    )
-    want = sorted(
-        (r["vec_id"], r["m"], r["code"], int(r["cell"])) for r in ref.collect()
-    )
-    assert got == want
-    # appended vectors reachable through a probe on the grown index
-    q2 = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 450).first()["embedding"]
-    ]
-    got2 = ivf_pq_probe(reloaded, q2, k=10, n_probe=2, exclude_id=450).collect()
-    assert any(r["vec_id"] >= 400 for r in got2)
-    idx["res"].unpersist()
-    idx["res_rot"].unpersist()
-
-
-def test_opq_batch_probe_equals_per_query_on_rotated_index(spark, tmp_path):
-    """The batch probe's in-plan LUT must rotate the query residuals
-    with the same R the single-query probe uses — per-query equality
-    over a rotated persisted index."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
-        ivf_pq_index_load,
-        ivf_pq_index_write,
-        ivf_pq_probe,
-        ivf_pq_probe_batch,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    idx = ivf_pq_index(emb, rotation="opq")
-    ivf_pq_index_write(idx, str(tmp_path))
-    loaded = ivf_pq_index_load(spark, str(tmp_path))
-
-    qids = [3, 111, 222]
-    queries = emb.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    batch = ivf_pq_probe_batch(
-        loaded, queries, k=5, n_probe=2, exclude_self=True
-    ).collect()
-    by_q = {}
-    for r in batch:
-        by_q.setdefault(r["query_id"], []).append(
-            (r["vec_id"], int(r["cell"]), r["adc_dist"])
-        )
-    for qi in qids:
-        q = [
-            float(x)
-            for x in emb.filter(F.col("vec_id") == qi).first()["embedding"]
-        ]
-        want = [
-            (r["vec_id"], int(r["cell"]), r["adc_dist"])
-            for r in ivf_pq_probe(
-                loaded, q, k=5, n_probe=2, exclude_id=qi
-            ).collect()
-        ]
-        assert by_q[qi] == want, f"query {qi}"
-    idx["res"].unpersist()
-    idx["res_rot"].unpersist()
 
 
 def test_normalized_adc_ranks_by_cosine_exactly(spark):
@@ -1333,101 +930,20 @@ def test_normalized_index_roundtrip_append_batch_equality(spark, tmp_path):
     idx["res"].unpersist()
 
 
-def test_opq_iterative_orthogonal_deterministic_and_probes(spark):
-    """Non-parametric OPQ (r13): the alternation's R must stay
-    orthogonal (L2 preserved exactly — the ADC-estimator contract),
-    be deterministic across calls (index identity must be
-    re-derivable), and plug into the index/probe machinery like the
-    closed-form R."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
-        ivf_pq_probe,
-        opq_rotation_iterative,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    small = emb.filter(F.col("vec_id") < 300)
-    r1 = opq_rotation_iterative(small, m_sub=8, iters=2, sample=300)
-    r2 = opq_rotation_iterative(small, m_sub=8, iters=2, sample=300)
-    assert r1 == r2  # seeded end-to-end
-    R = np.asarray(r1)
-    assert np.allclose(R @ R.T, np.eye(R.shape[0]), atol=1e-9)
-
-    idx = ivf_pq_index(small, rotation="opq_np")
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 7).first()["embedding"]]
-    got = ivf_pq_probe(idx, q, k=5, n_probe=2, exclude_id=7).collect()
-    assert len(got) == 5
-    idx["res"].unpersist()
-    idx["res_rot"].unpersist()
-
-
-def test_ann_topk_normalize_dispatch_and_guards(spark, tmp_path):
-    """The front door's normalize= (r13): equals the direct
-    normalized single-plan lane; composes with refine=; raises by
-    name for a prebuilt index (flag is index identity) and for
-    non-PQ lanes (already exact cosine)."""
-    import pytest as _pytest
-
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        ivf_pq_adc_topk,
-        ivf_pq_index,
-        ivf_pq_index_write,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    got = ann_topk(emb, query_id=0, lane="ivf_pq", normalize=True).collect()
-    want = ivf_pq_adc_topk(emb, query_id=0, k=10, normalize=True).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-
-    refined = ann_topk(
-        emb, query_id=0, lane="ivf_pq", normalize=True, refine=50
-    ).collect()
-    assert len(refined) == 10 and refined[0].__fields__ == ["vec_id", "cosine"]
-
-    with _pytest.raises(ValueError, match="fixed at index build time"):
-        idx = ivf_pq_index(emb)
-        ivf_pq_index_write(idx, str(tmp_path))
-        idx["res"].unpersist()
-        ann_topk(emb, query_id=0, index=str(tmp_path), normalize=True)
-    with _pytest.raises(ValueError, match="only\\s+applies to the ivf_pq"):
-        ann_topk(emb, query_id=0, lane="brute", normalize=True)
-
-
-def test_ann_topk_auto_lane_resolves_normalize_to_pq(spark):
-    """r13 ADVICE #3: lane='auto' with normalize=True must resolve to
-    the PQ pipeline (mirroring the refine= rule) — the documented
-    cosine deployment shape is reachable through the front door
-    without also passing lane= or refine=."""
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ann_topk,
-        ivf_pq_adc_topk,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    got = ann_topk(emb, query_id=0, normalize=True).collect()
-    want = ivf_pq_adc_topk(emb, query_id=0, k=10, normalize=True).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    # and composed with refine (auto already resolved PQ via refine)
-    refined = ann_topk(emb, query_id=0, normalize=True, refine=50).collect()
-    assert len(refined) == 10
-
-
 def test_ivfpq_index_overwrite_atomic_and_drops_stale_identity(
-    spark, tmp_path
+    spark, tmp_path, shared_index
 ):
     """r13 ADVICE #1 (medium): overwriting an EXISTING complete layout
     must not leave a mixed layout. Two checks: (a) a NORMALIZED layout
     overwritten by a plain rebuild loads as plain — the stale idxmeta
-    (and any rotation) from the old layout must be gone, not merely
-    shadowed; (b) a crashed rewrite (forged as the __building tmp dir
-    left behind) leaves the OLD layout fully loadable and the next
-    write cleans the tmp up."""
+    from the old layout must be gone, not merely shadowed; (b) a
+    crashed rewrite (forged as the __building tmp dir left behind)
+    leaves the OLD layout fully loadable and the next write cleans the
+    tmp up."""
     import os as _os
     import shutil as _shutil
 
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_index,
         ivf_pq_index_load,
         ivf_pq_index_write,
     )
@@ -1445,11 +961,41 @@ def test_ivfpq_index_overwrite_atomic_and_drops_stale_identity(
     assert ivf_pq_index_load(spark, path)["normalized"] is True
 
     # (a) plain rebuild over the same path: stale idxmeta must vanish
-    plain = ivf_pq_index(emb)
-    ivf_pq_index_write(plain, path)
-    plain["res"].unpersist()
+    ivf_pq_index_write(shared_index, path)
     loaded = ivf_pq_index_load(spark, path)
     assert loaded["normalized"] is False
     assert not _os.path.isdir(path + "__building")  # crashed tmp cleaned
     assert not _os.path.isdir(_os.path.join(path, "idxmeta"))
     _shutil.rmtree(path)
+
+
+def test_ivfpq_index_load_refuses_rotation_dir(spark, tmp_path, shared_index):
+    """A layout carrying a ``rotation/`` directory (a complete one, as
+    layouts built with a residual rotation stored R, or an empty one)
+    was encoded in a rotated space that no probe here applies; loading
+    it must fail by name instead of probing in the wrong space."""
+    import os as _os
+    import re as _re
+    import shutil as _shutil
+
+    from commodity_price_forecasting_spark.operators.similarity import (
+        ivf_pq_index_load,
+        ivf_pq_index_write,
+    )
+
+    path = str(tmp_path / "idx")
+    rot = _os.path.join(path, "rotation")
+    ivf_pq_index_write(shared_index, path)
+    assert ivf_pq_index_load(spark, path)["normalized"] is False
+    dim = shared_index["dim"]
+    spark.createDataFrame(
+        [(i, [float(i == j) for j in range(dim)]) for i in range(dim)],
+        "i int, rrow array<double>",
+    ).write.parquet(rot)
+    want = _re.escape(f"{path}/rotation") + r"[\s\S]*rebuild"
+    with pytest.raises(ValueError, match=want):
+        ivf_pq_index_load(spark, path)
+    _shutil.rmtree(rot)
+    _os.makedirs(rot)
+    with pytest.raises(ValueError, match=want):
+        ivf_pq_index_load(spark, path)

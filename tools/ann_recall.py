@@ -368,7 +368,6 @@ def recall_table(
         n_centroids: int,
         coarse: str = "seed",
         codebook: str = "kmeans",
-        rotation: str = "none",
         normalize: bool = False,
     ) -> None:
         # normalized lanes (r12 ask #4) score against the COSINE ground
@@ -380,7 +379,6 @@ def recall_table(
             codebook=codebook,
             n_centroids=n_centroids,
             coarse=coarse,
-            rotation=rotation,
             normalize=normalize,
         )
         idx_t["codes"] = idx_t["codes"].cache()
@@ -400,32 +398,14 @@ def recall_table(
         idx_t["codes"].unpersist()
         idx_t["cells"].unpersist()
         idx_t["res"].unpersist()
-        if idx_t.get("res_rot") is not None:
-            idx_t["res_rot"].unpersist()
 
     if want("ivf_pq_trained"):
         ivf_pq_trained_recall("ivf_pq_trained", 16)
-    # --- OPQ rotation lanes (r11 VERDICT ask #5) ---------------------------
-    # same index shapes as their unrotated twins, with the closed-form
-    # eigenvalue-allocation rotation applied to residuals before PQ —
-    # the lift column is (opq lane) − (twin lane) per geometry
-    if want("ivf_pq_opq"):
-        ivf_pq_trained_recall("ivf_pq_opq", 16, codebook="seed", rotation="opq")
-    if n > 512 and want("ivf_pq_opq_trained256"):
-        ivf_pq_trained_recall("ivf_pq_opq_trained256", 256, rotation="opq")
-    if n > 512 and want("ivf_pq_full256_opq"):
-        ivf_pq_trained_recall(
-            "ivf_pq_full256_opq", 256, coarse="kmeans", rotation="opq"
-        )
-    # refine stacked on the best OPQ index (r12): does one exact
-    # re-rank pass close the remaining gap to the exact ceiling?
-    # ``normalize=True`` twin (r12 ask #4): same shape with L2-
-    # normalized vectors, so the ADC candidates are ranked by the
-    # metric refine re-ranks with — the L2-vs-cosine divergence the
-    # r12 measurement blamed for part of the ceiling gap is gone.
+    # refine stacked on a trained-coarse, 256-entry-codebook index
+    # over L2-normalized vectors, so the ADC candidates are ranked by
+    # the metric refine re-ranks with (r12 ask #4).
     def _refine_on(
-        lane: str, normalize: bool, rotation: str = "opq",
-        n_probes: tuple = (2, 4), k_coarse: int = 16,
+        lane: str, n_probes: tuple = (2, 4), k_coarse: int = 16
     ) -> None:
         from commodity_price_forecasting_spark.operators.similarity import (
             ivf_pq_refine_topk,
@@ -433,7 +413,7 @@ def recall_table(
 
         idx_r = ivf_pq_index(
             emb, codebook="kmeans", n_centroids=256, coarse="kmeans",
-            rotation=rotation, normalize=normalize, k_coarse=k_coarse,
+            normalize=True, k_coarse=k_coarse,
         )
         idx_r["codes"] = idx_r["codes"].cache()
         idx_r["cells"] = idx_r["cells"].cache()
@@ -454,19 +434,9 @@ def recall_table(
         idx_r["codes"].unpersist()
         idx_r["cells"].unpersist()
         idx_r["res"].unpersist()
-        if idx_r.get("res_rot") is not None:
-            idx_r["res_rot"].unpersist()
 
-    if n > 512 and want("ivf_pq_full256_opq_refine"):
-        _refine_on("ivf_pq_full256_opq_refine", normalize=False)
-    if n > 512 and want("ivf_pq_full256_opq_norm_refine"):
-        _refine_on("ivf_pq_full256_opq_norm_refine", normalize=True)
-    # refine on the UNROTATED normalized index: the r13 measurement
-    # found any global rotation HURTS normalized low-rank ADC, so the
-    # cosine deployment's candidate generator is normalize-only
     if n > 512 and want("ivf_pq_full256_norm_refine"):
-        _refine_on("ivf_pq_full256_norm_refine", normalize=True,
-                   rotation="none")
+        _refine_on("ivf_pq_full256_norm_refine")
     # r14 (r13 VERDICT ask #5): the n_probe RECALL CURVE for the
     # cosine deployment lane on routing-limited geometry. Cell probing
     # is already soft multi-probe in the standard sense — cells are
@@ -477,28 +447,15 @@ def recall_table(
     # and k_coarse=64 (one cell per true cluster on the clustered
     # fixture, n_probe up to 32 = half the index).
     if n > 512 and want("ivf_pq_norm_refine_knee16"):
-        _refine_on("ivf_pq_norm_refine_knee16", normalize=True,
-                   rotation="none", n_probes=(4, 8, 12, 16))
+        _refine_on("ivf_pq_norm_refine_knee16", n_probes=(4, 8, 12, 16))
     if n > 512 and want("ivf_pq_norm_refine_knee64"):
-        _refine_on("ivf_pq_norm_refine_knee64", normalize=True,
-                   rotation="none", k_coarse=64, n_probes=(4, 8, 16, 32))
+        _refine_on(
+            "ivf_pq_norm_refine_knee64", k_coarse=64, n_probes=(4, 8, 16, 32)
+        )
     # ADC-only normalized twins: the flag's lift without refine
     if n > 512 and want("ivf_pq_full256_norm"):
         ivf_pq_trained_recall(
             "ivf_pq_full256_norm", 256, coarse="kmeans", normalize=True
-        )
-    if n > 512 and want("ivf_pq_full256_opq_norm_adc"):
-        ivf_pq_trained_recall(
-            "ivf_pq_full256_opq_norm_adc", 256, coarse="kmeans",
-            rotation="opq", normalize=True,
-        )
-    # iterative (non-parametric) OPQ (r12 ask #7): does alternating
-    # rotate ↔ re-train codebooks buy recall where the closed-form
-    # rotation measured zero (clustered geometry)?
-    if n > 512 and want("ivf_pq_full256_opq_np"):
-        ivf_pq_trained_recall(
-            "ivf_pq_full256_opq_np", 256, coarse="kmeans",
-            rotation="opq_np",
         )
     # the deployment cell: 256-entry trained RESIDUAL codebooks (8-bit
     # codes, the FAISS default) — the pq_adc_trained256 dial applied
