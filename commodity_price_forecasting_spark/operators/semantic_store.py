@@ -33,8 +33,9 @@ silently absorbed — the same design as ``dedup_store``'s bridges and
 the ANN append's recall-drift table: rebuild when the inverted mass
 matters, on a measurement rather than a guess.
 
-Scale shape: seed assignment is a map-side pass (fold lane for small
-k — the bit-reproducible oracle lane; ``assign="blas"`` above — at
+Scale shape: seed assignment is a map-side pass through the lane
+``assign`` names (``similarity._assigner``: ``"fold"``, the
+bit-reproducible oracle lane, for small k; ``"blas"`` above — at
 k=232 the fold lane spends ~24 s compiling its seed-literal plan);
 the store-vs-delta stage scans each touched cell partition once
 against the broadcast delta (candidates bounded by Σ|touched cell| —
@@ -63,26 +64,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from commodity_price_forecasting_spark.operators.similarity import (
+    _assigner,
     _dot,
     _drops_from_assigned,
     _norm,
     _semdedup_seeds,
-    assign_cells_blas,
-    assign_cells_fold,
 )
-
-
-def _assigner(assign: str):
-    """fold = bit-reproducible plan-literal lane (the oracle lane,
-    right for small k); blas = closure-shipped seeds, one sgemm per
-    Arrow batch (the production lane — at k=232 the fold lane spent
-    24 s of a 30 s delta run building/compiling the 15k-literal plan,
-    measured r11)."""
-    if assign == "fold":
-        return assign_cells_fold
-    if assign == "blas":
-        return assign_cells_blas
-    raise ValueError(f"assign must be fold|blas: {assign}")
 
 
 def _write_meta(spark, path, k, threshold, dim):

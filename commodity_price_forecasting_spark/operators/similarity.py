@@ -58,8 +58,7 @@ def _norm(a: Column) -> Column:
 #: per expression) comfortably under it. This is also why the k-seed
 #: ASSIGNMENT keeps the fold: k·d terms in one expression crosses the
 #: janino limit at k = 16·d = 64 already (measured: compile failure +
-#: interpreted fallback ran 5× SLOWER than the fold — r16's honest
-#: negative result, recorded in OPTIMIZATION_r16.md). HotSpot refuses
+#: interpreted fallback ran 5× SLOWER than the fold). HotSpot refuses
 #: to JIT methods over 8 KB bytecode (-XX:-DontCompileHugeMethods is
 #: set in session.py for exactly this), so the unrolled forms stay
 #: JIT-compiled.
@@ -152,16 +151,193 @@ def _residual_cols(a: str, b: str, dim: int | None) -> Column:
     return F.expr(f"array({elems})")
 
 
-def _half_up6(x: float) -> float:
-    """HALF_UP 6-dp rounding for DRIVER-side scalars — sign·floor(
-    |x|·1e6 + 0.5)/1e6, matching Spark's ``F.round`` (BigDecimal
-    HALF_UP), the DuckDB oracle's ``ROUND`` (half away from zero),
-    and the numpy ``_round6``. Python's builtin ``round`` is
-    banker's (half-to-even) and would pick a DIFFERENT probe cell on
-    an exact 6-dp cosine tie (r8 ADVICE)."""
+def _residuals(
+    df: DataFrame,
+    seeds: list[tuple[int, list[float]]],
+    key: str,
+    cell: str,
+    vec_col: str,
+    dim: int,
+) -> DataFrame:
+    """``(key, cell, _res)``: every row's residual v − seed(cell), the
+    seed list broadcast as a ``(_sid, _svec)`` frame and joined on
+    ``cell``."""
+    seed_df = df.sparkSession.createDataFrame(
+        [(int(s), [float(x) for x in v]) for s, v in seeds],
+        "_sid long, _svec array<double>",
+    )
+    return df.join(F.broadcast(seed_df), F.col(cell) == F.col("_sid")).select(
+        key, cell, _residual_cols(vec_col, "_svec", dim).alias("_res")
+    )
+
+
+# --- seed routing: one definition per rule --------------------------------
+#
+# Every IVF / IVF-PQ / SemDeDup lane routes vectors to md5-ordered
+# seeds by the same total order: the cosine to each seed, HALF_UP-
+# rounded to 6 dp, highest first, ties to the smallest seed id. The
+# helpers below are the only places that order is written down —
+# driver-side (``_probe_seeds``), as a column expression
+# (``_seed_cosines``) and in numpy (``_nearest_seeds``).
+
+
+def _seed_frame(
+    vectors: DataFrame, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """The k-row seed frame: vectors with the smallest ``md5(id)``
+    (total order (md5(id), id)) — THE single source of the seed
+    derivation rule, shared by the collecting helper below and the
+    distributed ``seed_routing_frame`` so the routings can never
+    silently diverge. NOTE the GlobalLimit materializes through one
+    partition; small-k callers don't care, extreme-k callers
+    repartition afterwards (see ``seed_routing_frame``)."""
+    return (
+        vectors.select(id_col, vec_col)
+        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        .limit(k)
+    )
+
+
+def _semdedup_seeds(
+    vectors: DataFrame, k: int | None, vec_col: str, id_col: str
+) -> list[tuple[int, list[float]]]:
+    """The k seeds as a driver-side list: the IVF coarse centers of
+    ``ivf_seed_assign`` and the SemDeDup cluster centers (0-iteration
+    kmeans init — engine-reproducible). ``k=None`` auto-scales to
+    ⌈√n⌉ (one extra count job)."""
+    if k is None:
+        import math
+
+        k = max(16, math.isqrt(max(vectors.count(), 1)))
+    seeds_rows = _seed_frame(vectors, k, vec_col, id_col).collect()
+    return [(int(r[0]), [float(x) for x in r[1]]) for r in seeds_rows]
+
+
+def _round6(x):
+    """HALF_UP 6-dp rounding — sign·floor(|x|·1e6 + 0.5)/1e6 — on a
+    numpy array or a driver-side scalar, matching Spark's ``F.round``
+    (BigDecimal HALF_UP) and the DuckDB oracle's ``ROUND`` (half away
+    from zero) away from the last-ulp midpoint band. Python's builtin
+    ``round`` is banker's (half-to-even) and would pick a DIFFERENT
+    probe cell on an exact 6-dp cosine tie (r8 ADVICE)."""
+    import numpy as np
+
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+
+def _check_n_probe(n_probe: int) -> None:
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be >= 1: {n_probe}")
+
+
+def _probe_seeds(
+    seeds: list[tuple[int, list[float]]], q: list[float], n_probe: int
+) -> list[tuple[int, list[float]]]:
+    """Driver-side query routing: the ``n_probe`` seeds nearest ``q``
+    under the seed-routing order (a zero-norm side scores 0.0) — the
+    KB routing table sorted on the driver, one tiny Python loop per
+    query."""
     import math
 
-    return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
+    _check_n_probe(n_probe)
+    if not seeds:
+        raise ValueError("_probe_seeds: empty seed list")
+    qn = math.sqrt(sum(x * x for x in q))
+
+    def rank(seed: tuple[int, list[float]]) -> tuple:
+        sid, v = seed
+        vn = math.sqrt(sum(x * x for x in v))
+        c = sum(x * y for x, y in zip(v, q)) / (vn * qn) if vn and qn else 0.0
+        return (-_round6(c), sid)
+
+    return sorted(seeds, key=rank)[:n_probe]
+
+
+#: largest k·d (seed floats) the fold lane will embed as a plan
+#: literal — the array-of-arrays literal and the k-element transform
+#: land in the SQL plan text, and plan build/analysis time grows with
+#: them (the r5 py4j plan-build stall was this shape at per-element
+#: lit granularity; the single array literal moved the cliff, it did
+#: not remove it). 2^20 doubles ≈ 8 MiB of plan — at d=64 that is
+#: k=16,384 = a ⌈√n⌉-sized seed set for n ≈ 2.7·10^8 vectors, far
+#: past the fold lane's measured practical range (Θ(n^1.5) scalar
+#: folds). Fail with the fix named rather than stall mid-plan-build.
+#: (r7 VERDICT ask #7)
+MAX_FOLD_SEED_LITERALS = 1 << 20
+
+
+def _seed_cosines(
+    seeds: list[tuple[int, list[float]]], vec_col: str, who: str
+) -> Column:
+    """The fold cell-scoring column: ``array<struct<c, negid>>``, one
+    struct per seed in list order — ``c`` the 6-dp-rounded cosine of
+    ``vec_col`` to the seed, ``negid`` the negated seed id — so
+    ``array_max`` is the argmax with ties to the smallest seed id and
+    a descending ``sort_array`` ranks seeds in routing order. Reads the
+    row norm from a hoisted ``_nv`` column (``_norm(vec_col)``) the
+    caller adds.
+
+    ONE array-of-arrays literal + a higher-order ``transform`` whose
+    zip_with fold reproduces the SQL oracle's Σxy arithmetic
+    term-by-term in source order — per-element F.lit trees would cost
+    k·dim py4j calls of driver-side plan build. Norm hoisting (r15,
+    guide §1.2 per-task work): higher-order folds are CodegenFallback
+    (interpreted per element), so ‖v‖ is folded once per row into
+    ``_nv`` instead of once per seed, and ‖s‖ is a PYTHON-computed
+    literal instead of a per-row fold — bit-identical to the folds
+    they replace (same left-to-right x·x accumulation over the same
+    doubles; Python's ``math.sqrt`` and the JVM's are both
+    correctly-rounded IEEE-754), so every 6-dp cosine is unchanged.
+
+    Refuses an empty seed list and more than ``MAX_FOLD_SEED_LITERALS``
+    embedded seed floats, naming ``who``."""
+    import math
+
+    if not seeds:
+        raise ValueError(f"{who}: empty seed list")
+    n_lit = len(seeds) * len(seeds[0][1])
+    if n_lit > MAX_FOLD_SEED_LITERALS:
+        raise ValueError(
+            f"{who}: k·d={n_lit} seed floats exceed the plan-literal "
+            f"bound ({MAX_FOLD_SEED_LITERALS}); use the blas lane "
+            "(assign_cells_blas: closure-shipped seeds, no plan literal)"
+        )
+    seed_mat = F.array(*[F.lit([float(x) for x in v]) for _sid, v in seeds])
+    neg_ids = F.array(*[F.lit(-sid) for sid, _v in seeds])
+    seed_norms = F.array(
+        *[
+            F.lit(math.sqrt(sum(float(x) * float(x) for x in v)))
+            for _sid, v in seeds
+        ]
+    )
+    return F.transform(
+        seed_mat,
+        lambda sv, i: F.struct(
+            F.round(
+                _dot(F.col(vec_col), sv)
+                / (F.col("_nv") * F.element_at(seed_norms, i + 1)),
+                6,
+            ).alias("c"),
+            F.element_at(neg_ids, i + 1).alias("negid"),
+        ),
+    )
+
+
+def _nearest_seeds(M, Sn, sids):
+    """numpy twin of ``array_max(_seed_cosines(...))``: for each row of
+    ``M``, the seed id and 6-dp cosine of its nearest seed. ``Sn`` is
+    the unit-normalized seed matrix with rows sorted by seed id
+    (``sids``), so ``np.argmax``'s first max is the smallest-id tie
+    rule. Rows are normalized BEFORE the matmul — the one fp order
+    every numpy lane shares, so cross-lane equality is bit-exact
+    rather than last-ulp-banded (r7 review finding: normalize-after
+    diverged within ~1e-15 of 6-dp midpoints). Returns
+    ``(cells, cents)``."""
+    import numpy as np
+
+    C = _round6((M / np.linalg.norm(M, axis=1, keepdims=True)) @ Sn.T)
+    idx = np.argmax(C, axis=1)
+    return sids[idx], C[np.arange(len(idx)), idx]
 
 
 def cosine_topk(
@@ -303,7 +479,6 @@ def ivf_seed_assign(
     k: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    assign: str = "fold",
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Deterministic IVF coarse quantization: the ``k`` cell centers
     are the corpus vectors with the smallest ``md5(vec_id)`` (an
@@ -314,47 +489,22 @@ def ivf_seed_assign(
     ANSI SQL, unlike the MLlib-KMeans variant (``ivf_assign``) whose
     centers depend on the clustering run.
 
-    **Cost contract (r6 VERDICT ask #7).** The default
-    ``assign="fold"`` path is Θ(n·k·d) per-row column-expression
-    folds — linear in n ONLY at fixed k (the registered query pins
-    k=16; ANN cell counts are a recall/latency knob, not a function
-    of corpus size, so fixed small k IS the IVF contract). If a
-    caller scales k with n (e.g. the FAISS ``k≈√n`` sizing rule),
-    the fold path inherits the Θ(n^1.5) the SemDeDup lane shed in
-    r6 — pass ``assign="blas"`` instead, which routes the assignment
-    through ``assign_cells_blas`` (one sgemm per Arrow batch; same
-    cosine rounding and tie rule, equality-tested in
-    tests/test_similarity_ivf.py). Both lanes return the SAME schema
-    — every input column plus ``cell`` (r7 ADVICE: the blas cell
-    assignment joins back onto the input by ``id_col``, one hash
-    join on a deterministic key, so callers carrying extra columns
-    can switch lanes without changing results).
+    **Cost contract (r6 VERDICT ask #7).** The assignment is the
+    plan-literal fold (``assign_to_seeds``): Θ(n·k·d) per-row
+    column-expression folds — linear in n ONLY at fixed k (the
+    registered query pins k=16; ANN cell counts are a recall/latency
+    knob, not a function of corpus size, so fixed small k IS the IVF
+    contract). A caller that scales k with n (e.g. the FAISS ``k≈√n``
+    sizing rule) would inherit the Θ(n^1.5) the SemDeDup lane shed in
+    r6; that caller wants ``assign_cells_blas`` (one sgemm per Arrow
+    batch, same cosine rounding and tie rule), which returns the
+    SemDeDup ``(_vid, _emb, cell, _cent)`` shape.
 
-    Returns ``(assigned_df, seeds)``; ``seeds`` is the k×dim python
-    list (broadcast-sized). Assignment is a pure column expression
-    over literal seed vectors — no Python in the scan path, and at
-    100 TB the assignment is one map-side pass (no shuffle)."""
-    if assign not in ("fold", "blas"):
-        raise ValueError(f"assign must be fold|blas: {assign}")
-    seeds_rows = (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
-        .collect()
-    )
-    seeds = [(int(r[0]), [float(x) for x in r[1]]) for r in seeds_rows]
-    if assign == "blas":
-        cells = assign_cells_blas(
-            vectors.select(id_col, vec_col),
-            seeds,
-            vec_col=vec_col,
-            id_col=id_col,
-        ).select(F.col("_vid").alias(id_col), "cell")
-        # join the assignment back by id so the schema matches the
-        # fold lane exactly (every input column + cell) — lane choice
-        # must not change the result shape (r7 ADVICE)
-        return vectors.join(cells, id_col), seeds
-
+    Returns ``(assigned_df, seeds)``: every input column plus
+    ``cell``, and the k×dim python seed list (broadcast-sized). No
+    Python in the scan path; at 100 TB the assignment is one map-side
+    pass (no shuffle)."""
+    seeds = _semdedup_seeds(vectors, k, vec_col, id_col)
     return assign_to_seeds(vectors, seeds, vec_col=vec_col), seeds
 
 
@@ -365,53 +515,19 @@ def assign_to_seeds(
 ) -> DataFrame:
     """Assign every vector to its nearest seed out of a GIVEN seed
     list (highest 6dp-rounded cosine, ties to the smallest seed id) —
-    the fold lane of ``ivf_seed_assign`` factored out so incremental
+    the assignment of ``ivf_seed_assign`` factored out so incremental
     index maintenance (``ivf_pq_index_append``) can route NEW vectors
     through the EXISTING coarse quantizer instead of re-deriving
-    seeds from the grown corpus.
-
-    Argmax via array_max over (cosine, -seed_id) structs: max cosine,
-    ties resolved to the smallest seed id. Seed matrix as one
-    array-of-arrays literal + higher-order transform — per-element
-    F.lit trees cost k·dim py4j calls of driver-side plan build
-    (see semantic_dedup_drops for the measurement); the fold
-    arithmetic is identical. One map-side pass, no shuffle.
-
-    Norm hoisting (r15, guide §1.2 per-task work): higher-order folds
-    are CodegenFallback (interpreted per element), and the original
-    expression re-folded ‖v‖ once per SEED and ‖s‖ once per ROW —
-    2/3 of the stage's lambda evaluations for values that are
-    row-constant and plan-constant respectively. ‖v‖ is computed once
-    per row in a hoisted column; ‖s‖ becomes a PYTHON-computed literal
-    — bit-identical to the fold it replaces (same left-to-right
-    x·x accumulation over the same doubles, and both Python's
-    ``math.sqrt`` and the JVM's are correctly-rounded IEEE-754), so
-    every 6-dp cosine is unchanged (oracle hash-equality re-verified
-    for the pinned lanes)."""
-    import math
-
-    seed_mat = F.array(*[F.lit([float(x) for x in v]) for _sid, v in seeds])
-    neg_ids = F.array(*[F.lit(-sid) for sid, _v in seeds])
-    seed_norms = F.array(
-        *[
-            F.lit(math.sqrt(sum(float(x) * float(x) for x in v)))
-            for _sid, v in seeds
-        ]
-    )
-    scored = F.transform(
-        seed_mat,
-        lambda sv, i: F.struct(
-            F.round(
-                _dot(F.col(vec_col), sv)
-                / (F.col("_nv") * F.element_at(seed_norms, i + 1)),
-                6,
-            ).alias("c"),
-            F.element_at(neg_ids, i + 1).alias("negid"),
-        ),
-    )
+    seeds from the grown corpus. Adds ``cell`` to every input column:
+    the argmax of ``_seed_cosines``, one map-side pass, no shuffle."""
     return (
         vectors.withColumn("_nv", _norm(F.col(vec_col)))
-        .withColumn("cell", -F.array_max(scored)["negid"])
+        .withColumn(
+            "cell",
+            -F.array_max(_seed_cosines(seeds, vec_col, "assign_to_seeds"))[
+                "negid"
+            ],
+        )
         .drop("_nv")
     )
 
@@ -427,27 +543,14 @@ def ivf_seed_topk(
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbours of ``query`` probing only the
-    ``n_probe`` cells whose seed is nearest the query (6dp-rounded
-    cosine, ties to smallest seed id) — scans ~n_probe/k of the
-    corpus. ``seeds`` may also be the trained centers of
-    ``ivf_assign``, passed as ``list(enumerate(centers))``.
-    ``exclude_id`` drops the self-match before the top-k (the
-    shared-index probe convention; the registered query instead
-    excludes the query from the corpus before assignment)."""
-    import math
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    probe = [
-        sid
-        for sid, _ in sorted(
-            seeds, key=lambda s: (-_half_up6(cos(s[1], query)), s[0])
-        )[:n_probe]
-    ]
+    ``n_probe`` cells whose seed is nearest the query
+    (``_probe_seeds``) — scans ~n_probe/k of the corpus. ``seeds`` may
+    also be the trained centers of ``ivf_assign``, passed as
+    ``list(enumerate(centers))``. ``exclude_id`` drops the self-match
+    before the top-k (the shared-index probe convention; the
+    registered query instead excludes the query from the corpus before
+    assignment)."""
+    probe = [sid for sid, _ in _probe_seeds(seeds, query, n_probe)]
     sim = _cosine_to_query(vec_col, [float(x) for x in query])
     out = assigned.filter(F.col("cell").isin(probe))
     if exclude_id is not None:
@@ -786,30 +889,16 @@ def ivf_pq_index(
         )
     else:
         raise ValueError(f"coarse must be seed|kmeans: {coarse}")
-    seed_df = spark.createDataFrame(
-        [(int(s), [float(x) for x in v]) for s, v in seeds],
-        "_sid long, _svec array<double>",
-    )
+    dim = len(seeds[0][1])
+    d_sub = dim // m_sub
     # cache: the residual frame feeds FOUR consumers (the PQ distance
     # build, the codebook limit, the cell map, and the dim probe
     # inside pq_distances) — uncached, the n·k·d fold assignment
     # upstream re-executes per consumer (measured 1.6× the query wall
     # at sf0.1). cache() per the r8 rule (SCALE.md): CacheManager
     # dedupes by plan across calls and serves column-pruned reads.
-    res = (
-        assigned.join(F.broadcast(seed_df), F.col("cell") == F.col("_sid"))
-        .select(
-            id_col,
-            "cell",
-            _residual_cols(vec_col, "_svec", dim=len(seeds[0][1])).alias(
-                "_res"
-            ),
-        )
-        .cache()
-    )
+    res = _residuals(assigned, seeds, id_col, "cell", vec_col, dim).cache()
     res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
-    dim = len(seeds[0][1])
-    d_sub = dim // m_sub
     if codebook == "kmeans":
         # trained residual codebook (pq_codebook_kmeans): the recall
         # path — see the r9 recall table for why the deterministic
@@ -998,7 +1087,6 @@ def ivf_pq_index_append(
     number of appended rows."""
     index = ivf_pq_index_load(spark, path)
     m_sub, dim = index["m_sub"], index["dim"]
-    d_sub = dim // m_sub
     delta = new_vectors.select(id_col, vec_col)
     if index.get("normalized"):
         # normalized index: deltas enter the same unit-sphere space the
@@ -1019,17 +1107,7 @@ def ivf_pq_index_append(
             "slices shift)"
         )
     assigned = assign_to_seeds(delta, index["seeds"], vec_col=vec_col)
-    seed_df = spark.createDataFrame(
-        [(int(s), [float(x) for x in v]) for s, v in index["seeds"]],
-        "_sid long, _svec array<double>",
-    )
-    res = assigned.join(
-        F.broadcast(seed_df), F.col("cell") == F.col("_sid")
-    ).select(
-        id_col,
-        "cell",
-        _residual_cols(vec_col, "_svec", dim=dim).alias("_res"),
-    )
+    res = _residuals(assigned, index["seeds"], id_col, "cell", vec_col, dim)
     res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
     codes = pq_encode(
         pq_distances(
@@ -1084,16 +1162,7 @@ def ivf_pq_probe(
         qn = math.sqrt(sum(float(x) * float(x) for x in q))
         if qn > 0:
             q = [float(x) / qn for x in q]
-
-    def cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    probe = sorted(
-        index["seeds"], key=lambda s: (-_half_up6(cos(s[1], q)), s[0])
-    )[:n_probe]
+    probe = _probe_seeds(index["seeds"], q, n_probe)
     qres_rows = [
         (int(c), [qi - vi for qi, vi in zip(q, v)]) for c, v in probe
     ]
@@ -1152,11 +1221,12 @@ def ivf_pq_probe_batch(
     Here everything distributes:
 
     - cell routing: the k_coarse seed matrix is a LITERAL array
-      (KB-sized, ships inside the plan); each query row computes all
-      seed cosines in one fused transform and keeps the top
-      ``n_probe`` via sort_array on (round6-cosine DESC, seed_id ASC)
-      structs — the same total order as the driver-side rule
-      (equality pinned in tests/test_similarity_pq.py).
+      (KB-sized, ships inside the plan); each query row scores every
+      seed with the assigners' fold column (``_seed_cosines``) and
+      keeps the top ``n_probe`` via sort_array on (round6-cosine
+      DESC, seed_id ASC) structs — the same total order as the
+      driver-side ``_probe_seeds`` (equality pinned in
+      tests/test_similarity_pq.py).
     - per-(query, cell) residual LUT: n_q·n_probe·m_sub·n_centroids
       rows, built by a broadcast join against the codebook.
     - scoring: one hash join of the LUT against the codes on
@@ -1171,50 +1241,27 @@ def ivf_pq_probe_batch(
     adc_dist)``, ≤ k rows per query."""
     from pyspark.sql import Window
 
+    _check_n_probe(n_probe)
     m_sub, dim = index["m_sub"], index["dim"]
     d_sub = dim // m_sub
     seeds = index["seeds"]
-    spark = queries.sparkSession
     if index.get("normalized"):
         # one fused map-side expression over the QUERY frame (routing
         # is scale-invariant; the residuals below are what change)
         queries = l2_normalize(queries, vec_col=vec_col)
-
-    seed_mat = F.array(*[F.lit([float(x) for x in v]) for _sid, v in seeds])
-    neg_ids = F.array(*[F.lit(-sid) for sid, _v in seeds])
-    scored_seeds = F.transform(
-        seed_mat,
-        lambda sv, i: F.struct(
-            F.round(
-                _dot(F.col(vec_col), sv)
-                / (_norm(F.col(vec_col)) * _norm(sv)),
-                6,
-            ).alias("c"),
-            F.element_at(neg_ids, i + 1).alias("negid"),
-        ),
-    )
+    scored_seeds = _seed_cosines(seeds, vec_col, "ivf_pq_probe_batch")
     top_cells = F.slice(F.sort_array(scored_seeds, asc=False), 1, n_probe)
-    probed = queries.select(
+    probed = queries.withColumn("_nv", _norm(F.col(vec_col))).select(
         F.col(query_id_col).alias("_qid"),
         F.col(vec_col).alias("_qv"),
         F.explode(
             F.transform(top_cells, lambda s: -s["negid"])
         ).alias("qcell"),
     )
-    seed_df = spark.createDataFrame(
-        [(int(s), [float(x) for x in v]) for s, v in seeds],
-        "_sid long, _svec array<double>",
-    )
-    qres = probed.join(
-        F.broadcast(seed_df), F.col("qcell") == F.col("_sid")
-    ).select(
-        "_qid",
-        "qcell",
-        _residual_cols("_qv", "_svec", dim=dim).alias("_qr"),
-    )
+    qres = _residuals(probed, seeds, "_qid", "qcell", "_qv", dim)
     subs = F.transform(
         F.sequence(F.lit(0), F.lit(m_sub - 1)),
-        lambda m: F.slice(F.col("_qr"), m * d_sub + 1, d_sub),
+        lambda m: F.slice(F.col("_res"), m * d_sub + 1, d_sub),
     )
     qsub = qres.select(
         "_qid", "qcell", F.posexplode(subs).alias("m", "_qsv")
@@ -1383,102 +1430,21 @@ def ivf_pq_refine_topk(
 # --- semantic dedup (SemDeDup, Abbas et al. 2023, public) ----------------
 
 
-def _seed_frame(
-    vectors: DataFrame, k: int, vec_col: str, id_col: str
-) -> DataFrame:
-    """The k-row seed frame: vectors with the smallest ``md5(id)``
-    (total order (md5(id), id)) — THE single source of the seed
-    derivation rule, shared by the collecting helper below and the
-    distributed ``seed_routing_frame`` so the routings can never
-    silently diverge. NOTE the GlobalLimit materializes through one
-    partition; small-k callers don't care, extreme-k callers
-    repartition afterwards (see ``seed_routing_frame``)."""
-    return (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(k)
-    )
-
-
-def _semdedup_seeds(
-    vectors: DataFrame, k: int | None, vec_col: str, id_col: str
-) -> list[tuple[int, list[float]]]:
-    """The k cluster centers: seed vectors with the smallest
-    ``md5(id)`` (0-iteration kmeans init — engine-reproducible).
-    ``k=None`` auto-scales to ⌈√n⌉ (one extra count job)."""
-    if k is None:
-        import math
-
-        k = max(16, math.isqrt(max(vectors.count(), 1)))
-    seeds_rows = _seed_frame(vectors, k, vec_col, id_col).collect()
-    return [(int(r[0]), [float(x) for x in r[1]]) for r in seeds_rows]
-
-
-#: largest k·d (seed floats) the fold lane will embed as a plan
-#: literal — the array-of-arrays literal and the k-element transform
-#: land in the SQL plan text, and plan build/analysis time grows with
-#: them (the r5 py4j plan-build stall was this shape at per-element
-#: lit granularity; the single array literal moved the cliff, it did
-#: not remove it). 2^20 doubles ≈ 8 MiB of plan — at d=64 that is
-#: k=16,384 = a ⌈√n⌉-sized seed set for n ≈ 2.7·10^8 vectors, far
-#: past the fold lane's measured practical range (Θ(n^1.5) scalar
-#: folds). Fail with the fix named rather than stall mid-plan-build.
-#: (r7 VERDICT ask #7)
-MAX_FOLD_SEED_LITERALS = 1 << 20
-
-
 def assign_cells_fold(
     vectors: DataFrame,
     seeds: list[tuple[int, list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Seed-cosine cell assignment as a pure-column expression: ONE
-    array-of-arrays literal + a higher-order ``transform`` whose
-    zip_with fold reproduces the oracle's Σxy arithmetic term-by-term
-    in source order — the BIT-REPRODUCIBLE lane the pinned-k oracle
-    query needs. Cost: n rows × k folds of d terms = Θ(n·k·d) inside
-    codegen; at k=⌈√n⌉ that stage is Θ(n^1.5) — use
-    ``assign_cells_blas`` at scale. Refuses above
-    ``MAX_FOLD_SEED_LITERALS`` embedded seed floats (the literal
-    lives in the plan; plan build is driver-side and grows with it).
-    Returns ``(_vid, _emb, cell, _cent)``."""
-    if not seeds:
-        raise ValueError("assign_cells_fold: empty seed list")
-    n_lit = len(seeds) * len(seeds[0][1])
-    if n_lit > MAX_FOLD_SEED_LITERALS:
-        raise ValueError(
-            f"assign_cells_fold: k·d={n_lit} seed floats exceed the "
-            f"plan-literal bound ({MAX_FOLD_SEED_LITERALS}); use "
-            "assign='blas' (closure-shipped seeds, no plan literal)"
-        )
-    import math
-
-    # norm hoisting (r15): same rewrite as ``assign_to_seeds`` — ‖v‖
-    # folded once per row instead of once per seed, ‖s‖ a Python-
-    # computed literal bit-identical to the fold it replaces (same
-    # left-to-right accumulation, correctly-rounded IEEE sqrt on both
-    # sides); the dot/(‖v‖·‖s‖) order the SQL oracle pins is unchanged
-    seed_mat = F.array(*[F.lit([float(x) for x in v]) for _sid, v in seeds])
-    neg_ids = F.array(*[F.lit(-sid) for sid, _v in seeds])
-    seed_norms = F.array(
-        *[
-            F.lit(math.sqrt(sum(float(x) * float(x) for x in v)))
-            for _sid, v in seeds
-        ]
-    )
-    scored = F.transform(
-        seed_mat,
-        lambda sv, i: F.struct(
-            F.round(
-                _dot(F.col(vec_col), sv)
-                / (F.col("_nv") * F.element_at(seed_norms, i + 1)),
-                6,
-            ).alias("c"),
-            F.element_at(neg_ids, i + 1).alias("negid"),
-        ),
-    )
-    best = F.array_max(scored)
+    """Seed-cosine cell assignment as a pure-column expression: the
+    argmax of ``_seed_cosines`` — the BIT-REPRODUCIBLE lane the
+    pinned-k oracle query needs. Cost: n rows × k folds of d terms =
+    Θ(n·k·d) inside codegen; at k=⌈√n⌉ that stage is Θ(n^1.5) — use
+    ``assign_cells_blas`` at scale. Refuses an empty seed list and
+    more than ``MAX_FOLD_SEED_LITERALS`` embedded seed floats (the
+    literal lives in the plan; plan build is driver-side and grows
+    with it). Returns ``(_vid, _emb, cell, _cent)``."""
+    best = F.array_max(_seed_cosines(seeds, vec_col, "assign_cells_fold"))
     return vectors.withColumn("_nv", _norm(F.col(vec_col))).select(
         F.col(id_col).alias("_vid"),
         F.col(vec_col).alias("_emb"),
@@ -1535,23 +1501,32 @@ def assign_cells_blas(
             M = np.stack(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            # normalize BEFORE the matmul — the one fp order every
-            # lane shares (flat, cogroup, numpy twins), so cross-lane
-            # equality is bit-exact rather than last-ulp-banded (r7
-            # review finding: normalize-after diverged within ~1e-15
-            # of 6-dp midpoints)
-            C = _round6((M / np.linalg.norm(M, axis=1, keepdims=True)) @ Sn.T)
-            idx = np.argmax(C, axis=1)
+            cells, cents = _nearest_seeds(M, Sn, sids)
             yield pd.DataFrame(
                 {
                     "_vid": pdf[id_col].values,
                     "_emb": pdf[vec_col].values,
-                    "cell": sids[idx],
-                    "_cent": C[np.arange(len(idx)), idx],
+                    "cell": cells,
+                    "_cent": cents,
                 }
             )
 
     return vectors.select(id_col, vec_col).mapInPandas(run, schema=schema)
+
+
+def _assigner(assign: str):
+    """The one ``assign=`` lane dispatch of every SemDeDup caller:
+    ``"fold"`` = ``assign_cells_fold`` (bit-reproducible plan-literal
+    lane, the oracle lane, right for small k); ``"blas"`` =
+    ``assign_cells_blas`` (closure-shipped seeds, one sgemm per Arrow
+    batch — the production lane: at k=232 the fold lane spent 24 s of
+    a 30 s delta run building/compiling the 15k-literal plan, measured
+    r11). Any other value is refused."""
+    if assign == "fold":
+        return assign_cells_fold
+    if assign == "blas":
+        return assign_cells_blas
+    raise ValueError(f"assign must be fold|blas: {assign}")
 
 
 #: largest coarse-id set ``seed_routing_frame`` encodes as an isin
@@ -1559,15 +1534,6 @@ def assign_cells_blas(
 #: k1 = ⌈√k⌉ reaches ~18k ids at the 10^10-vector scale the cogroup
 #: path exists for — a plan-size/analysis-time cliff)
 _MAX_ISIN_COARSE_IDS = 4096
-
-
-def _round6(x):
-    """HALF_UP 6-dp rounding on a numpy array — sign·floor(|x|·1e6 +
-    0.5), matching Spark's BigDecimal HALF_UP away from the last-ulp
-    midpoint band (same contract as ``assign_cells_blas``)."""
-    import numpy as np
-
-    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
 
 def _empty_drops(vectors: DataFrame, id_col: str) -> DataFrame:
@@ -1689,14 +1655,13 @@ def assign_cells_hier_cogroup(
         S = np.stack([np.asarray(v, dtype=np.float64) for v in r["_svec"]])
         Sn = S / np.linalg.norm(S, axis=1, keepdims=True)
         M = np.stack([np.asarray(v, dtype=np.float64) for v in left["_emb"]])
-        sims = _round6((M / np.linalg.norm(M, axis=1, keepdims=True)) @ Sn.T)
-        idx = np.argmax(sims, axis=1)
+        cells, cents = _nearest_seeds(M, Sn, sids)
         return pd.DataFrame(
             {
                 "_vid": left["_vid"].to_numpy(),
                 "_emb": left["_emb"].to_numpy(),
-                "cell": sids[idx],
-                "_cent": sims[np.arange(len(idx)), idx],
+                "cell": cells,
+                "_cent": cents,
             }
         )
 
@@ -1823,12 +1788,10 @@ def semantic_dedup_drops(
     matmul per Arrow batch (``assign_cells_blas``) — the scale lane,
     identical away from 6-dp rounding ties (last-ulp summation-order
     band, pinned by a tolerance test)."""
-    if assign not in ("fold", "blas"):
-        raise ValueError(f"assign must be fold|blas: {assign}")
+    assigner = _assigner(assign)
     seeds = _semdedup_seeds(vectors, k, vec_col, id_col)
     if not seeds:
         return _empty_drops(vectors, id_col)
-    assigner = assign_cells_blas if assign == "blas" else assign_cells_fold
     return _drops_from_assigned(
         assigner(vectors, seeds, vec_col, id_col),
         threshold,

@@ -148,13 +148,11 @@ def _ingest_batch_locked(
             semantic_store_load,
         )
         from commodity_price_forecasting_spark.operators.similarity import (
-            assign_cells_blas,
-            assign_cells_fold,
+            _assigner,
         )
 
         store = semantic_store_load(spark, store_path)
-        assigner = assign_cells_blas if assign == "blas" else assign_cells_fold
-        assigned = assigner(to_append, store["seeds"])
+        assigned = _assigner(assign)(to_append, store["seeds"])
         assigned.select(
             F.col("_vid").alias("vec_id"),
             F.col("_emb").alias("embedding"),

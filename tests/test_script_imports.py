@@ -10,7 +10,10 @@ from __future__ import annotations
 
 import ast
 import importlib
+import io
 import os
+import re
+import tokenize
 
 import pytest
 
@@ -179,3 +182,46 @@ def unreferenced_defs() -> list[str]:
 def test_every_package_def_is_referenced():
     dead = unreferenced_defs()
     assert not dead, f"package definitions nothing references: {dead}"
+
+
+#: A round-stamped record at the repo root: ``BENCH_r11.json``,
+#: ``OPTIMIZATION_r15.md``, ``BENCH_r15_c8.json``.
+_ROUND_FILE = re.compile(
+    r"\b[A-Z][A-Z0-9]*(?:_[A-Z0-9]+)*_r\d+(?:_[A-Za-z0-9]+)*\.(?:md|json)\b"
+)
+
+
+def _comments_and_docstrings(path: str) -> list[str]:
+    """Every comment and every module/class/function docstring in
+    ``path``; tokenized and parsed, nothing is executed."""
+    with open(path) as fh:
+        src = fh.read()
+    out = [
+        tok.string
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+        if tok.type == tokenize.COMMENT
+    ]
+    for node in ast.walk(ast.parse(src, filename=path)):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            doc = ast.get_docstring(node, clean=False)
+            if doc:
+                out.append(doc)
+    return out
+
+
+def test_cited_round_files_exist():
+    """A comment or docstring that cites a round-stamped record as the
+    evidence for a claim must cite a file that exists at the repo
+    root; a dangling citation leaves the claim with no record."""
+    missing = []
+    for rel in (PACKAGE, "tools", "tests", "perfbench", "bench.py"):
+        for path in _py_files(rel):
+            for text in _comments_and_docstrings(path):
+                missing += [
+                    f"{os.path.relpath(path, ROOT)}: {name}"
+                    for name in _ROUND_FILE.findall(text)
+                    if not os.path.exists(os.path.join(ROOT, name))
+                ]
+    assert not missing, f"cited records that do not exist: {missing}"

@@ -45,6 +45,19 @@ def shared_index_loo(spark):
     )
 
 
+@pytest.fixture(scope="module")
+def adc_top10_loo(spark):
+    """``ivf_pq_adc_topk(query_id=0, k=10)`` rows — the single-plan
+    leave-one-out build + probe — collected once for the tests that
+    compare against it."""
+    from commodity_price_forecasting_spark.operators.similarity import (
+        ivf_pq_adc_topk,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    return tuple(ivf_pq_adc_topk(emb, query_id=0, k=10).collect())
+
+
 def _exact_l2_topk(emb_rows, query_id: int, k: int) -> list[int]:
     ids = np.array([r["vec_id"] for r in emb_rows])
     mat = np.array([r["embedding"] for r in emb_rows], dtype=np.float64)
@@ -95,16 +108,12 @@ def test_pq_codes_cover_corpus_once(spark):
     assert bad == 0
 
 
-def test_ivfpq_numpy_twin_and_probe_containment(spark):
+def test_ivfpq_numpy_twin_and_probe_containment(spark, adc_top10_loo):
     """r8 IVF-PQ: the full two-level index (coarse assignment ->
     residual -> codebook -> codes -> probe -> LUT sum) must match a
     whole-corpus numpy twin of the same rules EXACTLY, and every
     returned candidate must come from a probed cell."""
     import math
-
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_adc_topk,
-    )
 
     emb = load_table(spark, SF_DIR, "embeddings")
     rows = emb.collect()
@@ -183,7 +192,7 @@ def test_ivfpq_numpy_twin_and_probe_containment(spark):
             dists[int(vid)] = d
     want = sorted(dists.items(), key=lambda kv: (kv[1], kv[0]))[:10]
 
-    got = ivf_pq_adc_topk(emb, query_id=0, k=10).collect()
+    got = adc_top10_loo
     assert [r["vec_id"] for r in got] == [v for v, _ in want]
     assert all(r["cell"] in probe_ids for r in got)
     for r, (_, d) in zip(got, want):
@@ -219,7 +228,9 @@ def test_ivfpq_threads_custom_id_col_and_guards_missing_query(spark):
     assert [r["doc_id"] for r in got_pq] == [r["vec_id"] for r in base_pq]
 
 
-def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path, shared_index_loo):
+def test_ivfpq_split_build_probe_equals_single_plan(
+    spark, tmp_path, shared_index_loo, adc_top10_loo
+):
     """r8 VERDICT ask #2: the split form — materialize the index once
     (codes/cells/cb to parquet, the deployment shape), then run the
     probe-only plan — must return EXACTLY the single-plan
@@ -227,12 +238,11 @@ def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path, shared_inde
     build-vs-probe timings in SCALE.md claims about the SAME
     computation."""
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_adc_topk,
         ivf_pq_probe,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    base = ivf_pq_adc_topk(emb, query_id=0, k=10).collect()
+    base = adc_top10_loo
 
     q = [
         float(x)
@@ -251,7 +261,9 @@ def test_ivfpq_split_build_probe_equals_single_plan(spark, tmp_path, shared_inde
     assert [tuple(r) for r in got] == [tuple(r) for r in base]
 
 
-def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path, shared_index_loo):
+def test_ivfpq_partitioned_layout_prunes_and_matches(
+    spark, tmp_path, shared_index_loo, adc_top10_loo
+):
     """r9: the cell-partitioned persisted layout
     (ivf_pq_index_write/_load). Three claims, each checked:
     (1) the loaded-index probe returns EXACTLY the single-plan
@@ -264,14 +276,13 @@ def test_ivfpq_partitioned_layout_prunes_and_matches(spark, tmp_path, shared_ind
     import re
 
     from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_pq_adc_topk,
         ivf_pq_index_load,
         ivf_pq_index_write,
         ivf_pq_probe,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    base = ivf_pq_adc_topk(emb, query_id=0, k=10).collect()
+    base = adc_top10_loo
     q = [
         float(x)
         for x in emb.filter("vec_id = 0").select("embedding").first()[0]

@@ -7,10 +7,10 @@ actually needs:
 
 - ``brute``   — exact cosine top-k (recall 1.0 by definition).
 - ``ivf``     — coarse md5-min seeds, probe n_probe cells, exact
-                cosines inside (``ivf_seed_assign``/probe filter).
+                cosines inside (``ivf_seed_assign``/``ivf_seed_topk``).
                 Metric: cosine.
 - ``ivf_kmeans`` — the TRAINED coarse quantizer (MLlib KMeans,
-                ``ivf_assign``): same probe/rank rule, cells that
+                ``ivf_assign``): same probe (``ivf_seed_topk``), cells that
                 actually cluster the data. The recall uplift over
                 ``ivf`` is the price of the md5-seed lanes'
                 engine-reproducibility (0-iteration init).
@@ -90,9 +90,11 @@ def recall_table(
     cost a full-table rerun; shared index builds are skipped when no
     requested lane needs them."""
     from commodity_price_forecasting_spark.operators.similarity import (
+        ivf_assign,
         ivf_pq_index,
         ivf_pq_probe,
         ivf_seed_assign,
+        ivf_seed_topk,
         pq_distances,
         pq_encode,
     )
@@ -113,7 +115,7 @@ def recall_table(
     assigned = seeds = dists = codes_raw = idx = None
     if want("ivf"):
         assigned, seeds = ivf_seed_assign(emb, k=16)
-        assigned = assigned.select("vec_id", "cell").cache()
+        assigned = assigned.cache()
         assigned.count()
     if want("pq_adc"):
         dists = pq_distances(emb, n_centroids=16, m_sub=8).cache()
@@ -124,17 +126,6 @@ def recall_table(
         idx["codes"] = idx["codes"].cache()
         idx["cells"] = idx["cells"].cache()
         idx["codes"].count()
-    import math
-
-    def cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return dot / (na * nb) if na and nb else 0.0
-
-    def half_up6(x: float) -> float:
-        return math.copysign(math.floor(abs(x) * 1e6 + 0.5) / 1e6, x)
-
     gt_cos = {qi: exact_topk(mat, ids, qi, k, "cosine") for qi in qids}
     gt_l2 = {qi: exact_topk(mat, ids, qi, k, "l2") for qi in qids}
 
@@ -156,96 +147,28 @@ def recall_table(
     if want("brute"):
         add("brute", "cosine", None, [1.0] * len(qids))  # by definition
 
-    # --- IVF: probe n cells, exact cosines inside ------------------------
-    for n_probe in (1, 2, 4) if want("ivf") else ():
-        recs = []
-        for qi in qids:
-            q = mat[ids == qi][0]
-            probe = [
-                sid
-                for sid, _ in sorted(
-                    seeds, key=lambda s: (-half_up6(cos(s[1], q)), s[0])
-                )[:n_probe]
-            ]
-            qlit = F.array(*[F.lit(float(x)) for x in q])
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), qlit, lambda a, b: a.cast("double") * b
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            nrm = F.sqrt(
-                F.aggregate(
-                    F.col("embedding"),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double") * x.cast("double"),
+    def ivf_recall(lane: str, ivf_assigned, ivf_seeds) -> None:
+        # probe n cells, exact cosines inside
+        for n_probe in (1, 2, 4):
+            recs = []
+            for qi in qids:
+                q = [float(x) for x in mat[ids == qi][0]]
+                got = ivf_seed_topk(
+                    ivf_assigned, ivf_seeds, q, k=k, n_probe=n_probe,
+                    exclude_id=qi,
+                ).collect()
+                recs.append(
+                    len({r["vec_id"] for r in got} & set(gt_cos[qi])) / k
                 )
-            )
-            qn = float(np.linalg.norm(q))
-            got = (
-                emb.join(assigned, "vec_id")
-                .filter(F.col("cell").isin(probe) & (F.col("vec_id") != qi))
-                .select(
-                    "vec_id", F.round(dot / (nrm * F.lit(qn)), 6).alias("c")
-                )
-                .orderBy(F.desc("c"), F.asc("vec_id"))
-                .limit(k)
-                .collect()
-            )
-            recs.append(len({r["vec_id"] for r in got} & set(gt_cos[qi])) / k)
-        add("ivf", "cosine", n_probe, recs)
+            add(lane, "cosine", n_probe, recs)
 
-    # --- IVF with a TRAINED coarse quantizer (MLlib KMeans) ---------------
-    from commodity_price_forecasting_spark.operators.similarity import (
-        ivf_assign,
-    )
-
-    km_assigned = None
+    if want("ivf"):
+        ivf_recall("ivf", assigned, seeds)
+    # the same probe over a TRAINED coarse quantizer (MLlib KMeans)
     if want("ivf_kmeans"):
         km_assigned, centers = ivf_assign(emb, k=16)
-        km_assigned = km_assigned.select("vec_id", "cell").cache()
-        km_assigned.count()
-    for n_probe in (1, 2, 4) if want("ivf_kmeans") else ():
-        recs = []
-        for qi in qids:
-            q = mat[ids == qi][0]
-            probe = [
-                int(ci)
-                for ci, _ in sorted(
-                    enumerate(centers),
-                    key=lambda c: (-half_up6(cos(c[1], q)), c[0]),
-                )[:n_probe]
-            ]
-            qlit = F.array(*[F.lit(float(x)) for x in q])
-            dot = F.aggregate(
-                F.zip_with(
-                    F.col("embedding"), qlit, lambda a, b: a.cast("double") * b
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            nrm = F.sqrt(
-                F.aggregate(
-                    F.col("embedding"),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x.cast("double") * x.cast("double"),
-                )
-            )
-            qn = float(np.linalg.norm(q))
-            got = (
-                emb.join(km_assigned, "vec_id")
-                .filter(F.col("cell").isin(probe) & (F.col("vec_id") != qi))
-                .select(
-                    "vec_id", F.round(dot / (nrm * F.lit(qn)), 6).alias("c")
-                )
-                .orderBy(F.desc("c"), F.asc("vec_id"))
-                .limit(k)
-                .collect()
-            )
-            recs.append(len({r["vec_id"] for r in got} & set(gt_cos[qi])) / k)
-        add("ivf_kmeans", "cosine", n_probe, recs)
-    if km_assigned is not None:
+        km_assigned = km_assigned.cache()
+        ivf_recall("ivf_kmeans", km_assigned, list(enumerate(centers)))
         km_assigned.unpersist()
 
     # --- PQ-ADC on raw vectors -------------------------------------------

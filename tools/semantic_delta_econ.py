@@ -59,12 +59,11 @@ def main() -> None:
         semantic_store_load,
     )
     from commodity_price_forecasting_spark.operators.similarity import (
+        _assigner,
         _drops_from_assigned,
-        assign_cells_blas,
-        assign_cells_fold,
     )
 
-    assigner = assign_cells_blas if args.assign == "blas" else assign_cells_fold
+    assigner = _assigner(args.assign)
     from commodity_price_forecasting_spark.session import get_spark
 
     spark = get_spark(
