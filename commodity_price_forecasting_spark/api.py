@@ -6,7 +6,7 @@ reference user can switch engines by swapping
     from commodity_price_forecasting_spark import api
     df, features, targets = api.load_data(spark, "df_transformed.csv")
     ens = api.run_ensemble(df, features, targets[0])
-    signal = api.trade_suggestion(spark, ens, features, targets[0])
+    signal = api.trade_suggestion(spark, ens, features, targets[0], df=df)
 
 Every stage is the already-tested engine machinery; this module only
 composes it with the reference's exact defaults (threshold 0.6, min
@@ -35,14 +35,14 @@ MIN_CONFIDENCE = 0.6
 
 
 def load_data(
-    spark: SparkSession, path: str, time_col: str = "date_id"
+    spark: SparkSession, path: str
 ) -> tuple[DataFrame, list[str], list[str]]:
     """The reference's ``load_data()`` (app.py:92-112): CSV scan with
     header + inferred schema, validated (non-empty, has features and
     spread targets), columns classified by the ' - ' name convention.
     Returns ``(df, feature_cols, target_cols)``."""
     df = spark.read.option("header", True).option("inferSchema", True).csv(path)
-    return validate_serving_frame(df, time_col)
+    return validate_serving_frame(df)
 
 
 def run_ensemble(

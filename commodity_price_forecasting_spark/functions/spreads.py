@@ -27,8 +27,9 @@ def parse_pair_expr(pair: Column) -> Column:
     )
 
 
-def parse_pairs(df_pairs: DataFrame, pair_col: str = "pair") -> DataFrame:
-    """Add ``leg_a`` / ``leg_b`` columns to a target_pairs-shaped
-    mapping table (reference: MC:57130 (cell 35) split-parse)."""
-    parsed = parse_pair_expr(F.col(pair_col))
+def parse_pairs(df_pairs: DataFrame) -> DataFrame:
+    """Add ``leg_a`` / ``leg_b`` columns, parsed from ``pair``, to a
+    target_pairs-shaped mapping table (reference: MC:57130 (cell 35)
+    split-parse)."""
+    parsed = parse_pair_expr(F.col("pair"))
     return df_pairs.withColumn("leg_a", parsed["leg_a"]).withColumn("leg_b", parsed["leg_b"])

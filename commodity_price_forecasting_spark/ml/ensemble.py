@@ -41,12 +41,11 @@ WEIGHT_FLOOR = 0.001  # app.py:137
 
 def default_models(
     n_rows: int | None = None,
-    ridge_alpha: float = 1.0,
     label_std: float | None = None,
 ) -> dict[str, object]:
     """The deployed trio (app.py:120-123).
 
-    Objective-scaling parity: sklearn ``Ridge(alpha)`` minimizes
+    Objective-scaling parity: sklearn ``Ridge(alpha=1.0)`` minimizes
     ``RSS + alpha*||w||²``; MLlib minimizes
     ``RSS/(2n) + regParam*||w||²/2`` (elasticNetParam=0), scales the
     internal objective by the population label std, and standardizes
@@ -56,7 +55,7 @@ def default_models(
     the numpy closed form in tests/test_ml.py). Without
     n_rows/label_std we fall back to regParam=alpha (fine for
     ranking, wrong for exact parity)."""
-    reg = ridge_alpha * (label_std or 1.0) / n_rows if n_rows else ridge_alpha
+    reg = (label_std or 1.0) / n_rows if n_rows else 1.0  # alpha = 1
     return {
         "linear": LinearRegression(featuresCol="features", labelCol="label"),
         "ridge": LinearRegression(

@@ -49,30 +49,16 @@ class NumpySVR:
     offset — this drops the Σβ=0 constraint so each dual coordinate
     βᵢ∈[−C,C] has a closed-form soft-threshold update
     (βᵢ ← clip(soft(rᵢ, ε)/k'ᵢᵢ)), a standard SMO-free formulation.
-    In-sample behavior tracks sklearn closely at these defaults.
+    In-sample behavior tracks sklearn closely at these defaults. The
+    solver runs up to 300 sweeps and stops once no coordinate moves
+    by 1e-8 or more.
     """
-
-    def __init__(
-        self,
-        C: float = 1.0,
-        epsilon: float = 0.1,
-        gamma: str | float = "scale",
-        max_sweeps: int = 300,
-        tol: float = 1e-8,
-    ) -> None:
-        self.C = C
-        self.epsilon = epsilon
-        self.gamma = gamma
-        self.max_sweeps = max_sweeps
-        self.tol = tol
 
     def fit(self, X: np.ndarray, y: np.ndarray) -> "NumpySVR":
         X = np.asarray(X, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         n, k = X.shape
-        g = (
-            1.0 / (k * X.var()) if self.gamma == "scale" else float(self.gamma)
-        )
+        g = 1.0 / (k * X.var())
         if not np.isfinite(g) or g <= 0:
             g = 1.0 / max(k, 1)
         self._gamma = g
@@ -81,8 +67,8 @@ class NumpySVR:
         beta = np.zeros(n)
         f = np.zeros(n)  # K @ beta, maintained incrementally
         diag = K.diagonal()
-        eps, C = self.epsilon, self.C
-        for _ in range(self.max_sweeps):
+        eps, C = 0.1, 1.0
+        for _ in range(300):
             delta_max = 0.0
             for i in range(n):
                 r = y[i] - f[i] + diag[i] * beta[i]
@@ -93,7 +79,7 @@ class NumpySVR:
                     beta[i] = b
                     f += K[:, i] * d
                     delta_max = max(delta_max, abs(d))
-            if delta_max < self.tol:
+            if delta_max < 1e-8:
                 break
         self._beta = beta
         return self
@@ -110,19 +96,7 @@ class NumpyMLP:
     lr=1e-3, L2 α=1e-4, batch=min(200,n), 200 epochs, seeded shuffle
     and Glorot-uniform init (bit-reproducible for a fixed seed)."""
 
-    def __init__(
-        self,
-        hidden: int = 100,
-        alpha: float = 1e-4,
-        lr: float = 1e-3,
-        batch_size: int = 200,
-        epochs: int = 200,
-        seed: int = 42,
-    ) -> None:
-        self.hidden = hidden
-        self.alpha = alpha
-        self.lr = lr
-        self.batch_size = batch_size
+    def __init__(self, epochs: int = 200, seed: int = 42) -> None:
         self.epochs = epochs
         self.seed = seed
 
@@ -130,7 +104,7 @@ class NumpyMLP:
         X = np.asarray(X, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         n, k = X.shape
-        h = self.hidden
+        h = 100
         rng = np.random.default_rng(self.seed)
         bound1 = np.sqrt(6.0 / (k + h))
         bound2 = np.sqrt(6.0 / (h + 1))
@@ -142,8 +116,9 @@ class NumpyMLP:
         m = [np.zeros_like(p) for p in params]
         v = [np.zeros_like(p) for p in params]
         beta1, beta2, adam_eps = 0.9, 0.999, 1e-8
+        alpha, lr = 1e-4, 1e-3
         t = 0
-        bs = min(self.batch_size, n)
+        bs = min(200, n)
         for _ in range(self.epochs):
             order = rng.permutation(n)
             for s in range(0, n, bs):
@@ -153,11 +128,11 @@ class NumpyMLP:
                 a1 = np.maximum(z1, 0.0)
                 out = (a1 @ W2 + b2).ravel()
                 err = (out - yb) / len(idx)
-                gW2 = a1.T @ err[:, None] + self.alpha * W2
+                gW2 = a1.T @ err[:, None] + alpha * W2
                 gb2 = np.array([err.sum()])
                 da1 = err[:, None] @ W2.T
                 da1[z1 <= 0] = 0.0
-                gW1 = xb.T @ da1 + self.alpha * W1
+                gW1 = xb.T @ da1 + alpha * W1
                 gb1 = da1.sum(axis=0)
                 t += 1
                 for p, g_, mi, vi in zip(params, [gW1, gb1, gW2, gb2], m, v):
@@ -167,7 +142,7 @@ class NumpyMLP:
                     vi += (1 - beta2) * g_ * g_
                     mh = mi / (1 - beta1**t)
                     vh = vi / (1 - beta2**t)
-                    p -= self.lr * mh / (np.sqrt(vh) + adam_eps)
+                    p -= lr * mh / (np.sqrt(vh) + adam_eps)
         self._params = params
         return self
 
@@ -268,16 +243,13 @@ class NumpyRegressorAdapter(Estimator):
     path is per-group ``fit_predict_by_group`` above, never a global
     collect."""
 
-    def __init__(self, make_model=None, label_col: str = "label"):
+    def __init__(self, make_model=None):
         super().__init__()
         self._make_model = make_model
-        self._label_col = label_col
 
     def _fit(self, df) -> NumpyRegressorModel:
         from pyspark.ml.functions import vector_to_array
 
-        pdf = df.select(
-            vector_to_array("features").alias("x"), self._label_col
-        ).toPandas()
-        y = pdf[self._label_col].to_numpy(dtype=np.float64)
+        pdf = df.select(vector_to_array("features").alias("x"), "label").toPandas()
+        y = pdf["label"].to_numpy(dtype=np.float64)
         return NumpyRegressorModel(self._make_model().fit(_as_matrix(pdf["x"]), y))

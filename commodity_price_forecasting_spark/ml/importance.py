@@ -51,21 +51,20 @@ def permutation_importance(
     feature_cols: list[str],
     label_col: str = "label",
     id_col: str = "_row_id",
-    metric: str = "rmse",
 ) -> list[tuple[str, float]]:
     """``[(feature, importance)]`` sorted descending, where importance
-    = metric(permuted) − metric(baseline) for error metrics (higher =
-    more important). ``model`` is a fitted PipelineModel whose
-    assembler consumes ``feature_cols``."""
+    = rmse(permuted) − rmse(baseline) (higher = more important).
+    ``model`` is a fitted PipelineModel whose assembler consumes
+    ``feature_cols``."""
     df = df.cache()
     base_row = regression_metrics(
         model.transform(df), label_col, "prediction"
     ).first()
-    baseline = base_row[metric]
+    baseline = base_row["rmse"]
     out = []
     for c in feature_cols:
         scored = model.transform(_rotated(df, c, id_col))
-        m = regression_metrics(scored, label_col, "prediction").first()[metric]
+        m = regression_metrics(scored, label_col, "prediction").first()["rmse"]
         out.append((c, float(m - baseline)))
     return sorted(out, key=lambda t: -t[1])
 
@@ -75,7 +74,6 @@ def linear_shap(
     feature_cols: list[str],
     coefficients: dict[str, float],
     intercept: float,
-    means: dict[str, float] | None = None,
 ) -> DataFrame:
     """Exact SHAP values for a LINEAR model (Lundberg & Lee 2017,
     "Linear SHAP": under feature independence the Shapley value of
@@ -89,9 +87,8 @@ def linear_shap(
     expressions (one aggregate for the means, no Python in the row
     path; additivity base_value + Σφⱼ = prediction holds exactly).
     """
-    if means is None:
-        row = df.agg(*[F.avg(c).alias(c) for c in feature_cols]).first()
-        means = {c: float(row[c]) for c in feature_cols}
+    row = df.agg(*[F.avg(c).alias(c) for c in feature_cols]).first()
+    means = {c: float(row[c]) for c in feature_cols}
     base = float(intercept) + sum(
         float(coefficients[c]) * means[c] for c in feature_cols
     )

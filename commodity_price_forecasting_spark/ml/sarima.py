@@ -338,12 +338,9 @@ def sarima_forecast_by_group(
     order: tuple[int, int, int] = (1, 0, 0),
     seasonal_order: tuple[int, int, int, int] = (0, 0, 0, 0),
     horizon: int = 3,
-    key_type: str = "long",
 ) -> DataFrame:
-    """Distributed per-series SARIMA: one group per key, deterministic
-    ``(key, step, forecast)`` output rows. ``key_type`` is the Spark
-    DDL type of ``key_col`` (e.g. ``"long"``, ``"string"``)."""
-    key_np = "int64" if key_type in ("long", "int", "bigint") else "object"
+    """Distributed per-series SARIMA: one group per ``long`` key,
+    deterministic ``(key, step, forecast)`` output rows."""
 
     def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(time_col)
@@ -357,7 +354,7 @@ def sarima_forecast_by_group(
             )
         except (ValueError, np.linalg.LinAlgError):
             return pd.DataFrame({key_col: [], "step": [], "forecast": []}).astype(
-                {key_col: key_np, "step": "int64", "forecast": "float64"}
+                {key_col: "int64", "step": "int64", "forecast": "float64"}
             )
         return pd.DataFrame(
             {
@@ -367,7 +364,7 @@ def sarima_forecast_by_group(
             }
         )
 
-    schema = f"{key_col} {key_type}, step long, forecast double"
+    schema = f"{key_col} long, step long, forecast double"
     return (
         df.select(key_col, time_col, value_col)
         .groupBy(key_col)

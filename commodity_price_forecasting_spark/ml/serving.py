@@ -38,15 +38,19 @@ from commodity_price_forecasting_spark.functions.spreads import SEPARATOR
 from commodity_price_forecasting_spark.ml.ensemble import EnsembleResult
 
 
-def default_inputs(df: DataFrame, feature_cols: list[str], time_col: str = "date_id") -> dict:
+def default_inputs(df: DataFrame, feature_cols: list[str]) -> dict:
     """Latest observed value per feature — the app's slider defaults
-    (app.py:242): the first row of ``orderBy(desc(time_col))``, K
-    scalars to the driver."""
-    row = (
-        df.orderBy(F.desc(time_col))
-        .select(*feature_cols)
-        .first()
-    )
+    (app.py:242): the first row of ``orderBy(desc("date_id"))``, K
+    scalars to the driver. An empty frame, or a latest row with a null
+    feature, raises a ``ValueError`` that says which."""
+    row = df.orderBy(F.desc("date_id")).select(*feature_cols).first()
+    if row is None:
+        raise ValueError("default_inputs: the frame is empty, no latest row")
+    nulls = [c for c in feature_cols if row[c] is None]
+    if nulls:
+        raise ValueError(
+            f"default_inputs: the latest row has null feature columns {nulls}"
+        )
     return {c: float(row[c]) for c in feature_cols}
 
 

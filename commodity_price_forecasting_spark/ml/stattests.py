@@ -49,14 +49,14 @@ def adf_by_group(
     key_col: str,
     time_col: str,
     value_col: str,
-    max_lag: int = 4,
 ) -> DataFrame:
-    """ADF test statistic per key: ``(key, adf_stat, n, stationary)``
-    where ``stationary`` uses the 5 % critical value."""
+    """ADF test statistic per key (4 augmentation lags):
+    ``(key, adf_stat, n, stationary)`` where ``stationary`` uses the
+    5 % critical value."""
 
     def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(time_col)
-        stat = _adf_stat(pdf[value_col].to_numpy(dtype=float), max_lag)
+        stat = _adf_stat(pdf[value_col].to_numpy(dtype=float), 4)
         return pd.DataFrame(
             {
                 key_col: [pdf[key_col].iloc[0]],
@@ -76,18 +76,17 @@ def adf_by_group(
 KPSS_CRIT_5PCT = 0.463
 
 
-def _kpss_stat(y: np.ndarray, n_lags: int | None = None) -> float:
+def _kpss_stat(y: np.ndarray) -> float:
     """KPSS level-stationarity statistic (constant regression):
     η = Σ_t S_t² / (n² · σ̂²_lr) with S_t the partial sums of the
     demeaned series and σ̂²_lr the Bartlett/Newey-West long-run
-    variance — the same formula statsmodels' ``kpss(reg='c')`` uses
-    with a fixed lag."""
+    variance at the Schwert lag — the same formula statsmodels'
+    ``kpss(reg='c')`` uses with that fixed lag."""
     y = y[~np.isnan(y)]
     n = len(y)
     if n < 10:
         return float("nan")
-    if n_lags is None:
-        n_lags = int(np.ceil(12.0 * (n / 100.0) ** 0.25))  # Schwert rule
+    n_lags = int(np.ceil(12.0 * (n / 100.0) ** 0.25))  # Schwert rule
     e = y - y.mean()
     s = np.cumsum(e)
     lrv = e @ e / n
@@ -104,7 +103,6 @@ def kpss_by_group(
     key_col: str,
     time_col: str,
     value_col: str,
-    n_lags: int | None = None,
 ) -> DataFrame:
     """KPSS test per key: ``(key, kpss_stat, n, stationary)``. Note
     the inverted hypothesis vs ADF: KPSS's null IS stationarity, so
@@ -113,7 +111,7 @@ def kpss_by_group(
 
     def _per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(time_col)
-        stat = _kpss_stat(pdf[value_col].to_numpy(dtype=float), n_lags)
+        stat = _kpss_stat(pdf[value_col].to_numpy(dtype=float))
         return pd.DataFrame(
             {
                 key_col: [pdf[key_col].iloc[0]],

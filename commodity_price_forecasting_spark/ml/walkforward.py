@@ -43,7 +43,6 @@ def walk_forward(
     time_col: str,
     fit_eval: Callable[[DataFrame, DataFrame], dict],
     n_folds: int = 3,
-    min_train_frac: float = 0.5,
 ) -> list[dict]:
     """Run ``fit_eval(train_df, test_df) -> metrics`` over expanding
     folds; returns one metrics dict per fold (with fold bounds)."""
@@ -52,7 +51,7 @@ def walk_forward(
         F.min(time_col).alias("lo"), F.max(time_col).alias("hi")
     ).first()
     results = []
-    for fold in expanding_folds(bounds["lo"], bounds["hi"], n_folds, min_train_frac):
+    for fold in expanding_folds(bounds["lo"], bounds["hi"], n_folds):
         tr = df.filter(F.col(time_col) <= fold.train_end)
         te = df.filter(
             (F.col(time_col) > fold.train_end) & (F.col(time_col) <= fold.test_end)
@@ -69,16 +68,15 @@ def walk_forward_grid_search(
     time_col: str,
     feature_cols: list[str],
     label_col: str,
-    estimator=None,
-    param_grid=None,
     n_folds: int = 3,
-    min_train_frac: float = 0.5,
     metric: str = "rmse",
     parallelism: int = 4,
 ) -> dict:
     """Hyper-parameter search under walk-forward evaluation (M9: the
     reference's GridSearchCV + TimeSeriesSplit, slide 24's
-    "Ridge_Tuned"). MLlib's CrossValidator shuffles rows randomly —
+    "Ridge_Tuned": a ``LinearRegression`` over ``regParam`` ∈ {0, 0.01,
+    0.1, 1} × ``elasticNetParam`` ∈ {0, 1}). MLlib's CrossValidator
+    shuffles rows randomly —
     leakage for time series — so the grid (built with MLlib's own
     ``ParamGridBuilder``) is evaluated inside the deterministic
     expanding-window split instead: every candidate trains on each
@@ -110,15 +108,13 @@ def walk_forward_grid_search(
     from pyspark.ml.regression import LinearRegression
     from pyspark.ml.tuning import ParamGridBuilder
 
-    if estimator is None:
-        estimator = LinearRegression(featuresCol="features", labelCol=label_col)
-    if param_grid is None:
-        param_grid = (
-            ParamGridBuilder()
-            .addGrid(estimator.regParam, [0.0, 0.01, 0.1, 1.0])
-            .addGrid(estimator.elasticNetParam, [0.0, 1.0])
-            .build()
-        )
+    estimator = LinearRegression(featuresCol="features", labelCol=label_col)
+    param_grid = (
+        ParamGridBuilder()
+        .addGrid(estimator.regParam, [0.0, 0.01, 0.1, 1.0])
+        .addGrid(estimator.elasticNetParam, [0.0, 1.0])
+        .build()
+    )
 
     assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
     evaluator = RegressionEvaluator(
@@ -130,7 +126,7 @@ def walk_forward_grid_search(
     bounds = df.agg(
         F.min(time_col).alias("lo"), F.max(time_col).alias("hi")
     ).first()
-    folds = expanding_folds(bounds["lo"], bounds["hi"], n_folds, min_train_frac)
+    folds = expanding_folds(bounds["lo"], bounds["hi"], n_folds)
 
     def fit_one(params, fold: Fold) -> float:
         tr = df.filter(F.col(time_col) <= fold.train_end)

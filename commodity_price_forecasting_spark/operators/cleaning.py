@@ -73,10 +73,10 @@ def ffill_bfill_wide(df: DataFrame, time_col: str, value_cols: Sequence[str]) ->
     return df.select(*cols)
 
 
-def drop_any_null_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
+def drop_any_null_rows(df: DataFrame) -> DataFrame:
     """Any-null row drop, the reference's ``df.dropna()``
     (reference: MC:57311 (cell 44) — 1961→1133 rows)."""
-    return df.dropna(how="any", subset=list(subset) if subset else None)
+    return df.dropna(how="any")
 
 
 def sparse_columns(df: DataFrame, value_cols: Sequence[str], threshold: float = 0.5) -> list[str]:

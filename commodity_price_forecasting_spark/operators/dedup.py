@@ -16,7 +16,8 @@ Four tiers, each scale-designed:
 Determinism: all hashing is md5-hex (identical across engines and
 runs); minhash_i(s) = min over shingles of md5("{i}:{s}") — the
 lexicographic min of a uniform hex hash is a valid uniform min-hash
-and needs no engine-specific integer hash.
+and needs no engine-specific integer hash. Document operators read
+the documents table's ``doc_id``/``text`` columns.
 """
 
 from __future__ import annotations
@@ -32,10 +33,10 @@ def content_fingerprint(text: Column) -> Column:
     return F.md5(text.cast("binary"))
 
 
-def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_summary(docs: DataFrame) -> DataFrame:
     """Corpus-level exact-dup census: total docs, distinct contents,
     duplicate count. Single aggregate over the md5 fingerprint."""
-    fp = content_fingerprint(F.col(text_col))
+    fp = content_fingerprint(F.col("text"))
     agg = docs.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct(fp).alias("n_unique"),
@@ -47,8 +48,6 @@ def exact_dedup_summary(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def char_shingles(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     distinct: bool = True,
     partitions: int | None = None,
@@ -74,7 +73,7 @@ def char_shingles(
     # onto one core regardless of cluster size.
     par = partitions or docs.sparkSession.sparkContext.defaultParallelism
     sh = (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+        docs.select("doc_id", F.col("text").alias("_text"))
         .repartition(par, "doc_id")
         .select("doc_id", "_text", pos)
         .select("doc_id", F.expr(f"substring(_text, pos, {k})").alias("shingle"))
@@ -278,14 +277,14 @@ def containment_scores(shingles: DataFrame, candidates: DataFrame) -> DataFrame:
     )
 
 
-def simhash32(tokens: DataFrame, id_col: str = "doc_id", token_col: str = "token") -> DataFrame:
+def simhash32(tokens: DataFrame) -> DataFrame:
     """32-bit SimHash per document from distinct tokens.
 
     For bit j (0..31): nibble = hex digit j//4 of md5(token); bit =
     (nibble >> (3 − j%4)) & 1; the doc's bit j is the sign of
     Σ_tokens (2·bit − 1). All-integer arithmetic → engine-portable.
     """
-    t = tokens.select(F.col(id_col).alias("doc_id"), F.md5(F.col(token_col).cast("binary")).alias("h"))
+    t = tokens.select("doc_id", F.md5(F.col("token").cast("binary")).alias("h"))
     j = F.explode(F.sequence(F.lit(0), F.lit(31))).alias("j")
     exploded = t.select("doc_id", "h", j)
     nib = F.expr("instr('0123456789abcdef', substring(h, CAST(j / 4 AS INT) + 1, 1)) - 1")
@@ -322,7 +321,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list:
@@ -337,10 +335,10 @@ def connected_components(
     deduplicated edge list: at or below ``SMALL_GRAPH_EDGES`` edges
     the list is collected once (one Arrow ``toPandas`` job) and
     finished with exact union-find on the driver; above it
-    ``connected_components_star`` runs distributed (up to
-    ``max_iter`` rounds). Both compute the same exact labelling. Pass
-    a dict as ``stats`` to receive ``{"iterations": k}`` (plus
-    ``"fast_path": True`` on the driver path).
+    ``connected_components_star`` runs distributed (up to 25 rounds).
+    Both compute the same exact labelling. Pass a dict as ``stats`` to
+    receive ``{"iterations": k}`` (plus ``"fast_path": True`` on the
+    driver path).
     """
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -355,9 +353,7 @@ def connected_components(
     if n_edges > SMALL_GRAPH_EDGES:
         # measured winner at >1M edges (SCALE.md r4)
         sym.unpersist()
-        return connected_components_star(
-            edges, src, dst, max_iter=max_iter, stats=stats
-        )
+        return connected_components_star(edges, src, dst, stats=stats)
     # Small-graph path: the symmetric edge list is a tiny projection
     # of the corpus (candidate pairs, not documents). When it fits on
     # the driver, union-find with path compression beats any number
@@ -407,7 +403,6 @@ def connected_components_star(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
@@ -424,7 +419,7 @@ def connected_components_star(
     no driver state. Converges in O(log n) rounds to height-1 stars;
     the edge set itself shrinks each round as edges collapse onto
     star centers. Lineage is cut every round (``_cut``), so the plan
-    stays O(1) deep.
+    stays O(1) deep. At most 25 rounds run.
     """
     all_nodes = (
         edges.select(F.col(src).alias("node"))
@@ -440,7 +435,7 @@ def connected_components_star(
     e = _cut(e)
     prev_cnt = e.count()
     n_iter = 0
-    for _ in range(max_iter):
+    for _ in range(25):
         n_iter += 1
         # large-star over the symmetric closure: (v, m(u)) for v > u
         sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -590,8 +585,6 @@ def pagerank_ranks(
 def substring_remove(
     docs: DataFrame,
     k: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact-substring span REMOVAL — the transform of Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better" §4.2,
@@ -628,9 +621,9 @@ def substring_remove(
     input doc (docs shorter than ``k`` tokens pass through
     unchanged; a fully-duplicated doc comes back with
     ``clean_text = ''``)."""
-    arr = F.split(F.trim(F.col(text_col)), " +")
+    arr = F.split(F.trim(F.col("text")), " +")
     base = (
-        docs.select(F.col(id_col).alias("doc_id"), arr.alias("l"))
+        docs.select("doc_id", arr.alias("l"))
         .filter(F.size("l") >= 1)
         .filter(F.element_at("l", 1) != "")
     )
@@ -684,7 +677,7 @@ def substring_remove(
     )
     n_tok = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("_n_tok"))
     return (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(n_tok, "doc_id", "left")
         .join(rebuilt, "doc_id", "left")
         .select(

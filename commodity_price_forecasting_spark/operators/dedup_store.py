@@ -37,8 +37,7 @@ recurring cost linear in the DELTA:
 
 Scale shape (the point): every store-side frame is SCANNED exactly
 once and never shuffled — the delta side is broadcast into each join
-(caller contract: delta ≪ store; pass ``broadcast_delta=False`` to
-let AQE pick sort-merge for mega-deltas). Components run on the
+(caller contract: delta ≪ store). Components run on the
 delta-incident edge graph only, with store nodes CONTRACTED to their
 canonical — candidate count is bounded by the delta's band
 collisions, not the corpus.
@@ -100,13 +99,11 @@ def dedup_store_build(
     num_hashes: int = 12,
     rows_per_band: int = 3,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> dict:
     """Full batch dedup + store persistence. Returns
     ``{"n_docs", "n_unique", "n_survivors", "max_doc_id"}``."""
     spark = docs.sparkSession
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d = docs.select("doc_id", "text")
 
     # exact tier: min-id holder per content fingerprint
     fp = d.select("doc_id", content_fingerprint(F.col("text")).alias("fp"))
@@ -194,10 +191,7 @@ def dedup_delta(
     path: str,
     new_docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     append: bool = True,
-    broadcast_delta: bool = True,
     keep_frames: bool = False,
 ) -> dict:
     """Dedup ONLY the delta against the persisted store. Returns
@@ -233,7 +227,7 @@ def dedup_delta(
     max_store_id = int(m["max_doc_id"])
     mh = _mh_cols(num_hashes)
 
-    d = new_docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d = new_docs.select("doc_id", "text")
     lim = d.agg(F.min("doc_id").alias("_lo"), F.count(F.lit(1)).alias("_n")).first()
     if lim["_n"] == 0:
         return {
@@ -280,8 +274,7 @@ def dedup_delta(
             spark, path, store, d, expl,
             k=k, num_hashes=num_hashes, rows_per_band=rows_per_band,
             threshold=threshold, max_store_id=max_store_id, mh=mh,
-            broadcast_delta=broadcast_delta, append=append,
-            keep_frames=keep_frames,
+            append=append, keep_frames=keep_frames,
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
@@ -309,32 +302,30 @@ def _dedup_delta_scoped(
     threshold: float,
     max_store_id: int,
     mh: list[str],
-    broadcast_delta: bool,
     append: bool,
     keep_frames: bool,
 ) -> dict:
     """The body of ``dedup_delta`` under the delta-scoped shuffle conf
     (split out so the try/finally conf scoping stays readable — the
     connected_components precedent)."""
-    bcast = F.broadcast if broadcast_delta else (lambda x: x)
 
     # ---- exact tier ----
     dfp = d.select("doc_id", content_fingerprint(F.col("text")).alias("fp")).cache()
     d_holders = dfp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
-    # store scan #1: fingerprint hits (store streams past the bcast
+    # store scan #1: fingerprint hits (store streams past the broadcast
     # delta). Eagerly cut: THREE downstream consumers (the new-content
     # anti-join, holder_v's join, and its broadcast) would otherwise
     # each re-run this store scan — r11 profile: each lazy re-scan
     # cost ~0.5-1 s of the ~7 s recurring delta wall at sf0.1.
     store_hit = (
         store["fingerprints"]
-        .join(bcast(d_holders.select("fp")), "fp")
+        .join(F.broadcast(d_holders.select("fp")), "fp")
         .select("fp", F.col("canon_id").alias("_store_canon"))
         .localCheckpoint(eager=True)
     )
 
     # ---- near tier: delta holders whose content the store has not seen ----
-    new_fp_holders = d_holders.join(bcast(store_hit.select("fp")), "fp", "left_anti")
+    new_fp_holders = d_holders.join(F.broadcast(store_hit.select("fp")), "fp", "left_anti")
     duniq = d.join(new_fp_holders.select("doc_id"), "doc_id")
     sh = char_shingles(duniq, k=k, distinct=False, partitions=expl)
     dwide = minhash_wide(sh, num_hashes=num_hashes).cache()
@@ -352,7 +343,7 @@ def _dedup_delta_scoped(
     cand_ds = (
         store["bands"]
         .join(
-            bcast(dbands.select("band", "sig", F.col("doc_id").alias("doc_b"))),
+            F.broadcast(dbands.select("band", "sig", F.col("doc_id").alias("doc_b"))),
             ["band", "sig"],
         )
         .select(F.col("doc_id").alias("doc_a"), "doc_b")
@@ -361,7 +352,7 @@ def _dedup_delta_scoped(
     )
     # store scan #3: signatures of candidate store docs only
     s_sigs = store["signatures"].join(
-        bcast(cand_ds.select(F.col("doc_a").alias("doc_id")).distinct()), "doc_id"
+        F.broadcast(cand_ds.select(F.col("doc_a").alias("doc_id")).distinct()), "doc_id"
     )
     pair_sigs = s_sigs.select("doc_id", *mh).unionByName(dwide.select("doc_id", *mh))
     edges_ds = estimated_jaccard(pair_sigs, cand_ds, num_hashes=num_hashes).filter(
@@ -394,7 +385,7 @@ def _dedup_delta_scoped(
 
     # ---- verdicts (holders) ----
     holder_v = (
-        d_holders.join(bcast(store_hit), "fp", "left")
+        d_holders.join(F.broadcast(store_hit), "fp", "left")
         .join(node_canon, "doc_id", "left")
         .select(
             "doc_id",
@@ -418,7 +409,7 @@ def _dedup_delta_scoped(
         F.col("doc_id").alias("_dup0"), F.col("_canon").alias("_chased")
     )
     holder_v = (
-        holder_v.join(bcast(bridge_chase), "_dup0", "left")
+        holder_v.join(F.broadcast(bridge_chase), "_dup0", "left")
         .select(
             "doc_id",
             "fp",
@@ -439,7 +430,7 @@ def _dedup_delta_scoped(
         F.coalesce("dup_of", "doc_id").alias("_final"),
     )
     nonholder_v = (
-        dfp.join(bcast(holder_final), "fp")
+        dfp.join(F.broadcast(holder_final), "fp")
         .filter(F.col("doc_id") != F.col("_h"))
         .select(
             "doc_id",
@@ -527,8 +518,6 @@ def dedup_store_append(
     new_docs: DataFrame,
     verdicts: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     sig_wide: DataFrame | None = None,
 ) -> int:
     """IDEMPOTENT store append driven by an already-persisted verdict
@@ -576,7 +565,7 @@ def dedup_store_append(
         int(store_meta["rows_per_band"]),
     )
     mh = _mh_cols(num_hashes)
-    d = new_docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d = new_docs.select("doc_id", "text")
     lim = d.agg(
         F.min("doc_id").alias("_lo"),
         F.max("doc_id").alias("_hi"),

@@ -976,14 +976,12 @@ AUDIO_ENERGY_SCHEMA = T.StructType(
 
 def audio_window_energy(
     media: DataFrame,
-    window: int = 256,
-    loud_rms: float = 45.0,
     codec: str = "pcm8",
 ) -> DataFrame:
     """Windowed RMS energy over audio payloads — the
     voice-activity / silence-trim primitive of an audio training
-    pipeline: per clip, window count, loud-window count
-    (RMS ≥ ``loud_rms``), peak window RMS and whole-clip RMS.
+    pipeline: per clip, 256-sample window count, loud-window count
+    (RMS ≥ 45), peak window RMS and whole-clip RMS.
 
     ``codec="pcm8"`` treats the payload as raw headerless 8-bit PCM
     (byte − 128); ``codec="wav"`` runs the REAL RIFF/WAVE parser
@@ -1004,6 +1002,7 @@ def audio_window_energy(
 
     if codec not in ("pcm8", "wav"):
         raise ValueError(f"codec must be pcm8|wav: {codec}")
+    window = 256
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
@@ -1040,7 +1039,7 @@ def audio_window_energy(
                 ]
                 out["media_id"].append(mid)
                 out["n_windows"].append(n_w)
-                out["n_loud"].append(sum(1 for r in rms if r >= loud_rms))
+                out["n_loud"].append(sum(1 for r in rms if r >= 45.0))
                 out["peak_rms"].append(max(rms))
                 out["doc_rms"].append(float(np.sqrt(sq.sum() / nb)))
             yield pd.DataFrame(out).astype(

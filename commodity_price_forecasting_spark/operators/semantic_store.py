@@ -33,10 +33,11 @@ silently absorbed — the same design as ``dedup_store``'s bridges and
 the ANN append's recall-drift table: rebuild when the inverted mass
 matters, on a measurement rather than a guess.
 
-Scale shape: seed assignment is a map-side pass through the lane
-``assign`` names (``similarity._assigner``: ``"fold"``, the
-bit-reproducible oracle lane, for small k; ``"blas"`` above — at
-k=232 the fold lane spends ~24 s compiling its seed-literal plan);
+Scale shape: seed assignment is a map-side pass through the lane the
+store build and the delta lane name (``similarity._assigner``:
+``"fold"``, the bit-reproducible oracle lane, for small k; ``"blas"``
+above — at k=232 the fold lane spends ~24 s compiling its
+seed-literal plan; the rerun lane always runs fold);
 the store-vs-delta stage scans each touched cell partition once
 against the broadcast delta (candidates bounded by Σ|touched cell| —
 never all-pairs, never corpus×delta); the delta-vs-delta stage is
@@ -69,6 +70,7 @@ from commodity_price_forecasting_spark.operators.similarity import (
     _drops_from_assigned,
     _norm,
     _semdedup_seeds,
+    assign_cells_fold,
 )
 
 
@@ -84,20 +86,18 @@ def semantic_store_build(
     path: str,
     k: int = 16,
     threshold: float = 0.3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     assign: str = "fold",
 ) -> dict:
     """Full SemDeDup + store persistence. Returns
     ``{"n_vectors", "n_kept"}``."""
     spark = embs.sparkSession
-    seeds = _semdedup_seeds(embs, k, vec_col, id_col)
-    assigned = _assigner(assign)(embs, seeds, vec_col, id_col)
+    seeds = _semdedup_seeds(embs, k)
+    assigned = _assigner(assign)(embs, seeds)
     drops = _drops_from_assigned(
-        assigned, threshold, id_col, dim=len(seeds[0][1]) if seeds else None
+        assigned, threshold, "vec_id", dim=len(seeds[0][1]) if seeds else None
     )
     kept = assigned.join(
-        drops.select(F.col(id_col).alias("_vid")), "_vid", "left_anti"
+        drops.select(F.col("vec_id").alias("_vid")), "_vid", "left_anti"
     ).select(
         F.col("_vid").alias("vec_id"),
         F.col("_emb").alias("embedding"),
@@ -134,8 +134,6 @@ def semantic_dedup_delta(
     spark,
     path: str,
     new_embs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     append: bool = True,
     assign: str = "fold",
 ) -> dict:
@@ -162,7 +160,8 @@ def semantic_dedup_delta(
             "n_appended": 0,
         }
     sizes = new_embs.agg(
-        F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
+        F.min(F.size("embedding")).alias("lo"),
+        F.max(F.size("embedding")).alias("hi"),
     ).first()
     if sizes["lo"] != dim or sizes["hi"] != dim:
         raise ValueError(
@@ -173,9 +172,9 @@ def semantic_dedup_delta(
 
     # eager cut: everything below must not re-read store paths after
     # the append writes into them (the dedup_store lesson)
-    d_assigned = _assigner(assign)(
-        new_embs, store["seeds"], vec_col, id_col
-    ).localCheckpoint(eager=True)
+    d_assigned = _assigner(assign)(new_embs, store["seeds"]).localCheckpoint(
+        eager=True
+    )
 
     # --- store-vs-delta: store scanned once, delta broadcast ---------
     # Unrolled codegen dot + per-ROW hoisted norms when the store dim
@@ -238,8 +237,8 @@ def semantic_dedup_delta(
     )
 
     # --- delta-vs-delta: the base pair/drop stage on the delta only --
-    dd = _drops_from_assigned(d_assigned, threshold, id_col, dim=dim).select(
-        F.col(id_col).alias("_vid"), F.col("first_keeper").alias("_dd_keeper")
+    dd = _drops_from_assigned(d_assigned, threshold, "vec_id", dim=dim).select(
+        F.col("vec_id").alias("_vid"), F.col("first_keeper").alias("_dd_keeper")
     )
 
     verdicts = (
@@ -308,10 +307,7 @@ def semantic_rerun_ingest(
     spark,
     path: str,
     new_embs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     append: bool = True,
-    assign: str = "fold",
 ) -> dict:
     """The OPERATING-RULE ingest lane (SCALE.md r11): a frozen-seed
     full re-run over store survivors ∪ delta, returning per-delta
@@ -344,7 +340,8 @@ def semantic_rerun_ingest(
             "n_appended": 0,
         }
     sizes = new_embs.agg(
-        F.min(F.size(vec_col)).alias("lo"), F.max(F.size(vec_col)).alias("hi")
+        F.min(F.size("embedding")).alias("lo"),
+        F.max(F.size("embedding")).alias("hi"),
     ).first()
     if sizes["lo"] != dim or sizes["hi"] != dim:
         raise ValueError(
@@ -352,9 +349,9 @@ def semantic_rerun_ingest(
             f"{sizes['hi']}] != store dim {dim}"
         )
 
-    d_assigned = _assigner(assign)(
-        new_embs, store["seeds"], vec_col, id_col
-    ).localCheckpoint(eager=True)
+    d_assigned = assign_cells_fold(new_embs, store["seeds"]).localCheckpoint(
+        eager=True
+    )
     survivors = store["cells"].select(
         F.col("vec_id").alias("_vid"),
         F.col("embedding").alias("_emb"),
@@ -364,11 +361,11 @@ def semantic_rerun_ingest(
     # eager cut: the pair stage reads this union twice AND the append
     # below writes under the very path `survivors` scans
     ref = survivors.unionByName(d_assigned).localCheckpoint(eager=True)
-    delta_ids = d_assigned.select(F.col("_vid").alias(id_col))
+    delta_ids = d_assigned.select(F.col("_vid").alias("vec_id"))
     drops = (
-        _drops_from_assigned(ref, threshold, id_col, dim=dim)
-        .join(delta_ids, id_col)
-        .select(F.col(id_col).alias("_vid"), "first_keeper")
+        _drops_from_assigned(ref, threshold, "vec_id", dim=dim)
+        .join(delta_ids, "vec_id")
+        .select(F.col("vec_id").alias("_vid"), "first_keeper")
     )
     verdicts = (
         d_assigned.join(drops, "_vid", "left")

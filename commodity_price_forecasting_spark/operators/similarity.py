@@ -12,6 +12,9 @@ Determinism: hyperplane coefficients are ±1 derived from md5 parity
 of (plane, dim) — identical in any engine, no RNG state. Dot products
 use built-in higher-order functions (``zip_with`` + ``aggregate``),
 JVM-side, no Python in the row path.
+
+Every operator reads the embeddings table's ``vec_id``/``embedding``
+columns.
 """
 
 from __future__ import annotations
@@ -181,9 +184,7 @@ def _residuals(
 # (``_seed_cosines``) and in numpy (``_nearest_seeds``).
 
 
-def _seed_frame(
-    vectors: DataFrame, k: int, vec_col: str, id_col: str
-) -> DataFrame:
+def _seed_frame(vectors: DataFrame, k: int) -> DataFrame:
     """The k-row seed frame: vectors with the smallest ``md5(id)``
     (total order (md5(id), id)) — THE single source of the seed
     derivation rule, shared by the collecting helper below and the
@@ -192,14 +193,14 @@ def _seed_frame(
     partition; small-k callers don't care, extreme-k callers
     repartition afterwards (see ``seed_routing_frame``)."""
     return (
-        vectors.select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        vectors.select("vec_id", "embedding")
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(k)
     )
 
 
 def _semdedup_seeds(
-    vectors: DataFrame, k: int | None, vec_col: str, id_col: str
+    vectors: DataFrame, k: int | None
 ) -> list[tuple[int, list[float]]]:
     """The k seeds as a driver-side list: the IVF coarse centers of
     ``ivf_seed_assign`` and the SemDeDup cluster centers (0-iteration
@@ -209,7 +210,7 @@ def _semdedup_seeds(
         import math
 
         k = max(16, math.isqrt(max(vectors.count(), 1)))
-    seeds_rows = _seed_frame(vectors, k, vec_col, id_col).collect()
+    seeds_rows = _seed_frame(vectors, k).collect()
     return [(int(r[0]), [float(x) for x in r[1]]) for r in seeds_rows]
 
 
@@ -266,15 +267,13 @@ def _probe_seeds(
 MAX_FOLD_SEED_LITERALS = 1 << 20
 
 
-def _seed_cosines(
-    seeds: list[tuple[int, list[float]]], vec_col: str, who: str
-) -> Column:
+def _seed_cosines(seeds: list[tuple[int, list[float]]], who: str) -> Column:
     """The fold cell-scoring column: ``array<struct<c, negid>>``, one
     struct per seed in list order — ``c`` the 6-dp-rounded cosine of
-    ``vec_col`` to the seed, ``negid`` the negated seed id — so
+    ``embedding`` to the seed, ``negid`` the negated seed id — so
     ``array_max`` is the argmax with ties to the smallest seed id and
     a descending ``sort_array`` ranks seeds in routing order. Reads the
-    row norm from a hoisted ``_nv`` column (``_norm(vec_col)``) the
+    row norm from a hoisted ``_nv`` column (``_norm(embedding)``) the
     caller adds.
 
     ONE array-of-arrays literal + a higher-order ``transform`` whose
@@ -314,7 +313,7 @@ def _seed_cosines(
         seed_mat,
         lambda sv, i: F.struct(
             F.round(
-                _dot(F.col(vec_col), sv)
+                _dot(F.col("embedding"), sv)
                 / (F.col("_nv") * F.element_at(seed_norms, i + 1)),
                 6,
             ).alias("c"),
@@ -340,27 +339,23 @@ def _nearest_seeds(M, Sn, sids):
     return sids[idx], C[np.arange(len(idx)), idx]
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_id: int, k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors of one corpus vector.
 
     The 1-row query side is broadcast; the corpus is scanned once; the
     top-k is a ``TakeOrderedAndProject`` (heap per partition + driver
     merge), never a global sort."""
-    q = emb.filter(F.col(id_col) == query_id).select(F.col(vec_col).alias("_qv"))
+    q = emb.filter(F.col("vec_id") == query_id).select(
+        F.col("embedding").alias("_qv")
+    )
     scored = (
-        emb.filter(F.col(id_col) != query_id)
+        emb.filter(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(q))
         .select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.round(
-                _dot(F.col(vec_col), F.col("_qv"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("_qv"))),
+                _dot(F.col("embedding"), F.col("_qv"))
+                / (_norm(F.col("embedding")) * _norm(F.col("_qv"))),
                 6,
             ).alias("cosine"),
         )
@@ -383,25 +378,22 @@ def hyperplane_sign(vec_col: str, plane: int, dim: int) -> Column:
     return coeff * F.element_at(F.col(vec_col), d).cast("double")
 
 
-def lsh_buckets(
-    emb: DataFrame,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def lsh_buckets(emb: DataFrame, n_planes: int = 8) -> DataFrame:
     """``(vec_id, bucket)``: sign-random-projection bucket id in
     [0, 2^n_planes). Explode dims once, compute every plane's
     projection in the same aggregate (n_planes fused sums), then fold
     sign bits into an integer.
     """
-    dim = emb.select(F.size(vec_col).alias("_sz")).first()["_sz"]
+    dim = emb.select(F.size("embedding").alias("_sz")).first()["_sz"]
     par = emb.sparkSession.sparkContext.defaultParallelism
-    base = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v")
-    ).repartition(par, "vec_id").select(
-        "vec_id",
-        "_v",
-        F.explode(F.sequence(F.lit(1), F.lit(dim))).alias("_d"),
+    base = (
+        emb.select("vec_id", F.col("embedding").alias("_v"))
+        .repartition(par, "vec_id")
+        .select(
+            "vec_id",
+            "_v",
+            F.explode(F.sequence(F.lit(1), F.lit(dim))).alias("_d"),
+        )
     )
     projections = [
         F.sum(hyperplane_sign("_v", p, dim)).alias(f"_proj{p}") for p in range(n_planes)
@@ -423,12 +415,10 @@ def near_dup_pairs_cosine(
     emb: DataFrame,
     buckets: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, restricted to vectors
     sharing an LSH bucket (candidates ≪ n²), then exactly verified."""
-    e = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
+    e = emb.select("vec_id", F.col("embedding").alias("_v"))
     withb = e.join(buckets, "vec_id")
     left = withb.select(
         F.col("bucket"), F.col("vec_id").alias("vec_a"), F.col("_v").alias("_va")
@@ -446,13 +436,7 @@ def near_dup_pairs_cosine(
     )
 
 
-def ivf_assign(
-    vectors: DataFrame,
-    k: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-):
+def ivf_assign(vectors: DataFrame, k: int = 16):
     """IVF (inverted-file) coarse quantization: KMeans the corpus into
     ``k`` cells; ANN search then probes only the closest cell(s)
     instead of the full corpus — the classic alternative to LSH as
@@ -466,8 +450,8 @@ def ivf_assign(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    with_vec = vectors.withColumn("_v", array_to_vector(F.col(vec_col)))
-    km = KMeans(k=k, seed=seed, featuresCol="_v", predictionCol="cell")
+    with_vec = vectors.withColumn("_v", array_to_vector(F.col("embedding")))
+    km = KMeans(k=k, seed=42, featuresCol="_v", predictionCol="cell")
     model = km.fit(with_vec)
     assigned = model.transform(with_vec).drop("_v")
     centers = [list(map(float, c)) for c in model.clusterCenters()]
@@ -475,10 +459,7 @@ def ivf_assign(
 
 
 def ivf_seed_assign(
-    vectors: DataFrame,
-    k: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    vectors: DataFrame, k: int = 16
 ) -> tuple[DataFrame, list[tuple[int, list[float]]]]:
     """Deterministic IVF coarse quantization: the ``k`` cell centers
     are the corpus vectors with the smallest ``md5(vec_id)`` (an
@@ -504,14 +485,12 @@ def ivf_seed_assign(
     ``cell``, and the k×dim python seed list (broadcast-sized). No
     Python in the scan path; at 100 TB the assignment is one map-side
     pass (no shuffle)."""
-    seeds = _semdedup_seeds(vectors, k, vec_col, id_col)
-    return assign_to_seeds(vectors, seeds, vec_col=vec_col), seeds
+    seeds = _semdedup_seeds(vectors, k)
+    return assign_to_seeds(vectors, seeds), seeds
 
 
 def assign_to_seeds(
-    vectors: DataFrame,
-    seeds: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
+    vectors: DataFrame, seeds: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Assign every vector to its nearest seed out of a GIVEN seed
     list (highest 6dp-rounded cosine, ties to the smallest seed id) —
@@ -521,12 +500,10 @@ def assign_to_seeds(
     seeds from the grown corpus. Adds ``cell`` to every input column:
     the argmax of ``_seed_cosines``, one map-side pass, no shuffle."""
     return (
-        vectors.withColumn("_nv", _norm(F.col(vec_col)))
+        vectors.withColumn("_nv", _norm(F.col("embedding")))
         .withColumn(
             "cell",
-            -F.array_max(_seed_cosines(seeds, vec_col, "assign_to_seeds"))[
-                "negid"
-            ],
+            -F.array_max(_seed_cosines(seeds, "assign_to_seeds"))["negid"],
         )
         .drop("_nv")
     )
@@ -538,8 +515,6 @@ def ivf_seed_topk(
     query: list[float],
     k: int = 10,
     n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbours of ``query`` probing only the
@@ -551,13 +526,13 @@ def ivf_seed_topk(
     registered query instead excludes the query from the corpus before
     assignment)."""
     probe = [sid for sid, _ in _probe_seeds(seeds, query, n_probe)]
-    sim = _cosine_to_query(vec_col, [float(x) for x in query])
+    sim = _cosine_to_query("embedding", [float(x) for x in query])
     out = assigned.filter(F.col("cell").isin(probe))
     if exclude_id is not None:
-        out = out.filter(F.col(id_col) != exclude_id)
+        out = out.filter(F.col("vec_id") != exclude_id)
     return (
-        out.select(id_col, "cell", F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        out.select("vec_id", "cell", F.round(sim, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -570,7 +545,6 @@ def pq_subvectors(
     m_sub: int,
     d_sub: int,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     out_id: str = "vec_id",
 ) -> DataFrame:
     """``(out_id, m, sv)``: the vector split into ``m_sub`` contiguous
@@ -582,7 +556,7 @@ def pq_subvectors(
     # higher-order function (CodegenFallback) — same m_sub slices in
     # the same positions (r16, guide §1.2 per-task work)
     subs = F.array(
-        *[F.slice(F.col(vec_col), m * d_sub + 1, d_sub) for m in range(m_sub)]
+        *[F.slice(F.col("embedding"), m * d_sub + 1, d_sub) for m in range(m_sub)]
     )
     return vectors.select(
         F.col(id_col).alias(out_id), F.posexplode(subs).alias("m", "sv")
@@ -625,9 +599,6 @@ def pq_codebook_kmeans(
     vectors: DataFrame,
     n_centroids: int = 16,
     m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """TRAINED per-subspace PQ codebook — the FAISS-standard upgrade
     over the deterministic min-id codebook, added after the r9
@@ -651,9 +622,9 @@ def pq_codebook_kmeans(
     from pyspark.ml.functions import array_to_vector
 
     spark = vectors.sparkSession
-    dim = vectors.select(F.size(vec_col).alias("_sz")).first()["_sz"]
+    dim = vectors.select(F.size("embedding").alias("_sz")).first()["_sz"]
     d_sub = dim // m_sub
-    sv = pq_subvectors(vectors, m_sub, d_sub, id_col, vec_col).withColumn(
+    sv = pq_subvectors(vectors, m_sub, d_sub).withColumn(
         "_v", array_to_vector("sv")
     )
     sv = sv.cache()
@@ -661,7 +632,7 @@ def pq_codebook_kmeans(
     try:
         for m in range(m_sub):
             model = KMeans(
-                k=n_centroids, seed=seed, featuresCol="_v", predictionCol="_c"
+                k=n_centroids, seed=42, featuresCol="_v", predictionCol="_c"
             ).fit(sv.filter(F.col("m") == m))
             rows += [
                 (ci, m, [float(x) for x in v])
@@ -676,8 +647,6 @@ def pq_distances(
     vectors: DataFrame,
     n_centroids: int = 16,
     m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """``(vec_id, m, c, d2)``: squared L2 distance from every vector's
@@ -692,31 +661,33 @@ def pq_distances(
     instead — better recall, no SQL oracle. Either way the codebook
     is ``n_centroids × m_sub`` tiny rows and BROADCASTS into the
     corpus scan; at 100 TB the distance table is one map-side pass."""
-    dim = vectors.select(F.size(vec_col).alias("_sz")).first()["_sz"]
+    dim = vectors.select(F.size("embedding").alias("_sz")).first()["_sz"]
     d_sub = dim // m_sub
     if codebook is None:
         seeds = (
-            vectors.select(id_col, vec_col).orderBy(id_col).limit(n_centroids)
+            vectors.select("vec_id", "embedding")
+            .orderBy("vec_id")
+            .limit(n_centroids)
         )
-        codebook = pq_subvectors(
-            seeds, m_sub, d_sub, id_col, vec_col, out_id="c"
-        ).select("c", "m", F.col("sv").alias("cv"))
-    sv = pq_subvectors(vectors, m_sub, d_sub, id_col, vec_col, out_id=id_col)
+        codebook = pq_subvectors(seeds, m_sub, d_sub, out_id="c").select(
+            "c", "m", F.col("sv").alias("cv")
+        )
+    sv = pq_subvectors(vectors, m_sub, d_sub)
     return sv.join(F.broadcast(codebook), "m").select(
-        id_col, "m", "c", _sq_l2_cols("sv", "cv", d_sub).alias("d2")
+        "vec_id", "m", "c", _sq_l2_cols("sv", "cv", d_sub).alias("d2")
     )
 
 
-def pq_encode(dists: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """``(id_col, m, code)``: per subspace, the nearest codebook entry
+def pq_encode(dists: DataFrame) -> DataFrame:
+    """``(vec_id, m, code)``: per subspace, the nearest codebook entry
     (min squared-L2, ties to the smallest centroid id via lexicographic
-    struct min). The groupBy is keyed on (id_col, m) — hash-partitioned,
+    struct min). The groupBy is keyed on (vec_id, m) — hash-partitioned,
     map-side combinable."""
     best = F.min(F.struct(F.col("d2"), F.col("c"))).alias("best")
     return (
-        dists.groupBy(id_col, "m")
+        dists.groupBy("vec_id", "m")
         .agg(best)
-        .select(id_col, "m", F.col("best.c").alias("code"))
+        .select("vec_id", "m", F.col("best.c").alias("code"))
     )
 
 
@@ -726,8 +697,6 @@ def pq_adc_topk(
     k: int = 10,
     n_centroids: int = 16,
     m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: the query keeps full precision,
@@ -740,11 +709,9 @@ def pq_adc_topk(
     (the 100 TB memory win PQ exists for: 64 float32 dims → 8 bytes);
     the per-vector sum is a groupBy on vec_id, map-side combinable.
     No full-precision corpus vector is touched after encoding."""
-    dists = pq_distances(
-        vectors, n_centroids, m_sub, id_col, vec_col, codebook=codebook
-    )
-    codes = pq_encode(dists, id_col)
-    lut = dists.filter(F.col(id_col) == query_id).select(
+    dists = pq_distances(vectors, n_centroids, m_sub, codebook=codebook)
+    codes = pq_encode(dists)
+    lut = dists.filter(F.col("vec_id") == query_id).select(
         F.col("m").alias("_lm"), F.col("c").alias("_lc"), F.col("d2").alias("qd")
     )
     return (
@@ -752,17 +719,17 @@ def pq_adc_topk(
             F.broadcast(lut),
             (F.col("m") == F.col("_lm")) & (F.col("code") == F.col("_lc")),
         )
-        .filter(F.col(id_col) != query_id)
-        .groupBy(id_col)
+        .filter(F.col("vec_id") != query_id)
+        .groupBy("vec_id")
         .agg(F.sum("qd").alias("_s"))
-        .orderBy(F.asc("_s"), F.asc(id_col))
+        .orderBy(F.asc("_s"), F.asc("vec_id"))
         .limit(k)
-        .select(id_col, F.round(F.col("_s"), 6).alias("adc_dist"))
+        .select("vec_id", F.round(F.col("_s"), 6).alias("adc_dist"))
     )
 
 
-def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """L2-normalize a vector column in place (``array<double>`` out;
+def l2_normalize(df: DataFrame) -> DataFrame:
+    """L2-normalize the ``embedding`` column in place (``array<double>`` out;
     zero vectors pass through unscaled). One fused column expression —
     map-side, codegen, no Python. The cosine-consistency device for
     ADC (r12 VERDICT ask #4): on unit vectors ‖a−b‖² = 2·(1−cosθ), so
@@ -771,13 +738,13 @@ def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     use. Unnormalized, the two orders diverge on norm spread, which
     the r12 refine measurement identified as a big slice of the
     0.85→0.99 low-rank ceiling gap."""
-    nrm = _norm(F.col(vec_col))
+    vec = F.col("embedding")
+    nrm = _norm(vec)
     return df.withColumn(
-        vec_col,
+        "embedding",
         F.when(
-            nrm > 0,
-            F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm),
-        ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double"))),
+            nrm > 0, F.transform(vec, lambda x: x.cast("double") / nrm)
+        ).otherwise(F.transform(vec, lambda x: x.cast("double"))),
     )
 
 
@@ -787,8 +754,6 @@ def ivf_pq_index(
     k_coarse: int | str = 16,
     n_centroids: int = 16,
     m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: str = "seed",
     coarse: str = "seed",
     normalize: bool = False,
@@ -799,9 +764,9 @@ def ivf_pq_index(
     — and persisted — separately, the way a 100 TB deployment runs
     them). Returns a dict:
 
-    - ``codes``: ``(id_col, m, code)`` — m_sub small-int PQ codes per
+    - ``codes``: ``(vec_id, m, code)`` — m_sub small-int PQ codes per
       vector over RESIDUALS v − seed(cell) (the FAISS shape).
-    - ``cells``: ``(id_col, cell)`` — the coarse IVF assignment.
+    - ``cells``: ``(vec_id, cell)`` — the coarse IVF assignment.
     - ``cb``: ``(c, m, cv)`` — the residual codebook's subvectors
       (n_centroids × m_sub tiny rows, broadcastable).
     - ``seeds``: the k_coarse python-list coarse centers (driver-side
@@ -838,9 +803,9 @@ def ivf_pq_index(
     ceiling, 0.99@4 low-rank; SCALE.md r13)."""
     spark = vectors.sparkSession
     if normalize:
-        vectors = l2_normalize(vectors, vec_col=vec_col)
+        vectors = l2_normalize(vectors)
     corpus = (
-        vectors.filter(F.col(id_col) != exclude_id)
+        vectors.filter(F.col("vec_id") != exclude_id)
         if exclude_id is not None
         else vectors
     )
@@ -862,7 +827,7 @@ def ivf_pq_index(
         and codebook != "kmeans"
         and corpus.rdd.getNumPartitions() < par
     ):
-        corpus = corpus.repartition(par, F.col(id_col))
+        corpus = corpus.repartition(par, F.col("vec_id"))
     if k_coarse == "auto":
         # measured sizing rule (r14 VERDICT item 1 / r15 ask #5,
         # SCALE.md): on clustered corpora a FIXED k_coarse leaves
@@ -879,14 +844,10 @@ def ivf_pq_index(
     elif not isinstance(k_coarse, int):
         raise ValueError(f"k_coarse must be an int or 'auto': {k_coarse!r}")
     if coarse == "kmeans":
-        assigned, centers = ivf_assign(
-            corpus, k=k_coarse, vec_col=vec_col, id_col=id_col
-        )
+        assigned, centers = ivf_assign(corpus, k=k_coarse)
         seeds = [(i, c) for i, c in enumerate(centers)]
     elif coarse == "seed":
-        assigned, seeds = ivf_seed_assign(
-            corpus, k=k_coarse, vec_col=vec_col, id_col=id_col
-        )
+        assigned, seeds = ivf_seed_assign(corpus, k=k_coarse)
     else:
         raise ValueError(f"coarse must be seed|kmeans: {coarse}")
     dim = len(seeds[0][1])
@@ -897,33 +858,24 @@ def ivf_pq_index(
     # upstream re-executes per consumer (measured 1.6× the query wall
     # at sf0.1). cache() per the r8 rule (SCALE.md): CacheManager
     # dedupes by plan across calls and serves column-pruned reads.
-    res = _residuals(assigned, seeds, id_col, "cell", vec_col, dim).cache()
-    res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
+    res = _residuals(assigned, seeds, "vec_id", "cell", "embedding", dim).cache()
+    res_named = res.select("vec_id", F.col("_res").alias("embedding"))
     if codebook == "kmeans":
         # trained residual codebook (pq_codebook_kmeans): the recall
         # path — see the r9 recall table for why the deterministic
         # codebook is a reproducibility device, not a retrieval one
-        cb = pq_codebook_kmeans(
-            res_named, n_centroids, m_sub, id_col, vec_col
-        )
+        cb = pq_codebook_kmeans(res_named, n_centroids, m_sub)
     elif codebook == "seed":
         cb = pq_subvectors(
-            res_named.orderBy(id_col).limit(n_centroids),
+            res_named.orderBy("vec_id").limit(n_centroids),
             m_sub,
             d_sub,
-            id_col,
-            vec_col,
             out_id="c",
         ).select("c", "m", F.col("sv").alias("cv"))
     else:
         raise ValueError(f"codebook must be seed|kmeans: {codebook}")
-    codes = pq_encode(
-        pq_distances(
-            res_named, n_centroids, m_sub, id_col, vec_col, codebook=cb
-        ),
-        id_col,
-    )
-    cells = res.select(id_col, "cell")
+    codes = pq_encode(pq_distances(res_named, n_centroids, m_sub, codebook=cb))
+    cells = res.select("vec_id", "cell")
     return {
         "codes": codes,
         "cells": cells,
@@ -936,7 +888,7 @@ def ivf_pq_index(
     }
 
 
-def ivf_pq_index_write(index: dict, path: str, id_col: str = "vec_id") -> None:
+def ivf_pq_index_write(index: dict, path: str) -> None:
     """Persist an ``ivf_pq_index`` in the CELL-PARTITIONED layout the
     100 TB deployment wants (SCALE.md r9 asserted "probes become
     partition-pruned reads when the index is written bucketed by
@@ -973,7 +925,7 @@ def ivf_pq_index_write(index: dict, path: str, id_col: str = "vec_id") -> None:
     tmp = final + "__building"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)  # leftover of a crashed prior write
-    coded = index["codes"].join(index["cells"], id_col)
+    coded = index["codes"].join(index["cells"], "vec_id")
     coded.write.mode("overwrite").partitionBy("cell").parquet(
         os.path.join(tmp, "coded")
     )
@@ -1056,8 +1008,6 @@ def ivf_pq_index_append(
     spark,
     path: str,
     new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> int:
     """Incremental index maintenance (r9 VERDICT ask #2): encode ONLY
     the new vectors with the index's EXISTING coarse seeds and
@@ -1087,14 +1037,14 @@ def ivf_pq_index_append(
     number of appended rows."""
     index = ivf_pq_index_load(spark, path)
     m_sub, dim = index["m_sub"], index["dim"]
-    delta = new_vectors.select(id_col, vec_col)
+    delta = new_vectors.select("vec_id", "embedding")
     if index.get("normalized"):
         # normalized index: deltas enter the same unit-sphere space the
         # codes live in (frozen-quantizer contract)
-        delta = l2_normalize(delta, vec_col=vec_col)
+        delta = l2_normalize(delta)
     sz = delta.agg(
-        F.min(F.size(vec_col)).alias("_lo"),
-        F.max(F.size(vec_col)).alias("_hi"),
+        F.min(F.size("embedding")).alias("_lo"),
+        F.max(F.size("embedding")).alias("_hi"),
         F.count(F.lit(1)).alias("_n"),
     ).first()
     if sz["_n"] == 0:
@@ -1106,20 +1056,11 @@ def ivf_pq_index_append(
             f"{dim} — appending would mis-encode silently (subvector "
             "slices shift)"
         )
-    assigned = assign_to_seeds(delta, index["seeds"], vec_col=vec_col)
-    res = _residuals(assigned, index["seeds"], id_col, "cell", vec_col, dim)
-    res_named = res.select(F.col(id_col), F.col("_res").alias(vec_col))
-    codes = pq_encode(
-        pq_distances(
-            res_named,
-            m_sub=m_sub,
-            id_col=id_col,
-            vec_col=vec_col,
-            codebook=index["cb"],
-        ),
-        id_col,
-    )
-    coded = codes.join(res.select(id_col, "cell"), id_col)
+    assigned = assign_to_seeds(delta, index["seeds"])
+    res = _residuals(assigned, index["seeds"], "vec_id", "cell", "embedding", dim)
+    res_named = res.select("vec_id", F.col("_res").alias("embedding"))
+    codes = pq_encode(pq_distances(res_named, m_sub=m_sub, codebook=index["cb"]))
+    coded = codes.join(res.select("vec_id", "cell"), "vec_id")
     coded.write.mode("append").partitionBy("cell").parquet(
         os.path.join(path, "coded")
     )
@@ -1131,8 +1072,6 @@ def ivf_pq_probe(
     q: list[float],
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """The PROBE half of ``ivf_pq_adc_topk``: route the query to its
@@ -1167,11 +1106,9 @@ def ivf_pq_probe(
         (int(c), [qi - vi for qi, vi in zip(q, v)]) for c, v in probe
     ]
     qres_df = spark.createDataFrame(
-        qres_rows, f"qcell long, {vec_col} array<double>"
+        qres_rows, "qcell long, embedding array<double>"
     )
-    qsub = pq_subvectors(
-        qres_df, m_sub, d_sub, id_col="qcell", vec_col=vec_col, out_id="qcell"
-    )
+    qsub = pq_subvectors(qres_df, m_sub, d_sub, id_col="qcell", out_id="qcell")
     lut = qsub.join(F.broadcast(index["cb"]), "m").select(
         F.col("qcell"),
         F.col("m").alias("_lm"),
@@ -1185,9 +1122,9 @@ def ivf_pq_probe(
             F.col("cell").isin([int(c) for c, _ in probe])
         )
     else:
-        scored = index["codes"].join(index["cells"], id_col)
+        scored = index["codes"].join(index["cells"], "vec_id")
     if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
+        scored = scored.filter(F.col("vec_id") != exclude_id)
     return (
         scored.join(
             F.broadcast(lut),
@@ -1195,11 +1132,11 @@ def ivf_pq_probe(
             & (F.col("m") == F.col("_lm"))
             & (F.col("code") == F.col("_lc")),
         )
-        .groupBy(id_col, "cell")
+        .groupBy("vec_id", "cell")
         .agg(F.sum("qd").alias("_s"))
-        .orderBy(F.asc("_s"), F.asc(id_col))
+        .orderBy(F.asc("_s"), F.asc("vec_id"))
         .limit(k)
-        .select(id_col, "cell", F.round(F.col("_s"), 6).alias("adc_dist"))
+        .select("vec_id", "cell", F.round(F.col("_s"), 6).alias("adc_dist"))
     )
 
 
@@ -1208,9 +1145,6 @@ def ivf_pq_probe_batch(
     queries: DataFrame,
     k: int = 10,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     exclude_self: bool = False,
 ) -> DataFrame:
     """Probe the IVF-PQ index for a WHOLE FRAME of queries in one
@@ -1233,12 +1167,12 @@ def ivf_pq_probe_batch(
       (cell, m, code), groupBy (query, candidate) LUT-sum, then
       row_number ≤ k per query — no per-query jobs, no driver loop.
 
-    ``queries``: a frame with ``query_id_col`` + ``vec_col``. The
+    ``queries``: a frame with ``query_id`` + ``embedding``. The
     index is the SHARED full-corpus one (a deployment does not
     rebuild the index per query); ``exclude_self=True`` drops the
     candidate equal to the query id (self-match), matching the
-    recall protocol. Output: ``(query_id_col, id_col, cell,
-    adc_dist)``, ≤ k rows per query."""
+    recall protocol. Output: ``(query_id, vec_id, cell, adc_dist)``,
+    ≤ k rows per query."""
     from pyspark.sql import Window
 
     _check_n_probe(n_probe)
@@ -1248,12 +1182,12 @@ def ivf_pq_probe_batch(
     if index.get("normalized"):
         # one fused map-side expression over the QUERY frame (routing
         # is scale-invariant; the residuals below are what change)
-        queries = l2_normalize(queries, vec_col=vec_col)
-    scored_seeds = _seed_cosines(seeds, vec_col, "ivf_pq_probe_batch")
+        queries = l2_normalize(queries)
+    scored_seeds = _seed_cosines(seeds, "ivf_pq_probe_batch")
     top_cells = F.slice(F.sort_array(scored_seeds, asc=False), 1, n_probe)
-    probed = queries.withColumn("_nv", _norm(F.col(vec_col))).select(
-        F.col(query_id_col).alias("_qid"),
-        F.col(vec_col).alias("_qv"),
+    probed = queries.withColumn("_nv", _norm(F.col("embedding"))).select(
+        F.col("query_id").alias("_qid"),
+        F.col("embedding").alias("_qv"),
         F.explode(
             F.transform(top_cells, lambda s: -s["negid"])
         ).alias("qcell"),
@@ -1286,7 +1220,7 @@ def ivf_pq_probe_batch(
         ]
         scored = index["coded"].filter(F.col("cell").isin(probed_cells))
     else:
-        scored = index["codes"].join(index["cells"], id_col)
+        scored = index["codes"].join(index["cells"], "vec_id")
     joined = scored.join(
         lut,
         (F.col("cell") == F.col("qcell"))
@@ -1294,17 +1228,17 @@ def ivf_pq_probe_batch(
         & (F.col("code") == F.col("_lc")),
     )
     if exclude_self:
-        joined = joined.filter(F.col(id_col) != F.col("_qid"))
-    agg = joined.groupBy("_qid", id_col, "cell").agg(
+        joined = joined.filter(F.col("vec_id") != F.col("_qid"))
+    agg = joined.groupBy("_qid", "vec_id", "cell").agg(
         F.sum("qd").alias("_s")
     )
-    w = Window.partitionBy("_qid").orderBy(F.asc("_s"), F.asc(id_col))
+    w = Window.partitionBy("_qid").orderBy(F.asc("_s"), F.asc("vec_id"))
     return (
         agg.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= k)
         .select(
-            F.col("_qid").alias(query_id_col),
-            id_col,
+            F.col("_qid").alias("query_id"),
+            "vec_id",
             "cell",
             F.round(F.col("_s"), 6).alias("adc_dist"),
         )
@@ -1319,8 +1253,6 @@ def ivf_pq_adc_topk(
     n_probe: int = 2,
     n_centroids: int = 16,
     m_sub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     normalize: bool = False,
 ) -> DataFrame:
     """IVF-PQ with asymmetric distance (Jégou et al. 2011 §III —
@@ -1356,12 +1288,11 @@ def ivf_pq_adc_topk(
     excluded from the corpus before seed/codebook selection, matching
     ``sim_ivf_topk``'s convention)."""
     q_row = (
-        vectors.filter(F.col(id_col) == query_id).select(vec_col).first()
+        vectors.filter(F.col("vec_id") == query_id).select("embedding").first()
     )
     if q_row is None:
         raise ValueError(
-            f"ivf_pq_adc_topk: query {id_col}={query_id} not found in the "
-            "corpus"
+            f"ivf_pq_adc_topk: query vec_id={query_id} not found in the corpus"
         )
     q = [float(x) for x in q_row[0]]
     index = ivf_pq_index(
@@ -1370,13 +1301,9 @@ def ivf_pq_adc_topk(
         k_coarse=k_coarse,
         n_centroids=n_centroids,
         m_sub=m_sub,
-        id_col=id_col,
-        vec_col=vec_col,
         normalize=normalize,
     )
-    return ivf_pq_probe(
-        index, q, k=k, n_probe=n_probe, id_col=id_col, vec_col=vec_col
-    )
+    return ivf_pq_probe(index, q, k=k, n_probe=n_probe)
 
 
 def ivf_pq_refine_topk(
@@ -1386,8 +1313,6 @@ def ivf_pq_refine_topk(
     k: int = 10,
     refine: int = 100,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: int | None = None,
 ) -> DataFrame:
     """ADC probe → exact re-rank (the FAISS ``refine`` stage, Jégou
@@ -1410,19 +1335,13 @@ def ivf_pq_refine_topk(
     Returns ``(vec_id, cosine)`` — the exact metric, unlike the ADC
     distance the unrefined probe returns."""
     adc = ivf_pq_probe(
-        index,
-        q,
-        k=refine,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-        exclude_id=exclude_id,
+        index, q, k=refine, n_probe=n_probe, exclude_id=exclude_id
     )
-    sim = _cosine_to_query(vec_col, [float(x) for x in q])
+    sim = _cosine_to_query("embedding", [float(x) for x in q])
     return (
-        full_vectors.join(F.broadcast(adc.select(id_col)), id_col)
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        full_vectors.join(F.broadcast(adc.select("vec_id")), "vec_id")
+        .select("vec_id", F.round(sim, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -1431,10 +1350,7 @@ def ivf_pq_refine_topk(
 
 
 def assign_cells_fold(
-    vectors: DataFrame,
-    seeds: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    vectors: DataFrame, seeds: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Seed-cosine cell assignment as a pure-column expression: the
     argmax of ``_seed_cosines`` — the BIT-REPRODUCIBLE lane the
@@ -1444,20 +1360,17 @@ def assign_cells_fold(
     more than ``MAX_FOLD_SEED_LITERALS`` embedded seed floats (the
     literal lives in the plan; plan build is driver-side and grows
     with it). Returns ``(_vid, _emb, cell, _cent)``."""
-    best = F.array_max(_seed_cosines(seeds, vec_col, "assign_cells_fold"))
-    return vectors.withColumn("_nv", _norm(F.col(vec_col))).select(
-        F.col(id_col).alias("_vid"),
-        F.col(vec_col).alias("_emb"),
+    best = F.array_max(_seed_cosines(seeds, "assign_cells_fold"))
+    return vectors.withColumn("_nv", _norm(F.col("embedding"))).select(
+        F.col("vec_id").alias("_vid"),
+        F.col("embedding").alias("_emb"),
         (-best["negid"]).alias("cell"),
         best["c"].alias("_cent"),
     )
 
 
 def assign_cells_blas(
-    vectors: DataFrame,
-    seeds: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    vectors: DataFrame, seeds: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Seed-cosine cell assignment as ONE BLAS matmul per Arrow batch
     (``mapInPandas``, the ``emb_covariance_mapred`` pattern) — the
@@ -1489,7 +1402,7 @@ def assign_cells_blas(
     sids = np.array([s for s, _ in seeds_sorted], dtype=np.int64)
     S = np.array([v for _, v in seeds_sorted], dtype=np.float64)
     Sn = S / np.linalg.norm(S, axis=1, keepdims=True)
-    elem = vectors.schema[vec_col].dataType.simpleString()
+    elem = vectors.schema["embedding"].dataType.simpleString()
     schema = f"_vid long, _emb {elem}, cell long, _cent double"
 
     def run(batches):
@@ -1499,19 +1412,19 @@ def assign_cells_blas(
             if not len(pdf):
                 continue
             M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             cells, cents = _nearest_seeds(M, Sn, sids)
             yield pd.DataFrame(
                 {
-                    "_vid": pdf[id_col].values,
-                    "_emb": pdf[vec_col].values,
+                    "_vid": pdf["vec_id"].values,
+                    "_emb": pdf["embedding"].values,
                     "cell": cells,
                     "_cent": cents,
                 }
             )
 
-    return vectors.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return vectors.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
 def _assigner(assign: str):
@@ -1536,17 +1449,17 @@ def _assigner(assign: str):
 _MAX_ISIN_COARSE_IDS = 4096
 
 
-def _empty_drops(vectors: DataFrame, id_col: str) -> DataFrame:
+def _empty_drops(vectors: DataFrame) -> DataFrame:
     """The n=0 result of every SemDeDup entry point: an empty frame
     with the drop-list schema ``(id, cell, cent_cos, n_dominators,
     first_keeper)``. An empty corpus yields an empty seed list, which
     the assignment lanes correctly refuse (numpy AxisError otherwise
     — r7 ADVICE); the DEDUP-level answer is simply "nothing to drop",
     decided here before any lane is entered."""
-    idt = vectors.schema[id_col].dataType
+    idt = vectors.schema["vec_id"].dataType
     schema = T.StructType(
         [
-            T.StructField(id_col, idt),
+            T.StructField("vec_id", idt),
             T.StructField("cell", T.LongType()),
             T.StructField("cent_cos", T.DoubleType()),
             T.StructField("n_dominators", T.LongType()),
@@ -1560,8 +1473,6 @@ def semantic_dedup_hier_drops(
     vectors: DataFrame,
     cell_size: int = 32,
     threshold: float = 0.3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup with k ∝ n — the constant-cell-size lane: k =
     max(16, ⌈n/cell_size⌉) seeds keep the EXPECTED cell size
@@ -1588,15 +1499,15 @@ def semantic_dedup_hier_drops(
 
     n = vectors.count()
     if n == 0:
-        return _empty_drops(vectors, id_col)
+        return _empty_drops(vectors)
     k = max(16, math.ceil(n / cell_size))
     k1 = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-    coarse = sorted(_semdedup_seeds(vectors, k1, vec_col, id_col))
-    sr = seed_routing_frame(vectors, k, coarse, vec_col, id_col)
+    coarse = sorted(_semdedup_seeds(vectors, k1))
+    sr = seed_routing_frame(vectors, k, coarse)
     return _drops_from_assigned(
-        assign_cells_hier_cogroup(vectors, coarse, sr, vec_col, id_col),
+        assign_cells_hier_cogroup(vectors, coarse, sr),
         threshold,
-        id_col,
+        "vec_id",
         dim=len(coarse[0][1]),
     )
 
@@ -1605,8 +1516,6 @@ def assign_cells_hier_cogroup(
     vectors: DataFrame,
     coarse: list[tuple[int, list[float]]],
     seed_routing: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """DISTRIBUTED two-level assignment: level 1 routes every
     vector to one of the k1 COARSE centers (``assign_cells_blas``
@@ -1629,10 +1538,10 @@ def assign_cells_hier_cogroup(
     seed. Returns ``(_vid, _emb, cell, _cent)``."""
     import numpy as np
 
-    lvl1 = assign_cells_blas(vectors, coarse, vec_col, id_col).select(
+    lvl1 = assign_cells_blas(vectors, coarse).select(
         "_vid", "_emb", F.col("cell").alias("coarse")
     )
-    elem = vectors.schema[vec_col].dataType.simpleString()
+    elem = vectors.schema["embedding"].dataType.simpleString()
     schema = f"_vid long, _emb {elem}, cell long, _cent double"
 
     def fn(_key, left, right):
@@ -1676,8 +1585,6 @@ def seed_routing_frame(
     vectors: DataFrame,
     k: int,
     coarse: list[tuple[int, list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """The DISTRIBUTED seed-routing frame ``(coarse, _sid, _svec)``:
     re-derive the k md5-ordered seeds as a DataFrame (``_seed_frame``
@@ -1708,10 +1615,10 @@ def seed_routing_frame(
     range-partition + per-partition-count prefix-sum pattern the
     repo already uses in ``pack_token_shards``."""
     spark = vectors.sparkSession
-    seeds_df = _seed_frame(vectors, k, vec_col, id_col).repartition(
-        spark.sparkContext.defaultParallelism, F.col(id_col)
+    seeds_df = _seed_frame(vectors, k).repartition(
+        spark.sparkContext.defaultParallelism, F.col("vec_id")
     )
-    routed = assign_cells_blas(seeds_df, coarse, vec_col, id_col)
+    routed = assign_cells_blas(seeds_df, coarse)
     coarse_ids = [s for s, _ in coarse]
     if len(coarse_ids) <= _MAX_ISIN_COARSE_IDS:
         is_coarse = F.col("_vid").isin(coarse_ids)
@@ -1736,8 +1643,6 @@ def semantic_dedup_drops(
     vectors: DataFrame,
     k: int | None = 16,
     threshold: float = 0.3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     assign: str = "fold",
 ) -> DataFrame:
     """SemDeDup (arXiv:2303.09540): cluster the corpus, compare pairs
@@ -1789,14 +1694,11 @@ def semantic_dedup_drops(
     identical away from 6-dp rounding ties (last-ulp summation-order
     band, pinned by a tolerance test)."""
     assigner = _assigner(assign)
-    seeds = _semdedup_seeds(vectors, k, vec_col, id_col)
+    seeds = _semdedup_seeds(vectors, k)
     if not seeds:
-        return _empty_drops(vectors, id_col)
+        return _empty_drops(vectors)
     return _drops_from_assigned(
-        assigner(vectors, seeds, vec_col, id_col),
-        threshold,
-        id_col,
-        dim=len(seeds[0][1]),
+        assigner(vectors, seeds), threshold, "vec_id", dim=len(seeds[0][1])
     )
 
 
@@ -1820,22 +1722,16 @@ def semantic_dedup_drops(
 SEMDEDUP_CROSSOVER_N = 4000
 
 
-def semantic_dedup(
-    vectors: DataFrame,
-    threshold: float = 0.3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cell_size: int = 32,
-) -> DataFrame:
-    """The single SemDeDup front door: one count job picks the
-    measured-fastest lane (see ``SEMDEDUP_CROSSOVER_N``):
+def semantic_dedup(vectors: DataFrame) -> DataFrame:
+    """The single SemDeDup front door at pair threshold 0.3: one count
+    job picks the measured-fastest lane (see ``SEMDEDUP_CROSSOVER_N``):
 
     ==========  =====================  ================================
     corpus      lane                   why
     ==========  =====================  ================================
     n ≤ 4,000   flat BLAS (k=√n)       measured faster in this range
                                        AND exact vs the fold/SQL anchors
-    n > 4,000   hier (k=n/cell_size)   6.4× faster one decade up, gap
+    n > 4,000   hier (k=n/32)          6.4× faster one decade up, gap
                                        widening as √n; linear pairs
     ==========  =====================  ================================
 
@@ -1847,22 +1743,11 @@ def semantic_dedup(
 
     n = vectors.count()
     if n > SEMDEDUP_CROSSOVER_N:
-        return semantic_dedup_hier_drops(
-            vectors,
-            cell_size=cell_size,
-            threshold=threshold,
-            vec_col=vec_col,
-            id_col=id_col,
-        )
+        return semantic_dedup_hier_drops(vectors)
     # reuse the count: k=⌈√n⌉ per the flat lanes' auto rule, skipping
     # _semdedup_seeds' second count job
     return semantic_dedup_drops(
-        vectors,
-        k=max(16, math.isqrt(max(n, 1))),
-        threshold=threshold,
-        vec_col=vec_col,
-        id_col=id_col,
-        assign="blas",
+        vectors, k=max(16, math.isqrt(max(n, 1))), assign="blas"
     )
 
 
@@ -2009,9 +1894,7 @@ def _drops_from_assigned(
 # --- distributed covariance / PCA (two physical strategies) --------------
 
 
-def covariance_upper(
-    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def covariance_upper(vectors: DataFrame) -> DataFrame:
     """Upper-triangular sample covariance of a d-dim embedding column
     as ``(i, j, cov)`` rows, i ≤ j — the input PCA consumes (eigen of
     a d×d matrix is a driver-side numpy call on d²·8 bytes, NOT a
@@ -2027,8 +1910,8 @@ def covariance_upper(
     strategy (n·d² never materialized), see ``covariance_mapred`` —
     same output, same oracle."""
     ex = vectors.select(
-        F.col(id_col).alias("_vid"),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "x"),
+        F.col("vec_id").alias("_vid"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("i", "x"),
     )
     pairs = ex.alias("l").join(
         ex.select(
@@ -2051,9 +1934,7 @@ def covariance_upper(
     return agg.select("i", "j", (F.round(cov, 6) + F.lit(0.0)).alias("cov"))
 
 
-def covariance_mapred(
-    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def covariance_mapred(vectors: DataFrame) -> DataFrame:
     """Same contract as ``covariance_upper``, different physical plan:
     each partition computes its LOCAL d×d outer-product sums with one
     numpy ``M.T @ M`` (Arrow-batched mapInPandas), emits d(d+1)/2
@@ -2075,7 +1956,7 @@ def covariance_mapred(
             if not len(pdf):
                 continue
             M = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
             if S is None:
                 d = M.shape[1]
@@ -2097,7 +1978,7 @@ def covariance_mapred(
                 }
             )
 
-    parts = vectors.select(vec_col).mapInPandas(partials, schema=d_schema)
+    parts = vectors.select("embedding").mapInPandas(partials, schema=d_schema)
     agg = parts.groupBy("i", "j").agg(
         F.sum("n").alias("_n"),
         F.sum("sx").alias("_sx"),

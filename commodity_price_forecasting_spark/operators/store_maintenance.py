@@ -18,7 +18,7 @@ mechanized reader. This module adds both halves:
   operating rule as code instead of prose.
 
 - ``*_store_compact(path)`` — rewrite an artifact's many small files
-  into ``ceil(bytes / target_file_bytes)`` files, preserving content
+  into ``ceil(bytes / TARGET_FILE_BYTES)`` files, preserving content
   exactly (verdict equality before == after is pinned in
   tests/test_store_maintenance.py). The rewrite goes to a sibling
   ``__compacting`` directory and swaps in via rename — crash before
@@ -137,15 +137,13 @@ def _file_stats(root: str) -> dict:
     }
 
 
-def _compact_would_run(
-    stats: dict, partition_col: str | None, target_file_bytes: int = TARGET_FILE_BYTES
-) -> bool:
+def _compact_would_run(stats: dict, partition_col: str | None) -> bool:
     """``_compact_artifact``'s own go/skip decision, evaluated
     read-only — SHARED with the health reports so a recommendation
     the compactor would skip can never fire (r13 VERDICT ask #6: the
     old health rule recommended ``bands`` forever once it reached one
     file per partition, and the auto-hook would spin on the no-op)."""
-    n_target = max(1, math.ceil(stats["n_bytes"] / target_file_bytes))
+    n_target = max(1, math.ceil(stats["n_bytes"] / TARGET_FILE_BYTES))
     already_partition_tight = partition_col is not None and all(
         c <= 1 for c in stats["files_per_partition"].values()
     )
@@ -290,17 +288,11 @@ def _swap_in(tmp_dir: str, final_dir: str) -> None:
     shutil.rmtree(old)
 
 
-def _compact_artifact(
-    spark,
-    art_dir: str,
-    *,
-    partition_col: str | None,
-    target_file_bytes: int,
-) -> dict:
+def _compact_artifact(spark, art_dir: str, partition_col: str | None) -> dict:
     """Rewrite one artifact to ~target-size files. Returns
     ``{"files_before", "files_after", "skipped"}``."""
     before = _file_stats(art_dir)
-    n_target = max(1, math.ceil(before["n_bytes"] / target_file_bytes))
+    n_target = max(1, math.ceil(before["n_bytes"] / TARGET_FILE_BYTES))
     already_partition_tight = partition_col is not None and all(
         c <= 1 for c in before["files_per_partition"].values()
     )
@@ -333,9 +325,7 @@ def _compact_artifact(
     }
 
 
-def dedup_store_compact(
-    spark, path: str, target_file_bytes: int = TARGET_FILE_BYTES
-) -> dict:
+def dedup_store_compact(spark, path: str) -> dict:
     """Compact every ``dedup_store`` artifact in place; content (and
     therefore every future ``dedup_delta`` verdict) is unchanged —
     pinned in tests/test_store_maintenance.py. Holds the store's
@@ -353,17 +343,13 @@ def dedup_store_compact(
         ):
             art = os.path.join(path, name)
             if os.path.isdir(art):
-                out[name] = _compact_artifact(
-                    spark, art, partition_col=part_col,
-                    target_file_bytes=target_file_bytes,
-                )
+                out[name] = _compact_artifact(spark, art, part_col)
         return out
 
 
 def semantic_store_compact(
     spark,
     path: str,
-    target_file_bytes: int = TARGET_FILE_BYTES,
     gc_ledgers: bool = False,
 ) -> dict:
     """Compact the semantic store's cell partitions (and inversion
@@ -387,10 +373,7 @@ def semantic_store_compact(
         for name, part_col in (("cells", "cell"), ("inversions", None)):
             art = os.path.join(path, name)
             if os.path.isdir(art):
-                out[name] = _compact_artifact(
-                    spark, art, partition_col=part_col,
-                    target_file_bytes=target_file_bytes,
-                )
+                out[name] = _compact_artifact(spark, art, part_col)
         commits_dir = os.path.join(path, "commits")
         if os.path.isdir(commits_dir):
             out["commits"] = {
@@ -405,14 +388,14 @@ def semantic_store_compact(
         return out
 
 
-def dedup_store_rebuild(spark, path: str, docs: DataFrame, **overrides) -> dict:
+def dedup_store_rebuild(spark, path: str, docs: DataFrame) -> dict:
     """EXECUTE the rebuild the health report recommends (the missing
     third verb: the r11 stores DETECT divergence and r12's health
     RECOMMENDS; this performs it): a full ``dedup_store_build`` over
     the CURRENT corpus — the caller supplies ``docs`` because the
     store holds only hashes, never text — into a sibling directory,
     swapped in atomically-ish (the compaction swap), parameters
-    inherited from the old store's meta unless overridden. The bridge
+    inherited from the old store's meta. The bridge
     ledger is cleared by construction: the rebuild merges bridged
     clusters into real canonicals, so the divergence it recorded no
     longer exists. Returns the build stats."""
@@ -427,7 +410,6 @@ def dedup_store_rebuild(spark, path: str, docs: DataFrame, **overrides) -> dict:
         "rows_per_band": int(old_meta["rows_per_band"]),
         "threshold": float(old_meta["threshold"]),
     }
-    params.update(overrides)
     tmp = path + "__rebuilding"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
@@ -440,9 +422,7 @@ def dedup_store_rebuild(spark, path: str, docs: DataFrame, **overrides) -> dict:
     return stats
 
 
-def semantic_store_rebuild(
-    spark, path: str, embs: DataFrame, assign: str = "fold", **overrides
-) -> dict:
+def semantic_store_rebuild(spark, path: str, embs: DataFrame) -> dict:
     """Execute the semantic store's recommended rebuild: fresh seeds
     over the CURRENT corpus (which is what resolves the recorded
     inversions — frozen seeds are the reason they accumulate),
@@ -453,12 +433,12 @@ def semantic_store_rebuild(
     )
 
     old_meta = spark.read.parquet(os.path.join(path, "meta")).first().asDict()
-    params = {"k": int(old_meta["k"]), "threshold": float(old_meta["threshold"])}
-    params.update(overrides)
     tmp = path + "__rebuilding"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
-    stats = semantic_store_build(embs, tmp, assign=assign, **params)
+    stats = semantic_store_build(
+        embs, tmp, k=int(old_meta["k"]), threshold=float(old_meta["threshold"])
+    )
     with store_write_lock(path, "semantic_store_rebuild"):
         _swap_in(tmp, path)
     return stats
@@ -706,9 +686,7 @@ def read_curated_corpus(spark, store_dir: str, corpus_dir: str) -> DataFrame:
     )
 
 
-def curation_store_health(
-    spark, store_dir: str, corpus_dir: str, fanout: int = TIER_FANOUT
-) -> dict:
+def curation_store_health(spark, store_dir: str, corpus_dir: str) -> dict:
     """Health report for the STREAMING curation store, the third
     member of the health family: per-root file stats over LIVE
     partitions (the mass a reader actually scans — uncommitted and
@@ -743,7 +721,7 @@ def curation_store_health(
             1 for p in all_parts if p.split("=", 1)[1] in sup
         )
         rec = (
-            bool(_size_tier_plan(sizes, fanout=fanout))
+            bool(_size_tier_plan(sizes))
             or bool(empties)
             or n_sup_present > 0
         )
@@ -985,7 +963,6 @@ def curation_store_compact(
     spark,
     store_dir: str,
     corpus_dir: str,
-    target_file_bytes: int = TARGET_FILE_BYTES,
     grace_seconds: float = UNCOMMITTED_GRACE_SECONDS,
     fanout: int = TIER_FANOUT,
     full: bool = False,
@@ -1122,7 +1099,7 @@ def curation_store_compact(
                         shutil.rmtree(tmp)
                     src_bytes = sum(sizes[p] for p in merge)
                     n_target = max(
-                        1, math.ceil(src_bytes / target_file_bytes)
+                        1, math.ceil(src_bytes / TARGET_FILE_BYTES)
                     )
                     col = part_cols[root_key]
                     if col is None:

@@ -6,6 +6,8 @@ document fingerprinting.
 All tokenization is whitespace splitting (the fixture corpus is
 space-separated); every step is built-in-function-only (explode /
 split / groupBy) so the hot path stays JVM-side — no Python UDFs.
+Every operator reads the documents table's ``doc_id``/``text``
+(and ``lang``) columns.
 """
 
 from __future__ import annotations
@@ -17,12 +19,12 @@ from pyspark.sql import functions as F
 STOPWORDS = ("the", "a", "of", "and", "in")
 
 
-def tokens(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def tokens(docs: DataFrame) -> DataFrame:
     """``(doc_id, pos, token)`` — whitespace tokenization with
     position (pos is 0-based)."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     return (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
+        docs.select("doc_id", F.col("text").alias("_text"))
         .repartition(par, "doc_id")  # parallelize the explode (see dedup.char_shingles)
         .select(
             "doc_id",
@@ -90,7 +92,6 @@ def quality_score(docs: DataFrame) -> DataFrame:
 
 def quality_score_rowwise(
     docs: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -126,7 +127,7 @@ def quality_score_rowwise(
         F.split(F.trim(F.col(text_col)), " +"), lambda x: x != ""
     )
     staged = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         toks_once.alias("_toks"),
         *[F.col(c) for c in keep],
     )
@@ -150,7 +151,7 @@ def quality_score_rowwise(
     )
 
 
-def langid_predict(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
+def langid_predict(docs: DataFrame) -> DataFrame:
     """N-gram-free vocabulary-vote language ID (deterministic integer
     arithmetic end to end, so the argmaxes are engine-portable):
 
@@ -164,13 +165,13 @@ def langid_predict(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
     join + vote) is what matters for scale, not held-out accuracy.
     """
     t = tokens(docs).select("doc_id", "token")
-    labeled = t.join(docs.select("doc_id", lang_col), "doc_id")
-    tl_counts = labeled.groupBy("token", lang_col).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.partitionBy("token").orderBy(F.desc("cnt"), F.asc(lang_col))
+    labeled = t.join(docs.select("doc_id", "lang"), "doc_id")
+    tl_counts = labeled.groupBy("token", "lang").agg(F.count(F.lit(1)).alias("cnt"))
+    w = Window.partitionBy("token").orderBy(F.desc("cnt"), F.asc("lang"))
     token_lang = (
         tl_counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("token", F.col(lang_col).alias("token_lang"))
+        .select("token", F.col("lang").alias("token_lang"))
     )
     votes = (
         t.join(F.broadcast(token_lang), "token")
@@ -184,13 +185,13 @@ def langid_predict(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
         .select("doc_id", F.col("token_lang").alias("predicted_lang"))
     )
     return (
-        docs.select("doc_id", lang_col)
+        docs.select("doc_id", "lang")
         .join(pred, "doc_id", "left")
         .select(
             "doc_id",
-            lang_col,
+            "lang",
             "predicted_lang",
-            (F.col(lang_col) == F.col("predicted_lang")).cast("int").alias("correct"),
+            (F.col("lang") == F.col("predicted_lang")).cast("int").alias("correct"),
         )
     )
 
@@ -198,8 +199,6 @@ def langid_predict(docs: DataFrame, lang_col: str = "lang") -> DataFrame:
 def word_ngrams(
     docs: DataFrame,
     n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """``(doc_id, *keep_cols, gram)`` — word n-grams by array indexing
@@ -207,11 +206,11 @@ def word_ngrams(
     happens inside the scan partition). ``keep_cols`` are passed
     through unchanged (e.g. ``("source",)`` for corpus-vs-benchmark
     splits) so callers never need a join back to re-attach them."""
-    arr = F.split(F.trim(F.col(text_col)), " +")
+    arr = F.split(F.trim(F.col("text")), " +")
     par = docs.sparkSession.sparkContext.defaultParallelism
     keep = list(keep_cols)
     base = (
-        docs.select(F.col(id_col).alias("doc_id"), *keep, arr.alias("l"))
+        docs.select("doc_id", *keep, arr.alias("l"))
         .filter(F.size("l") >= n)
         .repartition(par, "doc_id")
     )
@@ -235,8 +234,6 @@ def fingerprint(docs: DataFrame, n: int = 4) -> DataFrame:
 
 def tf_idf(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_doc_freq: int = 2,
 ) -> DataFrame:
     """Exact TF-IDF in pure DataFrame ops — ``(doc_id, token, tf,
@@ -255,9 +252,9 @@ def tf_idf(
     # The same pattern is used at every Spark tokenize site.
     toks = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.explode(
-                F.split(F.lower(F.regexp_replace(F.col(text_col), r"[^\w \t\n]", " ")), r"\s+")
+                F.split(F.lower(F.regexp_replace(F.col("text"), r"[^\w \t\n]", " ")), r"\s+")
             ).alias("token"),
         )
         .filter(F.col("token") != "")
@@ -356,8 +353,6 @@ def iban_valid(x: Column) -> Column:
 
 def pii_redact(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """PII scrubbing — the compliance stage every training-data
@@ -388,11 +383,11 @@ def pii_redact(
     independent per class (a valid card also counts as n_cc and
     n_phone exposure).
 
-    Returns ``(id, redacted, n_email, n_id, n_ip, n_phone, n_cc,
+    Returns ``(doc_id, redacted, n_email, n_id, n_ip, n_phone, n_cc,
     n_cc_valid, n_iban, n_iban_valid)``; ``keep`` names extra input
     columns to pass through unchanged (still one projection — the
     streaming curation lane threads its event-time column this way)."""
-    raw = F.col(text_col)
+    raw = F.col("text")
     counts = [
         F.regexp_count(raw, F.lit(pat)).alias(f"n_{name}")
         for name, pat, _repl in PII_PATTERNS
@@ -423,5 +418,5 @@ def pii_redact(
     for _name, pat, repl in PII_PATTERNS[1:]:
         red = F.regexp_replace(red, pat, repl)
     return docs.select(
-        F.col(id_col), red.alias("redacted"), *counts, *[F.col(c) for c in keep]
+        "doc_id", red.alias("redacted"), *counts, *[F.col(c) for c in keep]
     )

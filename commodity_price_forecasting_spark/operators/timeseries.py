@@ -28,10 +28,10 @@ def rolling_stats(
     order_cols: Sequence[str],
     partition_cols: Sequence[str],
     window_rows: int,
-    prefix: str = "roll",
 ) -> DataFrame:
     """Trailing rolling mean / stddev / min / max over the last
-    ``window_rows`` rows per key — the reference's rolling averages and
+    ``window_rows`` rows per key, as ``roll_avg``/``roll_std``/
+    ``roll_min``/``roll_max`` — the reference's rolling averages and
     volatility measures (Presentation slide 13, README.md:31)."""
     w = (
         Window.partitionBy(*partition_cols)
@@ -39,10 +39,10 @@ def rolling_stats(
         .rowsBetween(-(window_rows - 1), Window.currentRow)
     )
     return (
-        df.withColumn(f"{prefix}_avg", F.avg(value_col).over(w))
-        .withColumn(f"{prefix}_std", F.stddev_samp(value_col).over(w))
-        .withColumn(f"{prefix}_min", F.min(value_col).over(w))
-        .withColumn(f"{prefix}_max", F.max(value_col).over(w))
+        df.withColumn("roll_avg", F.avg(value_col).over(w))
+        .withColumn("roll_std", F.stddev_samp(value_col).over(w))
+        .withColumn("roll_min", F.min(value_col).over(w))
+        .withColumn("roll_max", F.max(value_col).over(w))
     )
 
 

@@ -168,9 +168,25 @@ def future_spreads(spread_df: DataFrame) -> DataFrame:
     ).select("pair", "lag", "day", "spread", "y")
 
 
+def check_top_k(top_k) -> None:
+    """Refuse a ``top_k`` that is not an int >= 1 with a ``ValueError``
+    naming it — a plain comparison, no Spark job. ``ranked[:-1]``
+    would silently drop the lowest-variance target and ``0`` would
+    select none."""
+    import numbers
+
+    if (
+        not isinstance(top_k, numbers.Integral)
+        or isinstance(top_k, bool)
+        or top_k < 1
+    ):
+        raise ValueError(f"top_k must be an int >= 1: {top_k!r}")
+
+
 def e1_flagship(spark: SparkSession, sf_dir: str, top_k: int = 8) -> DataFrame:
     """Full E1 spine; returns top-``top_k`` pairs by target variance:
-    (pair, lag, variance, n).
+    (pair, lag, variance, n). ``top_k`` below 1 or not an int raises
+    ``ValueError`` before any Spark work.
 
     The DAG references the daily series five times (mapping ×2, leg
     joins ×2, future self-join ×2 on spreads); without persistence
@@ -181,6 +197,7 @@ def e1_flagship(spark: SparkSession, sf_dir: str, top_k: int = 8) -> DataFrame:
     of the three reused frames turns 8 raw scans into 1."""
     from pyspark import StorageLevel
 
+    check_top_k(top_k)
     daily = daily_bars(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     filled = imputed(with_gaps(daily)).persist(StorageLevel.MEMORY_AND_DISK)
     mapping = pair_mapping(daily)

@@ -1655,11 +1655,11 @@ def s9_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- Z-order (Morton) layout clustering (r4) ----------------------------
 
-def _morton_sql(x: str, y: str, bits: int = 16) -> str:
-    """Bit-interleave SQL identical in Spark and DuckDB: integer
+def _morton_sql(x: str, y: str) -> str:
+    """16-bit interleave SQL identical in Spark and DuckDB: integer
     shifts/masks only, fully parenthesized."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)

@@ -34,6 +34,7 @@ from commodity_price_forecasting_spark.operators.cleaning import (
     ffill_bfill_wide,
     sparse_columns,
 )
+from commodity_price_forecasting_spark.plans.e1_pipeline import check_top_k
 
 
 @dataclass
@@ -45,14 +46,15 @@ class E1Result:
     invariants: dict
 
 
-def check_invariants(df: DataFrame, time_col: str = "date_id") -> dict:
+def check_invariants(df: DataFrame) -> dict:
     """The reference's four standing checks (SURVEY.md §5; FIXTURES.md
-    §5): zero nulls, zero duplicate rows, strictly monotonic time.
-    One pass for the null count; count-vs-distinct for dups."""
-    value_cols = [c for c in df.columns if c != time_col]
+    §5): zero nulls, zero duplicate rows, strictly monotonic
+    ``date_id``. One pass for the null count; count-vs-distinct for
+    dups."""
+    value_cols = [c for c in df.columns if c != "date_id"]
     agg = df.agg(
         F.count(F.lit(1)).alias("n"),
-        F.countDistinct(time_col).alias("n_time"),
+        F.countDistinct("date_id").alias("n_time"),
         *[F.sum(F.col(c).isNull().cast("bigint")).alias(f"_n_{i}") for i, c in enumerate(value_cols)],
     ).first()
     total_nulls = sum(agg[f"_n_{i}"] for i in range(len(value_cols)))
@@ -72,6 +74,7 @@ def run_e1(
     top_k: int = 20,
     sparse_threshold: float = 0.5,
 ) -> E1Result:
+    check_top_k(top_k)
     label_cols = [c for c in train_labels.columns if c != "date_id"]
     market_cols = [c for c in train.columns if c != "date_id"]
 

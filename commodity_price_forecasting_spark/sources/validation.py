@@ -19,25 +19,25 @@ class MissingTargetColumnsError(ValueError):
     """No spread-named ('A - B') target columns found (app.py:105-108)."""
 
 
-def classify_columns(df: DataFrame, time_col: str = "date_id") -> tuple[list[str], list[str]]:
+def classify_columns(df: DataFrame) -> tuple[list[str], list[str]]:
     """Feature/target split by the name-embedded spread convention
-    (app.py:96-97, P2): numeric columns without ' - ' are features,
-    columns containing ' - ' are targets. Driver-side over the
-    schema — no data scan."""
+    (app.py:96-97, P2): numeric columns other than ``date_id`` and
+    without ' - ' are features, columns containing ' - ' are targets.
+    Driver-side over the schema — no data scan."""
     numeric = {
         f.name
         for f in df.schema.fields
         if f.dataType.typeName() in ("double", "float", "integer", "long", "decimal")
     }
     features = [
-        c for c in df.columns if SEPARATOR not in c and c != time_col and c in numeric
+        c for c in df.columns if SEPARATOR not in c and c != "date_id" and c in numeric
     ]
     targets = [c for c in df.columns if SEPARATOR in c]
     return features, targets
 
 
 def validate_serving_frame(
-    df: DataFrame, time_col: str = "date_id"
+    df: DataFrame,
 ) -> tuple[DataFrame, list[str], list[str]]:
     """The reference's ``load_data`` contract: non-empty frame with at
     least one feature and one spread target; returns
@@ -46,7 +46,7 @@ def validate_serving_frame(
     count)."""
     if df.isEmpty():
         raise EmptyDatasetError("serving dataset is empty")
-    features, targets = classify_columns(df, time_col)
+    features, targets = classify_columns(df)
     if not targets:
         raise MissingTargetColumnsError(
             f"no spread-named ('A{SEPARATOR}B') target columns in schema"

@@ -418,24 +418,19 @@ def run_curation_stream(
     store_dir: str,
     corpus_dir: str,
     checkpoint_dir: str,
-    watermark: str | None = None,
-    shuffle_partitions: int | None = None,
     near_dup_store: str | None = None,
     auto_maintain: bool = False,
     feed_glob: str = "documents.parquet",
 ) -> dict | None:
     """Drain the documents stream through the curation pipeline into
     the persisted store with availableNow (deterministic for tests; a
-    live deployment drops the trigger). ``watermark=None`` derives a
-    span-covering watermark from the corpus (``watermark_covering`` —
-    the stream==batch equality bound); pass an explicit duration for a
-    live deployment where bounded state matters more than replay
-    equality. ``shuffle_partitions`` sizes the dedup state store —
-    pass ``state_sized_partitions(...)``; the sustained probe
-    (tools/stream_latency_probe.py --pipeline curation) measures the
-    default. Each micro-batch appends through the idempotent
-    commit-token path: token = md5(checkpoint path) + batch id, unique
-    per run and stable across redelivery. ``near_dup_store`` (a
+    live deployment drops the trigger). The dedup watermark is derived
+    from the corpus span (``watermark_covering`` — the stream==batch
+    equality bound), and the dedup state store runs at the session's
+    ``spark.sql.shuffle.partitions``. Each micro-batch appends through
+    the idempotent commit-token path: token = md5(checkpoint path) +
+    batch id, unique per run and stable across redelivery.
+    ``near_dup_store`` (a
     ``dedup_store_build`` layout, built by the caller from the base
     corpus) switches on the per-batch MinHash tier — see
     ``_append_batch``'s near-dup block for semantics and the stated
@@ -454,39 +449,29 @@ def run_curation_stream(
     tools/auto_maintain_probe.py → SCALE.md r13."""
     import hashlib
 
-    if watermark is None:
-        watermark = watermark_covering(spark, sf_dir, glob=feed_glob)
     run_key = hashlib.md5(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:12]
     stream = curate_docs(
         read_documents_stream(spark, sf_dir, glob=feed_glob),
-        watermark=watermark,
+        watermark=watermark_covering(spark, sf_dir, glob=feed_glob),
     )
-    prev = None
-    if shuffle_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda bdf, bid: _append_batch(
-                    bdf,
-                    store_dir,
-                    corpus_dir,
-                    commit_token=f"{run_key}-{bid}",
-                    near_dup_store=near_dup_store,
-                )
+    q = (
+        stream.writeStream.foreachBatch(
+            lambda bdf, bid: _append_batch(
+                bdf,
+                store_dir,
+                corpus_dir,
+                commit_token=f"{run_key}-{bid}",
+                near_dup_store=near_dup_store,
             )
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     if not auto_maintain:
         return None
     from commodity_price_forecasting_spark.operators.store_maintenance import (

@@ -57,15 +57,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- batch/stream-agnostic transformations ------------------------------
 
-def tumbling_stats(
-    df: DataFrame, width: str = "1 day", watermark: str = "1 day"
-) -> DataFrame:
-    """Tumbling-window per-event-type aggregate of returns/values.
-    Epoch-aligned windows (== ``date_trunc`` for whole-day widths).
-    Watermark bounds streaming state; on batch input it is a no-op."""
+def tumbling_stats(df: DataFrame) -> DataFrame:
+    """Daily tumbling-window per-event-type aggregate of returns/values.
+    Epoch-aligned windows (== ``date_trunc`` to the day). The 1-day
+    watermark bounds streaming state; on batch input it is a no-op."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("win"), "event_type")
+        df.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -81,18 +79,13 @@ def tumbling_stats(
     )
 
 
-def sliding_stats(
-    df: DataFrame,
-    width: str = "2 days",
-    slide: str = "1 day",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Sliding-window (overlapping) aggregate — each event contributes
-    to width/slide windows; Spark expands this in the native window
-    expression (no self-join)."""
+def sliding_stats(df: DataFrame) -> DataFrame:
+    """Sliding-window (overlapping) aggregate — 2-day windows sliding
+    by 1 day, so each event contributes to two windows; Spark expands
+    this in the native window expression (no self-join)."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("win"), "event_type")
+        df.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "2 days", "1 day").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.avg("value"), 6).alias("avg_value"),
@@ -106,15 +99,13 @@ def sliding_stats(
     )
 
 
-def session_stats(
-    df: DataFrame, gap: str = "30 minutes", watermark: str = "1 day"
-) -> DataFrame:
+def session_stats(df: DataFrame) -> DataFrame:
     """Per-user session windows (gap-based): a session extends while
-    consecutive events arrive within ``gap``. Native
+    consecutive events arrive within 30 minutes. Native
     ``session_window`` — streaming state merges adjacent sessions."""
     return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        df.withWatermark("ts", "1 day")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -128,12 +119,12 @@ def session_stats(
     )
 
 
-def dedup_events(df: DataFrame, watermark: str = "1 day") -> DataFrame:
+def dedup_events(df: DataFrame) -> DataFrame:
     """Stateful exact dedup by event_id. On a stream, state is bounded
-    by the watermark (``dropDuplicatesWithinWatermark``); on batch
+    by a 1-day watermark (``dropDuplicatesWithinWatermark``); on batch
     input, plain ``dropDuplicates`` (same result on a bounded set)."""
     if df.isStreaming:
-        return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+        return df.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
     return df.dropDuplicates(["event_id"])
@@ -155,15 +146,13 @@ def enrich_with_customer(events: DataFrame, customer: DataFrame) -> DataFrame:
     return events.join(F.broadcast(dim), "user_id", "left")
 
 
-def segment_value_stats(
-    events: DataFrame, customer: DataFrame, watermark: str = "1 day"
-) -> DataFrame:
+def segment_value_stats(events: DataFrame, customer: DataFrame) -> DataFrame:
     """Enriched windowed aggregate — the canonical streaming ETL
     shape: stream-static broadcast join THEN a tumbling-window
     aggregate on the enriched key (day × market segment)."""
     enriched = enrich_with_customer(events, customer)
     return (
-        enriched.withWatermark("ts", watermark)
+        enriched.withWatermark("ts", "1 day")
         .groupBy(F.window("ts", "1 day").alias("win"), "mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -241,19 +230,18 @@ def running_user_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def view_purchase_attribution(
-    events: DataFrame, lookback: str = "12 hours", watermark: str = "1 day"
-) -> DataFrame:
+def view_purchase_attribution(events: DataFrame) -> DataFrame:
     """STREAM-STREAM interval join: attribute each purchase to the
-    same user's views in the preceding ``lookback`` window —
-    last-touch attribution, the canonical streaming join shape.
+    same user's views in the preceding 12 hours — last-touch
+    attribution, the canonical streaming join shape.
 
-    Both sides carry watermarks plus a bounded time-range predicate,
-    which is exactly what Structured Streaming requires to size the
-    join state: view rows are dropped from state once the watermark
-    passes ``v_ts + lookback``, so state is bounded by (lookback +
-    watermark) × ingest rate. On batch input the watermarks are no-ops
-    and the same plan is a plain interval join (oracle-checkable)."""
+    Both sides carry 1-day watermarks plus a bounded time-range
+    predicate, which is exactly what Structured Streaming requires to
+    size the join state: view rows are dropped from state once the
+    watermark passes ``v_ts + 12 hours``, so state is bounded by
+    (12 hours + 1 day) × ingest rate. On batch input the watermarks
+    are no-ops and the same plan is a plain interval join
+    (oracle-checkable)."""
     views = (
         events.filter(F.col("event_type") == "view")
         .select(
@@ -261,7 +249,7 @@ def view_purchase_attribution(
             F.col("ts").alias("v_ts"),
             F.col("event_id").alias("view_id"),
         )
-        .withWatermark("v_ts", watermark)
+        .withWatermark("v_ts", "1 day")
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -271,12 +259,12 @@ def view_purchase_attribution(
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "1 day")
     )
     return purchases.join(
         views,
         (F.col("user_id") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}"))
+        & (F.col("v_ts") >= F.col("p_ts") - F.expr("INTERVAL 12 hours"))
         & (F.col("v_ts") < F.col("p_ts")),
         "inner",
     ).select(
@@ -295,22 +283,21 @@ def view_purchase_attribution(
 def state_sized_partitions(
     spark: SparkSession,
     state_keys: int,
-    keys_per_partition: int = 16,
     rows_per_trigger: int | None = None,
-    rows_per_task: int = 32,
 ) -> int:
     """Recommended ``spark.sql.shuffle.partitions`` for a STATEFUL
     streaming pipeline, sized to the state cardinality instead of the
     core count (the r9 trigger-floor sweep, SCALE.md: the per-trigger
     floor is per-task fixed cost × partitions across the stateful
     stages — at 126 window×bin state keys, 32→8 partitions cut the
-    trigger ~2.2× at identical results; this rule reproduces that
-    measured-better cell: ceil(126/16) = 8). Clamped to the session
-    default so a genuinely large state still fans out.
+    trigger ~2.2× at identical results; this rule, 16 state keys per
+    partition, reproduces that measured-better cell: ceil(126/16) = 8).
+    Clamped to the session default so a genuinely large state still
+    fans out.
 
     r11 second bound: when the expected per-trigger INPUT is known,
-    partitions are also capped at ceil(rows_per_trigger /
-    rows_per_task) — the curation-ingest sweep (SCALE.md r11) showed a
+    partitions are also capped at ceil(rows_per_trigger / 32) — 32
+    input rows per task; the curation-ingest sweep (SCALE.md r11) showed a
     4,071-key dedup state whose state bound says "stay wide" but whose
     100-row micro-batches measured 2× faster at 4–8 partitions than at
     32: with tiny triggers the per-task fixed cost dominates no matter
@@ -320,9 +307,9 @@ def state_sized_partitions(
     import math
 
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    p = math.ceil(max(state_keys, 1) / keys_per_partition)
+    p = math.ceil(max(state_keys, 1) / 16)
     if rows_per_trigger is not None:
-        p = min(p, math.ceil(max(rows_per_trigger, 1) / rows_per_task))
+        p = min(p, math.ceil(max(rows_per_trigger, 1) / 32))
     return max(1, min(default, p))
 
 
@@ -642,17 +629,22 @@ def running_drawdown(df: DataFrame) -> DataFrame:
 # --- chained stateful drift monitor: windowed PSI vs static baseline ----
 
 
-def value_bin_baseline(df: DataFrame, bin_width: float = 25.0) -> DataFrame:
+#: value-bin width shared by the drift monitor's baseline and window
+#: sides — both must bin identically for the PSI terms to line up.
+_PSI_BIN_WIDTH = 25.0
+
+
+def value_bin_baseline(df: DataFrame) -> DataFrame:
     """STATIC per-bin reference distribution for the drift monitor:
-    ``(bin, p_base, k_bins)`` from a batch scan — in production the
-    frozen training-period histogram the live stream is compared
-    against. Window-over-all runs on the |bins|-row frame
+    ``(bin, p_base, k_bins)`` over ``_PSI_BIN_WIDTH``-wide value bins
+    from a batch scan — in production the frozen training-period
+    histogram the live stream is compared against. Window-over-all runs on the |bins|-row frame
     (dimension-sized, ~14 bins here), never on raw events."""
     from pyspark.sql import Window
 
     c = (
         df.select(
-            F.floor(F.col("value") / bin_width).cast("long").alias("bin")
+            F.floor(F.col("value") / _PSI_BIN_WIDTH).cast("long").alias("bin")
         )
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("n_b"))
@@ -665,20 +657,13 @@ def value_bin_baseline(df: DataFrame, bin_width: float = 25.0) -> DataFrame:
     )
 
 
-def windowed_psi(
-    df: DataFrame,
-    baseline: DataFrame,
-    width: str = "1 day",
-    watermark: str = "1 day",
-    bin_width: float = 25.0,
-    smooth: float = 0.5,
-) -> DataFrame:
-    """Per-window Population Stability Index of the value distribution
+def windowed_psi(df: DataFrame, baseline: DataFrame) -> DataFrame:
+    """Per-day Population Stability Index of the value distribution
     against a static baseline — the production drift monitor
     (`drift_psi_value`'s batch statistic, incrementalized): PSI_w =
     Σ_bins (p_w − p_base)·ln(p_w/p_base), with the window-side
-    probability Laplace-smoothed, p_w = (n+s)/(n_w+s·K), so a bin
-    unseen in a thin window cannot produce ln(0). Bins are OBSERVED
+    probability Laplace-smoothed, p_w = (n+s)/(n_w+s·K) at s = 0.5,
+    so a bin unseen in a thin window cannot produce ln(0). Bins are OBSERVED
     bins (stream-static inner join against the baseline): a stream
     cannot right-join a static frame per window, so missing-bin mass
     shows up through the smoothed denominator — documented monitor
@@ -691,9 +676,9 @@ def windowed_psi(
     between them is stream-static broadcast (stateless). The PSI fold
     itself is a JVM higher-order ``aggregate`` over the ≤K collected
     (n, p_base) structs — no Python, no second shuffle."""
-    binned = df.withWatermark("ts", watermark).select(
-        F.window("ts", width).alias("win"),
-        F.floor(F.col("value") / bin_width).cast("long").alias("bin"),
+    binned = df.withWatermark("ts", "1 day").select(
+        F.window("ts", "1 day").alias("win"),
+        F.floor(F.col("value") / _PSI_BIN_WIDTH).cast("long").alias("bin"),
     )
     wb = binned.groupBy("win", "bin").agg(F.count(F.lit(1)).alias("n_wb"))
     j = wb.join(F.broadcast(baseline), "bin")
@@ -712,9 +697,7 @@ def windowed_psi(
     with_total = terms.select("win", n_w.alias("n_w"), "t")
 
     def p_w(x):
-        return (x["n"] + F.lit(smooth)) / (
-            F.col("n_w") + F.lit(smooth) * x["k"]
-        )
+        return (x["n"] + F.lit(0.5)) / (F.col("n_w") + F.lit(0.5) * x["k"])
 
     psi = F.aggregate(
         "t",

@@ -65,7 +65,6 @@ def _ingest_batch(
     batch_df: DataFrame,
     store_path: str,
     commit_token: str,
-    assign: str,
 ) -> None:
     """Ledger-first ordering (r12 self-review finding): verdicts are
     computed with append=False and written to the per-batch ledger
@@ -101,13 +100,10 @@ def _ingest_batch(
     # foreachBatch redelivers, and the whole ingest is idempotent
 
     with store_write_lock(store_path, f"semantic_ingest:{commit_token}"):
-        _ingest_batch_locked(batch_df, spark, store_path, commit_token,
-                             assign, marker)
+        _ingest_batch_locked(batch_df, spark, store_path, commit_token, marker)
 
 
-def _ingest_batch_locked(
-    batch_df, spark, store_path, commit_token, assign, marker
-) -> None:
+def _ingest_batch_locked(batch_df, spark, store_path, commit_token, marker) -> None:
     ledger_dir = os.path.join(
         store_path, "ingest_verdicts", f"ingest_batch={commit_token}"
     )
@@ -124,7 +120,7 @@ def _ingest_batch_locked(
         verdicts = spark.read.parquet(ledger_dir)
     else:
         res = semantic_dedup_delta(
-            spark, store_path, delta, assign=assign, append=False
+            spark, store_path, delta, append=False, assign="blas"
         )
         res["verdicts"].write.mode("overwrite").parquet(ledger_dir)
         verdicts = res["verdicts"]
@@ -148,11 +144,11 @@ def _ingest_batch_locked(
             semantic_store_load,
         )
         from commodity_price_forecasting_spark.operators.similarity import (
-            _assigner,
+            assign_cells_blas,
         )
 
         store = semantic_store_load(spark, store_path)
-        assigned = _assigner(assign)(to_append, store["seeds"])
+        assigned = assign_cells_blas(to_append, store["seeds"])
         assigned.select(
             F.col("_vid").alias("vec_id"),
             F.col("_emb").alias("embedding"),
@@ -171,13 +167,13 @@ def run_semantic_ingest_stream(
     sf_dir: str,
     store_path: str,
     checkpoint_dir: str,
-    assign: str = "blas",
     auto_maintain: bool = False,
     feed_glob: str = "embeddings.parquet",
 ) -> dict | None:
     """Drain the embeddings stream through the semantic tier into the
     persisted cell store (built by the caller with
-    ``semantic_store_build``) with availableNow. Per-batch audit
+    ``semantic_store_build``) with availableNow, assigning every batch
+    through the BLAS lane (``assign_cells_blas``). Per-batch audit
     ledger under ``<store>/ingest_verdicts/ingest_batch=<token>``;
     commit token = md5(checkpoint path) + batch id, the curation
     gate's replay-determinism unit.
@@ -195,9 +191,7 @@ def run_semantic_ingest_stream(
     stream = read_embeddings_stream(spark, sf_dir, glob=feed_glob)
     q = (
         stream.writeStream.foreachBatch(
-            lambda bdf, bid: _ingest_batch(
-                bdf, store_path, f"{run_key}-{bid}", assign
-            )
+            lambda bdf, bid: _ingest_batch(bdf, store_path, f"{run_key}-{bid}")
         )
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")

@@ -195,6 +195,23 @@ def _jobs_launched(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_default_inputs_names_null_features_and_empty_frame(spark):
+    """``trade_suggestion(df=...)`` derives its inputs from the latest
+    row: a null feature there, or an empty frame, raises a
+    ``ValueError`` that says which instead of a raw ``TypeError``."""
+    df = spark.createDataFrame(
+        [(1, 1.0, 2.0), (2, None, 3.0)], "date_id int, a double, b double"
+    )
+    with pytest.raises(ValueError, match=r"null feature columns \['a'\]"):
+        api.default_inputs(df, ["a", "b"])
+    assert api.default_inputs(df.filter("date_id = 1"), ["a", "b"]) == {
+        "a": 1.0,
+        "b": 2.0,
+    }
+    with pytest.raises(ValueError, match="frame is empty"):
+        api.default_inputs(df.limit(0), ["a", "b"])
+
+
 def test_trade_suggestion_runs_no_spark_job(spark, artifact):
     """Serving a request with explicit inputs, ``collect()`` included,
     launches no Spark job; deriving the defaults from ``df`` costs the

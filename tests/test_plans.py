@@ -364,7 +364,7 @@ def test_semantic_dedup_blas_assignment_plan(spark):
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    seeds = _semdedup_seeds(emb, 16, "embedding", "vec_id")
+    seeds = _semdedup_seeds(emb, 16)
     plan = (
         assign_cells_blas(emb, seeds)
         ._jdf.queryExecution()

@@ -100,3 +100,18 @@ def test_pandas_shift_equivalence_on_gapped_index(spark):
     )
     want = pdf["t"].shift(-2).tolist()
     assert got[:3] == want[:3] and all(np.isnan(v) for v in got[3:])
+
+
+def test_e1_entry_points_refuse_top_k_below_one():
+    """``top_k=-1`` used to drop the lowest-variance target silently
+    (``ranked[:-1]``) and ``top_k=0`` to select none; both E1 entry
+    points now refuse a ``top_k`` below 1 or not an int with a named
+    ``ValueError`` before any Spark work — the frames and session
+    passed here are never touched."""
+    from commodity_price_forecasting_spark.plans.e1_pipeline import e1_flagship
+
+    for bad in (0, -1, 2.5, True, "3"):
+        with pytest.raises(ValueError, match="top_k"):
+            run_e1(None, None, None, top_k=bad)
+        with pytest.raises(ValueError, match="top_k"):
+            e1_flagship(None, "unused", top_k=bad)

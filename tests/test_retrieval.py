@@ -240,7 +240,7 @@ def test_semantic_dedup_blas_assignment_matches_fold_away_from_ties(
     from commodity_price_forecasting_spark.sources.readers import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    seeds = _semdedup_seeds(emb, None, "embedding", "vec_id")
+    seeds = _semdedup_seeds(emb, None)
     assert len(seeds) == 22  # ⌈√500⌉ production k on the fixture
     fold = {
         r["_vid"]: (r["cell"], r["_cent"])
@@ -453,7 +453,7 @@ def test_semantic_dedup_hier_matches_numpy_twin(spark):
     n = len(vecs)
     k = max(16, math.ceil(n / 32))
     k1 = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-    seeds = _semdedup_seeds(emb, k, "embedding", "vec_id")
+    seeds = _semdedup_seeds(emb, k)
     _, want = _hier_numpy_twin(seeds, vecs, k1)
 
     got = {
@@ -691,7 +691,7 @@ def test_seed_routing_frame_broadcast_join_form_matches_isin(spark, monkeypatch)
     from commodity_price_forecasting_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    coarse = sorted(S._semdedup_seeds(emb, 4, "embedding", "vec_id"))
+    coarse = sorted(S._semdedup_seeds(emb, 4))
 
     isin_rows = sorted(
         (r["coarse"], r["_sid"])

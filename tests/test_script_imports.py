@@ -184,6 +184,96 @@ def test_every_package_def_is_referenced():
     assert not dead, f"package definitions nothing references: {dead}"
 
 
+def _package_functions() -> list[tuple[str, ast.FunctionDef, bool]]:
+    """``(module.qualname, def, is_method)`` for every function and
+    method in the package, nested ones included."""
+    out = []
+
+    def visit(node: ast.AST, prefix: str, in_class: bool) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                out.append((prefix + child.name, child, in_class))
+                visit(child, f"{prefix}{child.name}.", False)
+            elif isinstance(child, ast.ClassDef):
+                visit(child, f"{prefix}{child.name}.", True)
+            else:
+                visit(child, prefix, in_class)
+
+    for path in _py_files(PACKAGE):
+        module = os.path.relpath(path, ROOT)[: -len(".py")].replace(os.sep, ".")
+        visit(_parse(path), f"{module}.", False)
+    return out
+
+
+def _passes(call: ast.Call, name: str, index: int | None) -> bool:
+    """Whether ``call`` passes parameter ``name`` — by keyword, through
+    a ``**`` splat, or (when the parameter is positional at ``index``,
+    already shifted past ``self``/``cls``) by position or through a
+    ``*`` splat at or before that position."""
+    if any(kw.arg is None or kw.arg == name for kw in call.keywords):
+        return True
+    if index is None:
+        return False
+    for j, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return j <= index
+        if j == index:
+            return True
+    return False
+
+
+def unpassed_defaults() -> list[str]:
+    """``module.qualname(param)`` for every parameter of a package
+    function or method that has a default no call site passes: an
+    option nobody sets. Call sites are every call under
+    ``REFERENCE_ROOTS``, tests included; a call matches its callee by
+    name as in ``unreferenced_defs`` (``f(...)`` and ``x.f(...)``,
+    and ``C(...)`` for ``C.__init__``). Parsed with ``ast``; nothing
+    is executed."""
+    calls: dict[str, list[ast.Call]] = {}
+    for rel in REFERENCE_ROOTS:
+        for path in _py_files(rel):
+            for node in ast.walk(_parse(path)):
+                if isinstance(node, ast.Call):
+                    fn = node.func
+                    name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+                    calls.setdefault(name, []).append(node)
+    unset = []
+    for qualname, fn, is_method in _package_functions():
+        args = fn.args
+        positional = args.posonlyargs + args.args
+        bound = (
+            is_method
+            and positional
+            and positional[0].arg in ("self", "cls")
+            and not any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+        )
+        first_default = len(positional) - len(args.defaults)
+        params = [
+            (a.arg, i - bound) for i, a in enumerate(positional) if i >= first_default
+        ]
+        params += [
+            (a.arg, None)
+            for a, d in zip(args.kwonlyargs, args.kw_defaults)
+            if d is not None
+        ]
+        callee = qualname.split(".")[-2] if fn.name == "__init__" else fn.name
+        sites = calls.get(callee, [])
+        unset += [
+            f"{qualname}({name})"
+            for name, index in params
+            if not any(_passes(call, name, index) for call in sites)
+        ]
+    return unset
+
+
+def test_every_default_is_passed_somewhere():
+    """A defaulted parameter that no call site passes is an option
+    nobody sets: drop it and use the value it always takes."""
+    unset = unpassed_defaults()
+    assert not unset, f"defaulted parameters no call site passes: {unset}"
+
+
 #: A round-stamped record at the repo root: ``BENCH_r11.json``,
 #: ``OPTIMIZATION_r15.md``, ``BENCH_r15_c8.json``.
 _ROUND_FILE = re.compile(

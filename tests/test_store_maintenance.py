@@ -919,7 +919,7 @@ def test_store_write_lock_covers_semantic_store_writers(spark, tmp_path):
         with pytest.raises(StoreLockError, match="held by a live writer"):
             semantic_dedup_delta(spark, path, delta)  # append=True
         with pytest.raises(StoreLockError, match="held by a live writer"):
-            _ingest_batch(delta, path, "t-lock", "fold")
+            _ingest_batch(delta, path, "t-lock")
         with pytest.raises(StoreLockError, match="held by a live writer"):
             semantic_store_rebuild(spark, path, embs)
     res = semantic_dedup_delta(spark, path, delta)
@@ -1037,7 +1037,7 @@ def _mk_semantic_stream_store(spark, base, n_batches=3):
                 spark,
                 [(100 * (b + 1) + i, rng.normal(size=16)) for i in range(6)],
             ),
-            store, f"t{b}", "blas",
+            store, f"t{b}",
         )
     return store
 
@@ -1072,7 +1072,7 @@ def test_semantic_marker_rollup_preserves_redelivery_skip(
     rng = np.random.default_rng(41)
     _ingest_batch(
         _emb_df(spark, [(100 + i, rng.normal(size=16)) for i in range(6)]),
-        store, "t0", "blas",
+        store, "t0",
     )
     assert _rows_multiset(
         spark.read.parquet(cells).select("vec_id", "cell")
@@ -1080,7 +1080,7 @@ def test_semantic_marker_rollup_preserves_redelivery_skip(
     # and a genuinely NEW batch still lands after the rollup
     _ingest_batch(
         _emb_df(spark, [(900 + i, rng.normal(size=16)) for i in range(4)]),
-        store, "t9", "blas",
+        store, "t9",
     )
     assert "t9" in _read_committed(commits)
     # crash window of a LATER rollup: manifest already carries a token

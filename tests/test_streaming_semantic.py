@@ -125,7 +125,7 @@ def test_semantic_stream_committed_batch_skips(spark, tmp_path_factory):
         _ingest_batch,
     )
 
-    _ingest_batch(delta, store, commits[0], "blas")
+    _ingest_batch(delta, store, commits[0])
     assert semantic_store_load(spark, store)["cells"].count() == n1
 
 
@@ -153,7 +153,7 @@ def test_ingest_batch_crash_replay_preserves_ledger_and_store(
         "vec_id long, embedding array<float>",
     )
 
-    _ingest_batch(delta, store, "t0", "blas")
+    _ingest_batch(delta, store, "t0")
     ledger_dir = os.path.join(store, "ingest_verdicts", "ingest_batch=t0")
     l0 = sorted(
         (r["vec_id"], r["status"], r["dup_of"])
@@ -166,7 +166,7 @@ def test_ingest_batch_crash_replay_preserves_ledger_and_store(
 
     # simulate the crash window: marker lost, everything else landed
     os.remove(os.path.join(store, "commits", "t0"))
-    _ingest_batch(delta, store, "t0", "blas")
+    _ingest_batch(delta, store, "t0")
     l1 = sorted(
         (r["vec_id"], r["status"], r["dup_of"])
         for r in spark.read.parquet(ledger_dir).collect()
@@ -264,7 +264,7 @@ def test_ingest_batch_partial_ledger_recomputes(spark, tmp_path_factory):
     os.remove(os.path.join(ledger_dir, "_SUCCESS"))
     assert not os.path.exists(os.path.join(ledger_dir, "_SUCCESS"))
 
-    _ingest_batch(delta, store, "t0", "blas")
+    _ingest_batch(delta, store, "t0")
 
     # the fragment was replaced by the full fresh-compute verdict set,
     # equal to the batch operator's against an untouched ref store

@@ -42,13 +42,13 @@ def main() -> None:
         if cell_size:
             k = max(16, math.ceil(n / cell_size))
             k1 = max(1, math.isqrt(k - 1) + 1) if k > 1 else 1
-            coarse = sorted(_semdedup_seeds(emb, k1, "embedding", "vec_id"))
+            coarse = sorted(_semdedup_seeds(emb, k1))
             assigned = assign_cells_hier_cogroup(
                 emb, coarse, seed_routing_frame(emb, k, coarse)
             )
         else:
             k = max(16, math.isqrt(n))
-            seeds = _semdedup_seeds(emb, k, "embedding", "vec_id")
+            seeds = _semdedup_seeds(emb, k)
             assigned = assign_cells_blas(emb, seeds)
         sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("c"))
         row = sizes.agg(
