@@ -11,47 +11,58 @@ layout ``(key, time, value)`` the window is ``partitionBy(key)
 scales horizontally instead of funnelling 100 TB through the single
 global sort the wide pandas layout implies. The wide-layout variant is
 kept for reference fidelity but documented as the non-scalable path.
+
+Both fills run in linear time per partition: the forward fill is a
+running ``last(ignorenulls)``, and the back fill is ONE
+``first(ignorenulls)`` over the whole partition. After a forward fill
+the only nulls left precede the partition's first non-null value, so
+that value is exactly what ``bfill`` would put there. A
+``currentRow..unboundedFollowing`` frame would give the same values,
+but Spark re-evaluates it for every row: O(n²) per partition.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
+
+
+def _ffill_bfill(value: Column, ordered: WindowSpec) -> Column:
+    """pandas ``ffill().bfill()`` of ``value`` along ``ordered``: the
+    running last non-null, else the partition's first non-null."""
+    w_ff = ordered.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_all = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return F.coalesce(
+        F.last(value, ignorenulls=True).over(w_ff),
+        F.first(value, ignorenulls=True).over(w_all),
+    )
 
 
 def ffill_bfill_long(
     df: DataFrame,
     value_col: str,
     order_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
+    partition_cols: Sequence[str],
     out_col: str | None = None,
 ) -> DataFrame:
     """Forward-fill then back-fill ``value_col`` along ``order_cols``
-    within each partition — time-series imputation.
+    within each ``partition_cols`` group — time-series imputation,
+    exactly pandas ``groupby(partition_cols).ffill().bfill()``.
 
-    ``last(ignorenulls)`` over an unbounded-preceding frame is the
-    forward fill; ``first(ignorenulls)`` over an unbounded-following
-    frame is the back fill; the coalesce of the two reproduces
-    pandas ``ffill().bfill()`` exactly.
-
-    Scale note: with ``partition_cols`` (one partition per instrument)
-    this is an embarrassingly parallel window; without, it degrades to
-    a single-task global window — only acceptable for small wide
-    frames (the reference's 1961-row fidelity case).
+    One partition per key makes this an embarrassingly parallel
+    window. An empty ``partition_cols`` raises ``ValueError``: it
+    would be a single-task global window, which is
+    :func:`ffill_bfill_wide`'s job.
     """
-    out_col = out_col or value_col
-    base = Window.orderBy(*order_cols)
-    if partition_cols:
-        base = Window.partitionBy(*partition_cols).orderBy(*order_cols)
-    w_ff = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_bf = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    filled = F.coalesce(
-        F.last(F.col(value_col), ignorenulls=True).over(w_ff),
-        F.first(F.col(value_col), ignorenulls=True).over(w_bf),
-    )
-    return df.withColumn(out_col, filled)
+    if not partition_cols:
+        raise ValueError(
+            "ffill_bfill_long: partition_cols must name at least one column; "
+            "use ffill_bfill_wide for one global order"
+        )
+    ordered = Window.partitionBy(*partition_cols).orderBy(*order_cols)
+    return df.withColumn(out_col or value_col, _ffill_bfill(F.col(value_col), ordered))
 
 
 def ffill_bfill_wide(df: DataFrame, time_col: str, value_cols: Sequence[str]) -> DataFrame:
@@ -60,17 +71,10 @@ def ffill_bfill_wide(df: DataFrame, time_col: str, value_cols: Sequence[str]) ->
     .ffill().bfill()`` but NOT scalable (single-partition window).
     Prefer :func:`ffill_bfill_long` for anything large.
     """
-    w_ff = Window.orderBy(time_col).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    w_bf = Window.orderBy(time_col).rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    cols: list[Column] = [F.col(time_col)]
-    for c in value_cols:
-        cols.append(
-            F.coalesce(
-                F.last(F.col(c), ignorenulls=True).over(w_ff),
-                F.first(F.col(c), ignorenulls=True).over(w_bf),
-            ).alias(c)
-        )
-    return df.select(*cols)
+    ordered = Window.orderBy(time_col)
+    return df.select(
+        F.col(time_col), *[_ffill_bfill(F.col(c), ordered).alias(c) for c in value_cols]
+    )
 
 
 def drop_any_null_rows(df: DataFrame) -> DataFrame:

@@ -14,10 +14,9 @@ ops rather than driver-side pandas-Series logic.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-from functools import reduce
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -26,60 +25,82 @@ def _require_cols(fn: str, cols: Sequence[str]) -> None:
         raise ValueError(f"{fn}: cols must name at least one column")
 
 
-def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Per-column null count + fraction as a long table
-    ``(column, n_null, null_frac)`` — the reference's
-    ``df.isna().sum()`` / ``.mean()`` (MC:24124 (cell 9),
-    MC:24463 (cell 15)).
-
-    Single pass: one wide aggregate row, then an explode to long form
-    via ``stack`` — the unpivot is over the 1-row aggregate, so it is
-    free at any data scale.
-    """
-    cols = list(cols or df.columns)
-    agg_row = df.agg(
-        F.count(F.lit(1)).alias("_total"),
-        *[F.sum(F.col(c).isNull().cast("bigint")).alias(c) for c in cols],
+def _per_column(
+    df: DataFrame, cols: Sequence[str], stats: dict[str, Callable[[str], Column]]
+) -> DataFrame:
+    """ONE aggregate pass computing ``stats[name](c)`` for every column
+    ``c`` of ``cols`` as one wide row, unpivoted to the long table
+    ``(col_name, *stats)``, one row per column in ``cols`` order. The
+    unpivot is over the 1-row aggregate, so it is free at any data
+    scale; a stat's type widens across columns as a union would."""
+    row = df.agg(
+        *[fn(c).alias(f"_{i}_{name}") for i, c in enumerate(cols) for name, fn in stats.items()]
     )
-    stack_expr = ", ".join(f"'{c}', `{c}`" for c in cols)
-    return agg_row.selectExpr(
-        "_total", f"stack({len(cols)}, {stack_expr}) as (col_name, n_null)"
-    ).select(
-        "col_name",
-        F.col("n_null").cast("bigint").alias("n_null"),
-        F.round(F.col("n_null") / F.col("_total"), 6).alias("null_frac"),
+    return row.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("col_name"),
+                        *[F.col(f"_{i}_{name}").alias(name) for name in stats],
+                    )
+                    for i, c in enumerate(cols)
+                ]
+            )
+        )
+    )
+
+
+def null_profile(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Per-column null count + fraction as a long table
+    ``(col_name, n_null, null_frac)`` — the reference's
+    ``df.isna().sum()`` / ``.mean()`` (MC:24124 (cell 9),
+    MC:24463 (cell 15)), in one aggregate pass.
+    """
+    _require_cols("null_profile", cols)
+
+    def n_null(c: str) -> Column:
+        return F.sum(F.col(c).isNull().cast("bigint"))
+
+    return _per_column(
+        df,
+        cols,
+        {
+            "n_null": n_null,
+            "null_frac": lambda c: F.round(n_null(c) / F.count(F.lit(1)), 6),
+        },
     )
 
 
 def describe_long(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Exact descriptive stats per numeric column as a long table
-    ``(column, n, mean, stddev, min, max)`` — the reference's
-    ``df.describe()`` (MC:24031 (cell 6)) with exact aggregates.
+    ``(col_name, n, mean, stddev, min, max)`` — the reference's
+    ``df.describe()`` (MC:24031 (cell 6)) with exact aggregates, in
+    one aggregate pass.
 
     Quartiles are intentionally separate (:func:`quantile_summary`)
     because at scale they use ``approx_percentile`` (t-digest) rather
     than an exact sort.
     """
     _require_cols("describe_long", cols)
-    pieces = []
-    for c in cols:
-        pieces.append(
-            df.agg(
-                F.lit(c).alias("col_name"),
-                F.count(F.col(c)).alias("n"),
-                F.round(F.avg(c), 6).alias("mean"),
-                F.round(F.stddev_samp(c), 6).alias("stddev"),
-                F.round(F.min(c).cast("double"), 6).alias("min"),
-                F.round(F.max(c).cast("double"), 6).alias("max"),
-            )
-        )
-    return reduce(DataFrame.unionAll, pieces)
+    return _per_column(
+        df,
+        cols,
+        {
+            "n": lambda c: F.count(F.col(c)),
+            "mean": lambda c: F.round(F.avg(c), 6),
+            "stddev": lambda c: F.round(F.stddev_samp(c), 6),
+            "min": lambda c: F.round(F.min(c).cast("double"), 6),
+            "max": lambda c: F.round(F.max(c).cast("double"), 6),
+        },
+    )
 
 
 def quantile_summary(df: DataFrame, cols: Sequence[str], probs=(0.25, 0.5, 0.75)) -> DataFrame:
-    """Approximate quartiles per column (t-digest sketch, one pass —
-    the scale-correct version of pandas ``describe``'s quartiles).
-    Each ``p`` in ``probs`` names one column ``p{int(p * 100)}``."""
+    """Approximate quartiles per column (t-digest sketch, one pass over
+    all columns — the scale-correct version of pandas ``describe``'s
+    quartiles). Each ``p`` in ``probs`` names one column
+    ``p{int(p * 100)}``."""
     _require_cols("quantile_summary", cols)
     probs = list(probs)
     if not probs or any(not 0.0 <= p <= 1.0 for p in probs):
@@ -91,16 +112,13 @@ def quantile_summary(df: DataFrame, cols: Sequence[str], probs=(0.25, 0.5, 0.75)
         raise ValueError(
             f"quantile_summary: probs {probs} give duplicate column names {names}"
         )
-    pieces = []
-    for c in cols:
-        qs = F.percentile_approx(c, probs, 10000)
-        pieces.append(
-            df.agg(
-                F.lit(c).alias("col_name"),
-                *[qs.getItem(i).alias(name) for i, name in enumerate(names)],
-            )
-        )
-    return reduce(DataFrame.unionAll, pieces)
+
+    # one sketch per column: the planner merges the identical
+    # percentile_approx aggregates behind the k getItem calls
+    def item(i: int) -> Callable[[str], Column]:
+        return lambda c: F.percentile_approx(c, probs, 10000).getItem(i)
+
+    return _per_column(df, cols, {name: item(i) for i, name in enumerate(names)})
 
 
 def variance_by_group(df: DataFrame, group_cols: Sequence[str], value_col: str) -> DataFrame:

@@ -22,10 +22,12 @@ the scalable long layout:
   MC:59845 (cell 67))
 - output := top-8 pairs by target variance (MC:57595 (cell 61))
 
-Scale design: every step is keyed by instrument (windows partition by
-it; joins hash on it together with day), so the plan has no global
-sort and no single-task window; the pair mapping is derived from a
-``distinct`` over instruments and broadcast into both legs.
+Scale design: no step needs a global sort or a single-task window.
+The imputation window partitions by instrument and runs in linear
+time per instrument. The spread legs pair up with a ``lead`` over
+instruments within each day, and one broadcast join with the pair
+mapping (derived from a ``distinct`` over instruments) keeps the
+adjacent pairs. The target self-join hashes on (pair, day).
 """
 
 from __future__ import annotations
@@ -107,7 +109,8 @@ def imputed(daily_gapped: DataFrame) -> DataFrame:
 def pair_mapping(daily: DataFrame) -> DataFrame:
     """Adjacent-instrument spread universe with heterogeneous lags —
     the engine's analogue of target_pairs.csv, derived (not loaded) so
-    the fixture stays self-contained."""
+    the fixture stays self-contained. Every row has
+    ``leg_b = leg_a + 1``; :func:`spreads` relies on it."""
     instruments = daily.select("instrument").distinct()
     a = instruments.alias("a")
     b = instruments.select(F.col("instrument").alias("instrument_b")).alias("b")
@@ -125,30 +128,43 @@ def pair_mapping(daily: DataFrame) -> DataFrame:
 def spreads(
     imputed_px: DataFrame, mapping: DataFrame, round_to: int | None = 6
 ) -> DataFrame:
-    """spread(pair, day) = px(leg_a, day) − px(leg_b, day). The
-    mapping is broadcast; the series is shuffled once on
-    (instrument) for each leg join. ``round_to=None`` keeps the raw
-    double for callers that aggregate further (round once, at the
-    output edge)."""
-    m = F.broadcast(mapping)
-    a = imputed_px.select(
-        F.col("instrument").alias("_ia"), F.col("day"), F.col("px").alias("_pxa")
+    """spread(pair, day) = px(leg_a, day) − px(leg_b, day).
+    ``round_to=None`` keeps the raw double for callers that aggregate
+    further (round once, at the output edge).
+
+    Leg b comes from ``lead`` over the day's instruments in id order,
+    so one shuffle on day pairs every instrument with the next one
+    quoted that day; one broadcast join with ``mapping`` on
+    ``(leg_a, leg_b)`` keeps the mapped pairs. This is exact because
+    ``mapping`` (as :func:`pair_mapping` builds it) only holds
+    ``leg_b = leg_a + 1`` and ``imputed_px`` has one row per
+    (instrument, day): when leg_a + 1 is quoted that day it IS the
+    next instrument, and when it is not, the lead names some other
+    instrument that the join drops.
+    """
+    nxt = Window.partitionBy("day").orderBy("instrument")
+    # the window's input keeps the three source columns: aliasing them
+    # in this select would shuffle each one twice
+    legs = imputed_px.select(
+        "instrument",
+        "day",
+        "px",
+        F.lead("instrument").over(nxt).alias("_ib"),
+        F.lead("px").over(nxt).alias("_pxb"),
     )
-    b = imputed_px.select(
-        F.col("instrument").alias("_ib"), F.col("day").alias("_dayb"), F.col("px").alias("_pxb")
-    )
+    spread = F.col("px") - F.col("_pxb")
     return (
-        m.join(a, m["leg_a"] == a["_ia"], "inner")
-        .join(b, (m["leg_b"] == b["_ib"]) & (F.col("day") == F.col("_dayb")), "inner")
+        F.broadcast(mapping)
+        .join(
+            legs,
+            (F.col("leg_a") == F.col("instrument")) & (F.col("leg_b") == F.col("_ib")),
+            "inner",
+        )
         .select(
             "pair",
             "lag",
             "day",
-            (
-                F.round(F.col("_pxa") - F.col("_pxb"), round_to)
-                if round_to is not None
-                else (F.col("_pxa") - F.col("_pxb"))
-            ).alias("spread"),
+            (F.round(spread, round_to) if round_to is not None else spread).alias("spread"),
         )
     )
 
@@ -188,18 +204,25 @@ def e1_flagship(spark: SparkSession, sf_dir: str, top_k: int = 8) -> DataFrame:
     (pair, lag, variance, n). ``top_k`` below 1 or not an int raises
     ``ValueError`` before any Spark work.
 
-    The DAG references the daily series five times (mapping ×2, leg
-    joins ×2, future self-join ×2 on spreads); without persistence
-    Spark recomputes the full scan+agg subtree for each — 8 scans of
-    the raw events observed in the physical plan. The aggregated
-    intermediates are ~|instruments|×|days| rows (orders of magnitude
-    below the raw input at any scale), so MEMORY_AND_DISK persistence
-    of the three reused frames turns 8 raw scans into 1."""
+    Only the frames read twice are persisted (MEMORY_AND_DISK; both
+    are ~|instruments|×|days| rows, orders of magnitude below the raw
+    input at any scale):
+
+    - ``daily`` feeds both the imputation and ``pair_mapping``; left
+      unpersisted, the optimizer folds the mapping's ``distinct`` into
+      a second scan of the raw events.
+    - ``sp`` is read by both sides of the ``future_spreads``
+      self-join. The same plan built again by
+      ``spreads(imputed(with_gaps(daily)), pair_mapping(daily))``
+      (a profile of the spreads) is served from this cache.
+
+    The imputed series is read once, by the spread legs, so it is not
+    persisted."""
     from pyspark import StorageLevel
 
     check_top_k(top_k)
     daily = daily_bars(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    filled = imputed(with_gaps(daily)).persist(StorageLevel.MEMORY_AND_DISK)
+    filled = imputed(with_gaps(daily))
     mapping = pair_mapping(daily)
     sp = spreads(filled, mapping).persist(StorageLevel.MEMORY_AND_DISK)
     tgt = future_spreads(sp)

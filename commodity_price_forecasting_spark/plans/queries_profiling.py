@@ -85,8 +85,7 @@ FROM lineitem
 @register("a3_describe_stats", oracle=_A3_ORACLE, tags=("profiling",))
 def a3_describe_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact describe() per numeric column (MC:24031 (cell 6), A3) as
-    a long stats table; Catalyst collapses the per-column branches
-    over one cached scan."""
+    a long stats table from one aggregate pass over the scan."""
     li = load_table(spark, sf_dir, "lineitem")
     return describe_long(li, ["l_quantity", "l_extendedprice", "l_discount"])
 

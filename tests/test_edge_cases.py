@@ -7,11 +7,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings
+import pytest
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from commodity_price_forecasting_spark.ml.stattests import _adf_stat, _kpss_stat
-from commodity_price_forecasting_spark.operators.cleaning import ffill_bfill_long
+from commodity_price_forecasting_spark.operators.cleaning import (
+    ffill_bfill_long,
+    ffill_bfill_wide,
+)
 from commodity_price_forecasting_spark.operators.joins import salted_join
 from commodity_price_forecasting_spark.operators.multimodal import (
     N_FEATURE_BINS,
@@ -80,6 +84,75 @@ def test_ffill_is_idempotent(spark):
     a = once.toPandas().sort_values("t")["v"].tolist()
     b = twice.toPandas().sort_values("t")["v"].tolist()
     assert a == b == [1.0, 1.0, 1.0, 3.0, 3.0]
+
+
+_SERIES = st.lists(
+    st.lists(
+        st.one_of(st.none(), st.floats(-1e6, 1e6, allow_nan=False)), min_size=1, max_size=7
+    ),
+    min_size=1,
+    max_size=4,
+)
+
+
+@given(_SERIES)
+@example([[None, 1.0, None, None, 2.0, None], [None, None, None], [3.0]])
+@settings(max_examples=12, deadline=None)
+def test_ffill_bfill_matches_pandas(spark, series):
+    """Both layouts equal pandas ffill→bfill on leading, inner and
+    trailing null runs and all-null series: long per group
+    (``groupby().ffill()`` then ``groupby().bfill()``), wide over one
+    time order (series padded with trailing nulls to one length)."""
+    long = pd.DataFrame(
+        [(g, t, v) for g, vals in enumerate(series) for t, v in enumerate(vals)],
+        columns=["g", "t", "v"],
+    ).astype({"v": "float64"})
+    want = long.assign(v=long.groupby("g")["v"].ffill()).groupby("g")["v"].bfill()
+    got = (
+        ffill_bfill_long(spark.createDataFrame(long), "v", ("t",), ("g",), out_col="f")
+        .toPandas()
+        .sort_values(["g", "t"])
+    )
+    np.testing.assert_array_equal(got["f"].to_numpy(float), want.to_numpy(float))
+
+    n = max(len(vals) for vals in series)
+    wide = pd.DataFrame(
+        {f"c{g}": vals + [None] * (n - len(vals)) for g, vals in enumerate(series)}
+    ).astype("float64")
+    wide.insert(0, "t", range(n))
+    cols = [f"c{g}" for g in range(len(series))]
+    got = ffill_bfill_wide(spark.createDataFrame(wide), "t", cols).toPandas().sort_values("t")
+    np.testing.assert_array_equal(
+        got[cols].to_numpy(float), wide[cols].ffill().bfill().to_numpy(float)
+    )
+
+
+def test_impute_backfill_frame_is_linear(spark):
+    """The back fill reads one whole-partition frame. A
+    ``currentRow..unboundedFollowing`` frame is re-evaluated for
+    every row, quadratic per instrument."""
+    from tests.conftest import SF_SMOKE
+
+    from commodity_price_forecasting_spark.plans.e1_pipeline import (
+        daily_bars,
+        imputed,
+        with_gaps,
+    )
+
+    wide = spark.createDataFrame([(0, 1.0, None)], "t int, a double, b double")
+    for df in (
+        imputed(with_gaps(daily_bars(spark, SF_SMOKE))),
+        ffill_bfill_wide(wide, "t", ["a", "b"]),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "unboundedpreceding$(), unboundedfollowing$()" in plan
+        assert "currentrow$(), unboundedfollowing$()" not in plan
+
+
+def test_ffill_long_refuses_empty_partition_cols(spark):
+    df = spark.createDataFrame([(0, 1.0)], "t int, v double")
+    with pytest.raises(ValueError, match="partition_cols"):
+        ffill_bfill_long(df, "v", ("t",), ())
 
 
 def test_salted_join_empty_and_left_semantics(spark):
@@ -795,13 +868,14 @@ def test_profiling_rejects_bad_arguments_before_any_job(spark):
     """Degenerate profiling arguments raise a ValueError naming the
     argument when the frame is built — not a DIVIDE_BY_ZERO at
     collect(), a silently empty histogram, a bucket of -3, a bare
-    ZeroDivisionError, reduce() of an empty list, or two output
-    columns both named p12."""
+    ZeroDivisionError, an empty aggregate, a null profile of every
+    column, or two output columns both named p12."""
     import pytest as _pytest
 
     from commodity_price_forecasting_spark.operators.profiling import (
         describe_long,
         histogram_fixed,
+        null_profile,
         quantile_summary,
     )
 
@@ -812,7 +886,7 @@ def test_profiling_rejects_bad_arguments_before_any_job(spark):
     for nbins in (0, -2):
         with _pytest.raises(ValueError, match="nbins"):
             histogram_fixed(df, "x", 0.0, 10.0, nbins)
-    for fn in (describe_long, quantile_summary):
+    for fn in (describe_long, quantile_summary, null_profile):
         with _pytest.raises(ValueError, match="cols"):
             fn(df, [])
     with _pytest.raises(ValueError, match="duplicate column names"):

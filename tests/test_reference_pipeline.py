@@ -115,3 +115,52 @@ def test_e1_entry_points_refuse_top_k_below_one():
             run_e1(None, None, None, top_k=bad)
         with pytest.raises(ValueError, match="top_k"):
             e1_flagship(None, "unused", top_k=bad)
+
+
+def test_spreads_match_oracle_across_id_holes_and_missing_days(spark, tmp_path):
+    """``spreads`` pairs legs with a ``lead`` over each day's
+    instruments; with instrument ids {0, 1, 2, 4, 5} and days on which
+    one leg has no quote, the lead names a non-adjacent or no
+    instrument, and those rows must drop exactly as the two-leg join
+    of ``E1_ORACLE``'s ``spread`` CTE drops them."""
+    import duckdb
+
+    from commodity_price_forecasting_spark.plans.e1_pipeline import (
+        E1_ORACLE,
+        daily_bars,
+        imputed,
+        pair_mapping,
+        spreads,
+        with_gaps,
+    )
+
+    rng = np.random.default_rng(5)
+    missing = {(2, 3), (5, 8), (0, 1)}  # (instrument, day of month) never quoted
+    rows = [
+        (u, pd.Timestamp(2024, 1, d, h), round(float(rng.uniform(10, 90)), 2))
+        for u in (0, 1, 2, 4, 5)
+        for d in range(1, 16)
+        if (u, d) not in missing
+        for h in (3, 15)[: 1 + (u + d) % 2]
+    ]
+    events = pd.DataFrame(rows, columns=["user_id", "ts", "value"]).astype(
+        {"ts": "datetime64[us]"}
+    )
+    events.to_parquet(tmp_path / "events.parquet", index=False)
+
+    daily = daily_bars(spark, str(tmp_path))
+    sp = spreads(imputed(with_gaps(daily)), pair_mapping(daily))
+    got = sorted(tuple(r) for r in sp.collect())
+
+    cut = E1_ORACLE.index("), tgt AS (")
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')")
+        want = sorted(con.execute(E1_ORACLE[:cut] + ") SELECT pair, lag, day, spread FROM spread").fetchall())
+    finally:
+        con.close()
+
+    assert {r[0] for r in want} == {"0 - 1", "1 - 2", "4 - 5"}
+    assert len(want) == 3 * 15 - 3  # each missing day drops one pair-day
+    assert [r[:3] for r in got] == [r[:3] for r in want]
+    assert [r[3] for r in got] == pytest.approx([r[3] for r in want], abs=1e-9)
